@@ -1,7 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import graft.plans.{IndexPruning, Pred}
+import graft.plans.{ColStats, IndexPruning, Pred, ZoneMapPruner}
 import graft.sources.{BlockMeta, BlockStat, MicroBlockIndex}
 
 /** The cache-aware micro-block engine — graft's counterpart of the
@@ -32,9 +32,9 @@ final class GraftEngine(
     planUnionMax: Int = 128) {
 
   /** The zone-map index, DISTRIBUTED: one row per (block × column),
-    * persisted so pruning queries don't re-read footers. Per-column
-    * stats never collect to the driver — pruning decisions run as
-    * queries over this Dataset ([[IndexPruning]]). A provably-current
+    * persisted so pruning queries don't re-read footers. Only the
+    * columns a predicate references collect to the driver, once each
+    * ([[decisions]]); the rest stay in this Dataset. A provably-current
     * `_graft_index` sidecar is REUSED instead of rebuilt
     * ([[GraftEngine.freshSidecarIndex]]) — at millions of files that
     * turns engine construction from a full footer sweep into one
@@ -115,25 +115,7 @@ final class GraftEngine(
 
   def blockIds: Seq[Int] = blocks.map(_.blockId)
 
-  def loadBlock(id: Int): DataFrame = spark.read.parquet(fileOf(id))
-
-  /** Per-block keep/skip decisions for a predicate, computed as a
-    * distributed query over the stats index and memoized per predicate
-    * (a workload replays the same shapes; the decision job should run
-    * once, not once per replay). Driver receives one row per block —
-    * never the per-column stats. Serving paths should prefer
-    * [[candidates]], which collects only the KEPT rows (bounded by the
-    * candidate set, smaller whenever pruning is doing its job); the
-    * full keep+skip list exists for audits (mb_prune_count). */
-  private val decisionMemo =
-    scala.collection.concurrent.TrieMap.empty[Pred, Seq[(Int, String, Long, Boolean)]]
-
-  def decisions(pred: Pred): Seq[(Int, String, Long, Boolean)] =
-    decisionMemo.getOrElseUpdate(pred,
-      IndexPruning.decide(index.toDF(), pred)
-        .collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getBoolean(5)))
-        .toSeq.sortBy(_._1))
+  def loadBlock(id: Int): DataFrame = read(Seq(fileOf(id)))
 
   /** Lazily-built DICTIONARY indices for the [[sql]] surface's
     * COUNT(DISTINCT)/DISTINCT serve, memoized per column for the
@@ -161,42 +143,61 @@ final class GraftEngine(
     columns.map(dictIdxMemo).reduce(_ unionAll _)
   }
 
-  private val candidateMemo =
-    scala.collection.concurrent.TrieMap.empty[Pred, Seq[Int]]
+  /** Per-column zone-map stats on the DRIVER, keyed by block id and
+    * collected once per referenced column for the engine's lifetime
+    * (one metadata-scale job per first-seen column set; every later
+    * decision over that column launches none). Blocks-scale — one small
+    * row per block per referenced column, the scale [[blocks]] already
+    * holds. A block with no row for a column is absent from its map. */
+  private val colStatsMemo = scala.collection.concurrent.TrieMap
+    .empty[String, Map[Int, ColStats]]
 
-  /** Candidate blocks for a predicate (pruning decision only) —
-    * kept-rows-only collect. */
-  def candidates(pred: Pred): Seq[Int] =
-    candidateMemo.getOrElseUpdate(pred,
-      decisionMemo.get(pred) match {
-        case Some(d) => d.filter(_._4).map(_._1)
-        case None =>
-          IndexPruning.decide(index.toDF(), pred)
-            .filter(org.apache.spark.sql.functions.col("keep"))
-            .select("block_id")
-            .collect().map(_.getInt(0)).toSeq.sorted
-      })
-
-  /** Batched [[candidates]]: ONE distributed decision job for a whole
-    * predicate set (a workload replay has many shapes; one job per
-    * shape is pure fixed-cost multiplication). Results land in the
-    * same memo the per-predicate path reads, so interleaved callers
-    * stay consistent. */
-  def candidatesMany(preds: Seq[Pred]): Seq[Seq[Int]] = {
-    val missing = preds.distinct.filterNot(candidateMemo.contains)
+  private def statsOf(columns: Set[String]): Map[String, Map[Int, ColStats]] = {
+    val missing = columns.filterNot(colStatsMemo.contains).toSeq
     if (missing.nonEmpty) {
-      val rows = IndexPruning.decideMany(index.toDF(), missing).collect()
-      missing.zipWithIndex.foreach { case (p, i) =>
-        candidateMemo.put(p,
-          rows.filter(_.getSeq[Boolean](5)(i)).map(_.getInt(0)).toSeq.sorted)
-      }
+      val byCol = index.filter(org.apache.spark.sql.functions.col("column")
+        .isin(missing: _*)).collect().groupBy(_.column)
+      missing.foreach(c => colStatsMemo.putIfAbsent(c,
+        byCol.getOrElse(c, Array.empty[BlockStat])
+          .map(s => s.blockId -> ZoneMapPruner.colStats(s)).toMap))
     }
-    preds.map(candidateMemo(_))
+    columns.iterator.map(c => c -> colStatsMemo(c)).toMap
+  }
+
+  /** Per-block keep/skip decisions for a predicate: (block id, file,
+    * rows, keep), in block order. [[ZoneMapPruner.mayMatch]] runs over
+    * the memoized column stats on the driver — the same spec
+    * [[IndexPruning.decide]] is property-tested against — so a new
+    * literal over known columns costs no Spark job. A block with no
+    * stats row for a referenced column keeps. */
+  def decisions(pred: Pred): Seq[(Int, String, Long, Boolean)] = {
+    val stats = statsOf(IndexPruning.refColumns(pred))
+    blocks.map { b =>
+      val m = stats.flatMap { case (c, byBlock) => byBlock.get(b.blockId).map(c -> _) }
+      (b.blockId, b.file, b.rows, ZoneMapPruner.mayMatch(pred, m))
+    }
+  }
+
+  /** Candidate blocks for a predicate (the kept block ids). */
+  def candidates(pred: Pred): Seq[Int] =
+    decisions(pred).collect { case (id, _, _, true) => id }
+
+  /** [[candidates]] for a predicate set, collecting every column the set
+    * references in one job up front. */
+  def candidatesMany(preds: Seq[Pred]): Seq[Seq[Int]] = {
+    statsOf(preds.flatMap(IndexPruning.refColumns).toSet)
+    preds.map(candidates)
   }
 
   /** One resolved scan of the full table (file listing + schema paid
     * once at construction, not per sql() call). */
   private lazy val rawTable: DataFrame = spark.read.parquet(tablePath)
+
+  /** Every block/file read of the engine, pinned to the table's schema:
+    * no schema-inference job per read, and every frame a serve unions
+    * has the same columns even when later files add one. */
+  private def read(files: Seq[String]): DataFrame =
+    spark.read.schema(rawTable.schema).parquet(files: _*)
 
   /** `tablePath` in the fully-qualified form file-source relations
     * report their root paths in, so plan nodes can be matched back to
@@ -241,21 +242,21 @@ final class GraftEngine(
     // the scan — so mega-candidate queries bypass the per-block cache
     // entirely (entries stay warm for the selective queries the cache
     // exists for).
-    if (files.size > planUnionMax) return spark.read.parquet(files: _*)
+    if (files.size > planUnionMax) return read(files)
     val fetched = files.map(f => f -> cache.get(s"file-$f"))
     val hitDfs = fetched.collect { case (_, Some(df)) => df }
     val missFiles = fetched.collect { case (f, None) => f }
     val missDfs =
       if (missFiles.isEmpty) Nil
       else if (missFiles.size <= missUnionMax)
-        missFiles.map(f => cache.put(s"file-$f", spark.read.parquet(f)))
+        missFiles.map(f => cache.put(s"file-$f", read(Seq(f))))
       else {
         // warm only the LRU's FREE space — filling to capacity would
         // evict the hot working set, including this query's own hit
         // frames, in favor of entries nothing has materialized yet
         missFiles.takeRight(math.max(0, cacheCapacity - cache.size))
-          .foreach(f => cache.put(s"file-$f", spark.read.parquet(f)))
-        Seq(spark.read.parquet(missFiles: _*))
+          .foreach(f => cache.put(s"file-$f", read(Seq(f))))
+        Seq(read(missFiles))
       }
     (hitDfs ++ missDfs).reduceOption(_ unionAll _).getOrElse(emptyFrame)
   }
@@ -316,27 +317,21 @@ final class GraftEngine(
     * top k. */
   private def topKBlockIds(colName: String, k: Int,
       ascending: Boolean, includeNullBlocks: Boolean): Seq[Int] = {
-    import org.apache.spark.sql.functions._
-    val colStats = index.toDF()
-      .filter(col("column") === colName)
-      .select("blockId", "rows", "minNum", "maxNum", "nullCount")
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2)),
-        if (r.isNullAt(3)) None else Some(r.getDouble(3)),
-        r.getLong(4)))
+    // (id, rows, min, max, known null count), in block order
+    val colStats = statsOf(Set(colName))(colName).toSeq.sortBy(_._1)
+      .map { case (id, s) => (id, s.rows.getOrElse(0L), s.minNum, s.maxNum, s.nullCount) }
     if (colStats.isEmpty) return blockIds // unindexed column: full scan
     val nullful =
-      if (includeNullBlocks) colStats.filter(_._5 > 0).map(_._1).toSet
+      if (includeNullBlocks) colStats.filter(_._5.exists(_ > 0)).map(_._1).toSet
       else Set.empty[Int]
     // blocks the index has NO row for under this column are statless
-    // too, as are blocks with an UNKNOWN null count (footer omitted,
-    // recorded as -1): their non-null coverage can't be trusted toward
-    // the k-row proof, so they always scan and never count
+    // too, as are blocks with an UNKNOWN null count (footer omitted):
+    // their non-null coverage can't be trusted toward the k-row proof,
+    // so they always scan and never count
     val known = colStats.map(_._1).toSet
     val unknown = blocks.collect { case b if !known.contains(b.blockId) => b.blockId }
     val (statlessRows, stated) =
-      colStats.partition(s => s._3.isEmpty || s._4.isEmpty || s._5 < 0)
+      colStats.partition(s => s._3.isEmpty || s._4.isEmpty || s._5.isEmpty)
     val statless = (statlessRows.map(_._1) ++ unknown ++ nullful).distinct
     val ordered =
       if (ascending) stated.sortBy(_._3.get) // by min asc
@@ -344,7 +339,7 @@ final class GraftEngine(
     var acc = 0L
     var n = 0
     while (n < ordered.length && acc < k) {
-      acc += math.max(0L, ordered(n)._2 - ordered(n)._5) // non-null rows
+      acc += math.max(0L, ordered(n)._2 - ordered(n)._5.get) // non-null rows
       n += 1
     }
     val ids =
@@ -390,7 +385,7 @@ final class GraftEngine(
     accessLog.log(table, ids, Seq(colName))
     val files = ids.map(fileOf).distinct
     val primary = if (ascending) col(colName).asc else col(colName).desc
-    (if (files.isEmpty) emptyFrame else spark.read.parquet(files: _*))
+    (if (files.isEmpty) emptyFrame else read(files))
       .filter(col(colName).isNotNull)
       .orderBy(primary +: tieBreak.map(col(_).asc): _*)
       .limit(k)
@@ -511,7 +506,7 @@ final class GraftEngine(
       graft.plans.IndexPruning.refColumns(pred).toSeq.sorted)
     val kept = d.filter(_._4).map(_._2).distinct
     val files = if (kept.isEmpty) d.map(_._2).distinct else kept
-    spark.read.parquet(files: _*).filter(pred.toColumn)
+    read(files).filter(pred.toColumn)
   }
 
   /** Reference-parity SQL entry point (query_enginev5.py:236-304):

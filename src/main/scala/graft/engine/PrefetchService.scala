@@ -75,9 +75,12 @@ final class PrefetchService(
     // must not count toward the cache's hit/miss serving metrics
     val warmed = predicted.filter(b => !cache.peek(keyFor(b)))
     warmed.foreach { b =>
-      // persist + materialize: the count() pulls the block into
-      // executor storage so the next query is a cache hit.
-      cache.put(keyFor(b), loadBlock(b)).count()
+      // persist + materialize: one no-op pass over the persisted scan's
+      // internal rows (a single job, no row decoding) builds the block's
+      // cached partitions in executor storage, so the next query is a
+      // cache hit. `loadBlock` returns a fresh, never-executed frame,
+      // whose plan resolves against the cache entry registered here.
+      cache.put(keyFor(b), loadBlock(b)).queryExecution.toRdd.foreachPartition(_ => ())
       prefetchedCount += 1
     }
     val ms = (System.nanoTime() - t0) / 1000000L

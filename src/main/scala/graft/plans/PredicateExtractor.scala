@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{
   And => CAnd, Or => COr, EqualTo, GreaterThan, GreaterThanOrEqual,
   LessThan, LessThanOrEqual, Not, In => CIn, AttributeReference,
-  Cast, Expression, IsNotNull, IsNull, Literal}
+  Cast, CommonExpressionRef, Expression, IsNotNull, IsNull, Literal, With}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -14,9 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Plays the role sqlglot plays in the reference (parse the SQL, find
   * the WHERE clause, walk AND/OR/BETWEEN/IN/comparisons —
-  * query_enginev5.py:66-105) — but works on the *analyzed plan*, so it
-  * sees the same expression tree the optimizer sees (BETWEEN already
-  * desugared to >= AND <=, literals typed). Unconvertible subtrees
+  * query_enginev5.py:66-105) — but works on Catalyst expressions, with
+  * literals typed. Optimizer-rule callers see BETWEEN already rewritten
+  * to >= AND <=; analyzed-plan callers ([[graft.engine.GraftEngine.sql]])
+  * see a `Between` whose replacement binds its input through a `With`,
+  * which [[inlineWith]] resolves to the same tree. Unconvertible subtrees
   * degrade conservatively: an unknown AND-conjunct is dropped (pruning
   * with fewer conjuncts only keeps more blocks), an unknown OR-branch
   * poisons the whole OR (can't bound a disjunction you can't read).
@@ -36,6 +38,7 @@ object PredicateExtractor {
     // their `replacement` is the desugared >=/AND/<= tree.
     case r: org.apache.spark.sql.catalyst.expressions.RuntimeReplaceable =>
       convert(r.replacement)
+    case w: With => convert(inlineWith(w))
 
     case CAnd(l, r) => (convert(l), convert(r)) match {
       case (Some(a), Some(b)) => Some(And(a, b))
@@ -74,11 +77,20 @@ object PredicateExtractor {
   def convertComplete(e: Expression): Option[Pred] = e match {
     case r: org.apache.spark.sql.catalyst.expressions.RuntimeReplaceable =>
       convertComplete(r.replacement)
+    case w: With => convertComplete(inlineWith(w))
     case CAnd(l, r) =>
       for { a <- convertComplete(l); b <- convertComplete(r) } yield And(a, b)
     case COr(l, r) =>
       for { a <- convertComplete(l); b <- convertComplete(r) } yield Or(a, b)
     case leaf => convert(leaf) // every non-AND/OR conversion is exact
+  }
+
+  /** A `With` (Spark's common-subexpression binding, e.g. BETWEEN's
+    * replacement `With(input){ref >= lo AND ref <= hi}`) with every
+    * reference replaced by the expression it names. */
+  private def inlineWith(w: With): Expression = {
+    val defs = w.defs.map(d => d.id -> d.child).toMap
+    w.child.transform { case r: CommonExpressionRef if defs.contains(r.id) => defs(r.id) }
   }
 
   /** column-vs-constant comparison in either direction (flips the op).

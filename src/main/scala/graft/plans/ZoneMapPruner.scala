@@ -152,13 +152,16 @@ object ZoneMapPruner {
     case _    => true
   }
 
+  /** One index row's stats as the pruner sees them (a negative null
+    * count is the footer's "unknown"). */
+  def colStats(s: BlockStat): ColStats = ColStats(s.minNum, s.maxNum, s.minStr, s.maxStr,
+    Some(s.nullCount).filter(_ >= 0), Some(s.rows), s.nanRisk)
+
   /** Group a stats index (collected for one table) by block. */
   def byBlock(stats: Seq[BlockStat]): Seq[(Int, String, Long, Map[String, ColStats])] =
     stats.groupBy(b => (b.blockId, b.file)).toSeq
       .map { case ((id, file), cols) =>
-        (id, file, cols.head.rows,
-          cols.map(c => c.column -> ColStats(c.minNum, c.maxNum, c.minStr, c.maxStr,
-            Some(c.nullCount).filter(_ >= 0), Some(c.rows), c.nanRisk)).toMap)
+        (id, file, cols.head.rows, cols.map(c => c.column -> colStats(c)).toMap)
       }
       .sortBy(_._1)
 
