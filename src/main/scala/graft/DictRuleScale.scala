@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.DictionaryIndex
 
@@ -18,30 +17,11 @@ object DictRuleScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("target/sf100")
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-
-    def probe(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def medianOf(run: => Seq[String]): (Double, Seq[String]) = {
-      var v: Seq[String] = Nil
-      val ts = (1 to reps).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime(); v = run; (System.nanoTime() - t0) / 1e9
-      }.sorted
-      (ts(ts.length / 2), v)
-    }
-    val probeStart = probe()
+    val spark = BenchWindow.session()
+    BenchWindow.probe(spark) // JVM warm
+    def medianOf(run: => Seq[String]): (Double, Seq[String]) =
+      BenchWindow.medianOf(spark, reps, clearCache = false)(run)
+    val probeStart = BenchWindow.probe(spark)
     val liPath = s"$sfDir/lineitem.parquet"
     // a clean slate: the scan arm must not accidentally serve from a
     // previous run's sidecar
@@ -69,10 +49,10 @@ object DictRuleScale {
       spark.sql(sql).collect().map(_.toString).toSeq)
     println(f"[dict-rule-scale] scan: $scanSec%.2fs")
 
-    val tB = System.nanoTime()
-    DictionaryIndex.saveSidecar(DictionaryIndex.build(
-      spark, liPath, "lineitem", Seq("l_suppkey", "l_quantity")), liPath)
-    val buildSec = (System.nanoTime() - tB) / 1e9
+    val buildSec = BenchWindow.timeOnce {
+      DictionaryIndex.saveSidecar(DictionaryIndex.build(
+        spark, liPath, "lineitem", Seq("l_suppkey", "l_quantity")), liPath)
+    }
     println(f"[dict-rule-scale] sidecar build+save: $buildSec%.2fs")
 
     require(reads(spark.sql(sql)), "transparent arm must serve from the sidecar")
@@ -82,16 +62,13 @@ object DictRuleScale {
     require(scanRows == ruleRows,
       s"arms diverged: $scanRows vs $ruleRows")
 
-    val probeEnd = probe()
+    val probeEnd = BenchWindow.probe(spark)
     val line =
       s"""{"bench":"dict_rule_scale","sf":"$sfDir","reps":$reps,""" +
         s""""probe_start_sec":$probeStart,"probe_end_sec":$probeEnd,""" +
         s""""scan_sec":$scanSec,"sidecar_build_sec":$buildSec,""" +
         s""""transparent_serve_sec":$ruleSec,"values_equal":true}"""
-    println(line)
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("target/dict_rule_scale.json"), line.getBytes)
-    catch { case scala.util.control.NonFatal(_) => }
+    BenchWindow.emit(line, "target/dict_rule_scale.json")
     spark.stop()
   }
 }

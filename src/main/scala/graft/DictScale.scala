@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.plans.{Cmp, IndexPruning, PredValue}
 import graft.sources.{DictionaryIndex, MicroBlockIndex}
@@ -30,32 +29,13 @@ object DictScale {
     val sfDir = args.headOption.getOrElse("target/sf10")
     val reps = if (args.length > 1) args(1).toInt else 5
     val buckets = if (args.length > 2) args(2).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JVM warm
+    val spark = BenchWindow.plainSession()
+    BenchWindow.probe(spark) // JVM warm
+    // the arms time against persisted indexes: no cache clear per rep
+    def medianOf(run: => Long): (Double, Long) =
+      BenchWindow.medianOf(spark, reps, clearCache = false)(run)
 
-    def probe(): Double = {
-      val s = System.nanoTime()
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      (System.nanoTime() - s) / 1e9
-    }
-    def medianOf(run: => Long): (Double, Long) = {
-      var v = 0L
-      val ts = (1 to reps).map { _ =>
-        System.gc()
-        val s = System.nanoTime()
-        v = run
-        (System.nanoTime() - s) / 1e9
-      }.sorted
-      (ts(ts.length / 2), v)
-    }
-
-    val probeStart = probe()
+    val probeStart = BenchWindow.probe(spark)
     val liPath = s"$sfDir/lineitem.parquet"
     val li = spark.read.parquet(liPath)
 
@@ -65,10 +45,8 @@ object DictScale {
     val cols = sys.env.get("SPARK_GRAFT_DICT_COLS")
       .map(_.split(',').toSeq)
       .getOrElse(Seq("l_suppkey", "l_quantity", "l_orderkey"))
-    val tIdx = System.nanoTime()
     val idx = DictionaryIndex.build(spark, liPath, "lineitem", cols).cache()
-    idx.count() // materialize
-    val idxBuildSec = (System.nanoTime() - tIdx) / 1e9
+    val idxBuildSec = BenchWindow.timeOnce(idx.count()) // materialize
     val coverage = cols.map { c =>
       c -> idx.filter(col("column") === c && col("covered")).count()
     }.toMap
@@ -99,13 +77,13 @@ object DictScale {
     // in-place auto-build path is spec-covered in AdvisorSpec.
     val viewArms = cols.filter(c => coverage(c) < totalFiles).flatMap { c =>
       val vp = s"target/scratch/dict-scale/${new java.io.File(sfDir).getName}/aggview-$c"
-      val tV = System.nanoTime()
-      val exists =
-        try graft.sources.AggView.readMeta(vp).valueCol == c
-        catch { case scala.util.control.NonFatal(_) => false }
-      if (!exists) graft.sources.AggView.build(spark, liPath, vp, Nil, c)
-      else graft.sources.AggView.refresh(spark, liPath, vp)
-      val vBuildSec = (System.nanoTime() - tV) / 1e9
+      val vBuildSec = BenchWindow.timeOnce {
+        val exists =
+          try graft.sources.AggView.readMeta(vp).valueCol == c
+          catch { case scala.util.control.NonFatal(_) => false }
+        if (!exists) graft.sources.AggView.build(spark, liPath, vp, Nil, c)
+        else graft.sources.AggView.refresh(spark, liPath, vp)
+      }
       val (vSec, vVal) = medianOf(
         graft.sources.AggView.serveCountDistinct(spark, vp)
           .select(col("n_distinct")).first.getLong(0))
@@ -116,18 +94,14 @@ object DictScale {
 
     // ---- point lookup on a hash-bucketed layout ----------------------
     val bucketPath = s"target/scratch/dict-scale/${new java.io.File(sfDir).getName}/lineitem-$buckets"
-    val done = new org.apache.hadoop.fs.Path(bucketPath + "/_SUCCESS")
-    val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tB = System.nanoTime()
-    if (!fs.exists(done))
-      li.repartition(buckets, col("l_suppkey"))
-        .write.mode("overwrite").parquet(bucketPath)
-    val bucketBuildSec = (System.nanoTime() - tB) / 1e9
+    val bucketBuildSec = BenchWindow.timeOnce {
+      if (!BenchWindow.written(bucketPath))
+        li.repartition(buckets, col("l_suppkey"))
+          .write.mode("overwrite").parquet(bucketPath)
+    }
     println(f"[dict-scale] bucket layout ready ($bucketBuildSec%.1fs)")
-    val tBi = System.nanoTime()
     val bIdx = DictionaryIndex.build(spark, bucketPath, "lineitem", Seq("l_suppkey")).cache()
-    bIdx.count()
-    val bIdxBuildSec = (System.nanoTime() - tBi) / 1e9
+    val bIdxBuildSec = BenchWindow.timeOnce(bIdx.count())
     val zoneIdx = MicroBlockIndex.build(spark, bucketPath, "lineitem").toDF.cache()
     zoneIdx.count()
 
@@ -190,9 +164,7 @@ object DictScale {
     // consumes the same parquet blooms row-group-level, so the pair is
     // an honest engine-vs-engine read of identical metadata.
     val bloomPath = s"target/scratch/dict-scale/${new java.io.File(sfDir).getName}/lineitem-bloom-$buckets"
-    val bDone = new org.apache.hadoop.fs.Path(bloomPath + "/_SUCCESS")
-    val tBb = System.nanoTime()
-    if (!fs.exists(bDone)) {
+    val bloomBuildSec = BenchWindow.timeOnce(if (!BenchWindow.written(bloomPath)) {
       val ndv = math.max(4096L, li.count() / 4 / buckets)
       // the §5 sizing rule (dd_bloom's mBits ∝ n, measured): parquet's
       // default 1 MB bitset cap is ~3.6 bits/key at this ndv (~19% FP,
@@ -206,8 +178,7 @@ object DictScale {
         .option("parquet.bloom.filter.expected.ndv#l_orderkey", ndv.toString)
         .option("parquet.bloom.filter.max.bytes", maxBytes.toString)
         .parquet(bloomPath)
-    }
-    val bloomBuildSec = (System.nanoTime() - tBb) / 1e9
+    })
     println(f"[dict-scale] bloom layout ready ($bloomBuildSec%.1fs)")
     val bloomKey = 7L
     val bloomFiles = MicroBlockIndex.listParquetFiles(bloomPath)
@@ -228,7 +199,7 @@ object DictScale {
     require(bScanFp == bBloomFp, s"bloom fingerprints diverged: $bScanFp vs $bBloomFp")
     println(f"[dict-scale] bloom point: scan $bScanSec%.2fs/${bloomFiles.size} files vs bloom $bBloomSec%.2fs/$bloomKept files")
 
-    val probeEnd = probe()
+    val probeEnd = BenchWindow.probe(spark)
     val line =
       s"""{"bench":"dict_scale","sf":"$sfDir","reps":$reps,"buckets":$buckets,""" +
         s""""probe_start_sec":$probeStart,"probe_end_sec":$probeEnd,""" +
@@ -243,12 +214,7 @@ object DictScale {
         s""""bloom_build_sec":$bloomBuildSec,""" +
         s""""bpoint_scan":{"sec":$bScanSec,"files":${bloomFiles.size}},""" +
         s""""bpoint_bloom":{"sec":$bBloomSec,"files":$bloomKept}}"""
-    println(line)
-    try {
-      val out = java.nio.file.Paths.get("target/dict_scale.json")
-      java.nio.file.Files.createDirectories(out.getParent)
-      java.nio.file.Files.write(out, line.getBytes)
-    } catch { case scala.util.control.NonFatal(_) => }
+    BenchWindow.emit(line, "target/dict_scale.json")
     spark.stop()
   }
 }

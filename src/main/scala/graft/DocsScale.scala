@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Materializes the [[LlmScale]] scaled documents corpus WITHOUT
   * running the op suite — the q38-family ledger rows need the files
   * for both engines at factors the LlmScale harness doesn't sweep.
@@ -13,13 +11,7 @@ object DocsScale {
     val factor = if (args.length > 0) args(0).toInt else 1000
     val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val out = if (args.length > 2) args(2) else s"target/docs_scale_x$factor"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchWindow.plainSession()
     LlmScale.generate(spark, src, out, factor)
     println(s"[docs-scale] x$factor -> $out: " +
       spark.read.parquet(s"$out/documents.parquet").count() + " docs")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Join-DPP decision-cost bound at ledger scale (round 14, verdict
@@ -20,23 +19,15 @@ object DppCostBoundScale {
     require(args.nonEmpty, "usage: DppCostBoundScale <sfDir> [files]")
     val sfDir = args(0)
     val nFiles = if (args.length > 1) args(1).toInt else 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = BenchWindow.session(BenchWindow.UTC)
+    BenchWindow.probe(spark) // JVM warm
 
     // fact: nFiles files, file i constant in all four keys (the
     // per-tenant compaction shape); volume from the sf's lineitem
     val total = spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     val sfName = new java.io.File(sfDir).getName
     val out = s"target/scratch/dppcost/$sfName/fact$nFiles"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_SUCCESS"))) {
+    if (!BenchWindow.written(out)) {
       spark.range(total).select(
         (col("id") % nFiles).as("k1"), (col("id") % nFiles).as("k2"),
         (col("id") % nFiles).as("k3"), (col("id") % nFiles).as("k4"),
@@ -57,20 +48,12 @@ object DppCostBoundScale {
       col("k1") === col("d1") && col("k2") === col("d2") &&
         col("k3") === col("d3") && col("k4") === col("d4"))
     val jobs0 = graft.plans.JoinFilePruning.decisionJobs.get()
-    val t0 = System.nanoTime()
     val df = star
-    val kept = df.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation
-          if r.relation.isInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation] &&
-            r.relation.asInstanceOf[
-              org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-              .location.inputFiles.exists(_.contains("dppcost")) =>
-        r.relation.asInstanceOf[
-          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-          .location.inputFiles.length
+    var kept = Seq.empty[Int]
+    val planSec = BenchWindow.timeOnce {
+      kept = BenchWindow.fileRelations(df).map(_.location.inputFiles)
+        .filter(_.exists(_.contains("dppcost"))).map(_.length)
     }
-    val planSec = (System.nanoTime() - t0) / 1e9
     val jobs = graft.plans.JoinFilePruning.decisionJobs.get() - jobs0
     val rows = df.count()
     graft.plans.ZoneMapPruneRule.unregisterDict(out)
@@ -80,11 +63,7 @@ object DppCostBoundScale {
       s"""{"bench":"dpp_cost_bound","sf":"$sfDir","files":$nFiles,""" +
         s""""conjuncts":4,"plan_sec":$planSec,"decision_jobs":$jobs,""" +
         s""""files_kept":${kept.headOption.getOrElse(-1)},"rows":$rows,"rows_equal":true}"""
-    println(line)
-    val outP = java.nio.file.Paths.get("target/dpp_cost_bound.json")
-    java.nio.file.Files.createDirectories(outP.getParent)
-    java.nio.file.Files.write(outP,
-      line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    BenchWindow.emit(line, "target/dpp_cost_bound.json")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Materializes a scaled `events` table for the q42/q31-family ledger
@@ -21,13 +20,7 @@ object EventsScale {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "target/events_x1000"
     val factor = if (args.length > 2) args(2).toInt else 1000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchWindow.plainSession()
     val ev = graft.engine.Tables.load(spark, src, "events")
     val idSpan = ev.agg(max(col("event_id"))).head.getLong(0) + 1
     val userSpan = ev.agg(max(col("user_id"))).head.getLong(0) + 1

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf100 ledger for JOIN-DRIVEN file pruning (plans/JoinFilePruning):
@@ -20,24 +19,15 @@ object JoinDppScale {
     val sfDir = args(0)
     val buckets = if (args.length > 1) args(1).toInt else 64
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    BenchWindow.satProbe(spark) // codegen warm
+    val spark = BenchWindow.session(BenchWindow.UTC)
+    BenchWindow.warm(spark)
 
     // layout: suppkey-clustered lineitem, projected to the join
     // workload's columns (the Bucketing.writeBucketed projection
     // rationale — the full row payload is pure build cost here)
     val sfName = new java.io.File(sfDir).getName
     val out = s"target/scratch/joindpp/$sfName/lineitem"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_SUCCESS"))) {
+    if (!BenchWindow.written(out)) {
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select("l_suppkey", "l_orderkey", "l_quantity", "l_extendedprice")
         .repartition(buckets, col("l_suppkey"))
@@ -80,52 +70,21 @@ object JoinDppScale {
         case scala.util.control.NonFatal(t) =>
           System.err.println(s"drop_caches failed: ${t.getMessage}")
       }
-    def med(run: => (Long, Long)): (Double, (Long, Long)) = {
-      var r: (Long, Long) = null
-      val ts = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        System.gc()
-        if (dropCaches) dropOsCaches()
-        val t0 = System.nanoTime(); r = run; (System.nanoTime() - t0) / 1e9
-      }.sorted
-      (ts(ts.size / 2), r)
-    }
-    def keptFiles(): Int = joined.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation
-          if r.relation.isInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation] &&
-            r.relation.asInstanceOf[
-              org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-              .location.inputFiles.exists(_.contains("joindpp")) =>
-        r.relation.asInstanceOf[
-          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-          .location.inputFiles.length
-    }.head
+    def med(run: => (Long, Long)): (Double, (Long, Long)) =
+      BenchWindow.medianOf(spark, reps,
+        prep = () => if (dropCaches) dropOsCaches())(run)
+    def keptFiles(): Int = BenchWindow.fileRelations(joined)
+      .map(_.location.inputFiles).filter(_.exists(_.contains("joindpp"))).head.length
 
-    val MaxAttempts = 3
-    var attempt = 0
-    var calm = false
-    var calmRef = -1.0
-    var satStart = -1.0
-    var satEnd = -1.0
-    var scanSec = -1.0
-    var dppSec = -1.0
-    var autoSec = -1.0
-    var autoRoute = "?"
-    var scanV: (Long, Long) = null
-    var dppV: (Long, Long) = null
-    var autoV: (Long, Long) = null
-    var kept = -1
-    while (attempt < MaxAttempts && !calm) {
-      attempt += 1
-      satStart = BenchWindow.satProbe(spark)
+    val ((scanSec, dppSec, autoSec, autoRoute, scanV, kept), w) =
+        BenchWindow.calmGated(spark, "joindpp") { _ =>
       graft.plans.ZoneMapPruneRule.unregisterDict(out)
       require(keptFiles() == buckets,
         "scan arm is pruned — a discovered sidecar is poisoning the A/B")
-      val a = med(fp()); scanSec = a._1; scanV = a._2
+      val (scanSec, scanV) = med(fp())
       graft.plans.ZoneMapPruneRule.registerDict(out, idx)
-      kept = keptFiles()
-      val b = med(fp()); dppSec = b._1; dppV = b._2
+      val kept = keptFiles()
+      val (dppSec, dppV) = med(fp())
       require(scanV == dppV, s"rows diverged: $scanV vs $dppV")
       // round 15 AUTO arm: dictionary registered, but the MEASURED
       // cost router gates the cut — auto must track the winning arm
@@ -137,23 +96,17 @@ object JoinDppScale {
       graft.plans.JoinFilePruning.clearCache()
       fp() // seeding run: pays + observes the decision jobs
       graft.plans.JoinFilePruning.clearCache()
-      val c = med(fp()); autoSec = c._1; autoV = c._2
-      autoRoute =
+      val (autoSec, autoV) = med(fp())
+      val autoRoute =
         if (graft.sources.CostRouter.decisionWorthIt(rootAbs,
           graft.sources.DictionaryIndex.tableBytes(out)).getOrElse(true))
           "dpp" else "scan"
       graft.plans.ZoneMapPruneRule.unregisterDict(out)
       graft.sources.CostRouter.reset()
       require(scanV == autoV, s"auto rows diverged: $scanV vs $autoV")
-      satEnd = BenchWindow.satProbe(spark)
-      calmRef = BenchWindow.calmRef(spark, math.min(satStart, satEnd))
-      calm = BenchWindow.isCalm(calmRef, Seq(satStart, satEnd))
-      if (!calm && attempt < MaxAttempts) {
-        System.err.println(s"joindpp window NOISY (attempt $attempt) — retrying")
-        Thread.sleep(30000)
-      }
+      (scanSec, dppSec, autoSec, autoRoute, scanV, kept)
     }
-    println(s"""{"bench":"join_dpp","cold_cache":$dropCaches,"sf":"$sfDir","reps":$reps,"buckets":$buckets,"dim_keys":${dimKeys.length},"rows":${scanV._1},"files_total":$buckets,"files_kept":$kept,"join_scan_sec":$scanSec,"join_dpp_sec":$dppSec,"join_auto_sec":$autoSec,"join_auto_route":"$autoRoute","sat_probe_start_sec":$satStart,"sat_probe_end_sec":$satEnd,"sat_calm_ref_sec":$calmRef,"window_noisy":${!calm},"window_attempts":$attempt,"loadavg":${BenchWindow.loadavg()}}""")
+    BenchWindow.emit(s"""{"bench":"join_dpp","cold_cache":$dropCaches,"sf":"$sfDir","reps":$reps,"buckets":$buckets,"dim_keys":${dimKeys.length},"rows":${scanV._1},"files_total":$buckets,"files_kept":$kept,"join_scan_sec":$scanSec,"join_dpp_sec":$dppSec,"join_auto_sec":$autoSec,"join_auto_route":"$autoRoute",${w.json}}""")
     spark.stop()
   }
 }

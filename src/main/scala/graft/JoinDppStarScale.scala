@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf100 ledger for MULTI-DIM join-driven file pruning over a
@@ -31,21 +30,12 @@ object JoinDppStarScale {
     val sfDir = args(0)
     val blocks = if (args.length > 1) args(1).toInt else 64
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    BenchWindow.satProbe(spark) // codegen warm
+    val spark = BenchWindow.session(BenchWindow.UTC)
+    BenchWindow.warm(spark)
 
     val sfName = new java.io.File(sfDir).getName
     val out = s"target/scratch/joindppstar/$sfName/lineitem"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_SUCCESS"))) {
+    if (!BenchWindow.written(out)) {
       graft.sources.MicroBlockWriter.writeZOrdered(
         spark.read.parquet(s"$sfDir/lineitem.parquet")
           .select("l_suppkey", "l_partkey", "l_orderkey", "l_quantity"),
@@ -79,67 +69,32 @@ object JoinDppStarScale {
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
     def keptFiles(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation
-            if r.relation.isInstanceOf[
-              org.apache.spark.sql.execution.datasources.HadoopFsRelation] &&
-              r.relation.asInstanceOf[
-                org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-                .location.inputFiles.exists(_.contains("joindppstar")) =>
-          r.relation.asInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-            .location.inputFiles.length
-      }.head
-    def med(run: => (Long, Long)): (Double, (Long, Long)) = {
-      var r: (Long, Long) = null
-      val ts = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime(); r = run; (System.nanoTime() - t0) / 1e9
-      }.sorted
-      (ts(ts.size / 2), r)
-    }
+      BenchWindow.fileRelations(df).map(_.location.inputFiles)
+        .filter(_.exists(_.contains("joindppstar"))).head.length
 
     val arms = Seq("j1" -> (() => j1), "j2" -> (() => j2),
       "star" -> (() => star))
-    val MaxAttempts = 3
-    var attempt = 0
-    var calm = false
-    var calmRef = -1.0
-    var satStart = -1.0
-    var satEnd = -1.0
-    val scanSec = scala.collection.mutable.Map.empty[String, Double]
-    val dppSec = scala.collection.mutable.Map.empty[String, Double]
-    val keptN = scala.collection.mutable.Map.empty[String, Int]
-    while (attempt < MaxAttempts && !calm) {
-      attempt += 1
-      satStart = BenchWindow.satProbe(spark)
+    // per arm: (scan sec, dpp sec, files kept)
+    val (byArm, w) = BenchWindow.calmGated(spark, "joindppstar") { _ =>
       graft.plans.ZoneMapPruneRule.unregisterDict(out)
-      arms.foreach { case (name, mk) =>
+      arms.map { case (name, mk) =>
         require(keptFiles(mk()) == blocks,
           s"$name scan arm is pruned — a discovered sidecar poisons the A/B")
-        val (t, v) = med(fp(mk()))
-        scanSec(name) = t
+        val (t, v) = BenchWindow.medianOf(spark, reps)(fp(mk()))
         graft.plans.ZoneMapPruneRule.registerDict(out, idx)
-        keptN(name) = keptFiles(mk())
-        val (t2, v2) = med(fp(mk()))
-        dppSec(name) = t2
+        val kept = keptFiles(mk())
+        val (t2, v2) = BenchWindow.medianOf(spark, reps)(fp(mk()))
         require(v == v2, s"$name rows diverged: $v vs $v2")
         graft.plans.ZoneMapPruneRule.unregisterDict(out)
-      }
-      satEnd = BenchWindow.satProbe(spark)
-      calmRef = BenchWindow.calmRef(spark, math.min(satStart, satEnd))
-      calm = BenchWindow.isCalm(calmRef, Seq(satStart, satEnd))
-      if (!calm && attempt < MaxAttempts) {
-        System.err.println(s"joindppstar window NOISY (attempt $attempt) — retrying")
-        Thread.sleep(30000)
-      }
+        name -> (t, t2, kept)
+      }.toMap
     }
+    val keptN = byArm.map { case (n, r) => n -> r._3 }
     require(keptN("star") <= math.min(keptN("j1"), keptN("j2")),
       s"star cut must intersect: $keptN")
-    def secs(m: scala.collection.Map[String, Double]): String =
-      arms.map { case (n, _) => s""""$n":${m(n)}""" }.mkString(",")
-    println(s"""{"bench":"join_dpp_star","sf":"$sfDir","reps":$reps,"blocks":$blocks,"dim_keys_supplier":$nKeysS,"dim_keys_part":$nKeysP,"files_total":$blocks,"files_kept":{"j1":${keptN("j1")},"j2":${keptN("j2")},"star":${keptN("star")}},"scan_sec":{${secs(scanSec)}},"dpp_sec":{${secs(dppSec)}},"sat_probe_start_sec":$satStart,"sat_probe_end_sec":$satEnd,"sat_calm_ref_sec":$calmRef,"window_noisy":${!calm},"window_attempts":$attempt,"loadavg":${BenchWindow.loadavg()}}""")
+    def secs(pick: ((Double, Double, Int)) => Double): String =
+      arms.map { case (n, _) => s""""$n":${pick(byArm(n))}""" }.mkString(",")
+    BenchWindow.emit(s"""{"bench":"join_dpp_star","sf":"$sfDir","reps":$reps,"blocks":$blocks,"dim_keys_supplier":$nKeysS,"dim_keys_part":$nKeysP,"files_total":$blocks,"files_kept":{"j1":${keptN("j1")},"j2":${keptN("j2")},"star":${keptN("star")}},"scan_sec":{${secs(_._1)}},"dpp_sec":{${secs(_._2)}},${w.json}}""")
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Generic cross-engine-ledger timing for SparkEntry queries over ANY
   * test-table directory — the [[ScaleBench]] protocol (median of
   * isolated reps, System.gc between, NOOP-SINK action: count() lets
@@ -25,66 +23,26 @@ object LedgerBench {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JVM warm
+    val spark = BenchWindow.session(BenchWindow.shufflePartitions, BenchWindow.UTC)
+    BenchWindow.warm(spark)
 
     val primary = Seq("lineitem", "events", "documents")
       .find(t => new java.io.File(s"$sfDir/$t.parquet").exists())
       .getOrElse(sys.error(s"no primary table under $sfDir"))
 
-    def timed(run: => Unit): Double = {
-      val ts = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        System.gc() // see ScaleBench.timed: old-gen debt skews next rep
-        val t0 = System.nanoTime()
-        run
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      ts(ts.size / 2)
-    }
-    // CALM-WINDOW GATE (the BenchWindow policy, see Bench): a ledger
-    // row measured in a steal window misgrades the engine vs DuckDB's
-    // separately-measured run, so a noisy pass re-measures instead of
-    // printing, bounded; an all-noisy run prints flagged.
-    BenchWindow.satProbe(spark) // codegen warm — first run pays ~2x
-    val MaxAttempts = 3
-    var attempt = 0
-    var calm = false
-    var calmRef = -1.0
-    var satStart = -1.0
-    var satEnd = -1.0
-    var probeSec = -1.0
-    var results: Seq[(String, Double)] = Nil
-    while (attempt < MaxAttempts && !calm) {
-      attempt += 1
-      satStart = BenchWindow.satProbe(spark)
-      probeSec = timed {
+    // CALM-WINDOW GATE: a ledger row measured in a steal window
+    // misgrades the engine vs DuckDB's separately-measured run
+    val ((probeSec, results), w) = BenchWindow.calmGated(spark, "ledger") { _ =>
+      val probeSec = BenchWindow.timed(spark, reps) {
         spark.read.parquet(s"$sfDir/$primary.parquet").count()
-      }
-      results = names.map { n =>
-        n -> timed(SparkEntry.queries(n)(spark, sfDir)
-          .write.mode("overwrite").format("noop").save())
-      }
-      satEnd = BenchWindow.satProbe(spark)
-      calmRef = BenchWindow.calmRef(spark, math.min(satStart, satEnd))
-      calm = BenchWindow.isCalm(calmRef, Seq(satStart, satEnd))
-      if (!calm && attempt < MaxAttempts) {
-        System.err.println(s"ledger window NOISY (attempt $attempt: " +
-          s"sat=$satStart,$satEnd ref=$calmRef) — pausing and re-measuring")
-        Thread.sleep(30000)
+      }.median
+      probeSec -> names.map { n =>
+        n -> BenchWindow.timed(spark, reps)(
+          BenchWindow.sink(SparkEntry.queries(n)(spark, sfDir))).median
       }
     }
     val qs = results.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    println(s"""{"bench":"ledger","sf":"$sfDir","reps":$reps,"probe_table":"$primary","probe_sec":$probeSec,"sat_probe_start_sec":$satStart,"sat_probe_end_sec":$satEnd,"sat_calm_ref_sec":$calmRef,"window_noisy":${!calm},"window_attempts":$attempt,"loadavg":${BenchWindow.loadavg()},"graft_sec":$qs}""")
+    BenchWindow.emit(s"""{"bench":"ledger","sf":"$sfDir","reps":$reps,"probe_table":"$primary","probe_sec":$probeSec,${w.json},"graft_sec":$qs}""")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical scaling proof for the LLM-data-pipeline operators: the
@@ -63,14 +63,7 @@ object LlmScale {
     val factor = if (args.length > 0) args(0).toInt else 10
     val reps = if (args.length > 1) args(1).toInt else 3
     val src = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchWindow.session()
 
     val dir =
       if (factor == 1) src
@@ -84,11 +77,6 @@ object LlmScale {
       }
     val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
 
-    def probe(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
     // optional 4th arg: comma-list restricting which ops to measure
     // (for re-measuring one op without repeating the sweep)
     val ops =
@@ -100,15 +88,11 @@ object LlmScale {
     // is quadratic. Production SemDeDup keeps cluster size constant
     // (ivfK ∝ n); this variant measures exactly that and should
     // restore the ~linear slope.
-    // noop sink, NOT count(): same measurement rule as Bench.scala —
-    // under count() Catalyst prunes every column a pure projection
-    // computes, so window/projection-shaped ops (pipe_shuffle,
-    // pipe_pack, ta_* stats) were timed as bare row counts. The noop
-    // write materializes every output row in full.
-    def mat(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
+    // noop sink, NOT count(): under count() window/projection-shaped
+    // ops (pipe_shuffle, pipe_pack, ta_* stats) time as bare row counts
+    import BenchWindow.sink
     def runScaledK(): Unit =
-      mat(graft.operators.DedupOps.semanticPairs(
+      sink(graft.operators.DedupOps.semanticPairs(
           spark.read.parquet(s"$dir/embeddings.parquet"),
           ivfK = 32 * factor, iters = 2)
         .orderBy(org.apache.spark.sql.functions.col("cosine").desc,
@@ -128,37 +112,26 @@ object LlmScale {
       var m = 1L << 17
       while (m < target) m <<= 1
       require(m <= (1L << 30), s"scaled mBits $m exceeds the Int bitmap bound")
-      mat(graft.operators.DedupOps.bloomDecontaminate(
+      sink(graft.operators.DedupOps.bloomDecontaminate(
           spark.read.parquet(s"$dir/documents.parquet"),
           isEval = pmod(col("doc_id"), lit(53)) === 0, k = 4, mBits = m.toInt))
     }
-    val probeStart = probe()
+    val probeStart = BenchWindow.probe(spark)
     val results = ops.map { name =>
       val body: () => Unit =
         if (name == "dd_semantic_scaledk") () => runScaledK()
         else if (name == "dd_bloom_scaledm") () => runScaledM()
-        else { val q = SparkEntry.queries(name); () => mat(q(spark, dir)) }
-      val times = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        body()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      val med = times(times.length / 2)
-      println(f"[llm-scale] $name x$factor: $med%.2fs (reps ${times.map(t => f"$t%.2f").mkString(",")})")
-      name -> med
+        else { val q = SparkEntry.queries(name); () => sink(q(spark, dir)) }
+      val r = BenchWindow.timed(spark, reps)(body())
+      println(f"[llm-scale] $name x$factor: ${r.median}%.2fs (reps ${r.sorted.map(t => f"$t%.2f").mkString(",")})")
+      name -> r.median
     }
-    val probeEnd = probe()
+    val probeEnd = BenchWindow.probe(spark)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val line =
-      s"""{"factor":$factor,"n_docs":$nDocs,"reps":$reps,"stat":"median","probe_start_sec":$probeStart,"probe_end_sec":$probeEnd,"queries":$qs}"""
-    println(line)
-    val out = java.nio.file.Paths.get(s"target/llm_scale_x$factor.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.write(out,
-      line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    BenchWindow.emit(
+      s"""{"factor":$factor,"n_docs":$nDocs,"reps":$reps,"stat":"median","probe_start_sec":$probeStart,"probe_end_sec":$probeEnd,"queries":$qs}""",
+      s"target/llm_scale_x$factor.json")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.AggView
 
@@ -23,21 +22,9 @@ import graft.sources.AggView
 object MatViewDelta {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("target/sf100")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-
-    def probe(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    val probeStart = probe()
+    val spark = BenchWindow.plainSession()
+    BenchWindow.probe(spark) // JVM warm
+    val probeStart = BenchWindow.probe(spark)
 
     // hardlink farm: same bytes, zero copy, appendable in isolation
     val base = "target/scratch/matview-delta/base"
@@ -54,10 +41,9 @@ object MatViewDelta {
     val view = "target/scratch/matview-delta/view"
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(view))
 
-    def t(body: => Unit): Double = {
-      System.gc()
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
+    // one-shot maintenance timings; the views are files, not cached frames
+    def t(body: => Unit): Double =
+      BenchWindow.timed(spark, 1, clearCache = false)(body).median
     val buildSec = t(AggView.build(spark, base, view, Seq("l_returnflag"), "l_partkey"))
     val baseRows = spark.read.parquet(base).count()
     val viewRows = AggView.read(spark, view).count()
@@ -91,7 +77,7 @@ object MatViewDelta {
       .collect().map(_.toString).sorted.toSeq
     require(servedDelta == truth, "serve must equal the raw-base aggregation")
 
-    val probeEnd = probe()
+    val probeEnd = BenchWindow.probe(spark)
     val line =
       s"""{"bench":"matview_delta","sf":"$sfDir","base_rows":$baseRows,""" +
         s""""base_files":${srcFiles.size},"appended_files":1,""" +
@@ -99,10 +85,7 @@ object MatViewDelta {
         s""""probe_start_sec":$probeStart,"probe_end_sec":$probeEnd,""" +
         s""""build_sec":$buildSec,"delta_refresh_sec":$deltaSec,""" +
         s""""full_rebuild_sec":$rebuildSec,"bit_exact":true}"""
-    println(line)
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("target/matview_delta.json"), line.getBytes)
-    catch { case scala.util.control.NonFatal(_) => }
+    BenchWindow.emit(line, "target/matview_delta.json")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.AggView
 
@@ -36,38 +35,17 @@ object MatViewScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("target/sf10")
     val reps = if (args.length > 1) args(1).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the transparent arm needs the optimizer rule installed; the
-      // scan/view arms run BEFORE any view registration, so the rule
-      // never fires on them (one empty registry lookup per plan)
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JVM warm
-
-    def probe(): Double = {
-      val s = System.nanoTime()
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      (System.nanoTime() - s) / 1e9
-    }
-    def medianOf(run: => Seq[String]): (Double, Seq[String]) = {
-      var v: Seq[String] = Nil
-      val ts = (1 to reps).map { _ =>
-        System.gc()
-        val s = System.nanoTime()
-        v = run
-        (System.nanoTime() - s) / 1e9
-      }.sorted
-      (ts(ts.length / 2), v)
-    }
+    // the transparent arm needs the optimizer rule installed; the
+    // scan/view arms run BEFORE any view registration, so the rule
+    // never fires on them (one empty registry lookup per plan)
+    val spark = BenchWindow.session()
+    BenchWindow.probe(spark) // JVM warm
+    def medianOf(run: => Seq[String]): (Double, Seq[String]) =
+      BenchWindow.medianOf(spark, reps, clearCache = false)(run)
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).sorted.toSeq
 
-    val probeStart = probe()
+    val probeStart = BenchWindow.probe(spark)
     val liPath = s"$sfDir/lineitem.parquet"
     val li = spark.read.parquet(liPath)
     val baseRows = li.count()
@@ -78,9 +56,8 @@ object MatViewScale {
     val builds = viewCols.map { c =>
       val vp = s"$scratch/$c"
       val fresh = !new java.io.File(s"$vp/_graft_view").exists()
-      val t = System.nanoTime()
-      if (fresh) AggView.build(spark, liPath, vp, Seq("l_returnflag"), c)
-      val buildSec = (System.nanoTime() - t) / 1e9
+      val buildSec = BenchWindow.timeOnce(
+        if (fresh) AggView.build(spark, liPath, vp, Seq("l_returnflag"), c))
       val viewRows = AggView.read(spark, vp).count()
       println(f"[matview-scale] view $c: build $buildSec%.1fs (fresh=$fresh), $viewRows rows vs $baseRows base (${viewRows * 100.0 / baseRows}%.1f%%)")
       c -> (vp, buildSec, viewRows, fresh)
@@ -143,9 +120,10 @@ object MatViewScale {
     println(f"[matview-scale] filtered scan: $whereScanSec%.2fs")
 
     // ---- maintenance fixed cost: a no-op refresh --------------------
-    val tR = System.nanoTime()
-    val refreshed = AggView.refresh(spark, liPath, builds("l_partkey")._1)
-    val refreshNoopSec = (System.nanoTime() - tR) / 1e9
+    var refreshed = true
+    val refreshNoopSec = BenchWindow.timeOnce {
+      refreshed = AggView.refresh(spark, liPath, builds("l_partkey")._1)
+    }
     require(!refreshed, "no-op refresh must report no new files")
 
     // ---- transparent arms: plain SQL, rule re-plans onto the views --
@@ -154,12 +132,8 @@ object MatViewScale {
     li.createOrReplaceTempView("mv_lineitem")
     def scansView(df: org.apache.spark.sql.DataFrame, vp: String): Boolean = {
       val needle = new java.io.File(vp).getAbsolutePath
-      df.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation.asInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-            .location.rootPaths.exists(_.toString.contains(needle))
-      }.exists(identity)
+      BenchWindow.fileRelations(df)
+        .exists(_.location.rootPaths.exists(_.toString.contains(needle)))
     }
     def q16Sql() = spark.sql(
       """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts,
@@ -205,7 +179,7 @@ object MatViewScale {
     println(f"[matview-scale] filtered transparent sql: $whereSqlSec%.2fs")
     require(whereSqlRows == whereTruth, "filtered transparent diverged from scan")
 
-    val probeEnd = probe()
+    val probeEnd = BenchWindow.probe(spark)
     val buildJson = viewCols.map { c =>
       val (_, sec, vr, fresh) = builds(c)
       s""""build_$c":{"sec":$sec,"fresh":$fresh,"view_rows":$vr}"""
@@ -222,12 +196,7 @@ object MatViewScale {
         s""""where_scan_sec":$whereScanSec,""" +
         s""""where_transparent_sql_sec":$whereSqlSec,""" +
         s""""refresh_noop_sec":$refreshNoopSec}"""
-    println(line)
-    try {
-      val out = java.nio.file.Paths.get("target/matview_scale.json")
-      java.nio.file.Files.createDirectories(out.getParent)
-      java.nio.file.Files.write(out, line.getBytes)
-    } catch { case scala.util.control.NonFatal(_) => }
+    BenchWindow.emit(line, "target/matview_scale.json")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** FILE-COUNT stress for the metadata plane (round 14, verdict #3).
@@ -28,10 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object MetaPlaneScale {
 
-  private def timeOnce(body: => Unit): Double = {
-    val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-  }
-
   private def heapMb(): Double = {
     System.gc()
     val rt = Runtime.getRuntime
@@ -40,21 +36,14 @@ object MetaPlaneScale {
 
   def main(args: Array[String]): Unit = {
     val maxReal = if (args.nonEmpty) args(0).toInt else 20000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    import BenchWindow.timeOnce
+    val spark = BenchWindow.session(BenchWindow.UTC)
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    BenchWindow.probe(spark)
 
     val real = Seq(1000, 5000, 20000).filter(_ <= maxReal).map { n =>
       val out = s"target/scratch/metaplane/files$n"
-      val p = java.nio.file.Paths.get(out, "_SUCCESS")
-      if (!java.nio.file.Files.exists(p)) {
+      if (!BenchWindow.written(out)) {
         // n files, ~100 id-clustered rows each: the id ranges are
         // disjoint per file, so zone predicates decide most files
         spark.range(n * 100L).select(col("id"),
@@ -191,15 +180,11 @@ object MetaPlaneScale {
         s""""refresh_vs_rebuild":${refreshSec / math.max(parSec, 1e-9)}}"""
     }
 
-    val line =
-      s"""{"bench":"metaplane","cpus":$cpus,"real":[${real.mkString(",")}],""" +
+    BenchWindow.emit(
+      s"""{"bench":"metaplane","cpus":${BenchWindow.cpus},"real":[${real.mkString(",")}],""" +
         s""""sweep":$sweep,""" +
-        s""""synthetic_index":[${synth.mkString(",")}]}"""
-    println(line)
-    val outP = java.nio.file.Paths.get("target/metaplane.json")
-    java.nio.file.Files.createDirectories(outP.getParent)
-    java.nio.file.Files.write(outP,
-      line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        s""""synthetic_index":[${synth.mkString(",")}]}""",
+      "target/metaplane.json")
     spark.stop()
   }
 }

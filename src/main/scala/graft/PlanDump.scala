@@ -17,13 +17,7 @@ object PlanDump {
     val outDir = if (args.length > 1) args(1) else "plans/r16"
     val suffix = if (args.length > 2) args(2) else "before"
     val only: Set[String] = args.drop(3).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = BenchWindow.session()
     spark.sparkContext.setLogLevel("ERROR")
     // same pre-build the bench does, so mb_* plans reflect the served layout
     try graft.queries.MicroBlockQueries.engineFor(spark, sfDir)

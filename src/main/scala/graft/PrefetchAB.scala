@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Artifact driver for the prefetch-loop A/B
   * ([[graft.engine.PrefetchLoopBench]]): the reference's
   * run_with_prefetch_loop.py + benchmark.py experiment as one measured
@@ -14,34 +12,13 @@ import org.apache.spark.sql.SparkSession
   */
 object PrefetchAB {
 
-  private def timeOnce(body: => Unit): Double = {
-    val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Core-saturating noise canary (Bench.scala's): a sick measurement
-    * window must be self-evident from the artifact. */
-  private def satProbe(spark: SparkSession): Double =
-    timeOnce {
-      val p = spark.sparkContext.defaultParallelism
-      spark.range(0, 32000000L, 1, p)
-        .selectExpr("id % 1048576 AS k")
-        .groupBy("k").count()
-        .selectExpr("sum(count)").collect()
-    }
-
   def main(args: Array[String]): Unit = {
     val reps = if (args.length > 0) args(0).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JVM warm-up
-    satProbe(spark) // codegen warm-up for the probe itself
+    // the canary samples make a sick measurement window self-evident
+    import BenchWindow.satProbe
+    val spark = BenchWindow.session()
+    BenchWindow.warm(spark)
 
     // A FRESH engine (not the memoized engineFor one): the A/B needs
     // its own clean access log, and a cache capacity BELOW the
@@ -77,11 +54,7 @@ object PrefetchAB {
         s""""sat_probe_end_sec":$satEnd,""" +
         s""""arms":${graft.engine.PrefetchLoopBench.toJson(rows)},""" +
         s""""overlapped":${graft.engine.PrefetchLoopBench.toJsonOverlapped(overlapped)}}"""
-    println(line)
-    val out = java.nio.file.Paths.get("target/prefetch_ab.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.write(out,
-      line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    BenchWindow.emit(line, "target/prefetch_ab.json")
     spark.stop()
   }
 }

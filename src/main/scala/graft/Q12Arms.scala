@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Dedicated q12 layout A/B (round 14; round 16: four arms): the
   * HAND-TUNED bucketed plan (ScaleBench's q12Bucketed — join order +
@@ -25,21 +24,12 @@ object Q12Arms {
     val sfDir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 5
     val buckets = if (args.length > 2) args(2).toInt else 128
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    BenchWindow.satProbe(spark)
+    val spark = BenchWindow.session(
+      BenchWindow.shufflePartitions,
+      "spark.sql.join.preferSortMergeJoin" -> sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"),
+      "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
+      BenchWindow.UTC)
+    BenchWindow.warm(spark)
 
     require(
       graft.sources.Bucketing.registerExisting(spark, "li_bkt", "l_orderkey", buckets) &&
@@ -47,26 +37,7 @@ object Q12Arms {
       "bucketed layouts missing — run ScaleBench first")
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
 
-    import graft.queries.Det.dec4
-    def handArm(): DataFrame = {
-      val revByOrder = spark.table("li_bkt")
-        .groupBy("l_orderkey")
-        .agg(sum(dec4(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("rev"))
-      val ordNation = spark.table("ord_bkt")
-        .filter(col("o_orderdate") >= "1996-01-01 00:00:00")
-        .join(spark.read.parquet(s"$sfDir/customer.parquet")
-            .select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .select(col("o_orderkey"), col("c_nationkey"))
-      revByOrder.join(ordNation, col("l_orderkey") === col("o_orderkey"))
-        .groupBy("c_nationkey").agg(sum(col("rev")).as("rev"))
-        .join(broadcast(spark.read.parquet(s"$sfDir/nation.parquet")),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(spark.read.parquet(s"$sfDir/region.parquet")),
-          col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(sum(col("rev")).cast("double").as("revenue"))
-    }
+    def handArm(): DataFrame = ScaleBench.q12Bucketed(spark, sfDir)
     def transparentArm(): DataFrame = {
       spark.read.parquet(s"$wh/li_bkt").createOrReplaceTempView("li_bkt_v")
       spark.read.parquet(s"$wh/ord_bkt").createOrReplaceTempView("ord_bkt_v")
@@ -126,14 +97,8 @@ object Q12Arms {
       }.nonEmpty
     // plan audit: the claim, the forced push, and the auto decision
     val pdf = pushArm()
-    val claimed = pdf.queryExecution.optimizedPlan.collectFirst {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation
-          if r.relation.isInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation] &&
-            r.relation.asInstanceOf[
-              org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-              .bucketSpec.exists(_.bucketColumnNames == Seq("l_orderkey")) => true
-    }.nonEmpty
+    val claimed = BenchWindow.fileRelations(pdf)
+      .exists(_.bucketSpec.exists(_.bucketColumnNames == Seq("l_orderkey")))
     val pushed = hasPreAggUnderJoin(pdf)
     require(claimed, "transparent arm did not claim the bucket spec")
     require(pushed, "gate-off transparent arm did not push the pre-aggregate")
@@ -151,58 +116,26 @@ object Q12Arms {
       require(hv == tv, s"$arm disagrees: $hv vs $tv")
     }
 
-    def rep(mk: () => DataFrame): Double = {
-      spark.catalog.clearCache()
-      System.gc()
-      // noop sink, NOT count(): count() lets ColumnPruning drop the
-      // revenue SUM out of BOTH arms (the per-row decimal work — the
-      // query's dominant cost — was never measured; round-15 bench
-      // honesty fix, r14's 17.4 s/19.0 s pair was the pruned query)
-      val t0 = System.nanoTime()
-      mk().write.mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
+    // noop sink, NOT count(): count() lets ColumnPruning drop the
+    // revenue SUM out of BOTH arms (the per-row decimal work — the
+    // query's dominant cost — was never measured; round-15 bench
+    // honesty fix, r14's 17.4 s/19.0 s pair was the pruned query)
+    def rep(mk: () => DataFrame): Double =
+      BenchWindow.timed(spark, 1)(BenchWindow.sink(mk())).median
+    val arms = Seq("hand" -> handArm _, "transparent" -> pushArm _,
+      "nopush" -> noPushArm _, "auto" -> autoArm _)
+    val (rounds, w) = BenchWindow.calmGated(spark, "q12 arms") { _ =>
+      (1 to reps).map(_ => arms.map { case (_, mk) => rep(mk) })
     }
-    val MaxAttempts = 3
-    var attempt = 0
-    var calm = false
-    var hand: Seq[Double] = Nil
-    var trans: Seq[Double] = Nil
-    var nopush: Seq[Double] = Nil
-    var auto: Seq[Double] = Nil
-    var satStart = -1.0; var satEnd = -1.0; var calmRef = -1.0
-    while (attempt < MaxAttempts && !calm) {
-      attempt += 1
-      satStart = BenchWindow.satProbe(spark)
-      val quads = (1 to reps).map { _ =>
-        (rep(handArm _), rep(pushArm _), rep(noPushArm _), rep(autoArm _))
-      }
-      hand = quads.map(_._1).sorted
-      trans = quads.map(_._2).sorted
-      nopush = quads.map(_._3).sorted
-      auto = quads.map(_._4).sorted
-      satEnd = BenchWindow.satProbe(spark)
-      calmRef = BenchWindow.calmRef(spark, math.min(satStart, satEnd))
-      calm = BenchWindow.isCalm(calmRef, Seq(satStart, satEnd))
-      if (!calm && attempt < MaxAttempts) {
-        System.err.println(s"q12 arms window NOISY (attempt $attempt) — retrying")
-        Thread.sleep(30000)
-      }
-    }
+    val armJson = arms.map(_._1).zipWithIndex.map { case (name, i) =>
+      val xs = rounds.map(_(i)).sorted
+      s""""${name}_median_sec":${BenchWindow.median(xs)},"${name}_reps_sorted":[${xs.mkString(",")}],"""
+    }.mkString
     val line =
-      s"""{"bench":"q12_arms","sf":"$sfDir","reps":$reps,"buckets":$buckets,""" +
-        s""""hand_median_sec":${hand(hand.size / 2)},"hand_reps_sorted":[${hand.mkString(",")}],""" +
-        s""""transparent_median_sec":${trans(trans.size / 2)},"transparent_reps_sorted":[${trans.mkString(",")}],""" +
-        s""""nopush_median_sec":${nopush(nopush.size / 2)},"nopush_reps_sorted":[${nopush.mkString(",")}],""" +
-        s""""auto_median_sec":${auto(auto.size / 2)},"auto_reps_sorted":[${auto.mkString(",")}],""" +
+      s"""{"bench":"q12_arms","sf":"$sfDir","reps":$reps,"buckets":$buckets,$armJson""" +
         s""""claimed":true,"pushed":true,"auto_pushed":$autoPushed,"rows_equal":true,""" +
-        s""""sat_probe_start_sec":$satStart,"sat_probe_end_sec":$satEnd,""" +
-        s""""sat_calm_ref_sec":$calmRef,"window_noisy":${!calm},""" +
-        s""""window_attempts":$attempt,"loadavg":${BenchWindow.loadavg()}}"""
-    println(line)
-    val outP = java.nio.file.Paths.get("target/q12_arms.json")
-    java.nio.file.Files.createDirectories(outP.getParent)
-    java.nio.file.Files.write(outP,
-      line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        s"""${w.json}}"""
+    BenchWindow.emit(line, "target/q12_arms.json")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measured A/B for the q42 key-less interval join: the bin
@@ -28,14 +28,7 @@ object RangeJoinAB {
     val factors =
       if (args.length > 1) args(1).split(',').map(_.toInt).toSeq else Seq(1, 4)
     val naiveMax = if (args.length > 2) args(2).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchWindow.session()
     import graft.engine.Tables
 
     val W = 300000000L // 5 min in µs
@@ -70,31 +63,18 @@ object RangeJoinAB {
         .groupBy("event_id")
         .agg(count(col("ct")).as("cnt"), sum(col("v")).as("s"))
 
-    def probe(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def timed(reps: Int)(body: () => (Long, Long, java.math.BigDecimal)) = {
-      var fp: (Long, Long, java.math.BigDecimal) = null
-      val times = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        err0.persist(); clk0.persist() // keep the base frames cached
-        System.gc()
-        val t0 = System.nanoTime()
-        fp = body()
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      (times(reps / 2), fp)
-    }
+    // re-persist the base frames after each rep's cache clear
+    val keepBase = () => { err0.persist(); clk0.persist(); () }
 
-    val probeStart = probe()
+    val probeStart = BenchWindow.probe(spark)
     val rows = factors.map { f =>
       val (err, clk) = scaled(f)
-      val (binSec, binFp) = timed(3)(() => fingerprint(binArm(err, clk)))
+      val (binSec, binFp) = BenchWindow.medianOf(spark, 3, prep = keepBase)(
+        fingerprint(binArm(err, clk)))
       val naive = f <= naiveMax
       val (naiveSec, naiveFp) =
-        if (naive) timed(3)(() => fingerprint(naiveArm(err, clk)))
+        if (naive) BenchWindow.medianOf(spark, 3, prep = keepBase)(
+          fingerprint(naiveArm(err, clk)))
         else (-1.0, null)
       if (naive) require(binFp == naiveFp,
         s"arms disagree at x$f: bin=$binFp naive=$naiveFp")
@@ -104,15 +84,12 @@ object RangeJoinAB {
       s"""{"factor":$f,"bin_sec":$binSec,"naive_sec":$naiveSec,""" +
         s""""rows":${binFp._1},"matches":${binFp._2},"verified":$naive}"""
     }
-    val probeEnd = probe()
-    val line = s"""{"src":"$src","window_us":$W,"reps":3,"stat":"median",""" +
-      s""""probe_start_sec":$probeStart,"probe_end_sec":$probeEnd,""" +
-      s""""factors":[${rows.mkString(",")}]}"""
-    println(line)
-    val out = java.nio.file.Paths.get("target/range_join_ab.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.write(out,
-      line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val probeEnd = BenchWindow.probe(spark)
+    BenchWindow.emit(
+      s"""{"src":"$src","window_us":$W,"reps":3,"stat":"median",""" +
+        s""""probe_start_sec":$probeStart,"probe_end_sec":$probeEnd,""" +
+        s""""factors":[${rows.mkString(",")}]}""",
+      "target/range_join_ab.json")
     spark.stop()
   }
 }

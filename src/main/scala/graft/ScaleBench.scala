@@ -20,53 +20,55 @@ object ScaleBench {
     Seq("q1_agg", "q2_filter_between", "q9_orderby_limit", "q12_join_multi",
       "q6_count_star")
 
+  /** The at-scale q12 plan, three structural moves on top of the
+    * bucketed `li_bkt`/`ord_bkt` layout (same result set — every move
+    * is a rewrite an agg-pushdown/join-reorder optimizer could make):
+    *  1. JOIN ORDER: customer is fact-sized at 100x (1/10 of orders),
+    *     so it joins into orders via orders-sized shuffles — never
+    *     broadcast (a multi-GB single-threaded hash build per rep),
+    *     and lineitem — the 100 TB side — NEVER shuffles.
+    *  2. AGG PUSHDOWN: revenue pre-aggregates by l_orderkey INSIDE the
+    *     buckets (hash-partitioned by the key -> partial+final with no
+    *     exchange), 4x'ing down the merge's left input.
+    *  3. LATE STRINGS: only a 4-byte nationkey crosses the shuffles and
+    *     the merge; names attach to the final 25-row aggregate.
+    * [[Q12Arms]] times it as the hand-tuned arm. */
+  def q12Bucketed(spark: SparkSession, sfDir: String): DataFrame = {
+    import graft.queries.Det.dec4
+    val revByOrder = spark.table("li_bkt")
+      .groupBy("l_orderkey")
+      .agg(sum(dec4(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("rev"))
+    val ordNation = spark.table("ord_bkt")
+      .filter(col("o_orderdate") >= "1996-01-01 00:00:00")
+      .join(spark.read.parquet(s"$sfDir/customer.parquet")
+          .select(col("c_custkey"), col("c_nationkey")),
+        col("o_custkey") === col("c_custkey"))
+      .select(col("o_orderkey"), col("c_nationkey"))
+    revByOrder.join(ordNation, col("l_orderkey") === col("o_orderkey"))
+      .groupBy("c_nationkey").agg(sum(col("rev")).as("rev"))
+      .join(broadcast(spark.read.parquet(s"$sfDir/nation.parquet")),
+        col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(spark.read.parquet(s"$sfDir/region.parquet")),
+        col("n_regionkey") === col("r_regionkey"))
+      .groupBy("r_name", "n_name")
+      .agg(sum(col("rev")).cast("double").as("revenue"))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("target/sf1")
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      // shuffle width defaults to core count; big-shuffle shapes (q12's
-      // 600M-row join at sf100) can override — more partitions = less
-      // per-task build memory and spill (SPARK_GRAFT_SHUFFLE_PARTITIONS)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.eventLog.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_EVENTLOG", "false"))
-      .config("spark.eventLog.dir", "/tmp/spark-events")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JVM warm
+    val spark = BenchWindow.session(
+      BenchWindow.shufflePartitions,
+      "spark.sql.join.preferSortMergeJoin" -> sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"),
+      "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
+      "spark.eventLog.enabled" -> sys.env.getOrElse("SPARK_GRAFT_EVENTLOG", "false"),
+      "spark.eventLog.dir" -> "/tmp/spark-events")
+    BenchWindow.probe(spark) // JVM warm
     spark.read.parquet(s"$sfDir/nation.parquet").count() // parquet path warm
-    // noop sink, NOT count(): count() lets ColumnPruning drop projected
-    // and aggregated expressions out of the timed plan (the round-15
-    // Q12Arms discovery — r14's q12 ledger measured a pruned query
-    // while DuckDB computed the full one). The noop write materializes
-    // every output row in full with no driver transfer; the DuckDB
-    // pair (tools/bench_duckdb.py) matches it with a full-query arrow
-    // fetch. Round 16: ALL ledger timings route through this sink.
-    def sink(df: DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    def timed(name: String)(run: => Unit): (String, Double) = {
-      val ts = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        // Measure the query, not the previous rep's GC debt: a heavy
-        // rep leaves the old gen full of promoted-but-dead Tungsten
-        // pages, and without a full collection the NEXT rep pays for
-        // them with 5-30x inflated GC time (measured: identical q12
-        // reps at 20s/43s/90s without this, 19-21s with it).
-        System.gc()
-        val t0 = System.nanoTime()
-        run
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      name -> ts(ts.size / 2)
-    }
+    // every ledger timing is the noop sink (BenchWindow.sink), which the
+    // DuckDB pair (tools/bench_duckdb.py) matches with a full-query
+    // arrow fetch
+    import BenchWindow.sink
     // SPARK_GRAFT_ONLY_BUCKETED=1: skip the headline loop but keep the
     // overhead probe — the bucketed q12's marginal must subtract a
     // probe measured in the SAME window.
@@ -82,7 +84,7 @@ object ScaleBench {
       }
     val headlineResults = headlineRun.map { name =>
       val q = SparkEntry.queries(name)
-      timed(name)(sink(q(spark, sfDir)))
+      name -> BenchWindow.timed(spark, reps)(sink(q(spark, sfDir))).median
     }
     // q1_agg_double rides with the headline loop, not the bucketed-only
     // mode: ONLY_BUCKETED promises "just the probe", and full timed reps
@@ -90,7 +92,7 @@ object ScaleBench {
     // unadvertised runtime at sf100.
     var results =
       if (sys.env.contains("SPARK_GRAFT_ONLY_BUCKETED")) headlineResults
-      else headlineResults :+ timed("q1_agg_double") {
+      else headlineResults :+ "q1_agg_double" -> BenchWindow.timed(spark, reps) {
       // q1 with PLAIN double sums: quantifies the exact-decimal
       // determinism tax the oracle-checked q1 pays (graft routes double
       // aggregation through DECIMAL so results hash-match DuckDB
@@ -101,7 +103,7 @@ object ScaleBench {
         .agg(sum("l_quantity"), sum("l_extendedprice"),
           sum(col("l_extendedprice") * (lit(1) - col("l_discount"))),
           avg("l_quantity"), count(lit(1))))
-    }
+    }.median
     // q20 over orders BUCKETED BY ITS WINDOW KEY (o_custkey): the
     // partition-by distribution is satisfied by the bucketing, so the
     // 150M-row exchange under WindowExec disappears and only the
@@ -113,12 +115,10 @@ object ScaleBench {
       else {
         val buckets = sys.env.getOrElse("SPARK_GRAFT_Q20_BUCKETS", "64").toInt
         val build =
-          if (sys.env.contains("SPARK_GRAFT_REBUCKET")) {
-            val t0 = System.nanoTime()
+          if (sys.env.contains("SPARK_GRAFT_REBUCKET")) BenchWindow.timeOnce {
             graft.sources.Bucketing.writeBucketed(
               spark.read.parquet(s"$sfDir/orders.parquet"), "ord_cust_bkt",
               "o_custkey", buckets, columns = Seq("o_orderkey", "o_totalprice"))
-            (System.nanoTime() - t0) / 1e9
           } else graft.sources.Bucketing.ensureBucketed(
             spark, spark.read.parquet(s"$sfDir/orders.parquet"),
             "ord_cust_bkt", "o_custkey", buckets,
@@ -132,7 +132,7 @@ object ScaleBench {
           .filter(col("rn") <= 3)
           .orderBy("o_custkey", "rn")
         Seq("q20_bucketed_build" -> build,
-          "q20_window_rank_bucketed" -> timed("q20b")(sink(q20b()))._2)
+          "q20_window_rank_bucketed" -> BenchWindow.timed(spark, reps)(sink(q20b())).median)
       }
     results = results ++ q20Results
     // q12 on BUCKETED fact tables: pay the clustering write once, then
@@ -143,7 +143,7 @@ object ScaleBench {
     // the whole fact table — at sf100 that's a disk-spill budget call).
     if (sys.env.contains("SPARK_GRAFT_SKIP_BUCKETED")) {
       val qs = results.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-      println(s"""{"bench":"scale","sf":"$sfDir","reps":$reps,"graft_sec":$qs}""")
+      BenchWindow.emit(s"""{"bench":"scale","sf":"$sfDir","reps":$reps,"graft_sec":$qs}""")
       spark.stop()
       return
     }
@@ -159,11 +159,10 @@ object ScaleBench {
     // Reuse an already-clustered layout when its files survive from a
     // previous session (the in-memory catalog forgets bucket specs on
     // JVM exit; the files don't) — pay-once layout, query-many.
-    val t0 = System.nanoTime()
     val reused = !sys.env.contains("SPARK_GRAFT_REBUCKET") &&
       graft.sources.Bucketing.registerExisting(spark, "li_bkt", "l_orderkey", buckets) &&
       graft.sources.Bucketing.registerExisting(spark, "ord_bkt", "o_orderkey", buckets)
-    if (!reused) {
+    val buildSec = if (reused) 0.0 else BenchWindow.timeOnce {
       graft.sources.Bucketing.writeBucketed(
         spark.read.parquet(s"$sfDir/lineitem.parquet"), "li_bkt", "l_orderkey", buckets,
         columns = Seq("l_extendedprice", "l_discount"))
@@ -171,50 +170,13 @@ object ScaleBench {
         spark.read.parquet(s"$sfDir/orders.parquet"), "ord_bkt", "o_orderkey", buckets,
         columns = Seq("o_orderdate", "o_custkey"))
     }
-    val buildSec = if (reused) 0.0 else (System.nanoTime() - t0) / 1e9
-    // The at-scale q12 plan, three structural moves on top of the
-    // bucketed layout (same result set — every move is a rewrite an
-    // agg-pushdown/join-reorder optimizer could make):
-    //  1. JOIN ORDER: customer is fact-sized at 100x (1/10 of orders),
-    //     so it joins into orders via orders-sized shuffles — never
-    //     broadcast (a multi-GB single-threaded hash build per rep),
-    //     and lineitem — the 100 TB side — NEVER shuffles.
-    //  2. AGG PUSHDOWN: revenue pre-aggregates by l_orderkey INSIDE
-    //     the buckets (hash-partitioned by the key -> partial+final
-    //     with no exchange), 4x'ing down the merge's left input.
-    //  3. LATE STRINGS: only a 4-byte nationkey crosses the shuffles
-    //     and the merge; names attach to the final 25-row aggregate.
-    def q12Bucketed(): DataFrame = {
-      import graft.queries.Det.dec4
-      val revByOrder = spark.table("li_bkt")
-        .groupBy("l_orderkey")
-        .agg(sum(dec4(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("rev"))
-      val ordNation = spark.table("ord_bkt")
-        .filter(col("o_orderdate") >= "1996-01-01 00:00:00")
-        .join(spark.read.parquet(s"$sfDir/customer.parquet")
-            .select(col("c_custkey"), col("c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .select(col("o_orderkey"), col("c_nationkey"))
-      val revByNation = revByOrder
-        .join(ordNation, col("l_orderkey") === col("o_orderkey"))
-        .groupBy("c_nationkey")
-        .agg(sum(col("rev")).as("rev"))
-      revByNation
-        .join(broadcast(spark.read.parquet(s"$sfDir/nation.parquet")),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(spark.read.parquet(s"$sfDir/region.parquet")),
-          col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(sum(col("rev")).cast("double").as("revenue"))
-    }
     if (sys.env.contains("SPARK_GRAFT_DIAG")) {
       def t(label: String)(run: => Unit): Unit = {
-        val s0 = System.nanoTime()
-        run
+        val sec = BenchWindow.timeOnce(run)
         val rt = Runtime.getRuntime
         System.gc()
         val live = (rt.totalMemory() - rt.freeMemory()) / 1e9
-        println(f"[diag] $label: ${(System.nanoTime() - s0) / 1e9}%.2fs (live-after-gc $live%.1fGB)")
+        println(f"[diag] $label: $sec%.2fs (live-after-gc $live%.1fGB)")
       }
       def q12Double(): DataFrame = {
         val revByOrder = spark.table("li_bkt")
@@ -234,14 +196,10 @@ object ScaleBench {
       t("q12 double-sums")(sink(q12Double()))
       (1 to 4).foreach { i =>
         spark.catalog.clearCache()
-        t(s"q12Bucketed rep$i")(sink(q12Bucketed()))
+        t(s"q12Bucketed rep$i")(sink(q12Bucketed(spark, sfDir)))
       }
     }
-    val bts = (1 to reps).map { _ =>
-      spark.catalog.clearCache()
-      System.gc() // see timed()
-      val s0 = System.nanoTime(); sink(q12Bucketed()); (System.nanoTime() - s0) / 1e9
-    }.sorted
+    val bts = BenchWindow.timed(spark, reps)(sink(q12Bucketed(spark, sfDir)))
 
     // The TRANSPARENT arm (round 14): the ORIGINAL q12 SQL, verbatim,
     // over plain parquet PATHS of the bucketed layouts — no catalog
@@ -267,18 +225,14 @@ object ScaleBench {
           |WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
           |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin)
     }
-    val tts = (1 to reps).map { _ =>
-      spark.catalog.clearCache()
-      System.gc()
-      val s0 = System.nanoTime(); sink(q12Transparent()); (System.nanoTime() - s0) / 1e9
-    }.sorted
+    val tts = BenchWindow.timed(spark, reps)(sink(q12Transparent()))
     val qs = (results ++ Seq(
-      "q12_join_multi_bucketed" -> bts(bts.size / 2),
-      "q12_join_multi_transparent" -> tts(tts.size / 2)))
+      "q12_join_multi_bucketed" -> bts.median,
+      "q12_join_multi_transparent" -> tts.median))
       .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val repsArr = bts.mkString("[", ",", "]")
-    val trepsArr = tts.mkString("[", ",", "]")
-    println(s"""{"bench":"scale","sf":"$sfDir","reps":$reps,"bucket_build_sec":$buildSec,"graft_sec":$qs,"q12_bucketed_reps_sorted":$repsArr,"q12_transparent_reps_sorted":$trepsArr}""")
+    val repsArr = bts.sorted.mkString("[", ",", "]")
+    val trepsArr = tts.sorted.mkString("[", ",", "]")
+    BenchWindow.emit(s"""{"bench":"scale","sf":"$sfDir","reps":$reps,"bucket_build_sec":$buildSec,"graft_sec":$qs,"q12_bucketed_reps_sorted":$repsArr,"q12_transparent_reps_sorted":$trepsArr}""")
     spark.stop()
   }
 }

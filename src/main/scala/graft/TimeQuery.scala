@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time one named query in isolation, repeated.
   * Usage: runMain graft.TimeQuery <name> <sfDir> [reps]
   * (Bench totals on this machine carry external-load noise; isolated
@@ -18,17 +16,10 @@ object TimeQuery {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    // same env + fallback as Bench so isolated timings are comparable
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // the same session as Bench so isolated timings are comparable
     val noExt = sys.env.contains("SPARK_GRAFT_NO_EXTENSIONS")
-    val b0 = SparkSession.builder()
-    val b = (if (noExt) b0 else b0.withExtensions(new graft.GraftExtensions))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JVM warm
+    val spark = if (noExt) BenchWindow.plainSession() else BenchWindow.session()
+    BenchWindow.probe(spark) // JVM warm
     spark.read.parquet(s"$sfDir/region.parquet").count() // parquet path warm
     // SPARK_GRAFT_JOBSTATS=1: per-rep job/stage/task-time counters — the
     // "how many Spark jobs does one rep launch" diagnostic (fixed
@@ -51,13 +42,11 @@ object TimeQuery {
     name.split(",").map(_.trim).filter(_.nonEmpty).foreach { nm =>
       val q = SparkEntry.queries(nm)
       (1 to reps).foreach { i =>
-        spark.catalog.clearCache()
-        System.gc()
-        jobs.set(0); stages.set(0); taskMs.set(0); tasks.set(0)
         spark.sparkContext.setJobDescription(s"$nm rep $i")
-        val t0 = System.nanoTime()
-        q(spark, sfDir).write.mode("overwrite").format("noop").save()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val sec = BenchWindow.timed(spark, 1) {
+          jobs.set(0); stages.set(0); taskMs.set(0); tasks.set(0)
+          BenchWindow.sink(q(spark, sfDir))
+        }.median
         val stats = if (sys.env.contains("SPARK_GRAFT_JOBSTATS"))
           f" jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} taskSec=${taskMs.get / 1e3}%.1f"
         else ""

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.engine.{GraftEngine, PruningBench}
 import graft.sources.MicroBlockWriter
 
@@ -25,26 +24,17 @@ object TopKScale {
     val sfDir = args.headOption.getOrElse("target/sf10")
     val reps = if (args.length > 1) args(1).toInt else 5
     val blocks = if (args.length > 2) args(2).toInt else 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions) // the transparent top-k rule arm
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JVM warm
+    val spark = BenchWindow.session() // extensions: the transparent top-k rule arm
+    BenchWindow.probe(spark) // JVM warm
 
     // pay-once clustering (parquet_to_microblocks parity); reuse a
     // surviving layout so re-runs measure serving, not the write
     val mbPath = s"target/scratch/topk-scale/lineitem-$blocks"
-    val done = new org.apache.hadoop.fs.Path(mbPath + "/_SUCCESS")
-    val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val t0 = System.nanoTime()
-    if (!fs.exists(done))
-      MicroBlockWriter.write(
-        spark.read.parquet(s"$sfDir/lineitem.parquet"), mbPath, "l_shipdate", blocks)
-    val buildSec = (System.nanoTime() - t0) / 1e9
+    val buildSec = BenchWindow.timeOnce {
+      if (!BenchWindow.written(mbPath))
+        MicroBlockWriter.write(
+          spark.read.parquet(s"$sfDir/lineitem.parquet"), mbPath, "l_shipdate", blocks)
+    }
 
     // COLD transparent serve (round 14 — the q9 weak-row tail): the
     // very first graft-touching statement of the session, before any
@@ -56,30 +46,20 @@ object TopKScale {
     val ruleSql =
       """SELECT l_orderkey, l_linenumber, l_shipdate FROM topk_scale_li
         |ORDER BY l_shipdate DESC, l_orderkey, l_linenumber LIMIT 10""".stripMargin
-    val sidecarSuccess = new org.apache.hadoop.fs.Path(
-      graft.sources.MicroBlockIndex.sidecarPath(mbPath), "_SUCCESS")
-    var coldSec = -1.0
-    if (fs.exists(sidecarSuccess)) {
+    val hasSidecar = BenchWindow.written(graft.sources.MicroBlockIndex.sidecarPath(mbPath))
+    val coldSec = if (!hasSidecar) -1.0 else {
       spark.read.parquet(mbPath).createOrReplaceTempView("topk_scale_li")
-      val s0 = System.nanoTime()
-      spark.sql(ruleSql).collect()
-      coldSec = (System.nanoTime() - s0) / 1e9
+      BenchWindow.timeOnce(spark.sql(ruleSql).collect())
     }
 
     val engine = new GraftEngine(spark, mbPath, "lineitem")
-    if (!fs.exists(sidecarSuccess)) engine.saveIndexSidecar()
+    if (!hasSidecar) engine.saveIndexSidecar()
 
-    def probe(): Double = {
-      val s = System.nanoTime()
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      (System.nanoTime() - s) / 1e9
-    }
     if (sys.env.contains("SPARK_GRAFT_DIAG")) {
       import org.apache.spark.sql.functions.col
       def t(label: String)(run: => Unit): Unit = {
         System.gc()
-        val s = System.nanoTime(); run
-        println(f"[diag] $label: ${(System.nanoTime() - s) / 1e9}%.3fs")
+        println(f"[diag] $label: ${BenchWindow.timeOnce(run)}%.3fs")
       }
       val tb = Seq("l_orderkey", "l_linenumber")
       val files = engine.blocks.map(_.file).distinct
@@ -100,7 +80,7 @@ object TopKScale {
       }
       t("engine.topK warm")(engine.topK("l_shipdate", 10, tb).collect())
     }
-    val probeStart = probe()
+    val probeStart = BenchWindow.probe(spark)
     val rows = PruningBench.runTopK(
       spark, engine, "l_shipdate", 10, Seq("l_orderkey", "l_linenumber"), reps)
 
@@ -118,29 +98,17 @@ object TopKScale {
       }.getOrElse(-1L)
     }
     val ruleFiles = ruleScanFiles // decision job + codegen warm-up
-    var ruleRows = 0L
-    val ruleTimes = (1 to reps).map { _ =>
-      System.gc()
-      val s = System.nanoTime()
-      ruleRows = spark.sql(ruleSql).collect().length.toLong
-      (System.nanoTime() - s) / 1e9
-    }.sorted
-    val ruleRow = PruningBench.AbRow(
-      "sql_rule_topk", ruleTimes(ruleTimes.length / 2), ruleFiles, ruleRows)
+    val (ruleSec, ruleRows) = BenchWindow.medianOf(spark, reps, clearCache = false)(
+      spark.sql(ruleSql).collect().length.toLong)
+    val ruleRow = PruningBench.AbRow("sql_rule_topk", ruleSec, ruleFiles, ruleRows)
 
-    val probeEnd = probe()
+    val probeEnd = BenchWindow.probe(spark)
     val line =
       s"""{"bench":"topk_scale","sf":"$sfDir","reps":$reps,"blocks":$blocks,""" +
         s""""mb_build_sec":$buildSec,"probe_start_sec":$probeStart,""" +
         s""""probe_end_sec":$probeEnd,"sql_rule_topk_cold_sec":$coldSec,""" +
         s""""topk_ab":${PruningBench.toJson(rows :+ ruleRow)}}"""
-    println(line)
-    try {
-      val out = java.nio.file.Paths.get("target/topk_scale.json")
-      java.nio.file.Files.createDirectories(out.getParent)
-      java.nio.file.Files.write(out,
-        line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case t: Throwable => System.err.println(s"write failed: ${t.getMessage}") }
+    BenchWindow.emit(line, "target/topk_scale.json")
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** q20's layout A/B from the FIRST-CLASS path: the raw window-rank
@@ -18,26 +17,10 @@ object WindowLayoutBench {
     val sfDir = args(0)
     val buckets = if (args.length > 1) args(1).toInt else 64
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    BenchWindow.satProbe(spark) // codegen warm
+    val spark = BenchWindow.session(BenchWindow.UTC)
+    BenchWindow.warm(spark)
 
-    def timed(run: => Unit): Double = {
-      val ts = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        System.gc()
-        BenchWindow.timeOnce(run)
-      }.sorted
-      ts(ts.size / 2)
-    }
+    def timed(run: => Unit): Double = BenchWindow.timed(spark, reps)(run).median
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("o_custkey")
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
@@ -46,45 +29,28 @@ object WindowLayoutBench {
         row_number().over(w).as("rn"))
       .filter(col("rn") <= 3)
 
-    val MaxAttempts = 3
-    var attempt = 0
-    var calm = false
-    var calmRef = -1.0
-    var satStart = -1.0
-    var satEnd = -1.0
-    var probeSec = -1.0
-    var rawSec = -1.0
-    var bucketedSec = -1.0
-    var buildSec = -1.0
-    var rowsRaw = -1L
-    var rowsBucketed = -1L
-    while (attempt < MaxAttempts && !calm) {
-      attempt += 1
-      satStart = BenchWindow.satProbe(spark)
-      probeSec = timed {
+    val ((probeSec, rawSec, buildSec, bucketedSec, rowsRaw), window) =
+        BenchWindow.calmGated(spark, "window bench") { _ =>
+      val probeSec = timed {
         spark.read.parquet(s"$sfDir/orders.parquet").count()
       }
-      rawSec = timed {
+      var rowsRaw = -1L
+      val rawSec = timed {
         rowsRaw = rank(spark.read.parquet(s"$sfDir/orders.parquet")).count()
       }
-      buildSec = graft.sources.Bucketing.ensureBucketed(
+      val buildSec = graft.sources.Bucketing.ensureBucketed(
         spark, spark.read.parquet(s"$sfDir/orders.parquet"),
         "ord_cust_bkt", "o_custkey", buckets,
         columns = Seq("o_orderkey", "o_totalprice"))
-      bucketedSec = timed {
+      var rowsBucketed = -1L
+      val bucketedSec = timed {
         rowsBucketed = rank(spark.table("ord_cust_bkt")).count()
       }
       require(rowsRaw == rowsBucketed,
         s"layout changed the answer: $rowsRaw vs $rowsBucketed")
-      satEnd = BenchWindow.satProbe(spark)
-      calmRef = BenchWindow.calmRef(spark, math.min(satStart, satEnd))
-      calm = BenchWindow.isCalm(calmRef, Seq(satStart, satEnd))
-      if (!calm && attempt < MaxAttempts) {
-        System.err.println(s"window bench NOISY (attempt $attempt) — retrying")
-        Thread.sleep(30000)
-      }
+      (probeSec, rawSec, buildSec, bucketedSec, rowsRaw)
     }
-    println(s"""{"bench":"window_layout","sf":"$sfDir","reps":$reps,"buckets":$buckets,"rows":$rowsRaw,"probe_sec":$probeSec,"q20_raw_sec":$rawSec,"q20_bucketed_build_sec":$buildSec,"q20_bucketed_sec":$bucketedSec,"sat_probe_start_sec":$satStart,"sat_probe_end_sec":$satEnd,"sat_calm_ref_sec":$calmRef,"window_noisy":${!calm},"window_attempts":$attempt,"loadavg":${BenchWindow.loadavg()}}""")
+    BenchWindow.emit(s"""{"bench":"window_layout","sf":"$sfDir","reps":$reps,"buckets":$buckets,"rows":$rowsRaw,"probe_sec":$probeSec,"q20_raw_sec":$rawSec,"q20_bucketed_build_sec":$buildSec,"q20_bucketed_sec":$bucketedSec,${window.json}}""")
     spark.stop()
   }
 }

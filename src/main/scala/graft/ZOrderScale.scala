@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.plans.{And, Between, IndexPruning, Pred, PredValue}
 import graft.sources.{MicroBlockIndex, MicroBlockWriter}
@@ -30,14 +30,8 @@ object ZOrderScale {
     val sfDir = args.headOption.getOrElse("target/sf1")
     val reps = if (args.length > 1) args(1).toInt else 5
     val blocks = if (args.length > 2) args(2).toInt else 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect() // JVM warm
+    val spark = BenchWindow.plainSession()
+    BenchWindow.probe(spark) // JVM warm
 
     val raw = s"$sfDir/lineitem.parquet"
     // scratch keyed by (sf, blocks): same block count at two scales
@@ -46,19 +40,16 @@ object ZOrderScale {
     val linQtyPath = s"target/scratch/zorder-scale/$sfName/linear-qty-$blocks"
     val linPricePath = s"target/scratch/zorder-scale/$sfName/linear-price-$blocks"
     val zPath = s"target/scratch/zorder-scale/$sfName/z-$blocks"
-    val fs = new org.apache.hadoop.fs.Path(linQtyPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def haveDone(p: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(p + "/_SUCCESS"))
-    val t0 = System.nanoTime()
-    if (!haveDone(linQtyPath))
-      MicroBlockWriter.write(spark.read.parquet(raw), linQtyPath, "l_quantity", blocks)
-    if (!haveDone(linPricePath))
-      MicroBlockWriter.write(spark.read.parquet(raw), linPricePath, "l_extendedprice", blocks)
-    if (!haveDone(zPath))
-      MicroBlockWriter.writeZOrdered(spark.read.parquet(raw), zPath,
-        Seq("l_quantity", "l_extendedprice"), blocks)
-    val buildSec = (System.nanoTime() - t0) / 1e9
+    val buildSec = BenchWindow.timeOnce {
+      import BenchWindow.written
+      if (!written(linQtyPath))
+        MicroBlockWriter.write(spark.read.parquet(raw), linQtyPath, "l_quantity", blocks)
+      if (!written(linPricePath))
+        MicroBlockWriter.write(spark.read.parquet(raw), linPricePath, "l_extendedprice", blocks)
+      if (!written(zPath))
+        MicroBlockWriter.writeZOrdered(spark.read.parquet(raw), zPath,
+          Seq("l_quantity", "l_extendedprice"), blocks)
+    }
 
     val linQtyIdx = MicroBlockIndex.build(spark, linQtyPath, "lin_qty").toDF.cache()
     val linPriceIdx = MicroBlockIndex.build(spark, linPricePath, "lin_price").toDF.cache()
@@ -75,18 +66,11 @@ object ZOrderScale {
       case other => throw new IllegalArgumentException(other.toString)
     }
 
-    def time(body: => Long): (Double, Long) = {
-      val s = System.nanoTime(); val n = body
-      ((System.nanoTime() - s) / 1e9, n)
-    }
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
-
     // each serving mode counts matching rows; pruned modes pay the
     // decision query INSIDE the timed region
-    def fullScan(p: Pred) = time {
+    def fullScan(p: Pred): Long =
       spark.read.parquet(raw).filter(rowFilter(p)).count()
-    }
-    def pruned(idx: DataFrame, p: Pred) = time {
+    def pruned(idx: DataFrame, p: Pred): Long = {
       val kept = IndexPruning.keptFiles(idx, p)
       if (kept.isEmpty) 0L
       else spark.read.parquet(kept: _*).filter(rowFilter(p)).count()
@@ -119,23 +103,22 @@ object ZOrderScale {
             () => (IndexPruning.keptFiles(idx, p).size.toLong, keptRowVolume(idx, p)))
         }
     } yield {
-      val runs = (1 to reps).map(_ => run())
-      val rows = runs.head._2
-      require(runs.forall(_._2 == rows), s"row drift in $mode/$pname")
+      // the stats indexes stay persisted across reps
+      var counts = Seq.empty[Long]
+      val r = BenchWindow.timed(spark, reps, clearCache = false) {
+        val n = run(); counts :+= n; n
+      }
+      require(counts.forall(_ == r.value), s"row drift in $mode/$pname")
       val (files, vol) = filesAndVolume()
-      (pname, mode, median(runs.map(_._1)), rows, files, vol)
+      (pname, mode, r.median, r.value, files, vol)
     }
 
     val entries = results.map { case (pn, m, sec, rows, files, vol) =>
       s""""${pn}_$m":{"sec":$sec,"rows":$rows,"files":$files,"scan_rows":$vol}"""
     }.mkString(",")
-    val line =
-      s"""{"metric":"zorder_ab","sf":"$sfDir","blocks":$blocks,"reps":$reps,"total_rows":$totalRows,"build_sec":$buildSec,$entries}"""
-    println(line)
-    val out = java.nio.file.Paths.get("target/zorder_scale.json")
-    java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.write(out,
-      line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    BenchWindow.emit(
+      s"""{"metric":"zorder_ab","sf":"$sfDir","blocks":$blocks,"reps":$reps,"total_rows":$totalRows,"build_sec":$buildSec,$entries}""",
+      "target/zorder_scale.json")
     spark.stop()
   }
 }

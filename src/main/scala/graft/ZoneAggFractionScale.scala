@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The `maxScanFraction` gate, measured instead of guessed (round 14,
@@ -25,17 +24,8 @@ object ZoneAggFractionScale {
     val sfDir = args(0)
     val nFiles = if (args.length > 1) args(1).toInt else 32
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    BenchWindow.satProbe(spark)
+    val spark = BenchWindow.session(BenchWindow.UTC)
+    BenchWindow.warm(spark)
 
     // synthetic rows at the sf's lineitem volume: the sweep prices
     // scan-vs-serve BYTES, and contiguous ids make the straddler
@@ -52,7 +42,7 @@ object ZoneAggFractionScale {
       val straddlers = math.round(f * nFiles).toInt
       val clustered = nFiles - straddlers
       val out = s"target/scratch/zoneaggfrac/$sfName/f$straddlers"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_SUCCESS"))) {
+      if (!BenchWindow.written(out)) {
         // straddler rows are every Nth id — each straddler file spans
         // the WHOLE id range (undecidable under any cut); the rest
         // range-cluster into decided files
@@ -78,16 +68,8 @@ object ZoneAggFractionScale {
         |FROM zf_$straddlers WHERE id >= $cut""".stripMargin
       def served(df: org.apache.spark.sql.DataFrame): Boolean =
         graft.plans.ZoneAggRule.servedSignature(df.queryExecution.optimizedPlan)
-      def med(): (Double, String) = {
-        var v = ""
-        val ts = (1 to reps).map { _ =>
-          spark.catalog.clearCache(); System.gc()
-          val t0 = System.nanoTime()
-          v = spark.sql(q).collect().mkString
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
-        (ts(ts.size / 2), v)
-      }
+      def med(): (Double, String) =
+        BenchWindow.medianOf(spark, reps)(spark.sql(q).collect().mkString)
       require(!served(spark.sql(q)), "scan arm must not see a sidecar")
       val (scanSec, vScan) = med()
       graft.sources.MicroBlockIndex.saveSidecar(
@@ -102,14 +84,10 @@ object ZoneAggFractionScale {
     }
 
     val sat = BenchWindow.satProbe(spark)
-    val line =
+    BenchWindow.emit(
       s"""{"bench":"zoneagg_fraction","sf":"$sfDir","files":$nFiles,""" +
-        s""""reps":$reps,"sat_probe_sec":$sat,"sweep":[${rows.mkString(",")}]}"""
-    println(line)
-    val outP = java.nio.file.Paths.get("target/zoneagg_fraction.json")
-    java.nio.file.Files.createDirectories(outP.getParent)
-    java.nio.file.Files.write(outP,
-      line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        s""""reps":$reps,"sat_probe_sec":$sat,"sweep":[${rows.mkString(",")}]}""",
+      "target/zoneagg_fraction.json")
     spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** The GROUPED zone-stats serve (plans/ZoneAggRule grouped arm, the
   * mb_zone_agg_grouped row) measured at scale: per-status
   * COUNT(*)/COUNT(col)/MIN/MAX over a hive-partitioned orders layout
@@ -21,32 +19,19 @@ object ZoneAggGroupedScale {
     val sfDir = args(0)
     val blocksPerPart = if (args.length > 1) args(1).toInt else 21
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    BenchWindow.satProbe(spark) // codegen warm
+    val spark = BenchWindow.session(BenchWindow.UTC)
+    BenchWindow.warm(spark)
 
     val sfName = new java.io.File(sfDir).getName
     val out = s"target/scratch/zoneagggrouped/$sfName/orders"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_SUCCESS"))) {
+    if (!BenchWindow.written(out)) {
       graft.sources.MicroBlockWriter.writePartitioned(
         spark.read.parquet(s"$sfDir/orders.parquet")
           .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"),
         out, "o_orderstatus", "o_orderkey", blocksPerPart)
     }
-    // scan arm first, sidecar second — scrub anything a previous run left
     val sidecar = new org.apache.hadoop.fs.Path(
       graft.sources.MicroBlockIndex.sidecarPath(out))
-    sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(sidecar, true)
-    graft.sources.SidecarManifest.invalidateAll()
 
     spark.read.parquet(out).createOrReplaceTempView("zgs_ord")
     val q = """SELECT o_orderstatus, COUNT(*) AS n, COUNT(o_custkey) AS nc,
@@ -54,63 +39,31 @@ object ZoneAggGroupedScale {
       |FROM zgs_ord GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
 
     def readsBase(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation
-            if r.relation.isInstanceOf[
-              org.apache.spark.sql.execution.datasources.HadoopFsRelation] =>
-          r.relation.asInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-            .location.inputFiles.exists(_.contains("zoneagggrouped"))
-      }.exists(identity)
-    def med(sql: String): (Double, Seq[String]) = {
-      var v: Seq[String] = Nil
-      val ts = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        v = spark.sql(sql).collect().map(_.toString).toSeq
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      (ts(ts.size / 2), v)
-    }
+      BenchWindow.fileRelations(df)
+        .exists(_.location.inputFiles.exists(_.contains("zoneagggrouped")))
+    def med(sql: String): (Double, Seq[String]) =
+      BenchWindow.medianOf(spark, reps)(spark.sql(sql).collect().map(_.toString).toSeq)
 
-    val MaxAttempts = 3
-    var attempt = 0
-    var calm = false
-    var calmRef = -1.0
-    var satStart = -1.0
-    var satEnd = -1.0
-    var scanSec = -1.0
-    var serveSec = -1.0
-    var buildSec = -1.0
-    var vScan: Seq[String] = Nil
-    while (attempt < MaxAttempts && !calm) {
-      attempt += 1
-      satStart = BenchWindow.satProbe(spark)
-      if (attempt > 1) {
-        sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(sidecar, true)
-        graft.sources.SidecarManifest.invalidateAll()
-      }
+    val ((scanSec, serveSec, buildSec, vScan), w) =
+        BenchWindow.calmGated(spark, "zoneagggrouped") { _ =>
+      // scan arm first, sidecar second — scrub anything a previous run
+      // or pass left
+      sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(sidecar, true)
+      graft.sources.SidecarManifest.invalidateAll()
       require(readsBase(spark.sql(q)), "scan arm must read the base")
-      val a = med(q); scanSec = a._1; vScan = a._2
-      val tB = System.nanoTime()
-      graft.sources.MicroBlockIndex.saveSidecar(
-        graft.sources.MicroBlockIndex.build(spark, out, "orders"), out)
-      buildSec = (System.nanoTime() - tB) / 1e9
+      val (scanSec, vScan) = med(q)
+      val buildSec = BenchWindow.timeOnce {
+        graft.sources.MicroBlockIndex.saveSidecar(
+          graft.sources.MicroBlockIndex.build(spark, out, "orders"), out)
+      }
       require(!readsBase(spark.sql(q)),
         "the grouped serve must read NO data file")
-      val b = med(q); serveSec = b._1
-      require(b._2 == vScan, s"arms diverged: ${b._2} vs $vScan")
-      satEnd = BenchWindow.satProbe(spark)
-      calmRef = BenchWindow.calmRef(spark, math.min(satStart, satEnd))
-      calm = BenchWindow.isCalm(calmRef, Seq(satStart, satEnd))
-      if (!calm && attempt < MaxAttempts) {
-        System.err.println(s"zoneagggrouped window NOISY (attempt $attempt) — retrying")
-        Thread.sleep(30000)
-      }
+      val (serveSec, vServe) = med(q)
+      require(vServe == vScan, s"arms diverged: $vServe vs $vScan")
+      (scanSec, serveSec, buildSec, vScan)
     }
-    println(s"""{"bench":"zone_agg_grouped_scale","sf":"$sfDir","reps":$reps,"blocks_per_partition":$blocksPerPart,"groups":${vScan.size},"grouped_scan_sec":$scanSec,"grouped_serve_sec":$serveSec,"index_build_sec":$buildSec,"values_equal":true,"sat_probe_start_sec":$satStart,"sat_probe_end_sec":$satEnd,"sat_calm_ref_sec":$calmRef,"window_noisy":${!calm},"window_attempts":$attempt,"loadavg":${BenchWindow.loadavg()}}""")
+    BenchWindow.emit(s"""{"bench":"zone_agg_grouped_scale","sf":"$sfDir","reps":$reps,"blocks_per_partition":$blocksPerPart,"groups":${vScan.size},"grouped_scan_sec":$scanSec,"grouped_serve_sec":$serveSec,"index_build_sec":$buildSec,"values_equal":true,${w.json}}""")
     spark.stop()
   }
 }

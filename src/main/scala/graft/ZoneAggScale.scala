@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** The zone-stats aggregate serve (plans/ZoneAggRule, the mb_zone_agg
   * row) measured at scale: the same plain spark.sql statements — a
@@ -22,33 +20,19 @@ object ZoneAggScale {
     val sfDir = args(0)
     val blocks = if (args.length > 1) args(1).toInt else 64
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    BenchWindow.satProbe(spark) // codegen warm
+    val spark = BenchWindow.session(BenchWindow.UTC)
+    BenchWindow.warm(spark)
 
     val sfName = new java.io.File(sfDir).getName
     val out = s"target/scratch/zoneaggscale/$sfName/lineitem"
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(out, "_SUCCESS"))) {
+    if (!BenchWindow.written(out)) {
       graft.sources.MicroBlockWriter.write(
         spark.read.parquet(s"$sfDir/lineitem.parquet")
           .select("l_shipdate", "l_returnflag", "l_linenumber", "l_quantity"),
         out, "l_shipdate", blocks)
     }
-    // scan arm first, sidecar second (the DictRuleScale discipline) —
-    // scrub anything a previous run left
     val sidecar = new org.apache.hadoop.fs.Path(
       graft.sources.MicroBlockIndex.sidecarPath(out))
-    sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(sidecar, true)
-    graft.sources.SidecarManifest.invalidateAll()
 
     spark.read.parquet(out).createOrReplaceTempView("zas_li")
     val qFiltered = """SELECT COUNT(*) AS n, COUNT(l_returnflag) AS nf,
@@ -64,62 +48,36 @@ object ZoneAggScale {
 
     def served(df: org.apache.spark.sql.DataFrame): Boolean =
       graft.plans.ZoneAggRule.servedSignature(df.queryExecution.optimizedPlan)
-    def med(sql: String): (Double, Seq[String]) = {
-      var v: Seq[String] = Nil
-      val ts = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        v = spark.sql(sql).collect().map(_.toString).toSeq
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      (ts(ts.size / 2), v)
-    }
+    def med(sql: String, n: Int = reps): (Double, Seq[String]) =
+      BenchWindow.medianOf(spark, n)(spark.sql(sql).collect().map(_.toString).toSeq)
 
-    val MaxAttempts = 3
-    var attempt = 0
-    var calm = false
-    var calmRef = -1.0
-    var satStart = -1.0
-    var satEnd = -1.0
-    var scanF = -1.0; var scanS = -1.0
-    var serveF = -1.0; var serveS = -1.0
-    var scanSum = -1.0; var serveSum = -1.0
-    var scanSumAll = -1.0; var serveSumAll = -1.0
-    var buildSec = -1.0; var sumsBuildSec = -1.0
-    var autoF = -1.0; var autoFirst = -1.0; var autoRoute = "?"
-    var vF: Seq[String] = Nil; var vS: Seq[String] = Nil
-    var vSum: Seq[String] = Nil; var vSumAll: Seq[String] = Nil
-    while (attempt < MaxAttempts && !calm) {
-      attempt += 1
-      satStart = BenchWindow.satProbe(spark)
-      // scan arm (sidecar deleted above / rebuilt below per attempt)
-      if (attempt > 1) {
-        sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(sidecar, true)
-        graft.sources.SidecarManifest.invalidateAll()
-      }
+    val (arms, w) = BenchWindow.calmGated(spark, "zoneaggscale") { _ =>
+      // scan arm first, sidecar second (the DictRuleScale discipline) —
+      // scrub the sidecar a previous run or pass left
+      sidecar.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(sidecar, true)
+      graft.sources.SidecarManifest.invalidateAll()
       require(!served(spark.sql(qFiltered)) && !served(spark.sql(qStar)),
         "scan arm must not see a sidecar")
-      val a = med(qFiltered); scanF = a._1; vF = a._2
-      val b = med(qStar); scanS = b._1; vS = b._2
-      val a2 = med(qSum); scanSum = a2._1; vSum = a2._2
-      val b2 = med(qSumAll); scanSumAll = b2._1; vSumAll = b2._2
+      val (scanF, vF) = med(qFiltered)
+      val (scanS, vS) = med(qStar)
+      val (scanSum, vSum) = med(qSum)
+      val (scanSumAll, vSumAll) = med(qSumAll)
       // one-time indexing cost
-      val tB = System.nanoTime()
-      graft.sources.MicroBlockIndex.saveSidecar(
-        graft.sources.MicroBlockIndex.build(spark, out, "li"), out)
-      buildSec = (System.nanoTime() - tB) / 1e9
+      val buildSec = BenchWindow.timeOnce {
+        graft.sources.MicroBlockIndex.saveSidecar(
+          graft.sources.MicroBlockIndex.build(spark, out, "li"), out)
+      }
       require(served(spark.sql(qFiltered)) && served(spark.sql(qStar)),
         "transparent arm must serve from the sidecar")
       // steady-state serving is the arm's claim: one un-timed warm-up
       // absorbs the cold plan-cache fill (discovery + tri-state +
       // snapshot jobs), whose one-time cost rides index_build_sec
       spark.sql(qFiltered).collect(); spark.sql(qStar).collect()
-      val c = med(qFiltered); serveF = c._1
-      require(c._2 == vF, s"filtered arms diverged: ${c._2} vs $vF")
-      val d = med(qStar); serveS = d._1
-      require(d._2 == vS, s"count-star arms diverged: ${d._2} vs $vS")
+      val (serveF, cF) = med(qFiltered)
+      require(cF == vF, s"filtered arms diverged: $cF vs $vF")
+      val (serveS, cS) = med(qStar)
+      require(cS == vS, s"count-star arms diverged: $cS vs $vS")
       // the sums-less sidecar must REFUSE the SUM serve (no silent
       // wrong answers), then the withSums build turns it on
       require(!served(spark.sql(qSum)), "SUM must refuse without per-file sums")
@@ -130,11 +88,11 @@ object ZoneAggScale {
       val rebuilt = graft.sources.MicroBlockIndex
         .build(spark, out, "li").persist()
       rebuilt.count()
-      val tS = System.nanoTime()
-      graft.sources.MicroBlockIndex.saveSidecar(
-        graft.sources.MicroBlockIndex.withSums(spark, out, rebuilt,
-          Seq("l_linenumber")), out)
-      sumsBuildSec = (System.nanoTime() - tS) / 1e9
+      val sumsBuildSec = BenchWindow.timeOnce {
+        graft.sources.MicroBlockIndex.saveSidecar(
+          graft.sources.MicroBlockIndex.withSums(spark, out, rebuilt,
+            Seq("l_linenumber")), out)
+      }
       rebuilt.unpersist(blocking = false)
       require(served(spark.sql(qSum)) && served(spark.sql(qSumAll)),
         "SUM serve must fire once per-file sums exist")
@@ -142,10 +100,10 @@ object ZoneAggScale {
       // rebuilt-sidecar plan caches (fresh mtime = fresh memo keys)
       Thread.sleep(5000)
       spark.sql(qSum).collect(); spark.sql(qSumAll).collect()
-      val c2 = med(qSum); serveSum = c2._1
-      require(c2._2 == vSum, s"filtered SUM arms diverged: ${c2._2} vs $vSum")
-      val d2 = med(qSumAll); serveSumAll = d2._1
-      require(d2._2 == vSumAll, s"SUM arms diverged: ${d2._2} vs $vSumAll")
+      val (serveSum, cSum) = med(qSum)
+      require(cSum == vSum, s"filtered SUM arms diverged: $cSum vs $vSum")
+      val (serveSumAll, cSumAll) = med(qSumAll)
+      require(cSumAll == vSumAll, s"SUM arms diverged: $cSumAll vs $vSumAll")
       // round 15 AUTO arm: the measured SKI-RENTAL router gates the
       // serve — a one-off query on a can't-repay table rents the
       // scan; a REPEATED shape invests in the (memoized) decisions
@@ -156,28 +114,23 @@ object ZoneAggScale {
       graft.sources.CostRouter.reset()
       graft.sources.CostRouter.calibrateIfNeeded(spark, rootAbs)
       val autoTs = (1 to 12).map { _ =>
-        spark.catalog.clearCache(); System.gc()
-        val t0 = System.nanoTime()
-        val v = spark.sql(qFiltered).collect().map(_.toString).toSeq
+        val (sec, v) = med(qFiltered, 1)
         require(v == vF, s"auto arm diverged: $v vs $vF")
-        (System.nanoTime() - t0) / 1e9
+        sec
       }
-      autoFirst = autoTs.head
-      autoF = autoTs.takeRight(3).sorted.apply(1) // steady median
-      autoRoute =
-        if (graft.plans.ZoneAggRule.servedSignature(
-          spark.sql(qFiltered).queryExecution.optimizedPlan)) "serve"
-        else "scan"
+      val autoRoute = if (served(spark.sql(qFiltered))) "serve" else "scan"
       graft.sources.CostRouter.reset()
-      satEnd = BenchWindow.satProbe(spark)
-      calmRef = BenchWindow.calmRef(spark, math.min(satStart, satEnd))
-      calm = BenchWindow.isCalm(calmRef, Seq(satStart, satEnd))
-      if (!calm && attempt < MaxAttempts) {
-        System.err.println(s"zoneaggscale window NOISY (attempt $attempt) — retrying")
-        Thread.sleep(30000)
-      }
+      Seq("filtered_scan_sec" -> scanF, "filtered_serve_sec" -> serveF,
+        "countstar_scan_sec" -> scanS, "countstar_serve_sec" -> serveS,
+        "index_build_sec" -> buildSec, "filtered_sum_scan_sec" -> scanSum,
+        "filtered_sum_serve_sec" -> serveSum, "sum_scan_sec" -> scanSumAll,
+        "sum_serve_sec" -> serveSumAll, "sums_build_sec" -> sumsBuildSec,
+        "filtered_auto_first_sec" -> autoTs.head,
+        "filtered_auto_steady_sec" -> BenchWindow.median(autoTs.takeRight(3))
+      ).map { case (k, v) => s""""$k":$v""" }.mkString(",") +
+        s""","auto_steady_route":"$autoRoute""""
     }
-    println(s"""{"bench":"zone_agg_scale","sf":"$sfDir","reps":$reps,"blocks":$blocks,"filtered_scan_sec":$scanF,"filtered_serve_sec":$serveF,"countstar_scan_sec":$scanS,"countstar_serve_sec":$serveS,"index_build_sec":$buildSec,"filtered_sum_scan_sec":$scanSum,"filtered_sum_serve_sec":$serveSum,"sum_scan_sec":$scanSumAll,"sum_serve_sec":$serveSumAll,"sums_build_sec":$sumsBuildSec,"filtered_auto_first_sec":$autoFirst,"filtered_auto_steady_sec":$autoF,"auto_steady_route":"$autoRoute","values_equal":true,"sat_probe_start_sec":$satStart,"sat_probe_end_sec":$satEnd,"sat_calm_ref_sec":$calmRef,"window_noisy":${!calm},"window_attempts":$attempt,"loadavg":${BenchWindow.loadavg()}}""")
+    BenchWindow.emit(s"""{"bench":"zone_agg_scale","sf":"$sfDir","reps":$reps,"blocks":$blocks,$arms,"values_equal":true,${w.json}}""")
     spark.stop()
   }
 }

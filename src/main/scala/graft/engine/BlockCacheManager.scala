@@ -49,12 +49,6 @@ final class BlockCacheManager(capacity: Int,
     } else lru.get(key)
   }
 
-  /** get-or-load: the reference's cache-hit/miss flow
-    * (query_enginev5.py:262-283). */
-  def getOrLoad(key: String)(load: => DataFrame): DataFrame = synchronized {
-    get(key).getOrElse(put(key, load))
-  }
-
   def hits: Long = synchronized(hitCount)
   def misses: Long = synchronized(missCount)
   def size: Int = synchronized(lru.size())

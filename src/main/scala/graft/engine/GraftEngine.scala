@@ -286,73 +286,29 @@ final class GraftEngine(
 
   /** The block set provably containing the k extreme non-null values
     * of `colName` (largest when descending, smallest when ascending),
-    * chosen from STATS ALONE — no data is scanned to pick blocks:
+    * chosen from STATS ALONE by [[ZoneMapPruner.topKKept]] — the same
+    * NaN-safe cut the transparent rule applies per file. On a table
+    * clustered by `colName` this is O(k/rows-per-block) blocks; on an
+    * unclustered column every block straddles theta and it degrades
+    * gracefully to the full scan. Earlier rounds refined the set by
+    * actually scanning prefix blocks for the observed k-th value —
+    * strictly tighter, but it cost 1-2 extra data passes per query,
+    * which at sf10 made the engine LOSE the wall-time A/B to a raw
+    * full scan.
     *
-    *   1. order blocks by their best bound (max desc / min asc);
-    *   2. take the shortest prefix whose NON-NULL row counts cover k —
-    *      every row in a block is no worse than the block's weak bound,
-    *      so those >=k rows prove the k-th value is at least theta =
-    *      the weakest weak bound in the prefix (min of prefix mins
-    *      descending, max of prefix maxes ascending);
-    *   3. keep exactly the blocks whose best bound ties-or-beats theta
-    *      (ties included: equal-valued rows may displace the k-th under
-    *      a secondary sort key).
-    *
-    * On a table clustered by `colName` this is O(k/rows-per-block)
-    * blocks; on an unclustered column every block straddles theta and
-    * it degrades gracefully to the full scan. Earlier rounds refined
-    * the set by actually scanning prefix blocks for the observed k-th
-    * value — strictly tighter, but it cost 1-2 extra data passes per
-    * query, which at sf10 made the engine LOSE the wall-time A/B to a
-    * raw full scan. Selection from metadata only is the design the
-    * rest of the pruner already follows.
-    *
-    * Conservative like the pruner: blocks whose index rows lack
-    * numeric bounds for the column AND blocks with no index entry for
-    * the column at all (schema-evolved files) are always scanned; a
-    * column with no index rows anywhere falls back to the full block
-    * set (never a silently empty result). `includeNullBlocks` adds
-    * every block holding NULLs of the column — needed when the caller's
-    * ordering puts NULLS FIRST, so null rows themselves are in the
-    * top k. */
+    * Blocks with no index entry for the column at all (schema-evolved
+    * files) are always scanned; a column with no stated block falls
+    * back to the full block set (never a silently empty result).
+    * `includeNullBlocks` keeps every block holding NULLs of the column
+    * — needed when the caller's ordering puts NULLS FIRST, so null rows
+    * themselves are in the top k. */
   private def topKBlockIds(colName: String, k: Int,
       ascending: Boolean, includeNullBlocks: Boolean): Seq[Int] = {
-    // (id, rows, min, max, known null count), in block order
-    val colStats = statsOf(Set(colName))(colName).toSeq.sortBy(_._1)
-      .map { case (id, s) => (id, s.rows.getOrElse(0L), s.minNum, s.maxNum, s.nullCount) }
-    if (colStats.isEmpty) return blockIds // unindexed column: full scan
-    val nullful =
-      if (includeNullBlocks) colStats.filter(_._5.exists(_ > 0)).map(_._1).toSet
-      else Set.empty[Int]
-    // blocks the index has NO row for under this column are statless
-    // too, as are blocks with an UNKNOWN null count (footer omitted):
-    // their non-null coverage can't be trusted toward the k-row proof,
-    // so they always scan and never count
-    val known = colStats.map(_._1).toSet
-    val unknown = blocks.collect { case b if !known.contains(b.blockId) => b.blockId }
-    val (statlessRows, stated) =
-      colStats.partition(s => s._3.isEmpty || s._4.isEmpty || s._5.isEmpty)
-    val statless = (statlessRows.map(_._1) ++ unknown ++ nullful).distinct
-    val ordered =
-      if (ascending) stated.sortBy(_._3.get) // by min asc
-      else stated.sortBy(-_._4.get)          // by max desc
-    var acc = 0L
-    var n = 0
-    while (n < ordered.length && acc < k) {
-      acc += math.max(0L, ordered(n)._2 - ordered(n)._5.get) // non-null rows
-      n += 1
+    val stats = statsOf(Set(colName))(colName)
+    ZoneMapPruner.topKKept(stats.toSeq, k, ascending, includeNullBlocks) match {
+      case Some(kept) => blockIds.filter(id => kept(id) || !stats.contains(id))
+      case None => blockIds
     }
-    val ids =
-      if (acc < k) stated.map(_._1) // stats can't cover k rows: all stated
-      else {
-        val prefix = ordered.take(math.max(1, n))
-        val theta =
-          if (ascending) prefix.map(_._4.get).max // max of prefix maxes
-          else prefix.map(_._3.get).min           // min of prefix mins
-        ordered.filter(s =>
-          if (ascending) s._3.get <= theta else s._4.get >= theta).map(_._1)
-      }
-    (ids ++ statless).distinct.sorted
   }
 
   /** Zone-map-assisted TOP-K on `colName` — largest values by default,
@@ -740,13 +696,7 @@ final class GraftEngine(
     * sequence; the reference's retrain_model.py contract). */
   def retrain(): Unit = {
     val flat = accessLog.all.flatMap(_.blocks)
-    if (flat.nonEmpty) prefetcher match {
-      case m: MarkovPrefetcher => m.fitSeq(spark, flat)
-      case l: LogisticPrefetcher => l.fit(spark, flat)
-      case g: GruPrefetcher => g.fit(spark, flat)
-      case other => throw new UnsupportedOperationException(
-        s"don't know how to retrain ${other.getClass.getSimpleName}")
-    }
+    if (flat.nonEmpty) prefetcher.fitSeq(spark, flat)
   }
 }
 

@@ -248,6 +248,8 @@ final class GruPrefetcher(
     w
   }
 
+  def fitSeq(spark: SparkSession, blocks: Seq[Int]): GruPrefetcher = fit(spark, blocks)
+
   /** Fit from an access sequence (block ids in visit order). */
   def fit(spark: SparkSession, sequence: Seq[Int]): GruPrefetcher = {
     blocks = sequence.distinct.sorted.toArray

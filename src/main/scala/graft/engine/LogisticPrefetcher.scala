@@ -20,6 +20,8 @@ trait Prefetcher {
   def suggestScored(recent: Seq[Int], k: Int): Seq[(Int, Double)] =
     suggest(recent, k).map(_ -> 1.0)
   def fitted: Boolean
+  /** Re-fit in place from an access sequence of block ids. */
+  def fitSeq(spark: SparkSession, blocks: Seq[Int]): Prefetcher
   def save(spark: SparkSession, dir: String): Unit
 }
 
@@ -105,6 +107,8 @@ final class LogisticPrefetcher(
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
     (((z ^ (z >>> 31)) % nF + nF) % nF).toInt
   }
+
+  def fitSeq(spark: SparkSession, blocks: Seq[Int]): LogisticPrefetcher = fit(spark, blocks)
 
   /** Fit from an access sequence (block ids in visit order). */
   def fit(spark: SparkSession, sequence: Seq[Int]): LogisticPrefetcher = {

@@ -377,83 +377,32 @@ object IndexPruning {
     spark.read.parquet(keptFiles(index, pred): _*).filter(pred.toColumn)
 
   /** The files a stats-only TOP-K cut can PROVE irrelevant for
-    * `ORDER BY colName [ASC|DESC] LIMIT k` — [[graft.engine.GraftEngine]]'s
-    * `topKBlockIds` contract at file level, for the transparent
-    * optimizer rule ([[ZoneMapPruneRule]]):
-    *
-    *   1. order blocks by their best bound (max desc / min asc);
-    *   2. take the shortest prefix whose non-null row counts cover k —
-    *      those rows prove the k-th value is at least theta (the
-    *      weakest weak bound in the prefix);
-    *   3. a block whose best bound cannot tie-or-beat theta cannot hold
-    *      a top-k row; a file is skippable when every block in it is
-    *      refuted.
-    *
-    * Ties kept (equal-valued rows may displace the k-th under a
-    * secondary sort key, so the cut is sound for any tie-break
-    * columns — the k-th row's FIRST key is the k-th largest/smallest
-    * first-key value regardless of later keys). Conservative cases,
-    * each returning "no skip" or keeping the block: a column with no
-    * index rows anywhere; blocks with missing numeric bounds or
-    * unknown null counts; stats that cannot cover k non-null rows
-    * (NULLS LAST then cannot be proven past the top k either);
-    * `nullsFirst` orderings keep every null-holding block (those null
-    * rows ARE the top of the result). One aggregation over the index;
-    * the driver receives one small row per block — file-listing scale,
-    * the same contract as [[skippedFiles]].
-    *
-    * NaN (round 14): both theta proofs lean on max as an upper bound
-    * on a block's values (DESC skips `max < theta`; ASC's theta is the
-    * prefix's max) — a hidden NaN row (Spark sorts it above
-    * everything) breaks both, so blocks without NaN-faithful stats
-    * (`nanRisk` ≠ recorded false) or with NaN-VALUED bounds join the
-    * conservative "statless" class: never skipped, never proving. */
+    * `ORDER BY colName [ASC|DESC] LIMIT k`: [[ZoneMapPruner.topKKept]]
+    * (the cut [[graft.engine.GraftEngine]] serves by too) at file level,
+    * for the transparent optimizer rule ([[ZoneMapPruneRule]]) — a file
+    * is skippable when every block in it is refuted. A column with no
+    * index rows anywhere cuts nothing. One pushed filter on the column
+    * name over the index; the driver receives one small row per block —
+    * file-listing scale, the same contract as [[skippedFiles]]. Sound
+    * because the builder emits one entry per (row group, column) even
+    * when footer stats are ABSENT (None bounds), so every block of every
+    * file that has the column is represented, and a file with no
+    * entries never appears — and is therefore never skipped
+    * (conservative for schema-evolved files missing the column). */
   def topKSkippedFiles(index0: DataFrame, colName: String, k: Int,
       ascending: Boolean, nullsFirst: Boolean): Seq[String] = {
-    val index = withCompat(index0)
-    // SINGLE-STAGE decision (round 14 — the q9 cold-path cost): a
-    // pushed filter on the column name replaces the old
-    // groupBy(block)-then-collect shuffle. Sound because the builder
-    // emits one entry per (row group, column) even when footer stats
-    // are ABSENT (None bounds), so per-file completeness survives the
-    // filter: every block of every file that has the column is
-    // represented, and a file with no entries never appears — and is
-    // therefore never skipped (conservative for schema-evolved files
-    // missing the column entirely).
-    val blocks = index.filter(col("column") === lit(colName))
+    val blocks = withCompat(index0).filter(col("column") === lit(colName))
       .select(col("file"), col("rows"), col("minNum"), col("maxNum"),
         col("nullCount"), col("nanRisk"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getDouble(2)),
-        if (r.isNullAt(3)) None else Some(r.getDouble(3)),
-        if (r.isNullAt(4)) None else Some(r.getLong(4)),
-        !r.isNullAt(5) && !r.getBoolean(5))) // NaN-faithful stats
-    if (blocks.isEmpty) return Nil // column unindexed: no cut
-    // stated = numeric bounds + a trusted null count + NaN-faithful
-    // non-NaN bounds, and (for NULLS FIRST) provably null-free;
-    // everything else keeps conservatively
-    val (stated, statless) = blocks.partition(b =>
-      b._3.isDefined && b._4.isDefined && b._5.exists(_ >= 0) &&
-        b._6 && !b._3.get.isNaN && !b._4.get.isNaN &&
-        !(nullsFirst && b._5.exists(_ > 0)))
-    val ordered =
-      if (ascending) stated.sortBy(_._3.get) // by min asc
-      else stated.sortBy(-_._4.get)          // by max desc
-    var acc = 0L
-    var n = 0
-    while (n < ordered.length && acc < k) {
-      acc += math.max(0L, ordered(n)._2 - ordered(n)._5.get) // non-null rows
-      n += 1
+      .collect().toSeq
+      .map { r =>
+        def opt[T](i: Int)(get: Int => T): Option[T] = if (r.isNullAt(i)) None else Some(get(i))
+        r.getString(0) -> ColStats(opt(2)(r.getDouble), opt(3)(r.getDouble), None, None,
+          opt(4)(r.getLong).filter(_ >= 0), Some(r.getLong(1)), opt(5)(r.getBoolean))
+      }
+    ZoneMapPruner.topKKept(blocks, k, ascending, nullsFirst) match {
+      case Some(kept) => blocks.map(_._1).distinct.filterNot(kept.contains)
+      case None => Nil
     }
-    if (acc < k) return Nil // stats can't cover k rows: no cut
-    val prefix = ordered.take(math.max(1, n))
-    val theta =
-      if (ascending) prefix.map(_._4.get).max // max of prefix maxes
-      else prefix.map(_._3.get).min           // min of prefix mins
-    val kept = ordered.filter(b =>
-      if (ascending) b._3.get <= theta else b._4.get >= theta)
-    val keptFiles = (kept ++ statless).map(_._1).toSet
-    blocks.map(_._1).distinct.filterNot(keptFiles.contains).toSeq
   }
 }

@@ -152,6 +152,61 @@ object ZoneMapPruner {
     case _    => true
   }
 
+  /** The blocks that may hold a row of `ORDER BY col [ASC|DESC] LIMIT
+    * k`, chosen from per-block stats ALONE (no data scanned):
+    *
+    *   1. order blocks by their best bound (max desc / min asc);
+    *   2. take the shortest prefix whose NON-NULL row counts cover k —
+    *      every row in a block is no worse than the block's weak bound,
+    *      so those ≥k rows prove the k-th value is at least theta = the
+    *      weakest weak bound in the prefix (min of prefix mins
+    *      descending, max of prefix maxes ascending);
+    *   3. keep exactly the blocks whose best bound ties-or-beats theta.
+    *
+    * Ties are kept (equal-valued rows may displace the k-th under a
+    * secondary sort key, so the cut is sound for any tie-break
+    * columns). Statless blocks are always kept and never count toward
+    * the proof: missing bounds, row count or null count; `nullsFirst`
+    * orderings with nulls present (those null rows ARE the top of the
+    * result); and NaN — both proofs lean on max as an upper bound
+    * (DESC keeps `max >= theta`; ASC's theta is the prefix's max), and
+    * Spark sorts NaN above everything, so stats that are not
+    * NaN-faithful ([[ColStats.nanOk]]) or have NaN-VALUED bounds
+    * cannot prove either. None when no cut is possible (no stated
+    * block, or stats that cannot cover k non-null rows — NULLS LAST then cannot
+    * be proven past the top k either): the caller keeps everything.
+    * Blocks carrying no stats entry for the column at all are the
+    * caller's to keep. Keys may repeat (several blocks per file). */
+  def topKKept[K](blocks: Seq[(K, ColStats)], k: Int, ascending: Boolean,
+      nullsFirst: Boolean): Option[Set[K]] = {
+    val (stated, statless) = blocks.partition { case (_, st) =>
+      (st.minNum, st.maxNum, st.nullCount, st.rows) match {
+        case (Some(mn), Some(mx), Some(nc), Some(_)) =>
+          st.nanOk && !mn.isNaN && !mx.isNaN && !(nullsFirst && nc > 0)
+        case _ => false
+      }
+    }
+    val ordered =
+      if (ascending) stated.sortBy(_._2.minNum.get)
+      else stated.sortBy(-_._2.maxNum.get)
+    // non-null rows of each block, then the shortest covering prefix
+    val nonNull = ordered.map { case (_, st) => math.max(0L, st.rows.get - st.nullCount.get) }
+    val n = nonNull.scanLeft(0L)(_ + _).indexWhere(_ >= k)
+    if (ordered.isEmpty || n < 0) None
+    else {
+      val prefix = ordered.take(math.max(1, n)).map(_._2)
+      val kept =
+        if (ascending) {
+          val theta = prefix.map(_.maxNum.get).max
+          ordered.filter(_._2.minNum.get <= theta)
+        } else {
+          val theta = prefix.map(_.minNum.get).min
+          ordered.filter(_._2.maxNum.get >= theta)
+        }
+      Some((kept ++ statless).map(_._1).toSet)
+    }
+  }
+
   /** One index row's stats as the pruner sees them (a negative null
     * count is the footer's "unknown"). */
   def colStats(s: BlockStat): ColStats = ColStats(s.minNum, s.maxNum, s.minStr, s.maxStr,

@@ -271,8 +271,8 @@ object RelationalQueries {
       // counts, and the row total rides the partkey set's pair counts
       // (sum of per-pair counts = rows), so no third branch exists.
       // Counts are exact integers - same result, same oracle hash
-      // (Q16Probe: rows identical; cold 29.9->14.4 s at sf100, warm
-      // parity; FileScan count 3->1 in the plan).
+      // (measured against the three-branch plan at sf100: rows
+      // identical; cold 29.9->14.4 s, warm parity; FileScan count 3->1).
       t(s, dir, "lineitem").createOrReplaceTempView("q16_lineitem")
       s.sql(
         """WITH pairs AS (

@@ -214,6 +214,7 @@ class EngineReadPathSpec extends AnyFunSuite {
   private def fixed(ids: Seq[Int]): Prefetcher = new Prefetcher {
     def suggest(recent: Seq[Int], k: Int): Seq[Int] = ids.take(k)
     def fitted: Boolean = true
+    def fitSeq(spark: SparkSession, blocks: Seq[Int]): Prefetcher = this
     def save(spark: SparkSession, dir: String): Unit = ()
   }
 

@@ -94,6 +94,7 @@ class PrefetchServeSpec extends AnyFunSuite {
       def suggest(recent: Seq[Int], k: Int): Seq[Int] = Seq(7)
       override def suggestScored(recent: Seq[Int], k: Int) = Seq((7, 0.3))
       def fitted = true
+      def fitSeq(s: org.apache.spark.sql.SparkSession, b: Seq[Int]) = this
       def save(s: org.apache.spark.sql.SparkSession, d: String): Unit = ()
     }
     val cache = new BlockCacheManager(8)

@@ -1,18 +1,9 @@
 #!/bin/bash
-# Round-10 sf100 measurement block (VERDICT r9 asks #1 and #5), run
+# Round-10 sf100 measurement block (VERDICT r9 ask #5), run
 # back-to-back in ONE window so graft and DuckDB see the same machine.
 # Only quote numbers captured at loadavg < 2 (ROUND_NOTES protocol).
 cd "$(dirname "$0")/.." || exit 1
 date; uptime
-
-# Ask #1: q1 lever sweep (decimal vs long-buffer sums x scan-split x
-# shuffle width), canary probes embedded.
-SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Q1Sweep target/sf100 5" 2>&1 \
-  | grep -E '"bench"|q1_long_equals'
-# DuckDB same shapes, same window.
-python3 tools/bench_duckdb.py target/sf100 /tmp/verify_out/oracle_sql.json 5 \
-  q1_agg,q6_count_star
-uptime
 
 # Ask #5: widen the sf100 cross-engine ledger with the shapes DuckDB
 # is strongest at (window rank, percentile, count-distinct, string_agg).
