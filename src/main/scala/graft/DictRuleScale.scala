@@ -35,14 +35,8 @@ object DictRuleScale {
     val sql = """SELECT COUNT(DISTINCT l_suppkey) AS nd_supp,
       |  COUNT(DISTINCT l_quantity) AS nd_qty FROM drs_li""".stripMargin
     def reads(df: org.apache.spark.sql.DataFrame): Boolean =
-      df.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation.asInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-            .location.rootPaths.exists(_.toString.contains("_graft_dict"))
-        case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-          m.cacheBuilder.cachedPlan.toString.contains("_graft_dict")
-      }.exists(identity)
+      graft.sources.SidecarManifest.readIn(
+        df.queryExecution.optimizedPlan, graft.sources.SidecarManifest.Dict)
 
     require(!reads(spark.sql(sql)), "scan arm must not see a sidecar")
     val (scanSec, scanRows) = medianOf(

@@ -69,7 +69,7 @@ object Q12Arms {
     //                 rows over a ~600M-value range → reduction bound
     //                 ~1 → refuse; the verdict's break-even analysis)
     val liLoc = s"$wh/li_bkt"
-    if (!graft.sources.SidecarManifest.has(liLoc, spark, "_graft_index"))
+    if (!graft.sources.SidecarManifest.has(liLoc, spark, graft.sources.SidecarManifest.Zone))
       graft.sources.MicroBlockIndex.saveSidecar(
         graft.sources.MicroBlockIndex.build(spark, liLoc, "li_bkt"), liLoc)
     def pushArm(): DataFrame = {

@@ -34,15 +34,23 @@ final class GraftEngine(
   /** The zone-map index, DISTRIBUTED: one row per (block × column),
     * persisted so pruning queries don't re-read footers. Only the
     * columns a predicate references collect to the driver, once each
-    * ([[decisions]]); the rest stay in this Dataset. A provably-current
-    * `_graft_index` sidecar is REUSED instead of rebuilt
-    * ([[GraftEngine.freshSidecarIndex]]) — at millions of files that
-    * turns engine construction from a full footer sweep into one
-    * metadata read; anything doubtful rebuilds. */
-  val index: Dataset[BlockStat] =
-    GraftEngine.freshSidecarIndex(spark, tablePath, table)
-      .getOrElse(MicroBlockIndex.build(spark, tablePath, table))
-      .persist()
+    * ([[decisions]]); the rest stay in this Dataset. A `_graft_index`
+    * sidecar that passes the SERVE-grade currency test
+    * ([[graft.sources.SidecarManifest.current]]) is REUSED instead of
+    * rebuilt — at millions of files that turns engine construction
+    * from a full footer sweep into one metadata read. Serve-grade
+    * because the engine SERVES blocks from index rows: a dead entry
+    * would read a deleted file, an unknown live file would fall out
+    * of every serve. Anything doubtful rebuilds. */
+  val index: Dataset[BlockStat] = {
+    import spark.implicits._
+    import graft.sources.SidecarManifest
+    val name = table // the closure must not capture the engine
+    (if (SidecarManifest.current(spark, tablePath, SidecarManifest.Zone))
+      MicroBlockIndex.load(spark, MicroBlockIndex.sidecarPath(tablePath))
+        .map(_.copy(table = name))
+    else MicroBlockIndex.build(spark, tablePath, table)).persist()
+  }
 
   /** Persist this engine's index at the table's sidecar location, so
     * the NEXT engine over this table starts from the metadata read and
@@ -689,7 +697,8 @@ final class GraftEngine(
 
   private val sqlLock: Object =
     GraftEngine.viewLocks.computeIfAbsent(
-      GraftEngine.sessionId(spark) + " " + table, _ => new Object)
+      graft.sources.SidecarManifest.sessionKey(spark) + " " + table,
+      _ => new Object)
 
   /** Re-fit the CURRENT prefetch model class from everything logged so
     * far — model-agnostic (each class refits from the same access
@@ -701,55 +710,12 @@ final class GraftEngine(
 }
 
 object GraftEngine {
-  /** The table's persisted sidecar index (`<table>/_graft_index`) iff
-    * it is provably CURRENT: its `_SUCCESS` is no older than the
-    * newest data file (the [[graft.plans.ZoneMapPruneRule]] discovery
-    * guard) AND its file set equals the live listing EXACTLY. The
-    * second check is stricter than the rule's because the engine
-    * SERVES blocks from index rows — a dead entry would be a read of
-    * a deleted file, not just a lost pruning opportunity, and an
-    * unknown live file would silently fall out of every serve.
-    * Anything doubtful returns None (rebuild). */
-  private[engine] def freshSidecarIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, table: String): Option[Dataset[BlockStat]] =
-    try {
-      import org.apache.hadoop.fs.Path
-      val root = new Path(tablePath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val sidecar = new Path(MicroBlockIndex.sidecarPath(tablePath))
-      val success = new Path(sidecar, "_SUCCESS")
-      if (!fs.exists(success)) None
-      else {
-        val sidecarTime = fs.getFileStatus(success).getModificationTime
-        val live = MicroBlockIndex.listParquetFiles(tablePath)
-        val newest = live.map(f =>
-          fs.getFileStatus(new Path(f)).getModificationTime)
-          .foldLeft(0L)(math.max)
-        if (sidecarTime < newest) None
-        else {
-          import spark.implicits._
-          val loaded = MicroBlockIndex.load(spark, sidecar.toString)
-          val known = loaded.select("file").distinct()
-            .collect().map(_.getString(0)).toSet // file-listing scale
-          if (known != live.toSet) None
-          else Some(loaded.map(_.copy(table = table)))
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
   /** One lock per (SparkSession, view name): see [[GraftEngine.sql]].
-    * Keyed by a per-session UUID (collision-free, unlike identity
-    * hashes, which can collide across distinct sessions and would
-    * over-serialize unrelated engines). The session→UUID map is WEAK,
-    * so dead sessions don't pin entries; viewLocks itself grows by one
+    * Keyed by the per-session UUID ([[graft.sources.SidecarManifest
+    * .sessionKey]]: identity hashes can collide across sessions and
+    * would over-serialize unrelated engines). viewLocks grows by one
     * bare Object per live session×table — fine for this harness, a
-    * long-lived multi-tenant service would want weak values there too. */
+    * long-lived multi-tenant service would want weak values here. */
   private val viewLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private val sessionIds =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[org.apache.spark.sql.SparkSession, String]())
-  private def sessionId(spark: org.apache.spark.sql.SparkSession): String =
-    sessionIds.computeIfAbsent(spark, _ => java.util.UUID.randomUUID().toString)
 }

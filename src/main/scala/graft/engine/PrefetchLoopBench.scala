@@ -52,8 +52,6 @@ object PrefetchLoopBench {
       hits: Long, misses: Long, hitRate: Double,
       prefetched: Long, rows: Long)
 
-  private def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
-
   /** Index of the median element by `key` — used to report ALL of a
     * rep's statistics from ONE (the median) rep, so counters and
     * timings in the artifact come from the same run instead of mixing

@@ -23,22 +23,13 @@ object PruningBench {
 
   final case class AbRow(mode: String, seconds: Double, filesRead: Long, rows: Long)
 
-  private def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }
-
   def run(spark: SparkSession, engine: GraftEngine, pred: Pred,
       reps: Int = 3): Seq[AbRow] = {
     val allFiles = engine.blocks.map(_.file).distinct
     val dec = engine.decisions(pred)
     val keptFiles = dec.filter(_._4).map(_._2).distinct
-
-    def timed(rows: => Long): (Double, Long) = {
-      var n = 0L
-      val ts = (1 to reps).map { _ =>
-        System.gc() // measure the rep, not the previous rep's GC debt
-        val t0 = System.nanoTime(); n = rows; (System.nanoTime() - t0) / 1e9
-      }
-      (median(ts), n)
-    }
+    def timed(rows: => Long): (Double, Long) =
+      graft.BenchWindow.medianOf(spark, reps, clearCache = false)(rows)
 
     val (tFull, nFull) =
       timed(spark.read.parquet(allFiles: _*).filter(pred.toColumn).count())
@@ -70,15 +61,8 @@ object PruningBench {
     import org.apache.spark.sql.functions.col
     val allFiles = engine.blocks.map(_.file).distinct
     val fileOf = engine.blocks.map(b => b.blockId -> b.file).toMap
-
-    def timed(rows: => Long): (Double, Long) = {
-      var n = 0L
-      val ts = (1 to reps).map { _ =>
-        System.gc() // measure the rep, not the previous rep's GC debt
-        val t0 = System.nanoTime(); n = rows; (System.nanoTime() - t0) / 1e9
-      }
-      (median(ts), n)
-    }
+    def timed(rows: => Long): (Double, Long) =
+      graft.BenchWindow.medianOf(spark, reps, clearCache = false)(rows)
 
     val (tFull, nFull) = timed {
       spark.read.parquet(allFiles: _*)
@@ -122,17 +106,9 @@ object PruningBench {
     * `path` record what the estimator said and which path it picked. */
   def runServeChoice(spark: SparkSession, engine: GraftEngine,
       dense: Pred, sparse: Pred, reps: Int = 3): String = {
-    def timedWorkload(body: => Long): (Double, Long) = {
-      var n = 0L
-      val ts = (1 to reps).map { _ =>
-        engine.cache.clear()
-        System.gc()
-        val t0 = System.nanoTime()
-        n = body + body + body + body
-        (System.nanoTime() - t0) / 1e9
-      }
-      (median(ts), n)
-    }
+    def timedWorkload(body: => Long): (Double, Long) =
+      graft.BenchWindow.medianOf(spark, reps, clearCache = false,
+        prep = () => engine.cache.clear())(body + body + body + body)
     val parts = for ((pname, pred) <- Seq("dense" -> dense, "sparse" -> sparse)) yield {
       val sel = engine.estimateSelectivity(pred)
       val path = engine.servePath(pred) // the route queryAuto takes

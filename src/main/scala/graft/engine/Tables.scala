@@ -77,4 +77,14 @@ object Tables {
       finally it.close()
     }
   }
+
+  /** Is the scratch layout at `out` built from the CURRENT source table
+    * `name` under `dir` — its `_SUCCESS` exists and is no older than
+    * [[sourceMtime]]? The one rebuild test for derived layouts. */
+  def builtFromCurrent(out: String, dir: String, name: String): Boolean = {
+    val success = java.nio.file.Paths.get(out, "_SUCCESS")
+    java.nio.file.Files.exists(success) &&
+      java.nio.file.Files.getLastModifiedTime(success).toMillis >=
+        sourceMtime(dir, name)
+  }
 }

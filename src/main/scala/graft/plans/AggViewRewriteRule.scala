@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{ByteType, DecimalType, DoubleType, IntegerType, LongType, ShortType}
 
-import graft.sources.AggView
+import graft.sources.{AggView, SidecarManifest}
 
 /** Transparent MATERIALIZED-VIEW REWRITING: an `Aggregate` over a
   * registered parquet table whose shape persisted
@@ -136,21 +136,16 @@ object AggViewRewriteRule {
         size > 256
     })
 
-  private val sessionIds = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
-  private def sessionKey(s: SparkSession): String =
-    sessionIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
-
   private def viewsFor(rootPath: String, session: SparkSession): Seq[String] = {
     val explicit = registry.getOrDefault(
       ZoneMapPruneRule.normFile(rootPath), Set.empty[String]).toSeq
-    val key = (ZoneMapPruneRule.normFile(rootPath), sessionKey(session))
+    val key = (ZoneMapPruneRule.normFile(rootPath), SidecarManifest.sessionKey(session))
     var marked = markerCache.get(key)
     if (marked == null) {
       // presence via the shared one-probe-per-table manifest; only a
       // present marker pays its own read
       marked =
-        if (!graft.sources.SidecarManifest.has(rootPath, session, "_graft_views"))
+        if (!SidecarManifest.has(rootPath, session, "_graft_views"))
           None
         else
           try AggView.markerViews(rootPath)
@@ -310,7 +305,7 @@ object AggViewRewriteRule {
     * per-file (mtime, size) — every view built since — each covered
     * file must also MATCH the live status, so a base file rewritten in
     * place under the same name (compaction, backfill) fails the gate
-    * instead of serving stale aggregates (the freshSidecarIndex
+    * instead of serving stale aggregates (the sidecar serve gates'
     * discipline applied here). */
   private def freshMeta(viewPath: String, hfs: HadoopFsRelation,
       currentFiles: Set[String],
@@ -346,7 +341,7 @@ object AggViewRewriteRule {
 
   private def loadView(spark: SparkSession, viewPath: String,
       meta: AggView.ViewMeta): ViewSide = {
-    val key = (viewPath, meta.gen, sessionKey(spark))
+    val key = (viewPath, meta.gen, SidecarManifest.sessionKey(spark))
     var p = viewPlanCache.get(key)
     if (p == null) {
       inRewrite.set(java.lang.Boolean.TRUE)

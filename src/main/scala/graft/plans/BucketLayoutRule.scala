@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import graft.sources.SidecarManifest
 
 /** Transparent BUCKETED-LAYOUT discovery: a plain `spark.read.parquet`
   * (or a view over it) of a directory that [[graft.sources.Bucketing
@@ -79,20 +80,15 @@ object BucketLayoutRule {
 
   private[graft] def clearCache(): Unit = specCache.clear()
 
-  private val sessionIds = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
-  private def sessionKey(s: SparkSession): String =
-    sessionIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
-
   /** The root's parsed `_graft_bucket_spec.json`, memoized per
     * (root, session). */
   private[plans] def specFor(rootPath: String,
       session: SparkSession): Option[(String, Int, Long)] = {
-    val key = (ZoneMapPruneRule.normFile(rootPath), sessionKey(session))
+    val key = (ZoneMapPruneRule.normFile(rootPath), SidecarManifest.sessionKey(session))
     val hit = specCache.get(key)
     if (hit != null) return hit
     val found =
-      if (!graft.sources.SidecarManifest.has(rootPath, session,
+      if (!SidecarManifest.has(rootPath, session,
         graft.sources.Bucketing.SpecFileName)) None
       else
         try {

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count}
@@ -9,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, JoinHint, L
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.LongType
+import graft.sources.SidecarManifest
 
 /** Transparent DICTIONARY-PAGE serving for plain SQL: a global
   * (ungrouped, unfiltered) `COUNT(DISTINCT col)[, ...]` over a bare
@@ -31,11 +31,11 @@ import org.apache.spark.sql.types.LongType
   * SOUNDNESS GATE (stricter than the pruning rule's): serving from a
   * stale sidecar is WRONG ANSWERS, not lost pruning — a sidecar
   * missing a new file undercounts, one holding a deleted file's
-  * entries overcounts. The rewrite therefore requires the sidecar's
-  * file set to EQUAL the relation's live listing EXACTLY (the
-  * [[graft.engine.GraftEngine.freshSidecarIndex]] rule), checked per
-  * query from a coverage snapshot cached per (root, sidecar mtime) —
-  * a refreshed sidecar is picked up on its next mtime change, an
+  * entries overcounts. The rewrite therefore requires the SERVE-grade
+  * currency test ([[SidecarManifest.servable]]: anchor
+  * no older than any live file, recorded file set == live listing),
+  * checked per query from a coverage snapshot cached per (root,
+  * anchor) — a refreshed sidecar is picked up on its next anchor, an
   * appended/removed base file refuses until
   * [[graft.sources.DictionaryIndex.refresh]] + save. Columns the
   * sidecar doesn't index refuse the whole query (no partial serves).
@@ -88,7 +88,7 @@ object DictDistinctRule {
       nullCountByFile: Map[(String, String), Long],
       fileStats: Map[String, (Long, Long)])
 
-  // (norm root, sidecar _SUCCESS mtime) -> coverage snapshot
+  // (norm root, sidecar anchor) -> coverage snapshot
   private val coverageCache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[(String, Long), Coverage](16, 0.75f, true) {
       override def removeEldestEntry(
@@ -97,17 +97,6 @@ object DictDistinctRule {
     })
 
   private def norm(p: String): String = ZoneMapPruneRule.normFile(p)
-
-  /** The sidecar's `_SUCCESS` mtime, or None when absent — one stat on
-    * the positive path; absence answered by the shared manifest. */
-  private def sidecarMtime(rootPath: String, session: SparkSession): Option[Long] =
-    if (!graft.sources.SidecarManifest.has(rootPath, session, "_graft_dict")) None
-    else
-      try {
-        val p = new Path(new Path(rootPath, "_graft_dict"), "_SUCCESS")
-        val fs = p.getFileSystem(session.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) Some(fs.getFileStatus(p).getModificationTime) else None
-      } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The measured benefit gate (round 15): on a root with CALIBRATED
     * [[graft.sources.CostRouter]] constants, pay the (memoized)
@@ -181,11 +170,6 @@ object DictDistinctRule {
         size > 128
     })
 
-  private val sessionIds = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
-  private def sessionKey(s: SparkSession): String =
-    sessionIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
-
   // attr-only Projects down to the bare relation; ANY Filter refuses
   private def unwrap(p: LogicalPlan): Option[LogicalRelation] = p match {
     case pr: Project
@@ -195,27 +179,22 @@ object DictDistinctRule {
     case _ => None
   }
 
-  /** Per-file (mtime, size) match against the live listing — catches
-    * a base file REWRITTEN IN PLACE under the same name, which
-    * name-set equality cannot (serving its stale dictionary value set
-    * would be wrong answers). Live statuses come from the relation's
-    * own FileIndex — already materialized at resolution, no extra
-    * filesystem work at plan time. Entries from a sidecar predating
-    * the fields carry no stats and keep the legacy name-set-only
-    * gate (documented on [[graft.sources.FileDict]]). */
-  // (FileIndex INSTANCE -> (sidecar mtime, verdict)): a FileIndex's
-  // statuses are immutable once constructed, so the verdict per
-  // (index, coverage generation) is too — memoized by IDENTITY
-  // through the shared liveStatsOf memo (InMemoryFileIndex.equals
-  // compares root paths only, so an equals-keyed map would serve a
-  // stale verdict to a FRESH index over the same root — the
-  // rewrite-in-place spec caught exactly that).
-  private def statsCurrent(cov: Coverage,
-      hfs: HadoopFsRelation): Boolean =
-    cov.fileStats.isEmpty || {
-      val live = ZoneMapPruneRule.liveStatsOf(hfs)
+  /** The serve-grade currency test ([[graft.sources.SidecarManifest
+    * .servable]]) plus a per-file (mtime, size) match against the live
+    * listing — catches a base file REWRITTEN IN PLACE under the same
+    * name before the anchor, which name-set equality cannot (serving
+    * its stale dictionary value set would be wrong answers). Live
+    * statuses come from the relation's own FileIndex through the
+    * shared identity-keyed liveStatsOf memo — already materialized at
+    * resolution, no extra filesystem work at plan time. Entries from a
+    * sidecar predating the fields carry no stats and keep the
+    * name-set-only gate (documented on [[graft.sources.FileDict]]). */
+  private def servable(anchor: Long, cov: Coverage,
+      hfs: HadoopFsRelation): Boolean = {
+    val live = ZoneMapPruneRule.liveStatsOf(hfs)
+    SidecarManifest.servable(anchor, cov.files, live) &&
       cov.fileStats.forall { case (f, ms) => live.get(f).contains(ms) }
-    }
+  }
 
   /** Spark types whose cast from the physical dictionary view (long /
     * double / string) is faithful — the [[graft.engine.GraftEngine]]
@@ -257,11 +236,11 @@ object DictDistinctRule {
       roots = hfs.location.rootPaths.toSeq.map(_.toString)
       if roots.size == 1
       if costOk(hfs, roots.head)
-      mtime <- sidecarMtime(roots.head, spark)
+      mtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Dict)
       cov <- coverageFor(spark, roots.head, mtime)
-      liveFiles = hfs.location.inputFiles.toSeq.map(norm).toSet
-      if cov.files == liveFiles
-      if statsCurrent(cov, hfs)
+      // the soundness gate: the serve-grade currency test, AND each
+      // recorded (mtime, size) matches its live file
+      if servable(mtime, cov, hfs)
       if cov.coveredByColumn.contains(out.name) &&
         !cov.mixedTypeColumns.contains(out.name)
       (anyNull, unknown) = cov.nullsByColumn.getOrElse(out.name, (false, true))
@@ -295,13 +274,11 @@ object DictDistinctRule {
         case _ => None
       })
       if pairs.nonEmpty
-      mtime <- sidecarMtime(roots.head, spark)
+      mtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Dict)
       cov <- coverageFor(spark, roots.head, mtime)
-      liveFiles = hfs.location.inputFiles.toSeq.map(norm).toSet
-      // the soundness gate: sidecar file set == live listing exactly,
-      // AND each recorded (mtime, size) matches its live file
-      if cov.files == liveFiles
-      if statsCurrent(cov, hfs)
+      // the soundness gate: the serve-grade currency test, AND each
+      // recorded (mtime, size) matches its live file
+      if servable(mtime, cov, hfs)
       cols = pairs.map(_._2).distinct
       // every counted column must be indexed (a column with no sidecar
       // rows has unknown coverage) and single-physical-typed (a mixed
@@ -331,13 +308,15 @@ object DictDistinctRule {
 
   // Tri-state decisions are SHARED with the zone-stats serve
   // ([[ZoneAggRule.triStateFor]]): loaded from the `_graft_index`
-  // sidecar itself, keyed by its `_SUCCESS` mtime — a rebuilt zone
+  // sidecar itself, keyed by its anchor — a rebuilt zone
   // sidecar is picked up immediately, where the zone registry's
   // discovery memo would keep serving the pre-rebuild frame for the
   // session's lifetime (a rewritten-in-place file could then be
   // falsely proved all-true even though the DICT gates pass on its
   // refreshed sidecar). Callers intersect with the live listing and
-  // gate live mtimes against the zone sidecar's build time.
+  // apply the PRUNE-grade test to the zone sidecar: a live file it
+  // does not know is simply undecided (it scans), but none may be
+  // newer than its anchor.
 
   /** `COUNT(DISTINCT col)[, ...] WHERE p` over a dict-indexed table
     * whose ZONE-MAP stats decide p for (most) whole files: files
@@ -369,21 +348,20 @@ object DictDistinctRule {
       })
       if pairs.nonEmpty
       pred <- PredicateExtractor.convertComplete(cond)
-      mtime <- sidecarMtime(roots.head, spark)
+      mtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Dict)
       cov <- coverageFor(spark, roots.head, mtime)
       liveRaw = hfs.location.inputFiles.toSeq
       liveFiles = liveRaw.map(norm).toSet
-      if cov.files == liveFiles
-      if statsCurrent(cov, hfs)
+      if servable(mtime, cov, hfs)
       cols = pairs.map(_._2).map(a => a.name).distinct
       if cols.forall(c => cov.coveredByColumn.contains(c) &&
         !cov.mixedTypeColumns.contains(c))
-      zoneMtime <- ZoneAggRule.sidecarMtime(roots.head, spark)
+      zoneMtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Zone)
       // no live file newer than the zone index: its all-true proofs
       // are build-time claims (the dict gates only protect the DICT
       // sidecar's freshness)
-      if ZoneMapPruneRule.liveStatsOf(hfs).valuesIterator
-        .forall(_._1 <= zoneMtime)
+      if SidecarManifest.prunable(zoneMtime,
+        ZoneMapPruneRule.liveStatsOf(hfs).valuesIterator.map(_._1))
       (allTrueRaw, allFalseRaw) <- ZoneAggRule.triStateFor(
         spark, roots.head, zoneMtime, pred)
       allTrue = allTrueRaw & liveFiles
@@ -510,17 +488,16 @@ object DictDistinctRule {
       if roots.size == 1
       if costOk(hfs, roots.head)
       pred <- PredicateExtractor.convertComplete(cond)
-      mtime <- sidecarMtime(roots.head, spark)
+      mtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Dict)
       cov <- coverageFor(spark, roots.head, mtime)
       liveRaw = hfs.location.inputFiles.toSeq
       liveFiles = liveRaw.map(norm).toSet
-      if cov.files == liveFiles
-      if statsCurrent(cov, hfs)
+      if servable(mtime, cov, hfs)
       if cov.coveredByColumn.contains(out.name) &&
         !cov.mixedTypeColumns.contains(out.name)
-      zoneMtime <- ZoneAggRule.sidecarMtime(roots.head, spark)
-      if ZoneMapPruneRule.liveStatsOf(hfs).valuesIterator
-        .forall(_._1 <= zoneMtime)
+      zoneMtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Zone)
+      if SidecarManifest.prunable(zoneMtime,
+        ZoneMapPruneRule.liveStatsOf(hfs).valuesIterator.map(_._1))
       (allTrueRaw, allFalseRaw) <- ZoneAggRule.triStateFor(
         spark, roots.head, zoneMtime, pred)
       allTrue = allTrueRaw & liveFiles
@@ -611,7 +588,8 @@ object DictDistinctRule {
   private def distinctPlan(spark: SparkSession, rootPath: String, mtime: Long,
       out: AttributeReference, needNull: Boolean): Option[LogicalPlan] = {
     val key = (norm(rootPath), mtime,
-      s"distinct:${out.name}:$needNull:${out.dataType.sql}", sessionKey(spark))
+      s"distinct:${out.name}:$needNull:${out.dataType.sql}",
+      SidecarManifest.sessionKey(spark))
     val hit = servePlanCache.get(key)
     if (hit != null) return Some(hit)
     inRewrite.set(java.lang.Boolean.TRUE)
@@ -644,7 +622,7 @@ object DictDistinctRule {
     * guard) and cached per (root, sidecar generation, column). */
   private def countPlan(spark: SparkSession, rootPath: String, mtime: Long,
       column: String): Option[LogicalPlan] = {
-    val key = (norm(rootPath), mtime, column, sessionKey(spark))
+    val key = (norm(rootPath), mtime, column, SidecarManifest.sessionKey(spark))
     val hit = servePlanCache.get(key)
     if (hit != null) return Some(hit)
     inRewrite.set(java.lang.Boolean.TRUE)

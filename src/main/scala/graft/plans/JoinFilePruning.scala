@@ -345,7 +345,7 @@ object JoinFilePruning {
       // the dictionary cut (round 14): a fact file rewritten in place
       // under its name carries stats the zone frame never saw — only
       // files whose live mtime is ≤ the frame's anchor (registration
-      // wall-clock / sidecar _SUCCESS mtime) may be range-cut; no
+      // wall-clock / sidecar anchor) may be range-cut; no
       // anchor, no zone cut. The dictionary cut keeps its stricter
       // per-file (mtime, size) match.
       zoneAnchor = ZoneMapPruneRule.zoneAnchorFor(root, spark)

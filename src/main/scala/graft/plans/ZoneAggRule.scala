@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Max, Min, Sum}
@@ -8,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Proj
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, LongType, ShortType, TimestampNTZType, TimestampType}
+import graft.sources.SidecarManifest
 
 /** Transparent ZONE-STATS serving for plain-SQL global
   * `COUNT(*)` / `COUNT(col)` / `MIN(col)` / `MAX(col)` — filtered or
@@ -46,13 +46,14 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, Lo
   *
   * SOUNDNESS GATE: serving answers from a stale index is wrong
   * results. The rule serves only from the SAVED `_graft_index`
-  * sidecar (loaded itself, keyed by its `_SUCCESS` mtime so a rebuild
-  * is picked up immediately — the zone registry's discovery memo
-  * would keep a pre-rebuild frame for the session's lifetime), and
-  * requires the index's file set to EQUAL the relation's live listing
-  * exactly (append/delete refuses until
+  * sidecar (loaded itself, keyed by its anchor so a rebuild is
+  * picked up immediately — the zone registry's discovery memo would
+  * keep a pre-rebuild frame for the session's lifetime), and requires
+  * the SERVE-grade currency test ([[graft.sources.SidecarManifest
+  * .servable]]): the index's file set EQUALS the relation's live
+  * listing exactly (append/delete refuses until
   * [[graft.sources.MicroBlockIndex.refresh]] + save) AND no live
-  * file's mtime to exceed the sidecar's — a file rewritten in place
+  * file's mtime exceeds the anchor — a file rewritten in place
   * after the sidecar save carries dead stats (the anchor ordering is
   * the freshness bound; a backdated-mtime rewrite escapes it, the
   * same bound the zone layer's newest-data discovery probe accepts).
@@ -87,25 +88,6 @@ object ZoneAggRule {
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
   private def norm(p: String): String = ZoneMapPruneRule.normFile(p)
-
-  /** The `_graft_index` sidecar's `_SUCCESS` mtime, or None when
-    * absent. The mtime keys every memo below, so a REBUILT sidecar is
-    * picked up on its next mtime change — the rule loads the sidecar
-    * itself rather than going through the zone registry's discovery
-    * memo, which would keep serving the pre-rebuild frame for the
-    * session's lifetime. */
-  private[plans] def sidecarMtime(rootPath: String,
-      session: SparkSession): Option[Long] =
-    if (!graft.sources.SidecarManifest.has(rootPath, session, "_graft_index"))
-      None
-    else
-      try {
-        val p = new Path(new Path(
-          graft.sources.MicroBlockIndex.sidecarPath(rootPath)), "_SUCCESS")
-        val fs = p.getFileSystem(session.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) Some(fs.getFileStatus(p).getModificationTime)
-        else None
-      } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The serve's PLAN SIGNATURE, for callers that must PROVE the
     * rewrite fired on a global-aggregate query (the gate row's
@@ -298,7 +280,7 @@ object ZoneAggRule {
   private[plans] def keyRangeStats(spark: SparkSession, rootPath: String,
       column: String): Option[(Long, Long, Long)] =
     for {
-      mtime <- sidecarMtime(rootPath, spark)
+      mtime <- SidecarManifest.anchor(rootPath, spark, SidecarManifest.Zone)
       snap <- snapshotFor(spark, rootPath, mtime, Seq(column))
       bounds <- {
         val perFile = snap.fileRows.keys.map(f => snap.perCol.get((column, f)))
@@ -435,7 +417,7 @@ object ZoneAggRule {
         "za:" + cols.mkString(",") + "|" +
           predOpt.map(_.toString).getOrElse(""),
         hfs.location.sizeInBytes).getOrElse(true)
-      mtime <- sidecarMtime(roots.head, spark)
+      mtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Zone)
       liveRaw = hfs.location.inputFiles.toSeq
       liveFiles = liveRaw.map(norm).toSet
       if liveFiles.nonEmpty
@@ -446,8 +428,8 @@ object ZoneAggRule {
       // is the bound); a rewrite BEFORE it is caught by refresh's
       // per-file (mtime, size) diff, which re-reads changed files
       // (round 15)
-      if snap.fileRows.keySet == liveFiles
-      if ZoneMapPruneRule.liveStatsOf(hfs).valuesIterator.forall(_._1 <= mtime)
+      if SidecarManifest.servable(
+        mtime, snap.fileRows.keySet, ZoneMapPruneRule.liveStatsOf(hfs))
       (allTrueRaw, allFalseRaw) <- predOpt match {
         case None    => Some((liveFiles, Set.empty[String]))
         case Some(p) => triStateFor(spark, roots.head, mtime, p)
@@ -568,13 +550,13 @@ object ZoneAggRule {
         case None => Some(None)
         case Some(c) => PredicateExtractor.convertComplete(c).map(Some(_))
       }
-      mtime <- sidecarMtime(roots.head, spark)
+      mtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Zone)
       liveRaw = hfs.location.inputFiles.toSeq
       liveFiles = liveRaw.map(norm).toSet
       if liveFiles.nonEmpty
       snap <- snapshotFor(spark, roots.head, mtime, cols)
-      if snap.fileRows.keySet == liveFiles
-      if ZoneMapPruneRule.liveStatsOf(hfs).valuesIterator.forall(_._1 <= mtime)
+      if SidecarManifest.servable(
+        mtime, snap.fileRows.keySet, ZoneMapPruneRule.liveStatsOf(hfs))
       (allTrueRaw, allFalseRaw) <- predOpt match {
         case None    => Some((liveFiles, Set.empty[String]))
         case Some(p) => triStateFor(spark, roots.head, mtime, p)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{
   HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
-import graft.sources.BlockStat
+import graft.sources.{BlockStat, SidecarManifest}
 
 /** Catalyst optimizer rule: transparent zone-map file pruning.
   *
@@ -179,8 +179,8 @@ object ZoneMapPruneRule {
 
   /** The newest moment up to which a zone frame for `rootPath` is
     * known good: the register() wall-clock for an in-session
-    * registered frame, else the `_graft_index` sidecar's `_SUCCESS`
-    * mtime. None = no anchor — value-grade consumers (the join arm's
+    * registered frame, else the `_graft_index` sidecar's anchor.
+    * None = no anchor — value-grade consumers (the join arm's
     * zone-range cut) must then refuse rather than trust an unanchored
     * frame against files that may have been rewritten in place. */
   private[plans] def zoneAnchorFor(rootPath: String,
@@ -194,7 +194,7 @@ object ZoneMapPruneRule {
           if (cheap.startsWith("/")) None
           else Option(regTimes.get(norm(rootPath)))).map(_.longValue)
       }
-    regTime.orElse(ZoneAggRule.sidecarMtime(rootPath, session))
+    regTime.orElse(SidecarManifest.anchor(rootPath, session, SidecarManifest.Zone))
   }
 
   // root path -> DICTIONARY index DataFrame (graft.sources.DictionaryIndex
@@ -457,14 +457,14 @@ object ZoneMapPruneRule {
 
   private def discoverBloomMarker(rootPath: String,
       session: SparkSession): Option[Set[String]] = {
-    val key = (normFile(rootPath), sessionKey(session))
+    val key = (normFile(rootPath), SidecarManifest.sessionKey(session))
     val hit = bloomMarkerCache.get(key)
     if (hit != null) hit
     else {
       // presence from the shared one-probe-per-table manifest; only a
       // PRESENT marker pays its own read
       val found =
-        if (!graft.sources.SidecarManifest.has(rootPath, session, "_graft_bloom"))
+        if (!SidecarManifest.has(rootPath, session, "_graft_bloom"))
           None
         else
           try graft.sources.BloomPruning.markerColumns(rootPath).map(_.toSet)
@@ -626,13 +626,14 @@ object ZoneMapPruneRule {
     * (`<root>/_graft_index`, [[graft.sources.MicroBlockIndex.saveSidecar]])
     * is probed ONCE per (root, session) — a fresh session reading a
     * previously indexed table gets transparent pruning with no engine
-    * constructed and no register call. Guarded by the same staleness
-    * rule the engine-side scratch caches use: the sidecar counts only
-    * if its `_SUCCESS` is no older than the newest data file directly
-    * under the root (a stale index could skip files rewritten in place
-    * since it was built — unknown files are safe, rewritten ones are
-    * not). Probe results (positive and negative) are memoized, so an
-    * unindexed table costs one filesystem round-trip per session ever. */
+    * constructed and no register call. Guarded by the PRUNE-grade
+    * currency test ([[SidecarManifest.prunable]]): the
+    * sidecar counts only if its anchor is no older than the newest
+    * data file under the root (a stale index could skip files
+    * rewritten in place since it was built — unknown files are safe,
+    * rewritten ones are not). Probe results (positive and negative)
+    * are memoized, so an unindexed table costs one filesystem
+    * round-trip per session ever. */
   def indexFor(rootPath: String,
       session: SparkSession): Option[DataFrame] =
     indexFor(rootPath).filter(_.sparkSession eq session)
@@ -694,7 +695,7 @@ object ZoneMapPruneRule {
           else Option(dictRegistry.get(norm(rootPath))))
       }
     registered.filter(_.sparkSession eq session)
-      .orElse(discoverSidecar(rootPath, session, "_graft_dict"))
+      .orElse(discoverSidecar(rootPath, session, SidecarManifest.Dict))
   }
 
   /** Sidecar probe memo: (root, session-uuid, sidecar dir) → discovered
@@ -708,43 +709,24 @@ object ZoneMapPruneRule {
         size > 256
     })
 
-  private val sessionIds =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, String]())
-  private def sessionKey(s: SparkSession): String =
-    sessionIds.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
-
+  // the PRUNE-grade currency test ([[graft.sources.SidecarManifest
+  // .prunable]]) over a RECURSIVE listing (round 13: a top-level-only
+  // listing reads nothing for hive-partitioned layouts, which would
+  // trust a stale sidecar over rewritten NESTED files)
   private def discoverSidecar(rootPath: String,
-      session: SparkSession, dirName: String = "_graft_index"): Option[DataFrame] = {
-    val key = (normFile(rootPath), sessionKey(session), dirName)
+      session: SparkSession, dirName: String = SidecarManifest.Zone): Option[DataFrame] = {
+    val key = (normFile(rootPath), SidecarManifest.sessionKey(session), dirName)
     val hit = discoveryCache.get(key)
     if (hit != null) hit
-    else if (!graft.sources.SidecarManifest.has(rootPath, session, dirName)) {
-      // the shared manifest says no such sidecar dir exists — memoize
-      // the negative without a per-layer filesystem round-trip
-      discoveryCache.put(key, None)
-      None
-    } else {
+    else {
       val found =
-        try {
-          val conf = session.sparkContext.hadoopConfiguration
-          val root = new Path(rootPath)
-          val fs = root.getFileSystem(conf)
-          val sidecar = new Path(root, dirName)
-          val success = new Path(sidecar, "_SUCCESS")
-          if (!fs.exists(success)) None
-          else {
-            val sidecarTime = fs.getFileStatus(success).getModificationTime
-            // RECURSIVE newest-data probe (round 13): a top-level-only
-            // listing reads 0 for hive-partitioned layouts, which
-            // would trust a stale sidecar over rewritten NESTED files
-            val newestData = graft.sources.MicroBlockIndex
-              .listParquetFilesWithStatus(rootPath)
-              .map(_._2).foldLeft(0L)(math.max)
-            if (sidecarTime < newestData) None // stale: data newer than index
-            else Some(session.read.parquet(sidecar.toString).persist())
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
+        try SidecarManifest.anchor(rootPath, session, dirName)
+          .filter(a => SidecarManifest.prunable(a,
+            graft.sources.MicroBlockIndex.listParquetFilesWithStatus(rootPath)
+              .iterator.map(_._2)))
+          .map(_ => session.read.parquet(
+            SidecarManifest.location(rootPath, dirName)).persist())
+        catch { case scala.util.control.NonFatal(_) => None }
       discoveryCache.put(key, found)
       found
     }

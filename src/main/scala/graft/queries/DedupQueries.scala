@@ -534,14 +534,9 @@ object DedupQueries {
       base: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     synchronized {
       storeCache.getOrElseUpdate((s, dir), {
-        import java.nio.file.{Files, Paths}
-        val sfName = Paths.get(dir).getFileName.toString
+        val sfName = java.nio.file.Paths.get(dir).getFileName.toString
         val out = s"target/scratch/sigstore/$sfName/base"
-        val success = Paths.get(out, "_SUCCESS")
-        val stale = !Files.exists(success) ||
-          Files.getLastModifiedTime(success).toMillis <
-            Tables.sourceMtime(dir, "documents")
-        if (stale)
+        if (!Tables.builtFromCurrent(out, dir, "documents"))
           DedupOps.signatureTable(base).write.mode("overwrite").parquet(out)
         s.read.parquet(out)
       })

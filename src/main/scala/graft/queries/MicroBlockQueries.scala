@@ -36,34 +36,43 @@ object MicroBlockQueries {
 
   private val built = scala.collection.mutable.Set.empty[String]
 
-  /** Ensure `path` carries a CURRENT round-14 zone sidecar (nanRisk
-    * schema, per-file sums for `sumCols`) — ONCE, at layout-access
-    * time, BEFORE any row loads an engine or a serve frame over it.
+  /** Ensure `path` carries sidecars CURRENT for the rules — once, at
+    * layout-access time, BEFORE any row loads an engine or a serve
+    * frame over it. The zone sidecar must pass the shared serve-grade
+    * test ([[graft.sources.SidecarManifest.current]]) and carry the
+    * round-14 schema (`nanRisk`) plus per-file sums for `sumCols`; when
+    * `dictCols` is non-empty, so must a dictionary sidecar indexing at
+    * least those columns. Anything else rebuilds here: a layout copied
+    * from another path (its sidecars record the old file URIs), a
+    * rebuilt layout, or a sidecar predating a row's schema needs.
     * Round-14 lesson (the sf0.1 gate caught it): letting individual
     * gate rows rebuild a SHARED sidecar mid-session deletes part
     * files out from under frames earlier rows already planned
     * (FAILED_READ_FILE on the old sidecar part names). Centralizing
-    * the upgrade here makes every row's own stale check find a fresh
-    * sidecar and never rebuild mid-run. */
-  private def ensureRound14Sidecar(spark: SparkSession, path: String,
-      table: String, sumCols: Seq[String]): Unit = {
-    val sidecar = MicroBlockIndex.sidecarPath(path)
-    val success = Paths.get(sidecar, "_SUCCESS")
-    def hasSums: Boolean = sumCols.isEmpty || {
-      val idx = spark.read.parquet(sidecar)
-      idx.columns.contains("sumLong") && sumCols.forall(c =>
-        idx.filter(col("column") === c && col("sumLong").isNotNull)
-          .limit(1).count() > 0)
+    * the check here makes it run once per layout per JVM and leaves
+    * rows nothing to rebuild. */
+  private[graft] def ensureSidecars(spark: SparkSession, path: String,
+      table: String, sumCols: Seq[String], dictCols: Seq[String] = Nil): Unit = {
+    import graft.sources.SidecarManifest
+    val zone = MicroBlockIndex.sidecarPath(path)
+    def zoneSchemaOk: Boolean = {
+      val idx = spark.read.parquet(zone)
+      idx.columns.contains("nanRisk") && (sumCols.isEmpty ||
+        idx.columns.contains("sumLong") && sumCols.forall(c =>
+          idx.filter(col("column") === c && col("sumLong").isNotNull)
+            .limit(1).count() > 0))
     }
-    val stale = !Files.exists(success) ||
-      Files.getLastModifiedTime(success).toMillis <
-        Files.getLastModifiedTime(Paths.get(path, "_SUCCESS")).toMillis ||
-      !spark.read.parquet(sidecar).columns.contains("nanRisk") ||
-      !hasSums
-    if (stale)
+    if (!SidecarManifest.current(spark, path, SidecarManifest.Zone) || !zoneSchemaOk)
       MicroBlockIndex.saveSidecar(
         MicroBlockIndex.withSums(spark, path,
           MicroBlockIndex.build(spark, path, table), sumCols), path)
+    def dictColsOk: Boolean = dictCols.toSet.subsetOf(
+      DictionaryIndex.load(spark, DictionaryIndex.sidecarPath(path))
+        .select("column").distinct().collect().map(_.getString(0)).toSet)
+    if (dictCols.nonEmpty &&
+        (!SidecarManifest.current(spark, path, SidecarManifest.Dict) || !dictColsOk))
+      DictionaryIndex.saveSidecar(
+        DictionaryIndex.build(spark, path, table, dictCols), path)
   }
 
   /** Build (once) the micro-blocked lineitem copy for this sf dir. */
@@ -71,12 +80,12 @@ object MicroBlockQueries {
     val sfName = Paths.get(dir).getFileName.toString
     val out = s"target/scratch/microblocks/$sfName/lineitem"
     if (!built.contains(out)) {
-      if (!Files.exists(Paths.get(out, "_SUCCESS"))) {
+      if (!graft.engine.Tables.builtFromCurrent(out, dir, "lineitem")) {
         val li = graft.engine.Tables.load(spark, dir, "lineitem")
         MicroBlockWriter.write(li, out, "l_shipdate", NumBlocks)
       }
-      ensureRound14Sidecar(spark, out, "lineitem",
-        Seq("l_suppkey", "l_linenumber"))
+      ensureSidecars(spark, out, "lineitem",
+        Seq("l_suppkey", "l_linenumber"), DictColumns)
       built += out
     }
     out
@@ -91,7 +100,7 @@ object MicroBlockQueries {
     val sfName = Paths.get(dir).getFileName.toString
     val out = s"target/scratch/microblocks/$sfName/lineclustered"
     if (!built.contains(out)) {
-      if (!Files.exists(Paths.get(out, "_SUCCESS"))) {
+      if (!graft.engine.Tables.builtFromCurrent(out, dir, "lineitem")) {
         val li = graft.engine.Tables.load(spark, dir, "lineitem")
           .select("l_linenumber", "l_orderkey", "l_suppkey")
         // one clustering write, one file per group value
@@ -111,7 +120,7 @@ object MicroBlockQueries {
         tmpP.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .delete(tmpP, true)
       }
-      ensureRound14Sidecar(spark, out, "lineitem", Seq("l_suppkey"))
+      ensureSidecars(spark, out, "lineitem", Seq("l_suppkey"))
       built += out
     }
     out
@@ -125,7 +134,7 @@ object MicroBlockQueries {
     val sfName = Paths.get(dir).getFileName.toString
     val out = s"target/scratch/microblocks/$sfName/strclustered"
     if (!built.contains(out)) {
-      if (!Files.exists(Paths.get(out, "_SUCCESS"))) {
+      if (!graft.engine.Tables.builtFromCurrent(out, dir, "lineitem")) {
         val li = graft.engine.Tables.load(spark, dir, "lineitem")
           .select("l_returnflag", "l_orderkey", "l_suppkey")
         val vals = li.select("l_returnflag").distinct()
@@ -135,7 +144,7 @@ object MicroBlockQueries {
             .write.mode(if (i == 0) "overwrite" else "append").parquet(out)
         }
       }
-      ensureRound14Sidecar(spark, out, "lineitem", Nil)
+      ensureSidecars(spark, out, "lineitem", Nil)
       built += out
     }
     out
@@ -186,12 +195,13 @@ object MicroBlockQueries {
     val sfName = Paths.get(dir).getFileName.toString
     val out = s"target/scratch/partitioned/$sfName"
     if (!built.contains(out)) {
-      if (!Files.exists(Paths.get(out, "_SUCCESS"))) {
+      if (!graft.engine.Tables.builtFromCurrent(out, dir, "orders")) {
         val orders = graft.engine.Tables.load(spark, dir, "orders")
         MicroBlockWriter.writePartitioned(
           orders, out, "o_orderstatus", "o_orderkey", 4)
       }
-      ensureRound14Sidecar(spark, out, "orders", Nil)
+      ensureSidecars(spark, out, "orders", Nil,
+        Seq("o_orderpriority", "o_custkey"))
       built += out
     }
     out
@@ -601,26 +611,12 @@ object MicroBlockQueries {
       """SELECT COUNT(DISTINCT l_suppkey) AS nd_supp,
         |  COUNT(DISTINCT l_returnflag) AS nd_flag FROM lineitem""".stripMargin) { (s, dir) =>
       val path = microPath(s, dir)
-      val sidecarSuccess = Paths.get(
-        DictionaryIndex.sidecarPath(path), "_SUCCESS")
-      val stale = !Files.exists(sidecarSuccess) ||
-        Files.getLastModifiedTime(sidecarSuccess).toMillis <
-          sourceMtime(dir, "lineitem")
-      if (stale) DictionaryIndex.saveSidecar(dictIndex(s, dir), path)
       s.read.parquet(path).createOrReplaceTempView("graft_dict_sql_li")
       val df = s.sql(
         """SELECT COUNT(DISTINCT l_suppkey) AS nd_supp,
           |  COUNT(DISTINCT l_returnflag) AS nd_flag
           |FROM graft_dict_sql_li""".stripMargin)
-      val reads = df.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation.asInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-            .location.rootPaths.exists(_.toString.contains("_graft_dict"))
-        case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-          m.cacheBuilder.cachedPlan.toString.contains("_graft_dict")
-      }
-      require(reads.exists(identity),
+      require(readsDict(df),
         "transparent dictionary count-distinct did not serve from the sidecar")
       df
     },
@@ -640,34 +636,12 @@ object MicroBlockQueries {
       """SELECT COUNT(DISTINCT o_orderpriority) AS nd_prio,
         |  COUNT(DISTINCT o_custkey) AS nd_cust FROM orders""".stripMargin) { (s, dir) =>
       val path = partitionedOrdersPath(s, dir)
-      val partCols = Seq("o_orderpriority", "o_custkey")
-      val sidecarSuccess = Paths.get(
-        DictionaryIndex.sidecarPath(path), "_SUCCESS")
-      // stale when missing, older than the layout, or indexing a
-      // different column set (scratch sidecars persist across runs)
-      val stale = !Files.exists(sidecarSuccess) ||
-        Files.getLastModifiedTime(sidecarSuccess).toMillis <
-          Files.getLastModifiedTime(Paths.get(path, "_SUCCESS")).toMillis ||
-        !partCols.toSet.subsetOf(
-          DictionaryIndex.load(s, DictionaryIndex.sidecarPath(path))
-            .select("column").distinct()
-            .collect().map(_.getString(0)).toSet)
-      if (stale) DictionaryIndex.saveSidecar(
-        DictionaryIndex.build(s, path, "orders", partCols), path)
       s.read.parquet(path).createOrReplaceTempView("graft_part_dict_orders")
       val df = s.sql(
         """SELECT COUNT(DISTINCT o_orderpriority) AS nd_prio,
           |  COUNT(DISTINCT o_custkey) AS nd_cust
           |FROM graft_part_dict_orders""".stripMargin)
-      val reads = df.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation.asInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-            .location.rootPaths.exists(_.toString.contains("_graft_dict"))
-        case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-          m.cacheBuilder.cachedPlan.toString.contains("_graft_dict")
-      }
-      require(reads.exists(identity),
+      require(readsDict(df),
         "partitioned-layout dictionary serve did not read the sidecar")
       df
     },
@@ -689,36 +663,16 @@ object MicroBlockQueries {
         |  COUNT(DISTINCT l_returnflag) AS nd_flag
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'""".stripMargin) { (s, dir) =>
+      // the all-match proofs read per-block min/max + null counts
+      // from the layout's `_graft_index` (microPath keeps it current)
       val path = microPath(s, dir)
-      // zone sidecar: the all-match proofs read per-block min/max +
-      // null counts from `_graft_index` (stale-guarded like the dict)
-      val zoneSuccess = Paths.get(
-        graft.sources.MicroBlockIndex.sidecarPath(path), "_SUCCESS")
-      if (!Files.exists(zoneSuccess) ||
-          Files.getLastModifiedTime(zoneSuccess).toMillis <
-            Files.getLastModifiedTime(Paths.get(path, "_SUCCESS")).toMillis)
-        graft.sources.MicroBlockIndex.saveSidecar(
-          graft.sources.MicroBlockIndex.build(s, path, "lineitem"), path)
-      val dictSuccess = Paths.get(DictionaryIndex.sidecarPath(path), "_SUCCESS")
-      if (!Files.exists(dictSuccess) ||
-          Files.getLastModifiedTime(dictSuccess).toMillis <
-            sourceMtime(dir, "lineitem"))
-        DictionaryIndex.saveSidecar(dictIndex(s, dir), path)
       s.read.parquet(path).createOrReplaceTempView("graft_dict_where_li")
       val df = s.sql(
         """SELECT COUNT(DISTINCT l_suppkey) AS nd_supp,
           |  COUNT(DISTINCT l_returnflag) AS nd_flag
           |FROM graft_dict_where_li
           |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'""".stripMargin)
-      val reads = df.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation.asInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-            .location.rootPaths.exists(_.toString.contains("_graft_dict"))
-        case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-          m.cacheBuilder.cachedPlan.toString.contains("_graft_dict")
-      }
-      require(reads.exists(identity),
+      require(readsDict(df),
         "filtered dictionary serve did not read the sidecar")
       df
     },
@@ -740,32 +694,12 @@ object MicroBlockQueries {
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
         |ORDER BY l_suppkey""".stripMargin) { (s, dir) =>
       val path = microPath(s, dir)
-      val zoneSuccess = Paths.get(
-        graft.sources.MicroBlockIndex.sidecarPath(path), "_SUCCESS")
-      if (!Files.exists(zoneSuccess) ||
-          Files.getLastModifiedTime(zoneSuccess).toMillis <
-            Files.getLastModifiedTime(Paths.get(path, "_SUCCESS")).toMillis)
-        graft.sources.MicroBlockIndex.saveSidecar(
-          graft.sources.MicroBlockIndex.build(s, path, "lineitem"), path)
-      val dictSuccess = Paths.get(DictionaryIndex.sidecarPath(path), "_SUCCESS")
-      if (!Files.exists(dictSuccess) ||
-          Files.getLastModifiedTime(dictSuccess).toMillis <
-            sourceMtime(dir, "lineitem"))
-        DictionaryIndex.saveSidecar(dictIndex(s, dir), path)
       s.read.parquet(path).createOrReplaceTempView("graft_dict_dwhere_li")
       val df = s.sql(
         """SELECT DISTINCT l_suppkey FROM graft_dict_dwhere_li
           |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
           |ORDER BY l_suppkey""".stripMargin)
-      val reads = df.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation.asInstanceOf[
-            org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-            .location.rootPaths.exists(_.toString.contains("_graft_dict"))
-        case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-          m.cacheBuilder.cachedPlan.toString.contains("_graft_dict")
-      }
-      require(reads.exists(identity),
+      require(readsDict(df),
         "filtered DISTINCT dictionary serve did not read the sidecar")
       df
     },
@@ -791,19 +725,6 @@ object MicroBlockQueries {
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'""".stripMargin) { (s, dir) =>
       val path = microPath(s, dir)
-      val zoneSuccess = Paths.get(
-        graft.sources.MicroBlockIndex.sidecarPath(path), "_SUCCESS")
-      // stale when missing, older than the layout, or predating the
-      // exact integral stats the int64/timestamp serves need (scratch
-      // sidecars persist across runs)
-      val stale = !Files.exists(zoneSuccess) ||
-        Files.getLastModifiedTime(zoneSuccess).toMillis <
-          Files.getLastModifiedTime(Paths.get(path, "_SUCCESS")).toMillis ||
-        !s.read.parquet(graft.sources.MicroBlockIndex.sidecarPath(path))
-          .columns.contains("nanRisk") // round-14 schema (implies minLong too)
-      if (stale)
-        graft.sources.MicroBlockIndex.saveSidecar(
-          graft.sources.MicroBlockIndex.build(s, path, "lineitem"), path)
       s.read.parquet(path).createOrReplaceTempView("graft_zone_agg_li")
       val df = s.sql(
         """SELECT COUNT(*) AS n_rows, COUNT(l_returnflag) AS n_flag,
@@ -841,16 +762,6 @@ object MicroBlockQueries {
         |FROM orders GROUP BY o_orderstatus
         |ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
       val path = partitionedOrdersPath(s, dir)
-      val zoneSuccess = Paths.get(
-        graft.sources.MicroBlockIndex.sidecarPath(path), "_SUCCESS")
-      val stale = !Files.exists(zoneSuccess) ||
-        Files.getLastModifiedTime(zoneSuccess).toMillis <
-          Files.getLastModifiedTime(Paths.get(path, "_SUCCESS")).toMillis ||
-        !s.read.parquet(graft.sources.MicroBlockIndex.sidecarPath(path))
-          .columns.contains("nanRisk") // round-14 schema (implies minLong too)
-      if (stale)
-        graft.sources.MicroBlockIndex.saveSidecar(
-          graft.sources.MicroBlockIndex.build(s, path, "orders"), path)
       s.read.parquet(path).createOrReplaceTempView("graft_zone_grouped_ord")
       val df = s.sql(
         """SELECT o_orderstatus, COUNT(*) AS n_rows,
@@ -891,27 +802,7 @@ object MicroBlockQueries {
         |  CAST(SUM(l_linenumber) AS BIGINT) AS sum_ln
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'""".stripMargin) { (s, dir) =>
-      val path = microPath(s, dir)
-      val sidecar = graft.sources.MicroBlockIndex.sidecarPath(path)
-      val zoneSuccess = Paths.get(sidecar, "_SUCCESS")
-      // stale when missing, older than the layout, or predating the
-      // per-file sums this serve needs
-      def hasSums = {
-        val idx = s.read.parquet(sidecar)
-        idx.columns.contains("sumLong") &&
-          idx.filter(org.apache.spark.sql.functions.col("column") === "l_suppkey" &&
-            org.apache.spark.sql.functions.col("sumLong").isNotNull)
-            .limit(1).count() > 0
-      }
-      val stale = !Files.exists(zoneSuccess) ||
-        Files.getLastModifiedTime(zoneSuccess).toMillis <
-          Files.getLastModifiedTime(Paths.get(path, "_SUCCESS")).toMillis ||
-        !hasSums
-      if (stale)
-        graft.sources.MicroBlockIndex.saveSidecar(
-          graft.sources.MicroBlockIndex.withSums(s, path,
-            graft.sources.MicroBlockIndex.build(s, path, "lineitem"),
-            Seq("l_suppkey", "l_linenumber")), path)
+      val path = microPath(s, dir) // its zone sidecar carries the sums
       s.read.parquet(path).createOrReplaceTempView("graft_zone_sum_li")
       val df = s.sql(
         """SELECT COUNT(*) AS n_rows, SUM(l_suppkey) AS sum_supp,
@@ -943,23 +834,6 @@ object MicroBlockQueries {
         |FROM lineitem GROUP BY l_linenumber
         |ORDER BY l_linenumber""".stripMargin) { (s, dir) =>
       val path = lineClusteredPath(s, dir)
-      val sidecar = graft.sources.MicroBlockIndex.sidecarPath(path)
-      val zoneSuccess = Paths.get(sidecar, "_SUCCESS")
-      def hasSums = {
-        val idx = s.read.parquet(sidecar)
-        idx.columns.contains("sumLong") &&
-          idx.filter(col("column") === "l_suppkey" &&
-            col("sumLong").isNotNull).limit(1).count() > 0
-      }
-      val stale = !Files.exists(zoneSuccess) ||
-        Files.getLastModifiedTime(zoneSuccess).toMillis <
-          Files.getLastModifiedTime(Paths.get(path, "_SUCCESS")).toMillis ||
-        !hasSums
-      if (stale)
-        graft.sources.MicroBlockIndex.saveSidecar(
-          graft.sources.MicroBlockIndex.withSums(s, path,
-            graft.sources.MicroBlockIndex.build(s, path, "lineitem"),
-            Seq("l_suppkey")), path)
       s.read.parquet(path).createOrReplaceTempView("graft_zone_gd_li")
       val df = s.sql(
         """SELECT l_linenumber, COUNT(*) AS n_rows, SUM(l_suppkey) AS sum_supp,
@@ -1415,7 +1289,7 @@ object MicroBlockQueries {
       val adaptiveBlocks = 64
       def layout(tag: String, keys: Seq[String]): (String, (Seq[String], DataFrame)) = {
         val out = s"target/scratch/adaptive/$sfName/$tag"
-        if (!Files.exists(Paths.get(out, "_SUCCESS")))
+        if (!graft.engine.Tables.builtFromCurrent(out, dir, "lineitem"))
           graft.engine.AdaptiveLayout.cluster(li, out, keys, adaptiveBlocks)
         (tag, (keys, MicroBlockIndex.build(s, out, s"lineitem_$tag").toDF.cache()))
       }
@@ -1433,6 +1307,12 @@ object MicroBlockQueries {
     * fallback), a double, and two strings. */
   private[graft] val DictColumns = Seq(
     "l_linestatus", "l_orderkey", "l_quantity", "l_returnflag", "l_suppkey")
+
+  /** Does the optimized plan of `df` read a `_graft_dict` sidecar — the
+    * proof the transparent dictionary rows require? */
+  private def readsDict(df: DataFrame): Boolean =
+    graft.sources.SidecarManifest.readIn(
+      df.queryExecution.optimizedPlan, graft.sources.SidecarManifest.Dict)
 
   private val dictIdxCache = scala.collection.mutable.Map
     .empty[(SparkSession, String), org.apache.spark.sql.Dataset[graft.sources.FileDict]]
@@ -1460,10 +1340,7 @@ object MicroBlockQueries {
     dictBucketCache.getOrElseUpdate((s, dir), {
       val sfName = Paths.get(dir).getFileName.toString
       val out = s"target/scratch/dictbucket/$sfName/lineitem"
-      val success = Paths.get(out, "_SUCCESS")
-      val stale = !Files.exists(success) ||
-        Files.getLastModifiedTime(success).toMillis < sourceMtime(dir, "lineitem")
-      if (stale) {
+      if (!graft.engine.Tables.builtFromCurrent(out, dir, "lineitem")) {
         val li = graft.engine.Tables.load(s, dir, "lineitem")
         li.repartition(16, col("l_suppkey"))
           .write.mode("overwrite").parquet(out)
@@ -1486,21 +1363,15 @@ object MicroBlockQueries {
       custBucketCache.getOrElseUpdate(dir, {
         val sfName = Paths.get(dir).getFileName.toString
         val out = s"target/scratch/custbucket/$sfName/customer"
-        val success = Paths.get(out, "_SUCCESS")
-        val stale = !Files.exists(success) ||
-          Files.getLastModifiedTime(success).toMillis < sourceMtime(dir, "customer")
-        if (stale) {
+        if (!graft.engine.Tables.builtFromCurrent(out, dir, "customer")) {
           val cust = graft.engine.Tables.load(s, dir, "customer")
           cust.repartition(16, col("c_nationkey"))
             .write.mode("overwrite").parquet(out)
+        }
+        if (!graft.sources.SidecarManifest.current(
+            s, out, graft.sources.SidecarManifest.Dict))
           DictionaryIndex.saveSidecar(
             DictionaryIndex.build(s, out, "customer", Seq("c_nationkey")), out)
-        } else {
-          val dictSuccess = Paths.get(DictionaryIndex.sidecarPath(out), "_SUCCESS")
-          if (!Files.exists(dictSuccess))
-            DictionaryIndex.saveSidecar(
-              DictionaryIndex.build(s, out, "customer", Seq("c_nationkey")), out)
-        }
         out
       })
     }
@@ -1518,10 +1389,7 @@ object MicroBlockQueries {
       bloomBucketCache.getOrElseUpdate(dir, {
         val sfName = Paths.get(dir).getFileName.toString
         val out = s"target/scratch/bloombucket/$sfName/lineitem"
-        val success = Paths.get(out, "_SUCCESS")
-        val stale = !Files.exists(success) ||
-          Files.getLastModifiedTime(success).toMillis < sourceMtime(dir, "lineitem")
-        if (stale) {
+        if (!graft.engine.Tables.builtFromCurrent(out, dir, "lineitem")) {
           val li = graft.engine.Tables.load(s, dir, "lineitem")
           val ndv = math.max(1024L, li.count() / 4 / 16) // per-file orderkey guess
           li.repartition(16, col("l_orderkey"))
@@ -1560,7 +1428,8 @@ object MicroBlockQueries {
         val view = s"$root/view"
         val done = Paths.get(root, "_graft_fixture_done")
         val stale = !Files.exists(done) ||
-          Files.getLastModifiedTime(done).toMillis < sourceMtime(dir, "lineitem")
+          Files.getLastModifiedTime(done).toMillis <
+            graft.engine.Tables.sourceMtime(dir, "lineitem")
         if (stale) {
           org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
           val li = graft.engine.Tables.load(s, dir, "lineitem")
@@ -1596,12 +1465,15 @@ object MicroBlockQueries {
       valueCol: String): String = synchronized {
     aggViewCache.getOrElseUpdate(s"$dir/$valueCol", {
       val sfName = Paths.get(dir).getFileName.toString
+      val base = microPath(s, dir)
       val out = s"target/scratch/aggview/$sfName/$valueCol"
-      val meta = Paths.get(out, "_graft_view")
-      val stale = !Files.exists(meta) ||
-        Files.getLastModifiedTime(meta).toMillis < sourceMtime(dir, "lineitem")
-      if (stale)
-        AggView.build(s, microPath(s, dir), out, Seq("l_returnflag"), valueCol)
+      // stale unless built over the layout's live file set — the
+      // rewrite rule's own gate: a rebuilt layout, or a view copied
+      // from another path (its meta records the old file URIs), fails
+      def files(fs: Iterable[String]) = fs.map(graft.plans.ZoneMapPruneRule.normFile).toSet
+      if (!Files.exists(Paths.get(out, "_graft_view")) ||
+          files(AggView.readMeta(out).files) != files(MicroBlockIndex.listParquetFiles(base)))
+        AggView.build(s, base, out, Seq("l_returnflag"), valueCol)
       out
     })
   }
@@ -1611,11 +1483,6 @@ object MicroBlockQueries {
   // rebuild, not serve frames of a stopped session
   private val zIdxCache =
     scala.collection.mutable.Map.empty[(SparkSession, String), (DataFrame, DataFrame)]
-
-  /** mtime of the newest file directly under `dir` matching `name*`
-    * (shared staleness handle — see [[graft.engine.Tables.sourceMtime]]). */
-  private def sourceMtime(dir: String, name: String): Long =
-    graft.engine.Tables.sourceMtime(dir, name)
 
   /** Build (once per (session, sf dir)) a single-key layout clustered
     * on l_quantity and a z-ordered layout on (l_quantity,
@@ -1629,13 +1496,9 @@ object MicroBlockQueries {
         val sfName = Paths.get(dir).getFileName.toString
         val linOut = s"target/scratch/zorder/$sfName/lineitem_linear"
         val zOut = s"target/scratch/zorder/$sfName/lineitem_z"
-        val srcMtime = sourceMtime(dir, "lineitem")
         val li = graft.engine.Tables.load(s, dir, "lineitem")
-        def stale(out: String): Boolean = {
-          val success = Paths.get(out, "_SUCCESS")
-          !Files.exists(success) ||
-            Files.getLastModifiedTime(success).toMillis < srcMtime
-        }
+        def stale(out: String): Boolean =
+          !graft.engine.Tables.builtFromCurrent(out, dir, "lineitem")
         if (stale(linOut))
           MicroBlockWriter.write(li, linOut, "l_quantity", NumBlocks)
         if (stale(zOut))

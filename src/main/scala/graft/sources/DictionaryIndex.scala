@@ -688,19 +688,18 @@ object DictionaryIndex {
     }
   }
 
-  /** Sidecar convention, mirroring the zone-map index: the dictionary
-    * index for a table lives at `<tablePath>/_graft_dict` (underscore
-    * dir — invisible to Spark's file listing). */
+  /** The table's dictionary SIDECAR location, `<tablePath>/_graft_dict`
+    * ([[SidecarManifest.location]]). */
   def sidecarPath(tablePath: String): String =
-    new Path(tablePath, "_graft_dict").toString
+    SidecarManifest.location(tablePath, SidecarManifest.Dict)
 
   def save(index: Dataset[FileDict], path: String): Unit =
     index.write.mode("overwrite").parquet(path)
 
-  def saveSidecar(index: Dataset[FileDict], tablePath: String): Unit = {
-    save(index, sidecarPath(tablePath))
-    SidecarManifest.invalidate(tablePath)
-  }
+  /** [[save]] at the sidecar location ([[SidecarManifest.save]]). */
+  def saveSidecar(index: Dataset[FileDict], tablePath: String): Unit =
+    SidecarManifest.save(index.sparkSession, tablePath,
+      SidecarManifest.Dict)(save(index, _))
 
   /** Delete the table's `_graft_dict` sidecar tree (if any) and drop
     * the shared-manifest memo. Bench harnesses use this to guarantee

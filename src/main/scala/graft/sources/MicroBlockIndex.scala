@@ -382,27 +382,21 @@ object MicroBlockIndex {
   def save(index: Dataset[BlockStat], path: String): Unit =
     index.write.mode("overwrite").parquet(path)
 
-  /** The SIDECAR convention: a table's persisted index lives at
-    * `<tablePath>/_graft_index`. The underscore prefix makes the
-    * directory invisible to Spark's file listing (the same convention
-    * as `_metadata` / `_delta_log`), so the table's own parquet scans
-    * never pick the index up as data — and any session can DISCOVER
-    * the index from the table path alone
-    * ([[graft.plans.ZoneMapPruneRule]] auto-registers fresh sidecars,
-    * so a new session gets transparent pruning without constructing an
-    * engine or calling register by hand). */
+  /** The table's SIDECAR location, `<tablePath>/_graft_index`
+    * ([[SidecarManifest.location]]): any session discovers the index
+    * from the table path alone ([[graft.plans.ZoneMapPruneRule]]
+    * auto-registers current sidecars). */
   def sidecarPath(tablePath: String): String =
-    new Path(tablePath, "_graft_index").toString
+    SidecarManifest.location(tablePath, SidecarManifest.Zone)
 
-  /** [[save]] at the sidecar location. NOTE: a session that has
-    * already probed this table and found no sidecar memoizes that —
-    * call [[graft.plans.ZoneMapPruneRule.registerSaved]] (or
-    * unregister the path) to pick the new sidecar up in-session; fresh
-    * sessions discover it automatically. */
-  def saveSidecar(index: Dataset[BlockStat], tablePath: String): Unit = {
-    save(index, sidecarPath(tablePath))
-    SidecarManifest.invalidate(tablePath)
-  }
+  /** [[save]] at the sidecar location ([[SidecarManifest.save]]).
+    * NOTE: a session that has already probed this table and found no
+    * sidecar memoizes that — call [[graft.plans.ZoneMapPruneRule
+    * .registerSaved]] (or unregister the path) to pick the new sidecar
+    * up in-session; fresh sessions discover it automatically. */
+  def saveSidecar(index: Dataset[BlockStat], tablePath: String): Unit =
+    SidecarManifest.save(index.sparkSession, tablePath,
+      SidecarManifest.Zone)(save(index, _))
 
   /** INCREMENTAL refresh: read footers only for files the existing
     * index doesn't know OR that CHANGED on disk (the common

@@ -31,20 +31,16 @@ class DictDistinctRuleSpec extends AnyFunSuite {
   private lazy val li = graft.engine.Tables.load(spark, dir, "lineitem")
 
   /** Does the optimized plan read the sidecar? The scan may appear as
-    * a LogicalRelation (rootPaths carry the path) OR as an
-    * InMemoryRelation substituted by Spark's SparkContext-GLOBAL cache
-    * manager — the zone-map rule's own sidecar discovery persists the
-    * frame, so another session's identical sidecar scan cache-hits; a
-    * cached sidecar read is still a dictionary serve, just warmer. */
+    * a LogicalRelation OR as an InMemoryRelation substituted by Spark's
+    * SparkContext-GLOBAL cache manager — the zone-map rule's own
+    * sidecar discovery persists the frame, so another session's
+    * identical sidecar scan cache-hits; a cached sidecar read is still
+    * a dictionary serve, just warmer. Both forms are matched on root
+    * paths ([[graft.sources.SidecarManifest.readIn]]), because a plan
+    * string abbreviates long scan locations. */
   private def scansDict(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation.asInstanceOf[
-          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-          .location.rootPaths.exists(_.toString.contains("_graft_dict"))
-      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
-        m.cacheBuilder.cachedPlan.toString.contains("_graft_dict")
-    }.exists(identity)
+    graft.sources.SidecarManifest.readIn(
+      df.queryExecution.optimizedPlan, graft.sources.SidecarManifest.Dict)
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
@@ -510,6 +506,39 @@ class DictDistinctRuleSpec extends AnyFunSuite {
       if (r.isNullAt(0)) "NULL" else r.getString(0)).sorted.toSeq
     assert(got == Seq("NULL", "a", "b"),
       "metadata null counts must surface the NULL row; file B's c must not leak")
+  }
+
+  test("a serve through a cached sidecar frame is detected under a long path") {
+    // Spark abbreviates a scan's location in plan strings to 100
+    // characters, so a string-matching detector missed a sidecar served
+    // through a cached frame once the table path was long — the
+    // path-dependent failure of the zone-index freshness test above
+    val base = scratch("a-table-path-long-enough-that-its-sidecar-location" +
+      "-exceeds-the-plan-string-limit")
+    li.limit(2000).repartition(2, col("l_suppkey"))
+      .write.mode("overwrite").parquet(base)
+    DictionaryIndex.saveSidecar(
+      DictionaryIndex.build(spark, base, "li", Seq("l_suppkey")), base)
+    val root = "file:" + new java.io.File(base).getAbsolutePath
+    assert(DictionaryIndex.sidecarPath(root).length > 100)
+    // the zone-map rule's sidecar discovery persists the frame the
+    // serve's own sidecar read then hits in Spark's cache
+    val cached = graft.plans.ZoneMapPruneRule.dictIndexFor(root, spark).get
+    cached.count()
+    try {
+      spark.read.parquet(base).createOrReplaceTempView("dr_long")
+      val served = spark.sql("SELECT COUNT(DISTINCT l_suppkey) AS n FROM dr_long")
+      assert(served.queryExecution.optimizedPlan.exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation]),
+        "the serve must read the sidecar through the cached frame:\n" +
+          served.queryExecution.optimizedPlan)
+      assert(scansDict(served))
+      assert(rows(served) == Seq(
+        s"[${spark.read.parquet(base).select("l_suppkey").distinct().collect().length}]"))
+    } finally {
+      graft.plans.ZoneMapPruneRule.unregisterDict(root)
+      cached.unpersist()
+    }
   }
 
   test("a fresh session discovers the sidecar with no register call") {
