@@ -38,7 +38,6 @@ object DppCostBoundScale {
     graft.sources.DictionaryIndex.saveSidecar(
       graft.sources.DictionaryIndex.build(spark, out, "dpp",
         Seq("k1", "k2", "k3", "k4")), out)
-    graft.plans.ZoneMapPruneRule.registerSavedDict(out, spark)
     graft.plans.JoinFilePruning.clearCache()
 
     import spark.implicits._

@@ -5,26 +5,26 @@ import org.apache.spark.sql.functions._
 
 /** FILE-COUNT stress for the metadata plane (round 14, verdict #3).
   *
-  * Every serve layer's decision path is O(files): a distributed
-  * tri-state/skip-list job over the sidecar plus a driver-side collect
-  * of per-file verdicts. That is constant in DATA size but linear in
-  * FILE count — fine at the 64–256 files the sf100 ledgers use,
-  * unproven at the 10⁴–10⁵ files a real 100 TB table has. This bench
-  * proves (or breaks) the curve:
+  * Every serve layer decides over the zone index on the driver
+  * ([[graft.plans.ZoneSnapshot]]): one collect per sidecar generation
+  * and referenced column, then pure driver work per decision. That is
+  * constant in DATA size but linear in FILE (block) count — this bench
+  * measures the curve:
   *
   *   1. REAL layouts of N ∈ {1k, 5k, 20k} parquet files (tiny rows —
   *      the metadata plane costs what it costs regardless of file
   *      size): sidecar build (N footer reads), cold transparent
-  *      zone-agg PLAN time, warm plan time (memoized decisions),
-  *      zone skip-list decision, top-k cut decision, and the driver
+  *      zone-agg PLAN time, warm plan time, the snapshot collect, the
+  *      zone skip-list, tri-state and top-k decisions, and the driver
   *      heap delta across the whole per-N block.
-  *   2. SYNTHETIC index frames of {100k, 1M} (file × column) entries —
-  *      file counts too big to materialize as real files here — timing
-  *      the distributed decisions alone (fileTriState, skippedFiles),
-  *      whose collect is bounded by the per-file verdict lists.
+  *   2. A SYNTHETIC index of 100k blocks × 10 columns (1M entries) —
+  *      a block count too big to materialize as real files here: the
+  *      snapshot's collect time and driver heap with every column
+  *      collected, and the time of `mayMatch` (skip list), `allMatch`
+  *      (tri-state) and the top-k cut over all its blocks.
   *
   * One JSON line; target/metaplane.json. Usage:
-  *   runMain graft.MetaPlaneScale [maxRealFiles]
+  *   runMain graft.MetaPlaneScale [maxRealFiles]   (0 = synthetic only)
   */
 object MetaPlaneScale {
 
@@ -74,22 +74,22 @@ object MetaPlaneScale {
         spark.sql(q).queryExecution.optimizedPlan
       }
       val execSec = timeOnce { spark.sql(q).collect() }
-      // the plain zone skip-list decision (ZoneMapPruneRule's job)
-      val idx = spark.read.parquet(
-        graft.sources.MicroBlockIndex.sidecarPath(out))
+      // the zone decisions the rules take, over the sidecar's driver
+      // snapshot (the cold plan above already collected `id`)
+      val snap = graft.plans.ZoneSnapshot.ofSidecar(out,
+        graft.sources.SidecarManifest.anchor(out, spark,
+          graft.sources.SidecarManifest.Zone).get)
       val pred = graft.plans.Cmp(">=", "id",
         graft.plans.PredValue(half.toDouble))
       var skipped = 0
       val skipSec = timeOnce {
-        skipped = graft.plans.IndexPruning.skippedFiles(idx, pred).size
+        skipped = graft.plans.ZoneSnapshot.skippedFiles(spark, Seq(snap), pred).size
       }
-      val triSec = timeOnce {
-        graft.plans.IndexPruning.fileTriState(idx, pred).collect()
-      }
+      val triSec = timeOnce(snap.triState(spark, pred))
       var topkCut = 0
       val topkSec = timeOnce {
-        topkCut = graft.plans.IndexPruning.topKSkippedFiles(
-          idx, "id", 10, ascending = false, nullsFirst = false).size
+        topkCut = graft.plans.ZoneSnapshot.topKSkippedFiles(spark, Seq(snap),
+          "id", 10, ascending = false, nullsFirst = false).size
       }
       val heapDelta = heapMb() - h0
       require(servedCold, s"n=$n: the cold serve must fire")
@@ -101,31 +101,44 @@ object MetaPlaneScale {
         s""""driver_heap_delta_mb":$heapDelta}"""
     }
 
-    // synthetic frames: distributed-decision scaling past real-file
-    // practicality — entries = files × 2 columns
-    val synth = Seq(50000, 500000).map { files =>
-      val idx = spark.range(files.toLong).select(
+    // the synthetic index: 100k blocks × 10 columns, every column
+    // collected into one driver snapshot
+    val synth = {
+      val blocks = 100000
+      val cols = (0 until 10).map(i => s"c$i")
+      val idx = spark.range(blocks.toLong).select(
         col("id").cast("int").as("blockId"),
         concat(lit("s"), col("id")).as("file"),
         lit("t").as("table"),
         (col("id") * 100).as("rowStart"), (col("id") * 100 + 99).as("rowEnd"),
-        explode(array(lit("id"), lit("v"))).as("column"),
+        explode(array(cols.map(lit): _*)).as("column"),
         lit(100L).as("rows"), lit(0L).as("nullCount"),
         lit(1000L).as("bytes"), lit("SNAPPY").as("codec"),
         (col("id") * 100.0).as("minNum"), (col("id") * 100.0 + 99).as("maxNum"),
         lit(null).cast("string").as("minStr"), lit(null).cast("string").as("maxStr"),
         (col("id") * 100).as("minLong"), (col("id") * 100 + 99).as("maxLong"),
         lit(false).as("nanRisk"), lit(null).cast("long").as("sumLong"))
-      val pred = graft.plans.Cmp(">=", "id",
-        graft.plans.PredValue(files * 50.0))
+        .persist()
+      val entries = idx.count()
+      val h0 = heapMb()
+      val snap = new graft.plans.ZoneSnapshot(_ => idx)
+      val collectSec = timeOnce(snap.ensure(spark, cols.toSet))
+      val heap = heapMb() - h0
+      val pred = graft.plans.Cmp(">=", "c0",
+        graft.plans.PredValue(blocks * 50.0))
       var skipped = 0
-      val skipSec = timeOnce {
-        skipped = graft.plans.IndexPruning.skippedFiles(idx, pred).size
+      val mayMatchSec = timeOnce {
+        skipped = graft.plans.ZoneSnapshot.skippedFiles(spark, Seq(snap), pred).size
       }
-      val triSec = timeOnce {
-        graft.plans.IndexPruning.fileTriState(idx, pred).collect()
-      }
-      s"""{"files":$files,"zone_skip_sec":$skipSec,"skipped":$skipped,"tristate_sec":$triSec}"""
+      // mayMatch and allMatch over every block
+      val triSec = timeOnce(snap.triState(spark, pred))
+      val topkSec = timeOnce(graft.plans.ZoneSnapshot.topKSkippedFiles(spark,
+        Seq(snap), "c0", 10, ascending = false, nullsFirst = false))
+      idx.unpersist()
+      s"""{"blocks":$blocks,"columns":${cols.size},"entries":$entries,""" +
+        s""""snapshot_collect_sec":$collectSec,"snapshot_heap_mb":$heap,""" +
+        s""""maymatch_sec":$mayMatchSec,"skipped":$skipped,""" +
+        s""""tristate_sec":$triSec,"topk_sec":$topkSec}"""
     }
 
     // round 15 — the footer sweep's PARALLELISM (the r14 verdict's
@@ -135,7 +148,7 @@ object MetaPlaneScale {
     // 1% append refreshed (footers + per-file sums for the delta
     // only) vs the monolithic rebuild a million-file table must never
     // pay.
-    val sweep = {
+    val sweep = if (maxReal < 1000) "null" else {
       val n = Seq(1000, 5000, 20000).filter(_ <= maxReal)
         .filter(_ <= 5000).max // serial at 20k would run ~2 min
       val out = s"target/scratch/metaplane/files$n"
@@ -183,7 +196,7 @@ object MetaPlaneScale {
     BenchWindow.emit(
       s"""{"bench":"metaplane","cpus":${BenchWindow.cpus},"real":[${real.mkString(",")}],""" +
         s""""sweep":$sweep,""" +
-        s""""synthetic_index":[${synth.mkString(",")}]}""",
+        s""""synthetic_index":$synth}""",
       "target/metaplane.json")
     spark.stop()
   }

@@ -102,27 +102,20 @@ object AdaptiveLayout {
 
   /** Total row volume the zone-map index would KEEP replaying
     * `workload` against a layout's stats — the layout-ranking metric.
-    * Pure index math in ONE distributed job ([[IndexPruning
-    * .decideMany]] evaluates every predicate in a single aggregation);
-    * only file-level (rows, keep-flags) reach the driver. Keeps the
-    * engine's reference-parity convention: a predicate the index
-    * refutes everywhere still scans every file. */
+    * Pure index math on the driver ([[graft.plans.ZoneSnapshot]]): one
+    * job collects the columns the whole workload references, then every
+    * predicate decides over them. Keeps the engine's reference-parity
+    * convention: a predicate the index refutes everywhere still scans
+    * every file. */
   def replayScanVolume(spark: SparkSession, index: DataFrame,
       workload: Seq[Pred]): Long = {
-    import org.apache.spark.sql.functions._
     require(workload.nonEmpty, "empty workload")
-    val n = workload.size
-    val perFile = IndexPruning.decideMany(index, workload)
-      .groupBy("file")
-      .agg(sum("rows").as("frows"),
-        array((0 until n).map(i =>
-          max(when(col("keeps")(i), 1).otherwise(0)) === 1): _*).as("keeps"))
-      .select("frows", "keeps")
-      .collect() // file-listing scale
-      .map(r => (r.getLong(0), r.getSeq[Boolean](1)))
-    val total = perFile.map(_._1).sum
-    (0 until n).map { i =>
-      val kept = perFile.collect { case (rows, keeps) if keeps(i) => rows }.sum
+    val zone = new graft.plans.ZoneSnapshot(_ => index)
+    zone.ensure(spark, workload.flatMap(IndexPruning.refColumns).toSet)
+    val rows = zone.fileRows(spark)
+    val total = rows.values.sum
+    workload.map { p =>
+      val kept = zone.keptFiles(spark, p)._2.iterator.map(rows).sum
       if (kept == 0L) total else kept
     }.sum
   }

@@ -72,8 +72,12 @@ final class GraftEngine(
   // file-level zone-map pruning and the Sort+Limit top-k cut with no
   // engine call in the query path (the rule is session-guarded, so a
   // later session's engine simply re-registers). Results never change
-  // — the rule only shrinks file lists conservatively.
-  graft.plans.ZoneMapPruneRule.register(tablePath, index.toDF())
+  // — the rule only shrinks file lists conservatively. The engine
+  // decides over the same driver snapshot of its index
+  // ([[graft.plans.ZoneSnapshot]]): a column is collected once, the
+  // first time a predicate references it (one metadata-scale job per
+  // first-seen column set); every later decision over it launches none.
+  private val zone = graft.plans.ZoneMapPruneRule.register(tablePath, index.toDF())
 
   /** Per-block serving metadata (id, file, row range) — ONE small row
     * per block, column-count-independent, the driver-side footprint the
@@ -151,25 +155,12 @@ final class GraftEngine(
     columns.map(dictIdxMemo).reduce(_ unionAll _)
   }
 
-  /** Per-column zone-map stats on the DRIVER, keyed by block id and
-    * collected once per referenced column for the engine's lifetime
-    * (one metadata-scale job per first-seen column set; every later
-    * decision over that column launches none). Blocks-scale — one small
+  /** Per-column zone stats keyed by block id. Blocks-scale — one small
     * row per block per referenced column, the scale [[blocks]] already
     * holds. A block with no row for a column is absent from its map. */
-  private val colStatsMemo = scala.collection.concurrent.TrieMap
-    .empty[String, Map[Int, ColStats]]
-
   private def statsOf(columns: Set[String]): Map[String, Map[Int, ColStats]] = {
-    val missing = columns.filterNot(colStatsMemo.contains).toSeq
-    if (missing.nonEmpty) {
-      val byCol = index.filter(org.apache.spark.sql.functions.col("column")
-        .isin(missing: _*)).collect().groupBy(_.column)
-      missing.foreach(c => colStatsMemo.putIfAbsent(c,
-        byCol.getOrElse(c, Array.empty[BlockStat])
-          .map(s => s.blockId -> ZoneMapPruner.colStats(s)).toMap))
-    }
-    columns.iterator.map(c => c -> colStatsMemo(c)).toMap
+    zone.ensure(spark, columns)
+    columns.iterator.map(c => c -> zone.byBlockId(spark, c)).toMap
   }
 
   /** Per-block keep/skip decisions for a predicate: (block id, file,

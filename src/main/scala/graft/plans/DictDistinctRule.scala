@@ -78,10 +78,12 @@ object DictDistinctRule {
     * `-1`; per (column, file) the RAW recorded null count (-1 =
     * unknown — the filtered DISTINCT arm decides null handling
     * file-by-file); and per file the (mtime, size) recorded AT INDEX
-    * TIME (absent for entries predating the fields). Metadata-scale
-    * (files × columns). */
+    * TIME (absent for entries predating the fields); and each file's
+    * spelling as the sidecar records it. Metadata-scale (files ×
+    * columns). */
   private final case class Coverage(
       files: Set[String],
+      raw: Map[String, String],
       coveredByColumn: Map[String, Set[String]],
       mixedTypeColumns: Set[String],
       nullsByColumn: Map[String, (Boolean, Boolean)],
@@ -121,16 +123,15 @@ object DictDistinctRule {
       val built =
         try {
           import org.apache.spark.sql.functions.{col, size => asize}
-          // DictionaryIndex.load, not a raw read: it back-fills the
-          // nullCount column old sidecars predate
-          val df = graft.sources.DictionaryIndex.load(spark,
-            graft.sources.DictionaryIndex.sidecarPath(rootPath)).toDF()
-          val rows = df.select(col("file"), col("column"), col("covered"),
+          val df = graft.sources.DictionaryIndex.sidecarFrame(spark, rootPath, mtime)
+          val collected = df.select(col("file"), col("column"), col("covered"),
               (asize(col("valuesLong")) > 0).as("isL"),
               (asize(col("valuesDouble")) > 0).as("isD"),
               (asize(col("valuesStr")) > 0).as("isS"),
               col("nullCount"), col("fileMtime"), col("fileSize"))
             .collect()
+          val raw = collected.map(r => norm(r.getString(0)) -> r.getString(0)).toMap
+          val rows = collected
             .map(r => (norm(r.getString(0)), r.getString(1), r.getBoolean(2),
               r.getBoolean(3), r.getBoolean(4), r.getBoolean(5), r.getLong(6),
               r.getLong(7), r.getLong(8)))
@@ -144,6 +145,7 @@ object DictDistinctRule {
           }
           Some(Coverage(
             allFiles,
+            raw,
             rows.groupBy(_._2).map { case (c, rs) =>
               c -> rs.filter(_._3).map(_._1).toSet },
             mixed,
@@ -162,13 +164,34 @@ object DictDistinctRule {
     }
   }
 
-  // (root, sidecar mtime, column, session) -> analyzed per-column count plan
+  // (root, sidecar anchor, plan inputs, session) -> optimized per-column plan
   private val servePlanCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Long, String, String), LogicalPlan](16, 0.75f, true) {
+    new java.util.LinkedHashMap[(String, Long, Any, String), LogicalPlan](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, String, String), LogicalPlan]): Boolean =
+          e: java.util.Map.Entry[(String, Long, Any, String), LogicalPlan]): Boolean =
         size > 128
     })
+
+  /** One per-column serve plan, built under the re-entrancy guard and
+    * memoized per (root, dictionary anchor, `inputs`, session): `inputs`
+    * must hold everything else the plan is a function of, so a repeated
+    * query shape plans nothing. The OPTIMIZED subtree is spliced: this
+    * rule runs in the user-provided batch after Spark's main
+    * optimization, so an analyzed splice would carry nodes
+    * (Deduplicate from .distinct()) no later rule lowers. */
+  private def servePlan(spark: SparkSession, rootPath: String, mtime: Long,
+      inputs: Any)(build: => Option[org.apache.spark.sql.DataFrame]): Option[LogicalPlan] = {
+    val key = (norm(rootPath), mtime, inputs, SidecarManifest.sessionKey(spark))
+    Option(servePlanCache.get(key)).orElse {
+      inRewrite.set(java.lang.Boolean.TRUE)
+      val built =
+        try build.map(_.queryExecution.optimizedPlan)
+        catch { case scala.util.control.NonFatal(_) => None }
+        finally inRewrite.set(java.lang.Boolean.FALSE)
+      built.foreach(servePlanCache.put(key, _))
+      built
+    }
+  }
 
   // attr-only Projects down to the bare relation; ANY Filter refuses
   private def unwrap(p: LogicalPlan): Option[LogicalRelation] = p match {
@@ -307,13 +330,12 @@ object DictDistinctRule {
   }
 
   // Tri-state decisions are SHARED with the zone-stats serve
-  // ([[ZoneAggRule.triStateFor]]): loaded from the `_graft_index`
-  // sidecar itself, keyed by its anchor — a rebuilt zone
-  // sidecar is picked up immediately, where the zone registry's
-  // discovery memo would keep serving the pre-rebuild frame for the
-  // session's lifetime (a rewritten-in-place file could then be
-  // falsely proved all-true even though the DICT gates pass on its
-  // refreshed sidecar). Callers intersect with the live listing and
+  // ([[ZoneAggRule.triStateFor]]): decided over the `_graft_index`
+  // sidecar's driver snapshot at its current anchor — a rebuilt zone
+  // sidecar is picked up by the next query, never a registered frame
+  // (a rewritten-in-place file could otherwise be falsely proved
+  // all-true even though the DICT gates pass on its refreshed
+  // sidecar). Callers intersect with the live listing and
   // apply the PRUNE-grade test to the zone sidecar: a live file it
   // does not know is simply undecided (it scans), but none may be
   // newer than its anchor.
@@ -374,19 +396,20 @@ object DictDistinctRule {
         "spark.graft.dictServe.maxScanFraction", "0.5").toDouble
         catch { case scala.util.control.NonFatal(_) => 0.5 }
       if liveFiles.nonEmpty && maxScan <= liveFiles.size * maxFrac
-      plan <- filteredRewrite(spark, roots.head, mtime, cov, agg, pairs,
-        cond, pred, allTrue, undecided, liveRaw)
+      plan <- filteredRewrite(spark, roots.head, hfs.dataSchema, mtime, cov,
+        agg, pairs, cond, allTrue, undecided, liveRaw)
     } yield plan
 
   private def filteredRewrite(spark: SparkSession, rootPath: String,
-      mtime: Long, cov: Coverage, agg: Aggregate,
-      pairs: Seq[(Alias, AttributeReference)], cond: Expression, pred: Pred,
+      dataSchema: org.apache.spark.sql.types.StructType, mtime: Long,
+      cov: Coverage, agg: Aggregate,
+      pairs: Seq[(Alias, AttributeReference)], cond: Expression,
       allTrue: Set[String], undecided: Set[String],
       liveRaw: Seq[String]): Option[LogicalPlan] = {
     val byName = pairs.map(p => p._2.name -> p._2).toMap
     val cols = byName.keys.toSeq.sorted
     val plans: Map[String, LogicalPlan] = cols.flatMap { c =>
-      filteredCountPlan(spark, rootPath, mtime, byName(c), cond, pred,
+      filteredCountPlan(spark, rootPath, dataSchema, mtime, byName(c), cond,
         cov, allTrue, undecided, liveRaw).map(c -> _)
     }.toMap
     if (plans.size != cols.size) return None
@@ -408,16 +431,21 @@ object DictDistinctRule {
     * the (all-true ∩ covered) files ∪ one pruned scan of the
     * undecided / uncovered-all-true files with the ORIGINAL filter
     * re-applied (attributes re-resolved by name against the fresh
-    * scan). Built fresh per pass — driver-side planning only; the
-    * expensive decisions (coverage, tri-state) are memoized above. */
+    * scan). Built over the anchor's one sidecar frame and the
+    * coverage's recorded file spellings, memoized per file split and
+    * condition — driver-side planning only, no job. */
   private def filteredCountPlan(spark: SparkSession, rootPath: String,
-      mtime: Long, attr: AttributeReference, cond: Expression, pred: Pred,
-      cov: Coverage, allTrue: Set[String], undecided: Set[String],
+      dataSchema: org.apache.spark.sql.types.StructType, mtime: Long,
+      attr: AttributeReference, cond: Expression, cov: Coverage,
+      allTrue: Set[String], undecided: Set[String],
       liveRaw: Seq[String]): Option[LogicalPlan] = {
-    inRewrite.set(java.lang.Boolean.TRUE)
-    try {
-      import org.apache.spark.sql.functions.{col, count, explode}
-      import org.apache.spark.sql.types._
+    import org.apache.spark.sql.functions.{col, count, explode}
+    import org.apache.spark.sql.types._
+    val covered = cov.coveredByColumn(attr.name)
+    val dictNorm = allTrue & covered
+    val scanNorm = undecided ++ (allTrue -- covered)
+    servePlan(spark, rootPath, mtime,
+        ("count", attr.name, attr.dataType, byName(cond), dictNorm, scanNorm)) {
       val arrAndDomain = attr.dataType match {
         case ByteType | ShortType | IntegerType | LongType =>
           Some(("valuesLong", "long"))
@@ -425,44 +453,39 @@ object DictDistinctRule {
         case StringType             => Some(("valuesStr", "string"))
         case _                      => None
       }
-      arrAndDomain.flatMap { case (arr, domain) =>
-        val covered = cov.coveredByColumn(attr.name)
-        val dictNorm = allTrue & covered
-        val scanNorm = undecided ++ (allTrue -- covered)
+      arrAndDomain.map { case (arr, domain) =>
         val scanRaw = liveRaw.filter(f => scanNorm.contains(norm(f)))
-        val idx = graft.sources.DictionaryIndex.load(spark,
-          graft.sources.DictionaryIndex.sidecarPath(rootPath)).toDF()
-        // sidecar file spellings may differ from the listing's — map
-        // through norm (file-listing-scale collect)
-        val dictRaw = idx.select(col("file")).distinct().collect()
-          .map(_.getString(0)).filter(f => dictNorm.contains(norm(f)))
-        val dictSide = idx
+        // the files as the sidecar spells them (they may differ from
+        // the listing's)
+        val dictSide = graft.sources.DictionaryIndex.sidecarFrame(spark, rootPath, mtime)
           .filter(col("column") === attr.name && col("covered") &&
-            col("file").isin(dictRaw.toSeq: _*))
+            col("file").isin(dictNorm.toSeq.flatMap(cov.raw.get): _*))
           .select(explode(col(arr)).as("v"))
         val both =
           if (scanRaw.isEmpty) dictSide
-          else {
-            val unresolved = cond.transform {
-              case a: AttributeReference =>
-                org.apache.spark.sql.catalyst.analysis
-                  .UnresolvedAttribute.quoted(a.name)
-            }
-            val scanSide = graft.sources.MicroBlockIndex
-              .readFilesAsTable(spark, rootPath, scanRaw)
-              .filter(org.apache.spark.sql.graftbridge.ColumnBridge
-                .column(unresolved))
-              .select(col(attr.name).cast(domain).as("v"))
-              .filter(col("v").isNotNull)
-            dictSide.unionAll(scanSide)
-          }
-        val counted = both.distinct()
-          .agg(count(col("v")).as("n"))
-        Some(counted.queryExecution.optimizedPlan)
+          else dictSide.unionAll(scanOf(spark, rootPath, dataSchema, scanRaw, cond)
+            .select(col(attr.name).cast(domain).as("v"))
+            .filter(col("v").isNotNull))
+        both.distinct().agg(count(col("v")).as("n"))
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
-    finally inRewrite.set(java.lang.Boolean.FALSE)
+    }
   }
+
+  /** The ORIGINAL filter with its attributes unresolved by name: it
+    * re-resolves against a fresh scan, and (free of the query's
+    * expression ids) it keys the plan memo. */
+  private def byName(cond: Expression): Expression = cond.transform {
+    case a: AttributeReference =>
+      org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.quoted(a.name)
+  }
+
+  /** `scanRaw` read as the table, with the filter re-applied. */
+  private def scanOf(spark: SparkSession, rootPath: String,
+      dataSchema: org.apache.spark.sql.types.StructType, scanRaw: Seq[String],
+      cond: Expression): org.apache.spark.sql.DataFrame =
+    graft.sources.MicroBlockIndex
+      .readFilesAsTable(spark, rootPath, scanRaw, Some(dataSchema))
+      .filter(org.apache.spark.sql.graftbridge.ColumnBridge.column(byName(cond)))
 
   /** `SELECT DISTINCT col WHERE p` — the filtered serve's DISTINCT
     * twin (round 13 carried item), reusing the same tri-state
@@ -513,8 +536,8 @@ object DictDistinctRule {
       if liveFiles.nonEmpty && scanFiles.size <= liveFiles.size * maxFrac
       needNull = out.nullable && dictFiles.exists(f =>
         cov.nullCountByFile.getOrElse((out.name, f), 0L) > 0)
-      plan <- filteredDistinctPlan(spark, roots.head, out, cond,
-        dictFiles, scanFiles, liveRaw, needNull)
+      plan <- filteredDistinctPlan(spark, roots.head, hfs.dataSchema, mtime,
+        cov, out, cond, dictFiles, scanFiles, liveRaw, needNull)
     } yield Project(Seq(
       Alias(plan.output.head, out.name)(exprId = out.exprId)), plan)
 
@@ -522,128 +545,76 @@ object DictDistinctRule {
     * all-match files ∪ one pruned scan (original filter re-applied,
     * NULLs KEPT — a surviving row's NULL is a distinct value here) ∪
     * the metadata NULL row when a dict-served file proves nulls,
-    * deduplicated. Built fresh per pass like [[filteredCountPlan]] —
-    * the expensive decisions (coverage, tri-state) are memoized. */
+    * deduplicated. Memoized like [[filteredCountPlan]]. */
   private def filteredDistinctPlan(spark: SparkSession, rootPath: String,
-      out: AttributeReference, cond: Expression, dictFiles: Set[String],
-      scanFiles: Set[String], liveRaw: Seq[String],
+      dataSchema: org.apache.spark.sql.types.StructType, mtime: Long,
+      cov: Coverage, out: AttributeReference, cond: Expression,
+      dictFiles: Set[String], scanFiles: Set[String], liveRaw: Seq[String],
       needNull: Boolean): Option[LogicalPlan] = {
-    inRewrite.set(java.lang.Boolean.TRUE)
-    try {
-      import org.apache.spark.sql.functions.{col, explode}
-      import org.apache.spark.sql.types._
+    import org.apache.spark.sql.functions.{col, explode}
+    import org.apache.spark.sql.types._
+    servePlan(spark, rootPath, mtime, ("distinct", out.name, out.dataType,
+        byName(cond), dictFiles, scanFiles, needNull)) {
       val arrOpt = out.dataType match {
         case ByteType | ShortType | IntegerType | LongType => Some("valuesLong")
         case FloatType | DoubleType                        => Some("valuesDouble")
         case StringType                                    => Some("valuesStr")
         case _                                             => None
       }
-      arrOpt.flatMap { arr =>
+      arrOpt.map { arr =>
         val scanRaw = liveRaw.filter(f => scanFiles.contains(norm(f)))
-        val idx = graft.sources.DictionaryIndex.load(spark,
-          graft.sources.DictionaryIndex.sidecarPath(rootPath)).toDF()
-        // sidecar file spellings may differ from the listing's — map
-        // through norm (file-listing-scale collect)
-        val dictRaw = idx.select(col("file")).distinct().collect()
-          .map(_.getString(0)).filter(f => dictFiles.contains(norm(f)))
-        val dictSide = idx
+        val dictSide = graft.sources.DictionaryIndex.sidecarFrame(spark, rootPath, mtime)
           .filter(col("column") === out.name && col("covered") &&
-            col("file").isin(dictRaw.toSeq: _*))
+            col("file").isin(dictFiles.toSeq.flatMap(cov.raw.get): _*))
           .select(explode(col(arr)).as("v0"))
           .select(col("v0").cast(out.dataType).as("v"))
         val withScan =
           if (scanRaw.isEmpty) dictSide
-          else {
-            val unresolved = cond.transform {
-              case a: AttributeReference =>
-                org.apache.spark.sql.catalyst.analysis
-                  .UnresolvedAttribute.quoted(a.name)
-            }
-            val scanSide = graft.sources.MicroBlockIndex
-              .readFilesAsTable(spark, rootPath, scanRaw)
-              .filter(org.apache.spark.sql.graftbridge.ColumnBridge
-                .column(unresolved))
-              .select(col(out.name).cast(out.dataType).as("v"))
-            dictSide.unionAll(scanSide)
-          }
-        val df =
-          if (!needNull) withScan
-          else withScan.unionAll(spark.createDataFrame(
-            java.util.Collections.singletonList(org.apache.spark.sql.Row(null)),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField(
-                "v", out.dataType, nullable = true)))))
-        val p = df.distinct().queryExecution.optimizedPlan
-        if (p.output.size == 1 && p.output.head.dataType == out.dataType) Some(p)
-        else None
+          else dictSide.unionAll(scanOf(spark, rootPath, dataSchema, scanRaw, cond)
+            .select(col(out.name).cast(out.dataType).as("v")))
+        withNull(spark, withScan, "v", out.dataType, needNull).distinct()
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
-    finally inRewrite.set(java.lang.Boolean.FALSE)
+    }.filter(p => p.output.size == 1 && p.output.head.dataType == out.dataType)
   }
+
+  /** `df` plus, when `needNull`, the one NULL row plain SQL returns for
+    * a column whose footer stats prove nulls (dictionaries hold none). */
+  private def withNull(spark: SparkSession, df: org.apache.spark.sql.DataFrame,
+      name: String, t: org.apache.spark.sql.types.DataType,
+      needNull: Boolean): org.apache.spark.sql.DataFrame =
+    if (!needNull) df
+    else df.unionAll(spark.createDataFrame(
+      java.util.Collections.singletonList(org.apache.spark.sql.Row(null)),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField(name, t, nullable = true)))))
 
   /** The DISTINCT-values plan for one column: dictionary union + the
     * uncovered-file scan, cast to the query's type, plus a one-row
-    * NULL relation when footer stats prove the table holds nulls.
-    * Cached per (root, sidecar generation, column, needNull). */
+    * NULL relation when footer stats prove the table holds nulls. */
   private def distinctPlan(spark: SparkSession, rootPath: String, mtime: Long,
-      out: AttributeReference, needNull: Boolean): Option[LogicalPlan] = {
-    val key = (norm(rootPath), mtime,
-      s"distinct:${out.name}:$needNull:${out.dataType.sql}",
-      SidecarManifest.sessionKey(spark))
-    val hit = servePlanCache.get(key)
-    if (hit != null) return Some(hit)
-    inRewrite.set(java.lang.Boolean.TRUE)
-    val built =
-      try {
-        import org.apache.spark.sql.functions.col
-        val idx = graft.sources.DictionaryIndex.load(spark,
-          graft.sources.DictionaryIndex.sidecarPath(rootPath))
-        val values = graft.sources.DictionaryIndex.distinctValues(
-          spark, idx, rootPath, out.name)
-        val typed = values.select(col("v").cast(out.dataType).as(out.name))
-        val df =
-          if (!needNull) typed
-          else typed.unionAll(spark.createDataFrame(
-            java.util.Collections.singletonList(org.apache.spark.sql.Row(null)),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField(
-                out.name, out.dataType, nullable = true)))))
-        val p = df.queryExecution.optimizedPlan // see countPlan: splice optimized
-        if (p.output.size == 1 && p.output.head.dataType == out.dataType) Some(p)
-        else None
-      } catch { case scala.util.control.NonFatal(_) => None }
-      finally inRewrite.set(java.lang.Boolean.FALSE)
-    built.foreach(servePlanCache.put(key, _))
-    built
-  }
+      out: AttributeReference, needNull: Boolean): Option[LogicalPlan] =
+    servePlan(spark, rootPath, mtime, ("values", out.name, out.dataType, needNull)) {
+      import org.apache.spark.sql.functions.col
+      val values = graft.sources.DictionaryIndex.distinctValues(
+        spark, dictAt(spark, rootPath, mtime), rootPath, out.name)
+      Some(withNull(spark, values.select(col("v").cast(out.dataType).as(out.name)),
+        out.name, out.dataType, needNull))
+    }.filter(p => p.output.size == 1 && p.output.head.dataType == out.dataType)
 
-  /** One column's COUNT(DISTINCT) plan over sidecar + uncovered scan,
-    * built through the DataFrame API (analyzed under the re-entrancy
-    * guard) and cached per (root, sidecar generation, column). */
+  /** One column's COUNT(DISTINCT) plan over sidecar + uncovered scan. */
   private def countPlan(spark: SparkSession, rootPath: String, mtime: Long,
-      column: String): Option[LogicalPlan] = {
-    val key = (norm(rootPath), mtime, column, SidecarManifest.sessionKey(spark))
-    val hit = servePlanCache.get(key)
-    if (hit != null) return Some(hit)
-    inRewrite.set(java.lang.Boolean.TRUE)
-    val built =
-      try {
-        import org.apache.spark.sql.functions.{col, count}
-        val idx = graft.sources.DictionaryIndex.load(spark,
-          graft.sources.DictionaryIndex.sidecarPath(rootPath))
-        val values = graft.sources.DictionaryIndex.distinctValues(
-          spark, idx, rootPath, column)
-        // splice the OPTIMIZED subtree: this rule runs in the
-        // user-provided batch after Spark's main optimization, so an
-        // analyzed splice would carry nodes (Deduplicate from
-        // .distinct()) no later rule lowers — the optimized form is
-        // already physical-plannable
-        Some(values.agg(count(col("v")).as("n"))
-          .queryExecution.optimizedPlan)
-      } catch { case scala.util.control.NonFatal(_) => None }
-      finally inRewrite.set(java.lang.Boolean.FALSE)
-    built.foreach(servePlanCache.put(key, _))
-    built
+      column: String): Option[LogicalPlan] =
+    servePlan(spark, rootPath, mtime, ("countAll", column)) {
+      import org.apache.spark.sql.functions.{col, count}
+      Some(graft.sources.DictionaryIndex.distinctValues(
+        spark, dictAt(spark, rootPath, mtime), rootPath, column)
+        .agg(count(col("v")).as("n")))
+    }
+
+  private def dictAt(spark: SparkSession, rootPath: String,
+      mtime: Long): org.apache.spark.sql.Dataset[graft.sources.FileDict] = {
+    import spark.implicits._
+    graft.sources.DictionaryIndex.sidecarFrame(spark, rootPath, mtime).as[graft.sources.FileDict]
   }
 
   private def rewriteOnto(spark: SparkSession, rootPath: String, mtime: Long,

@@ -69,19 +69,20 @@ object JoinFilePruning {
   private val MaxDimBytesDefault = 256L * 1024 * 1024
 
   // (fact root, column, CANONICALIZED dim plan, dim key name) ->
-  // (raw dict cut with each file's RECORDED (mtime, size), zone cut).
-  // None = refused. The canonicalized plan itself is the key —
-  // structural equality, never a collidable hash (a hash collision
-  // here would reuse another dim's skip set: wrong rows, not slow
-  // ones). Freshness is NOT cached — callers verify the recorded
-  // stats against the live listing per query, so a file rewritten in
-  // place between queries is never pruned from the memo. Bounded LRU.
+  // (raw dict cut with each file's RECORDED (mtime, size), the numeric
+  // key range the zone cut refutes by). None = refused. The
+  // canonicalized plan itself is the key — structural equality, never
+  // a collidable hash (a hash collision here would reuse another dim's
+  // skip set: wrong rows, not slow ones). Freshness is NOT cached —
+  // callers verify the recorded stats against the live listing per
+  // query, so a file rewritten in place between queries is never
+  // pruned from the memo. Bounded LRU.
   private val cache = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[(String, String, LogicalPlan, String),
-        Option[(Map[String, (Long, Long)], Set[String])]](64, 0.75f, true) {
+        Option[(Map[String, (Long, Long)], Option[(Double, Double)])]](64, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[(String, String, LogicalPlan, String),
-            Option[(Map[String, (Long, Long)], Set[String])]]): Boolean =
+            Option[(Map[String, (Long, Long)], Option[(Double, Double)])]]): Boolean =
         size > 256
     })
 
@@ -331,7 +332,6 @@ object JoinFilePruning {
       // no dictionary rows; the empty cut below would no-op anyway,
       // but refusing here skips the dim job)
       if hfs.dataSchema.fieldNames.contains(factAttr.name)
-      dicts <- ZoneMapPruneRule.dictIndexFor(root, spark)
       // live per-file statuses from the relation's own FileIndex — no
       // extra filesystem work; the dictionary cut may only skip files
       // whose RECORDED (mtime, size) still matches (a file rewritten
@@ -339,20 +339,25 @@ object JoinFilePruning {
       // it silently drops join rows). Verified per QUERY, outside the
       // decision memo.
       liveStats = ZoneMapPruneRule.liveStatsOf(hfs)
+      dicts <- ZoneMapPruneRule.dictIndexFor(root, spark, liveStats)
       cuts <- skipSetFor(spark, root, factAttr, dimAttr, dim,
         dicts, domain)
-      // the ZONE-RANGE cut gets the same per-query freshness gate as
-      // the dictionary cut (round 14): a fact file rewritten in place
-      // under its name carries stats the zone frame never saw — only
-      // files whose live mtime is ≤ the frame's anchor (registration
-      // wall-clock / sidecar anchor) may be range-cut; no
-      // anchor, no zone cut. The dictionary cut keeps its stricter
+      // the ZONE-RANGE cut, decided per query on the driver over the
+      // root's zone snapshot, gets the same per-query freshness gate
+      // as the dictionary cut (round 14): a fact file rewritten in
+      // place under its name carries stats the zone frame never saw —
+      // only files whose live mtime is ≤ the frame's anchor
+      // (registration wall-clock / sidecar anchor) may be range-cut;
+      // no anchor, no zone cut. The dictionary cut keeps its stricter
       // per-file (mtime, size) match.
-      zoneAnchor = ZoneMapPruneRule.zoneAnchorFor(root, spark)
-      zoneCut = zoneAnchor match {
-        case None    => Set.empty[String]
-        case Some(a) => cuts._2.filter(f => liveStats.get(f).exists(_._1 <= a))
-      }
+      zoneCut = (for {
+        (lo, hi) <- cuts._2
+        a <- ZoneMapPruneRule.zoneAnchorFor(root, spark)
+        zone <- ZoneMapPruneRule.zoneFor(root, spark, liveStats)
+      } yield ZoneSnapshot.skippedFiles(spark, Seq(zone),
+          Between(factAttr.name, PredValue(lo), PredValue(hi)))
+        .filter(f => liveStats.get(f).exists(_._1 <= a)))
+        .getOrElse(Set.empty[String])
       skip = cuts._1.collect { case (f, (m, sz))
         if m >= 0 && liveStats.get(f).contains((m, sz)) => f }.toSet ++ zoneCut
       if skip.nonEmpty
@@ -362,13 +367,14 @@ object JoinFilePruning {
     try spark.conf.get(key, dflt.toString).toLong
     catch { case scala.util.control.NonFatal(_) => dflt }
 
-  /** (raw dictionary cut with recorded per-file stats, zone cut) for
-    * one (fact root, key, dim) — memoized; the CALLER verifies
-    * freshness against the live listing per query. */
+  /** (raw dictionary cut with recorded per-file stats, numeric key
+    * range) for one (fact root, key, dim) — memoized; the CALLER
+    * verifies freshness against the live listing per query and takes
+    * the zone cut for the range. */
   private def skipSetFor(spark: SparkSession, root: String,
       factAttr: AttributeReference, dimAttr: AttributeReference,
       dim: LogicalPlan, dict: DataFrame, domain: String)
-      : Option[(Map[String, (Long, Long)], Set[String])] = {
+      : Option[(Map[String, (Long, Long)], Option[(Double, Double)])] = {
     val key = (ZoneMapPruneRule.normFile(root), factAttr.name,
       dim.canonicalized, dimAttr.name)
     val hit = cache.get(key)
@@ -376,7 +382,7 @@ object JoinFilePruning {
     decisionJobs.incrementAndGet()
     val decT0 = System.nanoTime()
     ZoneMapPruneRule.inRule.set(java.lang.Boolean.TRUE)
-    val computed: Option[(Map[String, (Long, Long)], Set[String])] =
+    val computed: Option[(Map[String, (Long, Long)], Option[(Double, Double)])] =
       try {
         import org.apache.spark.sql.functions.col
         val maxKeys = conf(spark, "spark.graft.joinPrune.maxKeys",
@@ -423,18 +429,14 @@ object JoinFilePruning {
           // [min, max] misses [min(keys), max(keys)] entirely cannot
           // hold any of them — catches key-SORTED layouts whose files
           // fell back to PLAIN (no dictionaries)
-          val zoneCut =
-            if (keys.isEmpty || domain == "string") Set.empty[String]
+          val range =
+            if (keys.isEmpty || domain == "string") None
             else {
               val nums = keys.map(r =>
                 if (domain == "long") r.getLong(0).toDouble else r.getDouble(0))
-              ZoneMapPruneRule.indexFor(root, spark).map { zi =>
-                ZoneMapPruneRule.skipSet(Seq(root), Seq(zi),
-                  Between(factAttr.name,
-                    PredValue(nums.min), PredValue(nums.max)))
-              }.getOrElse(Set.empty)
+              Some((nums.min, nums.max))
             }
-          Some((dictCut, zoneCut))
+          Some((dictCut, range))
         }
       } catch { case scala.util.control.NonFatal(_) => None }
       finally ZoneMapPruneRule.inRule.set(java.lang.Boolean.FALSE)

@@ -71,7 +71,7 @@ object PredicateExtractor {
   /** COMPLETE conversion: None unless EVERY subtree converts — no
     * conjunct dropping. [[convert]]'s weakening is sound only for
     * REFUTATION (fewer conjuncts keep more); an ALL-ROWS-MATCH proof
-    * ([[IndexPruning.allMatchColumn]], the filtered dictionary serve)
+    * ([[ZoneMapPruner.allMatch]], the filtered dictionary serve)
     * over a weakened predicate would claim rows the dropped conjunct
     * rejects. */
   def convertComplete(e: Expression): Option[Pred] = e match {

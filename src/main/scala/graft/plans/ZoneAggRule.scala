@@ -15,9 +15,10 @@ import graft.sources.SidecarManifest
   * provably CURRENT. The 100 TB shape this targets is the most common
   * interactive query there is: `SELECT COUNT(*) FROM t WHERE p` over a
   * p-clustered layout. Zone maps DECIDE p for (most) whole files
-  * ([[IndexPruning.fileTriState]] — the filtered dictionary serve's
-  * machinery): all-match files answer from footer metadata (row
-  * counts, null counts, min/max), all-miss files contribute nothing,
+  * ([[ZoneSnapshot.triState]], decided on the driver — the filtered
+  * dictionary serve's machinery): all-match files answer from footer
+  * metadata (row counts, null counts, min/max), all-miss files
+  * contribute nothing,
   * and the straddling minority unions in as ONE pruned scan with the
   * original filter re-applied — exact by construction. A fully
   * decided query (every file all-match or all-miss, e.g. the
@@ -46,9 +47,9 @@ import graft.sources.SidecarManifest
   *
   * SOUNDNESS GATE: serving answers from a stale index is wrong
   * results. The rule serves only from the SAVED `_graft_index`
-  * sidecar (loaded itself, keyed by its anchor so a rebuild is
-  * picked up immediately — the zone registry's discovery memo would
-  * keep a pre-rebuild frame for the session's lifetime), and requires
+  * sidecar (its [[ZoneSnapshot]] is keyed by the anchor, so a rebuild
+  * is picked up by the next query — never a registered frame), and
+  * requires
   * the SERVE-grade currency test ([[graft.sources.SidecarManifest
   * .servable]]): the index's file set EQUALS the relation's live
   * listing exactly (append/delete refuses until
@@ -56,7 +57,7 @@ import graft.sources.SidecarManifest
   * file's mtime exceeds the anchor — a file rewritten in place
   * after the sidecar save carries dead stats (the anchor ordering is
   * the freshness bound; a backdated-mtime rewrite escapes it, the
-  * same bound the zone layer's newest-data discovery probe accepts).
+  * same bound the zone layer's per-query prune-grade test accepts).
   * A rewrite BEFORE the save is covered by the index itself: round 15
   * records per-file (mtime, size) and [[graft.sources
   * .MicroBlockIndex.refresh]] drops + re-reads changed files, so a
@@ -181,88 +182,29 @@ object ZoneAggRule {
     case _ => None
   }
 
-  /** Per-file metadata snapshot off one zone-index frame: file row
-    * counts plus, per requested column, (rows covered, trusted-null
-    * floor, null sum, untrusted-min/max block count, min, max, sum,
-    * untrusted-string-bounds block count, minStr, maxStr).
-    * One distributed job, file×column-scale collect, memoized per
-    * (root, live hash, columns) and valid only for the SAME index
-    * frame (identity via WeakReference — the triCache discipline). */
+  /** The metadata a serve reads off the sidecar's [[ZoneSnapshot]]:
+    * file row counts plus, per requested column and file, the folded
+    * entries ([[FileAgg]]). */
   private final case class Snap(
       fileRows: Map[String, Long],
-      perCol: Map[(String, String), (Long, Long, Long, Long,
-        Option[Long], Option[Long], Option[Long],
-        Long, Option[String], Option[String])])
+      perCol: Map[(String, String), FileAgg])
 
-  private val snapCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Long, String), Snap](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, String), Snap]): Boolean =
-        size > 64
-    })
-
+  /** The snapshot of `rootPath`'s sidecar at `mtime`, with `cols` and
+    * `pred`'s columns on the driver — one job when any is new to this
+    * sidecar generation, none otherwise. The time spent is the serve's
+    * decision cost, fed to the shared per-root cost model. */
   private def snapshotFor(spark: SparkSession, rootPath: String,
-      mtime: Long, cols: Seq[String]): Option[Snap] = {
-    val key = (norm(rootPath), mtime, cols.sorted.mkString(","))
-    val hit = snapCache.get(key)
-    if (hit != null) return Some(hit)
+      mtime: Long, cols: Seq[String], pred: Option[Pred]): Option[Snap] = {
     val decT0 = System.nanoTime()
-    inRewrite.set(java.lang.Boolean.TRUE)
     val built =
       try {
-        import org.apache.spark.sql.functions._
-        // load, not a raw read: back-fills minLong/maxLong on sidecars
-        // predating the exact integral view (null = unknown = scan)
-        val zoneIdx = graft.sources.MicroBlockIndex.load(spark,
-          graft.sources.MicroBlockIndex.sidecarPath(rootPath)).toDF()
-        val fileRows = zoneIdx
-          .select(col("file"), col("blockId"), col("rows")).distinct()
-          .groupBy(col("file")).agg(sum(col("rows")).as("r"))
-          .collect().map(r => norm(r.getString(0)) -> r.getLong(1)).toMap
-        val perCol =
-          if (cols.isEmpty) Map.empty[(String, String),
-            (Long, Long, Long, Long, Option[Long], Option[Long],
-              Option[Long], Long, Option[String], Option[String])]
-          else zoneIdx.filter(col("column").isin(cols: _*))
-            .groupBy(col("column"), col("file"))
-            .agg(
-              sum(col("rows")).as("rowsSum"),
-              min(col("nullCount")).as("ncMin"),
-              sum(col("nullCount")).as("ncSum"),
-              sum(when((col("minLong").isNull || col("maxLong").isNull) &&
-                !(col("nullCount") === col("rows")), 1L)
-                .otherwise(0L)).as("untrustedMM"),
-              min(col("minLong")).as("mn"),
-              max(col("maxLong")).as("mx"),
-              // per-file sums are stamped identically on every block
-              // entry of the (file, column) — any pick is THE value
-              max(col("sumLong")).as("sm"),
-              // the lexical view (round 15, string group columns):
-              // Spark's string min/max is unsigned UTF-8 byte order —
-              // the same order footer binary stats are computed in
-              sum(when((col("minStr").isNull || col("maxStr").isNull) &&
-                !(col("nullCount") === col("rows")), 1L)
-                .otherwise(0L)).as("untrustedS"),
-              min(col("minStr")).as("mnS"),
-              max(col("maxStr")).as("mxS"))
-            .collect().map { r =>
-              (r.getString(0), norm(r.getString(1))) ->
-                ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
-                  if (r.isNullAt(6)) None else Some(r.getLong(6)),
-                  if (r.isNullAt(7)) None else Some(r.getLong(7)),
-                  if (r.isNullAt(8)) None else Some(r.getLong(8)),
-                  r.getLong(9),
-                  if (r.isNullAt(10)) None else Some(r.getString(10)),
-                  if (r.isNullAt(11)) None else Some(r.getString(11))))
-            }.toMap
-        Some(Snap(fileRows, perCol))
+        val z = ZoneSnapshot.ofSidecar(rootPath, mtime)
+        z.ensure(spark, cols.toSet ++ pred.toSeq.flatMap(IndexPruning.refColumns))
+        Some(Snap(z.fileRows(spark), cols.flatMap(c =>
+          z.fileAgg(spark, c).map { case (f, a) => (c, f) -> a }).toMap))
       } catch { case scala.util.control.NonFatal(_) => None }
-      finally inRewrite.set(java.lang.Boolean.FALSE)
-    // feed the shared per-root cost model (round 15): the snapshot job
-    // is the serve's decision cost, priced by the benefit gate
     graft.sources.CostRouter.observeDecision(
       rootPath, (System.nanoTime() - decT0) / 1e9)
-    built.foreach(snapCache.put(key, _))
     built
   }
 
@@ -274,58 +216,33 @@ object ZoneAggRule {
     * and the caller keeps its legacy behavior. Unlike the serve paths
     * this is NOT correctness-gated against the live listing: it feeds
     * a push-vs-don't COST decision whose wrong answer is extra work,
-    * never wrong rows, so a slightly stale sidecar frame is fine.
-    * Rides the same (root, mtime, cols) snapshot memo — one metadata
-    * job per session per root. */
+    * never wrong rows, so a slightly stale sidecar is fine. Reads the
+    * same sidecar snapshot as the serves. */
   private[plans] def keyRangeStats(spark: SparkSession, rootPath: String,
       column: String): Option[(Long, Long, Long)] =
     for {
       mtime <- SidecarManifest.anchor(rootPath, spark, SidecarManifest.Zone)
-      snap <- snapshotFor(spark, rootPath, mtime, Seq(column))
+      snap <- snapshotFor(spark, rootPath, mtime, Seq(column), None)
       bounds <- {
         val perFile = snap.fileRows.keys.map(f => snap.perCol.get((column, f)))
         if (perFile.isEmpty || perFile.exists(e =>
-            e.isEmpty || e.get._4 > 0 || e.get._5.isEmpty || e.get._6.isEmpty))
+            e.isEmpty || e.get.untrustedLong > 0 || e.get.minLong.isEmpty ||
+              e.get.maxLong.isEmpty))
           None
         else Some((
-          perFile.map(_.get._5.get).min,
-          perFile.map(_.get._6.get).max))
+          perFile.map(_.get.minLong.get).min,
+          perFile.map(_.get.maxLong.get).max))
       }
     } yield (snap.fileRows.values.sum, bounds._1, bounds._2)
 
-  // (root, sidecar mtime, pred) -> (all-true, all-false) file sets as
-  // recorded in the sidecar; callers intersect with the live listing
-  private val triCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Long, String),
-        (Set[String], Set[String])](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, String),
-            (Set[String], Set[String])]): Boolean = size > 128
-    })
-
+  /** (all-true, all-false) file sets of a COMPLETE predicate as the
+    * sidecar at `mtime` records them, decided on the driver over its
+    * [[ZoneSnapshot]]; callers intersect with the live listing. Shared
+    * with the filtered dictionary serve ([[DictDistinctRule]]). */
   private[plans] def triStateFor(spark: SparkSession, rootPath: String,
-      mtime: Long, pred: Pred): Option[(Set[String], Set[String])] = {
-    val key = (norm(rootPath), mtime, pred.toString)
-    val hit = triCache.get(key)
-    if (hit != null) return Some(hit)
-    val decT0 = System.nanoTime()
-    inRewrite.set(java.lang.Boolean.TRUE)
-    val computed =
-      try {
-        val zoneIdx = spark.read.parquet(
-          graft.sources.MicroBlockIndex.sidecarPath(rootPath))
-        val rows = IndexPruning.fileTriState(zoneIdx.toDF(), pred).collect()
-          .map(r => (norm(r.getString(0)), r.getBoolean(1), r.getBoolean(2)))
-        val allTrue = rows.collect { case (f, true, _) => f }.toSet
-        val allFalse = rows.collect { case (f, _, true) => f }.toSet
-        Some((allTrue, allFalse))
-      } catch { case scala.util.control.NonFatal(_) => None }
-      finally inRewrite.set(java.lang.Boolean.FALSE)
-    graft.sources.CostRouter.observeDecision(
-      rootPath, (System.nanoTime() - decT0) / 1e9)
-    computed.foreach(triCache.put(key, _))
-    computed
-  }
+      mtime: Long, pred: Pred): Option[(Set[String], Set[String])] =
+    try Some(ZoneSnapshot.ofSidecar(rootPath, mtime).triState(spark, pred))
+    catch { case scala.util.control.NonFatal(_) => None }
 
   /** Can file `f` be PROVEN to hold exactly ONE group value for data
     * column `c` (round 14 — grouped serving beyond partition columns)?
@@ -353,17 +270,17 @@ object ZoneAggRule {
   private def singleGroupValue(snap: Snap, f: String,
       c: String, t: DataType): Option[Option[Any]] =
     snap.perCol.get((c, f)).flatMap { e =>
-      val covered = snap.fileRows.get(f).contains(e._1)
-      if (!covered || e._2 < 0) None
+      val covered = snap.fileRows.get(f).contains(e.rows)
+      if (!covered || !e.nullsKnown) None
       else if (t == org.apache.spark.sql.types.StringType) {
-        if (e._3 == 0 && e._8 == 0 && e._9.isDefined && e._9 == e._10)
-          Some(e._9)
-        else if (e._3 == e._1) Some(None) // all-NULL: one (NULL) group
+        if (e.nulls == 0 && e.untrustedStr == 0 && e.minStr.isDefined &&
+          e.minStr == e.maxStr) Some(e.minStr)
+        else if (e.nulls == e.rows) Some(None) // all-NULL: one (NULL) group
         else None
       }
-      else if (e._3 == 0 && e._4 == 0 && e._5.isDefined &&
-        e._6.isDefined && e._5 == e._6) Some(e._5)
-      else if (e._3 == e._1) Some(None) // all-NULL: one (NULL) group
+      else if (e.nulls == 0 && e.untrustedLong == 0 && e.minLong.isDefined &&
+        e.maxLong.isDefined && e.minLong == e.maxLong) Some(e.minLong)
+      else if (e.nulls == e.rows) Some(None) // all-NULL: one (NULL) group
       else None
     }
 
@@ -371,17 +288,17 @@ object ZoneAggRule {
   private def trusted(snap: Snap, f: String, k: Kind): Boolean = k match {
     case CountStar => snap.fileRows.contains(f)
     case CountCol(c) => snap.perCol.get((c, f)).exists { e =>
-      e._2 >= 0 && snap.fileRows.get(f).contains(e._1)
+      e.nullsKnown && snap.fileRows.get(f).contains(e.rows)
     }
     case MinCol(c, _) => snap.perCol.get((c, f)).exists { e =>
-      e._2 >= 0 && e._4 == 0 && snap.fileRows.get(f).contains(e._1)
+      e.nullsKnown && e.untrustedLong == 0 && snap.fileRows.get(f).contains(e.rows)
     }
     case MaxCol(c, _) => trusted(snap, f, MinCol(c, IntegerType))
     // the sum was computed from the DATA, not footers — its own
     // presence is the whole trust test (None = not built, single-file
     // overflow, or all-NULL; those files fall to the scan side, which
     // also preserves SUM's all-NULL ⇒ NULL semantics)
-    case SumCol(c) => snap.perCol.get((c, f)).exists(_._7.isDefined)
+    case SumCol(c) => snap.perCol.get((c, f)).exists(_.sumLong.isDefined)
   }
 
   private[graft] def tryRewrite(
@@ -421,7 +338,7 @@ object ZoneAggRule {
       liveRaw = hfs.location.inputFiles.toSeq
       liveFiles = liveRaw.map(norm).toSet
       if liveFiles.nonEmpty
-      snap <- snapshotFor(spark, roots.head, mtime, cols)
+      snap <- snapshotFor(spark, roots.head, mtime, cols, predOpt)
       // the answer gates: index file set == live listing EXACTLY, and
       // no live file newer than the index — a file rewritten in place
       // AFTER the sidecar save carries dead stats (the anchor ordering
@@ -443,7 +360,7 @@ object ZoneAggRule {
         "spark.graft.statsServe.maxScanFraction", "0.5").toDouble
         catch { case scala.util.control.NonFatal(_) => 0.5 }
       if scanFiles.size <= liveFiles.size * maxFrac
-      plan <- buildPlan(spark, roots.head, pairs, condOpt, snap, served,
+      plan <- buildPlan(spark, roots.head, hfs, pairs, condOpt, snap, served,
         scanFiles, liveRaw)
     } yield {
       val out = pairs.zip(plan.output).map { case ((orig, _), a) =>
@@ -554,7 +471,7 @@ object ZoneAggRule {
       liveRaw = hfs.location.inputFiles.toSeq
       liveFiles = liveRaw.map(norm).toSet
       if liveFiles.nonEmpty
-      snap <- snapshotFor(spark, roots.head, mtime, cols)
+      snap <- snapshotFor(spark, roots.head, mtime, cols, predOpt)
       if SidecarManifest.servable(
         mtime, snap.fileRows.keySet, ZoneMapPruneRule.liveStatsOf(hfs))
       (allTrueRaw, allFalseRaw) <- predOpt match {
@@ -650,21 +567,21 @@ object ZoneAggRule {
             case CountCol(c) =>
               val e = snap.perCol((c, f))
               acc(i) = (if (acc(i) == null) 0L
-                else acc(i).asInstanceOf[Long]) + (e._1 - e._3)
+                else acc(i).asInstanceOf[Long]) + (e.rows - e.nulls)
             case MinCol(c, t) =>
-              snap.perCol((c, f))._5.foreach { v =>
+              snap.perCol((c, f)).minLong.foreach { v =>
                 val nv = if (acc(i) == null) v
                   else math.min(acc(i).asInstanceOf[Long], v)
                 acc(i) = nv
               }
             case MaxCol(c, t) =>
-              snap.perCol((c, f))._6.foreach { v =>
+              snap.perCol((c, f)).maxLong.foreach { v =>
                 val nv = if (acc(i) == null) v
                   else math.max(acc(i).asInstanceOf[Long], v)
                 acc(i) = nv
               }
             case SumCol(c) =>
-              snap.perCol((c, f))._7.foreach { v =>
+              snap.perCol((c, f)).sumLong.foreach { v =>
                 // addExact: a per-group overflow aborts the whole
                 // rewrite (caught below) rather than wrapping silently
                 val nv = if (acc(i) == null) v
@@ -706,7 +623,7 @@ object ZoneAggRule {
         if (scanRaw.isEmpty) metaDf // already one row per group
         else {
           var scan = graft.sources.MicroBlockIndex
-            .readFilesAsTable(spark, rootPath, scanRaw)
+            .readFilesAsTable(spark, rootPath, scanRaw, Some(hfs.dataSchema))
           condOpt.foreach { cond =>
             val unresolved = cond.transform {
               case a: AttributeReference =>
@@ -760,7 +677,7 @@ object ZoneAggRule {
     * served files, combined with one straddler scan (original filter
     * re-applied) — or a pure one-row projection when nothing scans. */
   private def buildPlan(spark: SparkSession, rootPath: String,
-      pairs: Seq[(Alias, Kind)], condOpt: Option[Expression], snap: Snap,
+      hfs: HadoopFsRelation, pairs: Seq[(Alias, Kind)], condOpt: Option[Expression], snap: Snap,
       served: Set[String], scanFiles: Set[String],
       liveRaw: Seq[String]): Option[LogicalPlan] = {
     inRewrite.set(java.lang.Boolean.TRUE)
@@ -788,19 +705,19 @@ object ZoneAggRule {
           lit(served.iterator.map(snap.fileRows).sum)
         case (_, CountCol(c)) =>
           lit(served.iterator.map(f => snap.perCol((c, f)))
-            .map(e => e._1 - e._3).sum)
+            .map(e => e.rows - e.nulls).sum)
         case (_, MinCol(c, t)) =>
-          val mns = served.toSeq.flatMap(f => snap.perCol((c, f))._5)
+          val mns = served.toSeq.flatMap(f => snap.perCol((c, f)).minLong)
           typedLit(mns.minOption, t)
         case (_, MaxCol(c, t)) =>
-          val mxs = served.toSeq.flatMap(f => snap.perCol((c, f))._6)
+          val mxs = served.toSeq.flatMap(f => snap.perCol((c, f)).maxLong)
           typedLit(mxs.maxOption, t)
         case (_, SumCol(c)) =>
           // exact BigInt fold; a combined total past long range throws
           // -> the surrounding try refuses the whole serve (Spark's
           // own scan would throw/wrap per its overflow semantics — a
           // silently-wrapped metadata answer must never replace that)
-          val sums = served.toSeq.flatMap(f => snap.perCol((c, f))._7)
+          val sums = served.toSeq.flatMap(f => snap.perCol((c, f)).sumLong)
           if (sums.isEmpty)
             org.apache.spark.sql.graftbridge.ColumnBridge.column(
               Literal(null, org.apache.spark.sql.types.LongType))
@@ -817,7 +734,7 @@ object ZoneAggRule {
             metaCols.zipWithIndex.map { case (c, i) => c.as(s"a$i") }: _*)
         else {
           var scan = graft.sources.MicroBlockIndex
-            .readFilesAsTable(spark, rootPath, scanRaw)
+            .readFilesAsTable(spark, rootPath, scanRaw, Some(hfs.dataSchema))
           condOpt.foreach { cond =>
             val unresolved = cond.transform {
               case a: AttributeReference =>

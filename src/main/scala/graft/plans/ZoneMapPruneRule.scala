@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{
-  Ascending, AttributeReference, IntegerLiteral, NullsFirst}
+  Ascending, AttributeReference, Expression, IntegerLiteral, NullsFirst}
 import org.apache.spark.sql.catalyst.plans.logical.{
   Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -22,14 +22,13 @@ import graft.sources.{BlockStat, SidecarManifest}
   * only the files whose min/max may satisfy the predicate. Spark's
   * native row-group pushdown then re-prunes inside the survivors.
   *
-  * The registry holds the index as a DATAFRAME, not collected rows:
-  * skip/keep is computed by [[IndexPruning]] as a distributed query
-  * over the index table, and only the per-file SKIP list (bounded by
-  * file count; empty when pruning can't help) ever reaches the driver
-  * — at millions of files × dozens of columns the per-column stats
-  * never leave the executors. Decisions are memoized per
-  * (roots, predicate) in a bounded LRU so repeated optimizer passes
-  * and repeated query shapes don't re-run the decision job.
+  * Zone decisions run on the DRIVER, over a [[ZoneSnapshot]] of the
+  * root's index: the registered frame's, else the `_graft_index`
+  * sidecar's at its current anchor. A snapshot holds blocks ×
+  * referenced columns — metadata-sized — and collects a column once,
+  * in one job, so a new literal launches no Spark job. Dictionary,
+  * bloom and join-key cuts stay distributed (value sets are
+  * data-sized) and memoize per query shape.
   *
   * The rewrite only ever *shrinks the file list* — semantics are
   * preserved because the Filter stays in place and pruning is
@@ -40,50 +39,15 @@ case class ZoneMapPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (ZoneMapPruneRule.inRule.get()) plan
     else plan.transform {
-      // Multi-root relations prune against the UNION of the roots'
-      // registered indices. This is safe with partially-indexed roots:
-      // skipping is per-FILE and only ever drops a file every one of
-      // whose indexed row groups fails may-match — a file no index knows
-      // (unindexed root, stale index) never enters the skip set.
+      // A failing cut (an unreadable sidecar, a malformed frame) leaves
+      // the node as it was: the plain scan answers.
       case f @ Filter(cond, rel @ LogicalRelation(hfs: HadoopFsRelation, _, _, _, _)) =>
-        val roots = hfs.location.rootPaths.toSeq.map(_.toString)
-        val indices = roots.flatMap(p => ZoneMapPruneRule.indexFor(p, spark))
-        val dicts = roots.flatMap(p => ZoneMapPruneRule.dictIndexFor(p, spark))
-        val bloomRoots = roots.flatMap(p =>
-          ZoneMapPruneRule.bloomColumnsFor(p, spark).map(cols => p -> cols))
-        if (indices.isEmpty && dicts.isEmpty && bloomRoots.isEmpty) f
-        else PredicateExtractor.convert(cond) match {
-          case None => f
-          case Some(pred) =>
-            // Prune against the relation's CURRENT file listing:
-            // a file the (possibly stale) index doesn't know is kept
-            // conservatively; a known file is skipped only when EVERY
-            // indexed row group in it is a may-match=false (a file
-            // with one matching row group must stay). The zone-map,
-            // dictionary and bloom cuts UNION: a file any of them can
-            // refute cannot match (equality/IN conjuncts refute
-            // through value sets / bloom membership where min/max see
-            // nothing — hash-bucketed layouts, point lookups on
-            // unclustered columns).
-            val skip =
-              (if (indices.isEmpty) Set.empty[String]
-               else ZoneMapPruneRule.skipSet(roots, indices, pred)) ++
-              (if (dicts.isEmpty) Set.empty[String]
-               else ZoneMapPruneRule.dictSkipSet(roots, dicts, pred,
-                 ZoneMapPruneRule.liveStatsOf(hfs))) ++
-              (if (bloomRoots.isEmpty) Set.empty[String]
-               else ZoneMapPruneRule.bloomSkipSet(spark, bloomRoots, pred))
-            val current = hfs.location.inputFiles.toSeq
-            val kept = current.filterNot(p => skip.contains(ZoneMapPruneRule.normFile(p)))
-            if (kept.size >= current.size) f
-            else ZoneMapPruneRule.prunedRelation(spark, rel, hfs, kept)
-              .map(pruned => Filter(cond, pruned): LogicalPlan)
-              .getOrElse(f)
-        }
+        try ZoneMapPruneRule.filterCut(spark, cond, rel, hfs).getOrElse(f)
+        catch { case scala.util.control.NonFatal(_) => f }
 
       // The q9 shape: ORDER BY col [ASC|DESC] LIMIT k over a bare
       // registered table — the zone-map TOP-K cut (the engine's
-      // topKBlockIds contract, IndexPruning.topKSkippedFiles) applied
+      // topKBlockIds contract, ZoneSnapshot.topKSkippedFiles) applied
       // transparently, so the plain SQL surface gets the O(k)-blocks
       // serve the engine path already measured (BENCH_TOPK_SF100:
       // 1 file vs 256). The Sort+Limit stay in place over the shrunk
@@ -93,9 +57,10 @@ case class ZoneMapPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // the top k, so any other node disqualifies the rewrite).
       case gl @ GlobalLimit(IntegerLiteral(k), ll @ LocalLimit(_, inner))
           if k >= 1 =>
-        ZoneMapPruneRule.topKRewrite(spark, k, inner)
+        try ZoneMapPruneRule.topKRewrite(spark, k, inner)
           .map(pruned => gl.copy(child = ll.copy(child = pruned)))
           .getOrElse(gl)
+        catch { case scala.util.control.NonFatal(_) => gl }
 
       // JOIN-DRIVEN file pruning (file-level DPP): a selective dim's
       // surviving join keys refute dictionary-indexed fact files —
@@ -165,9 +130,10 @@ object ZoneMapPruneRule {
       val roots = hfs.location.rootPaths
       if (roots.size == 1) Some(roots.head.toString) else None
     }
-  // root path -> stats index DATAFRAME (distributed; registered explicitly)
+  // root path -> registered stats index and the driver snapshot of
+  // that registration
   private val registry =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, ZoneSnapshot)]()
 
   // root path -> wall-clock time of the LAST register() call: the
   // freshness anchor for zone cuts off registered (non-sidecar)
@@ -185,16 +151,33 @@ object ZoneMapPruneRule {
     * frame against files that may have been rewritten in place. */
   private[plans] def zoneAnchorFor(rootPath: String,
       session: SparkSession): Option[Long] = {
-    val registered = indexFor(rootPath).filter(_.sparkSession eq session)
     val regTime =
-      if (registered.isEmpty) None
-      else {
-        val cheap = normFile(rootPath)
-        Option(regTimes.get(cheap)).orElse(
-          if (cheap.startsWith("/")) None
-          else Option(regTimes.get(norm(rootPath)))).map(_.longValue)
-      }
+      if (registered(rootPath, session).isEmpty) None
+      else Option(regTimes.get(rootKey(rootPath))).map(_.longValue)
     regTime.orElse(SidecarManifest.anchor(rootPath, session, SidecarManifest.Zone))
+  }
+
+  /** The zone snapshot the rules decide over for `rootPath`: the one
+    * registered in `session`, else the `_graft_index` sidecar's at its
+    * current anchor — when PRUNE-grade current
+    * ([[SidecarManifest.prunable]]) against `live`, the relation's own
+    * per-file statuses (only files under the root count). Checked per
+    * query, so a commit that moves the anchor is seen by the next
+    * read, and a file rewritten after the build disables the cut. */
+  private[graft] def zoneFor(rootPath: String, session: SparkSession,
+      live: => Map[String, (Long, Long)]): Option[ZoneSnapshot] =
+    registered(rootPath, session).map(_._2).orElse {
+      SidecarManifest.anchor(rootPath, session, SidecarManifest.Zone)
+        .filter(a => SidecarManifest.prunable(a, mtimesUnder(rootPath, live)))
+        .map(ZoneSnapshot.ofSidecar(rootPath, _))
+    }
+
+  /** Live mtimes of the files under `rootPath` (the root itself for a
+    * single-file table). */
+  private def mtimesUnder(rootPath: String,
+      live: Map[String, (Long, Long)]): Iterator[Long] = {
+    val r = rootKey(rootPath)
+    live.iterator.collect { case (f, (m, _)) if f == r || f.startsWith(r + "/") => m }
   }
 
   // root path -> DICTIONARY index DataFrame (graft.sources.DictionaryIndex
@@ -202,23 +185,13 @@ object ZoneMapPruneRule {
   private val dictRegistry =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  /** Re-entrancy guard: the skip-set computation is itself a Spark
-    * query that passes through this optimizer rule on the same thread;
-    * it must plan as-is (its Filters are over the index, whose root is
-    * not meaningfully prunable) rather than trigger nested decision
-    * jobs. */
+  /** Re-entrancy guard: the dictionary, bloom and join-key cuts are
+    * Spark queries that pass through this optimizer rule on the same
+    * thread; they must plan as-is (their Filters are over the index,
+    * whose root is not meaningfully prunable) rather than trigger
+    * nested decision jobs. */
   private[plans] val inRule: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
-
-  /** Bounded memo of skip lists per (sorted roots, predicate): the
-    * decision job runs once per distinct query shape, not once per
-    * Filter per optimizer pass. Cleared on (re/un)registration so a
-    * refreshed index takes effect immediately. */
-  private val decisionCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Pred), Set[String]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Pred), Set[String]]): Boolean = size > 512
-    })
 
   /** Rewrite `inner` (the plan under LocalLimit) when it is
     * [attr-only Projects]* → Sort(global) → [attr-only Projects]* →
@@ -237,10 +210,11 @@ object ZoneMapPruneRule {
       case rel @ LogicalRelation(hfs: HadoopFsRelation, _, _, _, _)
           if rel.output.exists(_.exprId == sortKey.exprId) =>
         val roots = hfs.location.rootPaths.toSeq.map(_.toString)
-        val indices = roots.flatMap(p => indexFor(p, spark))
-        if (indices.isEmpty) None
+        val zones = roots.flatMap(p => zoneFor(p, spark, liveStatsOf(hfs)))
+        if (zones.isEmpty) None
         else {
-          val skip = topKSkipSet(roots, indices, sortKey.name, k, ascending, nullsFirst)
+          val skip = ZoneSnapshot.topKSkippedFiles(spark, zones, sortKey.name, k,
+            ascending, nullsFirst)
           if (skip.isEmpty) None
           else {
             val current = hfs.location.inputFiles.toSeq
@@ -266,48 +240,34 @@ object ZoneMapPruneRule {
     }
   }
 
-  /** Memoized top-k skip sets, same cache discipline as [[skipSet]]. */
-  private val topkCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String, Int, Boolean, Boolean), Set[String]](
-      64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, Int, Boolean, Boolean), Set[String]])
-          : Boolean = size > 512
-    })
-
-  private def topKSkipSet(roots: Seq[String], indices: Seq[DataFrame],
-      colName: String, k: Int, ascending: Boolean, nullsFirst: Boolean): Set[String] = {
-    val key = (roots.map(normFile).sorted.mkString("\u0000"),
-      colName, k, ascending, nullsFirst)
-    val hit = topkCache.get(key)
-    if (hit != null) hit
-    else {
-      inRule.set(java.lang.Boolean.TRUE)
+  /** The Filter arm: shrink `rel`'s file list, taken from its CURRENT
+    * listing, by the zone, dictionary and bloom cuts. The cuts UNION:
+    * a file any of them refutes cannot match (equality/IN conjuncts
+    * refute through value sets or bloom membership where min/max see
+    * nothing). Multi-root relations prune against every root's index:
+    * a file is skipped only when every indexed block of it is
+    * refuted, and a file no index knows (unindexed root, files added
+    * since the build) is never skipped. */
+  private def filterCut(spark: SparkSession, cond: Expression,
+      rel: LogicalRelation, hfs: HadoopFsRelation): Option[LogicalPlan] = {
+    val roots = hfs.location.rootPaths.toSeq.map(_.toString)
+    lazy val live = liveStatsOf(hfs)
+    val zones = roots.flatMap(p => zoneFor(p, spark, live))
+    val dicts = roots.flatMap(p => dictIndexFor(p, spark, live))
+    val blooms = roots.flatMap(p => bloomColumnsFor(p, spark).map(p -> _))
+    if (zones.isEmpty && dicts.isEmpty && blooms.isEmpty) None
+    else PredicateExtractor.convert(cond).flatMap { pred =>
       val skip =
-        try {
-          val index = indices.reduce(_ unionAll _)
-          IndexPruning.topKSkippedFiles(index, colName, k, ascending, nullsFirst)
-            .map(normFile).toSet
-        } finally inRule.set(java.lang.Boolean.FALSE)
-      topkCache.put(key, skip)
-      skip
-    }
-  }
-
-  private[graft] def skipSet(
-      roots: Seq[String], indices: Seq[DataFrame], pred: Pred): Set[String] = {
-    val key = (roots.map(normFile).sorted.mkString("\u0000"), pred)
-    val hit = decisionCache.get(key)
-    if (hit != null) hit
-    else {
-      inRule.set(java.lang.Boolean.TRUE)
-      val skip =
-        try {
-          val index = indices.reduce(_ unionAll _)
-          IndexPruning.skippedFiles(index, pred).map(normFile).toSet
-        } finally inRule.set(java.lang.Boolean.FALSE)
-      decisionCache.put(key, skip)
-      skip
+        (if (zones.isEmpty) Set.empty[String]
+         else ZoneSnapshot.skippedFiles(spark, zones, pred)) ++
+        (if (dicts.isEmpty) Set.empty[String]
+         else dictSkipSet(roots, dicts, pred, live)) ++
+        (if (blooms.isEmpty) Set.empty[String]
+         else bloomSkipSet(spark, blooms, pred))
+      val current = hfs.location.inputFiles.toSeq
+      val kept = current.filterNot(p => skip.contains(normFile(p)))
+      if (kept.size >= current.size) None
+      else prunedRelation(spark, rel, hfs, kept).map(Filter(cond, _))
     }
   }
 
@@ -550,31 +510,39 @@ object ZoneMapPruneRule {
   private[graft] def norm(p: String): String =
     try {
       val hp = new Path(p)
-      val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      fs.makeQualified(hp).toUri.getPath
+      hp.getFileSystem(qualifyConf).makeQualified(hp).toUri.getPath
     } catch { case _: Exception => p }
+
+  // one shared, read-only conf: building a Configuration parses its
+  // XML resources, tens of milliseconds per call
+  private lazy val qualifyConf = new org.apache.hadoop.conf.Configuration()
+
+  /** The registry key for a root: the cheap scheme-strip for absolute
+    * spellings (what the planner's rootPaths give), the
+    * filesystem-qualifying [[norm]] only for relative ones — an
+    * unregistered multi-thousand-file relation must not pay a
+    * filesystem round-trip per root per optimizer pass. */
+  private[graft] def rootKey(rootPath: String): String = {
+    val cheap = normFile(rootPath)
+    if (cheap.startsWith("/")) cheap else norm(rootPath)
+  }
 
   /** Register a table's stats index (as built by
     * [[graft.sources.MicroBlockIndex.build]] or loaded from a persisted
     * index table); queries over `rootPath` will be file-pruned from
-    * here on. */
-  def register(rootPath: String, index: DataFrame): Unit = {
+    * here on, over the returned [[ZoneSnapshot]] of `index`. */
+  def register(rootPath: String, index: DataFrame): ZoneSnapshot = {
     regTimes.put(norm(rootPath), java.lang.Long.valueOf(System.currentTimeMillis()))
-    val old = registry.put(norm(rootPath), index)
+    val zone = new ZoneSnapshot(_ => index)
+    val old = registry.put(norm(rootPath), (index, zone))
     // Lifecycle: the replaced entry's cached blocks are freed (it is
     // unreachable from the registry now), and entries whose owning
     // session has stopped are dropped — the session guard already
     // hides them from lookups, but hiding never freed them.
-    if ((old ne null) && (old ne index)) unpersistQuietly(old)
-    val it = registry.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue.sparkSession.sparkContext.isStopped) it.remove()
-    }
-    decisionCache.clear()
-    topkCache.clear()
-    discoveryCache.clear()
-    JoinFilePruning.clearCache()
+    if ((old ne null) && (old._1 ne index)) unpersistQuietly(old._1)
+    registry.values().removeIf(_._1.sparkSession.sparkContext.isStopped)
+    ZoneSnapshot.drop(rootPath)
+    zone
   }
 
   private def unpersistQuietly(df: DataFrame): Unit =
@@ -594,61 +562,18 @@ object ZoneMapPruneRule {
     // the index it still serves from — unregistering only removes the
     // transparent-rule binding, never the owner's cache
     registry.remove(norm(rootPath))
-    decisionCache.clear()
-    topkCache.clear()
-    discoveryCache.clear()
+    ZoneSnapshot.drop(rootPath)
   }
 
-  /** Registry lookup on the PLANNING hot path: every Filter over any
-    * file relation probes each root. The cheap scheme-strip covers
-    * absolute paths (qualified registration keys are absolute path
-    * parts); the filesystem-qualifying fallback runs only for
-    * relative paths — an unregistered multi-thousand-file relation
-    * must not pay a filesystem round-trip per root per optimizer
-    * pass. */
-  def indexFor(rootPath: String): Option[DataFrame] =
+  /** The registration of `rootPath` guarded to the PLANNING session: an
+    * index DataFrame is bound to the SparkSession that built it, and
+    * engines auto-register on construction
+    * ([[graft.engine.GraftEngine]]) — a new session in the same JVM
+    * must see "unregistered", never a stopped session's frame. */
+  private def registered(rootPath: String,
+      session: SparkSession): Option[(DataFrame, ZoneSnapshot)] =
     if (registry.isEmpty) None
-    else {
-      val cheap = normFile(rootPath)
-      Option(registry.get(cheap)).orElse(
-        if (cheap.startsWith("/")) None
-        else Option(registry.get(norm(rootPath))))
-    }
-
-  /** [[indexFor]] guarded to the PLANNING session: an index DataFrame
-    * is bound to the SparkSession that built it, and engines
-    * auto-register on construction ([[graft.engine.GraftEngine]]) —
-    * a new session in the same JVM must see "unregistered", never a
-    * stopped session's frame (running a query over it would throw
-    * inside the optimizer rule and break unrelated queries).
-    *
-    * When no live registration exists, the path's SIDECAR
-    * (`<root>/_graft_index`, [[graft.sources.MicroBlockIndex.saveSidecar]])
-    * is probed ONCE per (root, session) — a fresh session reading a
-    * previously indexed table gets transparent pruning with no engine
-    * constructed and no register call. Guarded by the PRUNE-grade
-    * currency test ([[SidecarManifest.prunable]]): the
-    * sidecar counts only if its anchor is no older than the newest
-    * data file under the root (a stale index could skip files
-    * rewritten in place since it was built — unknown files are safe,
-    * rewritten ones are not). Probe results (positive and negative)
-    * are memoized, so an unindexed table costs one filesystem
-    * round-trip per session ever. */
-  def indexFor(rootPath: String,
-      session: SparkSession): Option[DataFrame] =
-    indexFor(rootPath).filter(_.sparkSession eq session)
-      .orElse(discoverSidecar(rootPath, session))
-
-  /** Convenience: load a table's persisted sidecar index and register
-    * it for transparent pruning — the explicit form of the discovery
-    * [[indexFor]] does lazily (use after [[graft.sources
-    * .MicroBlockIndex.saveSidecar]] in the SAME session, where a
-    * memoized earlier negative probe would otherwise hide the new
-    * sidecar). Throws if the sidecar doesn't exist. */
-  def registerSaved(tablePath: String,
-      session: SparkSession = SparkSession.active): Unit =
-    register(tablePath, session.read.parquet(
-      graft.sources.MicroBlockIndex.sidecarPath(tablePath)).persist())
+    else Option(registry.get(rootKey(rootPath))).filter(_._1.sparkSession eq session)
 
   /** Register a table's DICTIONARY index (as built by
     * [[graft.sources.DictionaryIndex.build]] or loaded from its
@@ -658,77 +583,29 @@ object ZoneMapPruneRule {
   def registerDict(rootPath: String, index: DataFrame): Unit = {
     val old = dictRegistry.put(norm(rootPath), index)
     if ((old ne null) && (old ne index)) unpersistQuietly(old)
-    val it = dictRegistry.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue.sparkSession.sparkContext.isStopped) it.remove()
-    }
+    dictRegistry.values().removeIf(_.sparkSession.sparkContext.isStopped)
     dictDecisionCache.clear()
-    discoveryCache.clear()
     JoinFilePruning.clearCache()
   }
 
   def unregisterDict(rootPath: String): Unit = {
     dictRegistry.remove(norm(rootPath))
     dictDecisionCache.clear()
-    discoveryCache.clear()
     JoinFilePruning.clearCache()
   }
 
-  /** [[registerSaved]]'s dictionary twin: load `<table>/_graft_dict`
-    * ([[graft.sources.DictionaryIndex.saveSidecar]]) and register it. */
-  def registerSavedDict(tablePath: String,
-      session: SparkSession = SparkSession.active): Unit =
-    registerDict(tablePath, session.read.parquet(
-      graft.sources.DictionaryIndex.sidecarPath(tablePath)).persist())
-
-  /** [[indexFor]]'s dictionary twin, same session guard and lazy
-    * `_graft_dict` sidecar discovery with the same staleness rule. */
-  def dictIndexFor(rootPath: String,
-      session: SparkSession): Option[DataFrame] = {
+  /** The dictionary index for `rootPath`: the one registered in
+    * `session`, else the `_graft_dict` sidecar's frame at its current
+    * anchor ([[graft.sources.DictionaryIndex.sidecarFrame]]) under the
+    * same per-query PRUNE-grade test as [[zoneFor]]. */
+  def dictIndexFor(rootPath: String, session: SparkSession,
+      live: => Map[String, (Long, Long)]): Option[DataFrame] = {
     val registered =
-      if (dictRegistry.isEmpty) None
-      else {
-        val cheap = normFile(rootPath)
-        Option(dictRegistry.get(cheap)).orElse(
-          if (cheap.startsWith("/")) None
-          else Option(dictRegistry.get(norm(rootPath))))
-      }
-    registered.filter(_.sparkSession eq session)
-      .orElse(discoverSidecar(rootPath, session, SidecarManifest.Dict))
-  }
-
-  /** Sidecar probe memo: (root, session-uuid, sidecar dir) → discovered
-    * index (None = probed, nothing fresh there). Bounded LRU like the
-    * decision caches; cleared on register/unregister so explicit
-    * registration always wins. */
-  private val discoveryCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String, String), Option[DataFrame]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String, String), Option[DataFrame]]): Boolean =
-        size > 256
-    })
-
-  // the PRUNE-grade currency test ([[graft.sources.SidecarManifest
-  // .prunable]]) over a RECURSIVE listing (round 13: a top-level-only
-  // listing reads nothing for hive-partitioned layouts, which would
-  // trust a stale sidecar over rewritten NESTED files)
-  private def discoverSidecar(rootPath: String,
-      session: SparkSession, dirName: String = SidecarManifest.Zone): Option[DataFrame] = {
-    val key = (normFile(rootPath), SidecarManifest.sessionKey(session), dirName)
-    val hit = discoveryCache.get(key)
-    if (hit != null) hit
-    else {
-      val found =
-        try SidecarManifest.anchor(rootPath, session, dirName)
-          .filter(a => SidecarManifest.prunable(a,
-            graft.sources.MicroBlockIndex.listParquetFilesWithStatus(rootPath)
-              .iterator.map(_._2)))
-          .map(_ => session.read.parquet(
-            SidecarManifest.location(rootPath, dirName)).persist())
-        catch { case scala.util.control.NonFatal(_) => None }
-      discoveryCache.put(key, found)
-      found
+      if (dictRegistry.isEmpty) None else Option(dictRegistry.get(rootKey(rootPath)))
+    registered.filter(_.sparkSession eq session).orElse {
+      SidecarManifest.anchor(rootPath, session, SidecarManifest.Dict)
+        .filter(a => SidecarManifest.prunable(a, mtimesUnder(rootPath, live)))
+        .map(graft.sources.DictionaryIndex.sidecarFrame(session, rootPath, _))
     }
   }
 

@@ -1,8 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.{BlockStat, MicroBlockIndex}
-
 /** Column stats for one block, as seen by the pruner. `nullCount` /
   * `rows` (None when the footer omitted them) feed the round-7
   * NullCheck cases; min/max feed everything else. */
@@ -18,19 +15,19 @@ final case class ColStats(
 }
 
 /** Zone-map pruning: decide, from per-block min/max alone, which blocks
-  * *may* contain rows matching a predicate.
+  * *may* contain rows matching a predicate ([[mayMatch]]), which
+  * blocks provably hold ONLY matching rows ([[allMatch]]), and which
+  * blocks may hold a top-k row ([[topKKept]]).
   *
   * Same conservative semantics as the reference
   * (query_enginev5.py:100-233): AND intersects, OR unions, unknown
-  * nodes / missing stats keep the block; NEQ never prunes. Two layers:
-  *
-  *  - `mayMatch` — the per-block decision (driver- or executor-side).
-  *  - `candidateFiles`/`decisions` — evaluated over the whole stats
-  *    index grouped by block. At 100 TB the index is a table and this
-  *    runs as a distributed filter; only the surviving *file list*
-  *    (small) returns to the driver to parameterize the scan, and
-  *    Spark's own parquet reader then re-prunes row groups inside the
-  *    surviving files via pushed filters — two-tier skipping.
+  * nodes / missing stats keep the block; NEQ never prunes. Every zone
+  * decision of the engine and the transparent rules runs these on the
+  * DRIVER, over a [[ZoneSnapshot]] of the index; only the resulting
+  * file list parameterizes the scan, and Spark's own parquet reader
+  * then re-prunes row groups inside the surviving files via pushed
+  * filters — two-tier skipping. [[IndexPruning]] compiles the same
+  * algebra into a distributed query for batch evaluation.
   */
 object ZoneMapPruner {
 
@@ -112,6 +109,92 @@ object ZoneMapPruner {
           case _ => true
         }
       }
+  }
+
+  /** The Double stats view is EXACT only strictly inside ±2^53: an
+    * int64 value of 2^53+1 and its neighbor 2^53 round to the SAME
+    * double, and rounding is monotone but not strict — so refutation
+    * stays sound under rounding (round(min) ≤ round(v) ≤ round(max)
+    * whenever min ≤ v ≤ max: a present value is never refuted) but an
+    * ALL-MATCH proof does not: `min >= round(lit)` can hold while
+    * `min >= lit` fails by one ulp. Strictly-inside-±2^53 is the
+    * exactness certificate for all three operands: any long that
+    * ROUNDS strictly below 2^53 IS its rounded double, so gating |min|,
+    * |max| and |lit| < 2^53 makes every compared value exact. NaN fails
+    * the gate, so NaN-valued bounds are never proven. Timestamps
+    * (micros) sit inside the bound for ±285 years around the epoch. */
+  private val ExactDoubleBound = 9007199254740992.0 // 2^53
+  private def exact(x: Double): Boolean = math.abs(x) < ExactDoubleBound
+
+  /** Do ALL rows of a block with these stats satisfy `pred`? The
+    * T-proof dual of [[mayMatch]] (which proves "no row can match"),
+    * sound ONLY for a COMPLETE predicate
+    * ([[PredicateExtractor.convertComplete]]): a weakened predicate's
+    * proof says nothing about its dropped conjuncts. Every comparison
+    * leaf needs a TRUSTED ZERO null count (null rows fail every
+    * comparison) and, numerically, the ±2^53 certificate on bounds and
+    * literal alike. Leaves whose claim bounds values from ABOVE (`<`,
+    * `<=`, `=`, BETWEEN, IN via min == max) also need NaN-faithful
+    * stats ([[ColStats.nanOk]]): a hidden NaN row fails them. `>`,
+    * `>=` and `!=` do not — Spark orders NaN above everything, so a
+    * NaN row satisfies them. Each leaf tries the numeric view, then the
+    * lexical one; the fallthrough is false ("unproven"). */
+  def allMatch(pred: Pred, stats: Map[String, ColStats]): Boolean = {
+    def noNulls(st: ColStats) = st.nullCount.contains(0L)
+    def num(st: ColStats, nanGuard: Boolean)(f: (Double, Double) => Boolean) =
+      (st.minNum, st.maxNum) match {
+        case (Some(mn), Some(mx)) if exact(mn) && exact(mx) && noNulls(st) &&
+            (!nanGuard || st.nanOk) => Some(f(mn, mx))
+        case _ => None
+      }
+    def str(st: ColStats)(f: (String, String) => Boolean) =
+      (st.minStr, st.maxStr) match {
+        case (Some(mn), Some(mx)) if noNulls(st) => Some(f(mn, mx))
+        case _ => None
+      }
+    def first(cands: Option[Boolean]*) = cands.flatten.headOption.getOrElse(false)
+    pred match {
+      case And(l, r) => allMatch(l, stats) && allMatch(r, stats)
+      // one branch covering every row suffices (min/max can't prove a split)
+      case Or(l, r)  => allMatch(l, stats) || allMatch(r, stats)
+      case Between(c, lo, hi) => stats.get(c).exists { st =>
+        first(
+          for { l <- lo.num; h <- hi.num if exact(l) && exact(h); b <-
+            num(st, nanGuard = true)((mn, mx) => mn >= l && mx <= h) } yield b,
+          for { l <- lo.str; h <- hi.str; b <-
+            str(st)((mn, mx) => u8cmp(mn, l) >= 0 && u8cmp(mx, h) <= 0) } yield b)
+      }
+      // provable only for a constant block (min == max) in the list
+      case In(c, vs) => stats.get(c).exists { st =>
+        vs.exists(v => first(
+          for { x <- v.num if exact(x); b <-
+            num(st, nanGuard = true)((mn, mx) => mn == x && mx == x) } yield b,
+          for { x <- v.str; b <- str(st)((mn, mx) => mn == x && mx == x) } yield b))
+      }
+      case Cmp(op, c, v) => stats.get(c).exists { st =>
+        def proof[T](lt: (T, T) => Boolean, eq: (T, T) => Boolean)
+            : Option[(T, T, T) => Boolean] = op match {
+          case "="  => Some((mn, mx, x) => eq(mn, x) && eq(mx, x))
+          case "!=" => Some((mn, mx, x) => lt(mx, x) || lt(x, mn))
+          case ">"  => Some((mn, _, x) => lt(x, mn))
+          case ">=" => Some((mn, _, x) => !lt(mn, x))
+          case "<"  => Some((_, mx, x) => lt(mx, x))
+          case "<=" => Some((_, mx, x) => !lt(x, mx))
+          case _    => None
+        }
+        val nanGuard = op == "=" || op == "<" || op == "<="
+        first(
+          for { x <- v.num if exact(x); f <- proof[Double](_ < _, _ == _); b <-
+            num(st, nanGuard)((mn, mx) => f(mn, mx, x)) } yield b,
+          for { x <- v.str; f <- proof[String](u8cmp(_, _) < 0, _ == _); b <-
+            str(st)((mn, mx) => f(mn, mx, x)) } yield b)
+      }
+      // IS NOT NULL: a trusted zero null count; IS NULL: an all-null block
+      case NullCheck(c, negated) => stats.get(c).exists { st =>
+        if (negated) st.nullCount.contains(0L)
+        else st.nullCount.exists(n => st.rows.contains(n))
+      }
+    }
   }
 
   private def cmpMayMatch(op: String, mn: Double, mx: Double, x: Double): Boolean = op match {
@@ -205,40 +288,5 @@ object ZoneMapPruner {
         }
       Some((kept ++ statless).map(_._1).toSet)
     }
-  }
-
-  /** One index row's stats as the pruner sees them (a negative null
-    * count is the footer's "unknown"). */
-  def colStats(s: BlockStat): ColStats = ColStats(s.minNum, s.maxNum, s.minStr, s.maxStr,
-    Some(s.nullCount).filter(_ >= 0), Some(s.rows), s.nanRisk)
-
-  /** Group a stats index (collected for one table) by block. */
-  def byBlock(stats: Seq[BlockStat]): Seq[(Int, String, Long, Map[String, ColStats])] =
-    stats.groupBy(b => (b.blockId, b.file)).toSeq
-      .map { case ((id, file), cols) =>
-        (id, file, cols.head.rows, cols.map(c => c.column -> colStats(c)).toMap)
-      }
-      .sortBy(_._1)
-
-  /** Per-block keep/skip decisions for a predicate. */
-  def decisions(stats: Seq[BlockStat], pred: Pred): Seq[(Int, String, Long, Boolean)] =
-    byBlock(stats).map { case (id, file, rows, m) => (id, file, rows, mayMatch(pred, m)) }
-
-  /** Candidate files for a predicate; falls back to all files when
-    * everything pruned (the reference keeps ≥1 block —
-    * query_enginev5.py:95-99 — we keep the scan non-empty-safe the same
-    * way Spark does: an empty file list is fine, so no fallback needed,
-    * but we preserve the reference's behavior for parity). */
-  def candidateFiles(stats: Seq[BlockStat], pred: Pred): Seq[String] = {
-    val d = decisions(stats, pred)
-    val kept = d.filter(_._4).map(_._2).distinct
-    if (kept.isEmpty) d.map(_._2).distinct else kept
-  }
-
-  /** Pruned scan: file-level skip from the index + Spark's native
-    * row-group pushdown inside surviving files + row-level filter. */
-  def prunedRead(spark: SparkSession, stats: Seq[BlockStat], pred: Pred): DataFrame = {
-    val files = candidateFiles(stats, pred)
-    spark.read.parquet(files: _*).filter(pred.toColumn)
   }
 }

@@ -654,7 +654,7 @@ object MicroBlockQueries {
     // one pruned scan with the original filter — exact by
     // construction (plans/DictDistinctRule.tryCountDistinctFiltered;
     // the all-rows-match proofs need a COMPLETE predicate conversion
-    // and per-block zero null counts — IndexPruning.allMatchColumn).
+    // and per-block zero null counts — ZoneMapPruner.allMatch).
     // Fire/refusal shapes are pinned in DictDistinctRuleSpec. Oracle =
     // the same filtered count-distincts full-scanned by DuckDB.
     QueryDef.sql(

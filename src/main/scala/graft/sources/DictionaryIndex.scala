@@ -379,8 +379,7 @@ object DictionaryIndex {
     (n, covered, all.size.toLong)
   }
 
-  /** Batched [[countDistinct]] — the [[graft.plans.IndexPruning.decideMany]]
-    * discipline: ONE coverage collect and ONE distributed aggregation
+  /** Batched [[countDistinct]]: ONE coverage collect and ONE distributed aggregation
     * serve every FULLY-COVERED column (each typed value array explodes
     * tagged by column; a column populates exactly one array, so the
     * per-type partial counts sum without overlap). Columns with any
@@ -714,20 +713,71 @@ object DictionaryIndex {
     SidecarManifest.invalidate(tablePath)
   }
 
+  /** Load a saved dictionary index with its schema PINNED to
+    * [[FileDict]]'s: no schema-inference job. Columns older sidecars
+    * predate (nullCount, round 10; fileMtime/fileSize, round 12) read
+    * as -1 = unknown, the conservative value every consumer handles. */
   def load(spark: SparkSession, path: String): Dataset[FileDict] = {
     import spark.implicits._
-    var df = spark.read.parquet(path)
-    // round-10 sidecars predate nullCount, round-12 ones predate the
-    // per-file status fields: -1 = unknown, the conservative value
-    // every consumer already handles
-    for (c <- Seq("nullCount", "fileMtime", "fileSize"))
-      if (!df.columns.contains(c)) df = df.withColumn(c, lit(-1L))
-    // case-class column order: refresh's by-position union appends an
-    // encoder-ordered dataset
-    val order = org.apache.spark.sql.Encoders.product[FileDict]
-      .schema.fieldNames
-    df.select(order.map(col): _*).as[FileDict]
+    loadFrame(spark, path).as[FileDict]
   }
+
+  /** [[load]] as a DataFrame: no encoder is derived, which costs tens
+    * of milliseconds of reflection on the planning hot path. */
+  def loadFrame(spark: SparkSession, path: String): DataFrame = {
+    val legacy = Set("nullCount", "fileMtime", "fileSize")
+    spark.read.schema(schema).parquet(path)
+      .select(schema.fieldNames.toSeq.map(c =>
+        if (legacy(c)) coalesce(col(c), lit(-1L)).as(c) else col(c)): _*)
+  }
+
+  private lazy val schema = org.apache.spark.sql.Encoders.product[FileDict].schema
+
+  // (root key, session key) -> (anchor, the sidecar's frame at it)
+  private val frames = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(String, String), (Long, DataFrame)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(String, String), (Long, DataFrame)]): Boolean =
+        (size > 64) && { unpersistQuietly(e.getValue._2); true }
+    })
+
+  /** The `_graft_dict` sidecar of `tablePath` as saved at `anchor`
+    * ([[SidecarManifest.anchor]]): ONE persisted frame per (root,
+    * session, anchor), so every decision and serve over one sidecar
+    * generation reads the same cached frame and plans no schema job.
+    * A new anchor replaces (and unpersists) the old generation's frame;
+    * [[SidecarManifest.invalidate]] drops it. */
+  def sidecarFrame(spark: SparkSession, tablePath: String, anchor: Long): DataFrame =
+    frames.synchronized {
+      val key = (graft.plans.ZoneMapPruneRule.rootKey(tablePath),
+        SidecarManifest.sessionKey(spark))
+      Option(frames.get(key)) match {
+        case Some((a, df)) if a == anchor => df
+        case old =>
+          old.foreach(e => unpersistQuietly(e._2))
+          val df = loadFrame(spark, sidecarPath(tablePath)).persist()
+          frames.put(key, (anchor, df))
+          df
+      }
+    }
+
+  private[sources] def dropFrames(tablePath: String): Unit = {
+    val r = graft.plans.ZoneMapPruneRule.rootKey(tablePath)
+    frames.synchronized {
+      frames.entrySet().removeIf { e =>
+        (e.getKey._1 == r) && { unpersistQuietly(e.getValue._2); true }
+      }
+    }
+  }
+
+  private[sources] def dropAllFrames(): Unit = frames.synchronized {
+    frames.values().forEach(e => unpersistQuietly(e._2))
+    frames.clear()
+  }
+
+  private def unpersistQuietly(df: DataFrame): Unit =
+    try if (!df.sparkSession.sparkContext.isStopped) df.unpersist(blocking = false)
+    catch { case scala.util.control.NonFatal(_) => () }
 
   /** INCREMENTAL refresh (the [[MicroBlockIndex.refresh]] contract):
     * read dictionary pages only for files the existing index doesn't

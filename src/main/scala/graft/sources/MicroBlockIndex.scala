@@ -39,7 +39,7 @@ import scala.jdk.CollectionConverters._
   * stats may be NaN-blind, Some(false) = trustworthy (non-float
   * column, or a parquet-mr writer — parquet-mr propagates NaN into
   * max, measured on 1.16), None (legacy sidecar back-fill) = unknown,
-  * treated as risky. The proof layers ([[graft.plans.IndexPruning]])
+  * treated as risky. The proof layers ([[graft.plans.ZoneMapPruner]])
   * refuse exactly the leaves NaN can break unless nanRisk is a
   * recorded false. `sumLong` (round 14) carries the PER-FILE exact
   * integral sum for opt-in columns ([[MicroBlockIndex.withSums]]),
@@ -81,8 +81,8 @@ final case class BlockStat(
 /** Per-block serving metadata — what the engine's driver-side cache /
   * prefetch orchestration actually needs: ONE small row per block
   * (id, file, row range), independent of column count. Collecting this
-  * is file-list-scale; the per-(block × column) stats stay distributed
-  * (see [[graft.plans.IndexPruning]]). */
+  * is file-list-scale; per-(block × column) stats reach the driver only
+  * for the columns a predicate references ([[graft.plans.ZoneSnapshot]]). */
 final case class BlockMeta(
     blockId: Int, file: String, rows: Long, rowStart: Long, rowEnd: Long)
 
@@ -385,15 +385,13 @@ object MicroBlockIndex {
   /** The table's SIDECAR location, `<tablePath>/_graft_index`
     * ([[SidecarManifest.location]]): any session discovers the index
     * from the table path alone ([[graft.plans.ZoneMapPruneRule]]
-    * auto-registers current sidecars). */
+    * decides over current sidecars). */
   def sidecarPath(tablePath: String): String =
     SidecarManifest.location(tablePath, SidecarManifest.Zone)
 
-  /** [[save]] at the sidecar location ([[SidecarManifest.save]]).
-    * NOTE: a session that has already probed this table and found no
-    * sidecar memoizes that — call [[graft.plans.ZoneMapPruneRule
-    * .registerSaved]] (or unregister the path) to pick the new sidecar
-    * up in-session; fresh sessions discover it automatically. */
+  /** [[save]] at the sidecar location ([[SidecarManifest.save]], which
+    * drops the root's memos: the next query in any session decides over
+    * the new sidecar). */
   def saveSidecar(index: Dataset[BlockStat], tablePath: String): Unit =
     SidecarManifest.save(index.sparkSession, tablePath,
       SidecarManifest.Zone)(save(index, _))
@@ -533,27 +531,22 @@ object MicroBlockIndex {
     base.toDF().unionByName(withDelta.toDF()).as[BlockStat]
   }
 
-  /** Load a saved index, BACK-FILLING columns older sidecars predate
-    * (minLong/maxLong, round 13) with nulls — absent exact stats are
-    * "unknown", which every consumer already treats conservatively. */
+  /** Load a saved index with its schema PINNED to [[BlockStat]]'s: no
+    * schema-inference job. Columns older sidecars predate (minLong/
+    * maxLong, round 13; nanRisk, round 14; sumLong, fileMtime/fileSize)
+    * read as null = unknown, which every consumer already treats
+    * conservatively (a null nanRisk counts as risky). */
   def load(spark: SparkSession, path: String): Dataset[BlockStat] = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.lit
-    var df = spark.read.parquet(path)
-    Seq("minLong", "maxLong", "sumLong", "fileMtime", "fileSize").foreach { c =>
-      if (!df.columns.contains(c)) df = df.withColumn(c, lit(null).cast("long"))
-    }
-    // legacy sidecars predate the NaN-faithfulness flag: null = unknown
-    // = the proof layers treat the entry as risky (conservative)
-    if (!df.columns.contains("nanRisk"))
-      df = df.withColumn("nanRisk", lit(null).cast("boolean"))
-    // normalize to the case-class column ORDER: downstream unions
-    // (refresh appends an encoder-ordered dataset) are positional, and
-    // a legacy sidecar's back-filled columns land at the END otherwise
-    val order = org.apache.spark.sql.Encoders.product[BlockStat]
-      .schema.fieldNames
-    df.select(order.map(org.apache.spark.sql.functions.col): _*).as[BlockStat]
+    loadFrame(spark, path).as[BlockStat]
   }
+
+  /** [[load]] as a DataFrame: no encoder is derived, which costs tens
+    * of milliseconds of reflection on the planning hot path. */
+  def loadFrame(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schema).parquet(path)
+
+  private lazy val schema = org.apache.spark.sql.Encoders.product[BlockStat].schema
 
   def listParquetFiles(tablePath: String): Seq[String] =
     listParquetFilesWithStatus(tablePath).map(_._1)
@@ -600,13 +593,17 @@ object MicroBlockIndex {
     * encoded in the directory names survive the subset read (a bare
     * `read.parquet(files)` silently drops them and any downstream
     * reference to a partition column fails). No-op for single-file
-    * tables. */
+    * tables. A known `dataSchema` (the relation's, at plan time) is
+    * pinned, so the read plans without a schema-inference job. */
   def readFilesAsTable(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, files: Seq[String]): org.apache.spark.sql.DataFrame = {
+      tablePath: String, files: Seq[String],
+      dataSchema: Option[org.apache.spark.sql.types.StructType] = None)
+      : org.apache.spark.sql.DataFrame = {
     val p = new Path(tablePath)
-    val fs = p.getFileSystem(new Configuration())
-    if (fs.getFileStatus(p).isFile) spark.read.parquet(files: _*)
-    else spark.read.option("basePath", fs.makeQualified(p).toString)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val reader = dataSchema.fold(spark.read)(spark.read.schema(_))
+    if (fs.getFileStatus(p).isFile) reader.parquet(files: _*)
+    else reader.option("basePath", fs.makeQualified(p).toString)
       .parquet(files: _*)
   }
 }

@@ -149,13 +149,13 @@ object SidecarManifest {
     catch { case scala.util.control.NonFatal(_) => false }
   }
 
-  // the QUALIFYING normalization (not the cheap scheme-strip): writers
-  // invalidate with whatever spelling they were handed — often a
-  // relative path — and it must hit the same key the planner's
-  // absolute rootPaths probed under. makeQualified is string/VFS work,
-  // no disk I/O.
+  // writers invalidate with whatever spelling they were handed — often
+  // a relative path — and it must hit the same key the planner's
+  // absolute rootPaths probed under: the cheap scheme-strip for
+  // absolute spellings (this sits on the planning hot path, once per
+  // anchor read), the qualifying normalization for relative ones
   private def norm(p: String): String =
-    graft.plans.ZoneMapPruneRule.norm(p)
+    graft.plans.ZoneMapPruneRule.rootKey(p)
 
   /** The `_graft*` child names present under `rootPath` — one
     * listStatus per (root, session), positive and negative memoized.
@@ -207,11 +207,15 @@ object SidecarManifest {
       while (it.hasNext) if (it.next()._1 == r) it.remove()
     }
     DictionaryIndex.invalidateBytes(rootPath)
+    DictionaryIndex.dropFrames(rootPath)
+    graft.plans.ZoneSnapshot.drop(rootPath)
   }
 
   /** Drop every memo (test isolation / explicit register calls). */
   def invalidateAll(): Unit = {
     cache.clear()
     DictionaryIndex.invalidateAllBytes()
+    DictionaryIndex.dropAllFrames()
+    graft.plans.ZoneSnapshot.dropAll()
   }
 }

@@ -521,9 +521,10 @@ class DictDistinctRuleSpec extends AnyFunSuite {
       DictionaryIndex.build(spark, base, "li", Seq("l_suppkey")), base)
     val root = "file:" + new java.io.File(base).getAbsolutePath
     assert(DictionaryIndex.sidecarPath(root).length > 100)
-    // the zone-map rule's sidecar discovery persists the frame the
-    // serve's own sidecar read then hits in Spark's cache
-    val cached = graft.plans.ZoneMapPruneRule.dictIndexFor(root, spark).get
+    // the rules share one persisted frame per sidecar anchor; the
+    // serve's sidecar read is that cached frame
+    val cached = DictionaryIndex.sidecarFrame(spark, root,
+      graft.sources.SidecarManifest.anchor(root, spark, graft.sources.SidecarManifest.Dict).get)
     cached.count()
     try {
       spark.read.parquet(base).createOrReplaceTempView("dr_long")

@@ -419,8 +419,9 @@ class ExtensionsSpec extends AnyFunSuite {
         .limit(12).select("l_orderkey", "l_linenumber", "l_shipdate").collect()
       assert(viaRule.collect().toSeq == expected.toSeq, "top-k rows must be identical")
       // the cut must match the engine path's stats-only block selection
-      val skip = graft.plans.IndexPruning.topKSkippedFiles(
-        MicroBlockIndex.build(spark, mbPath, "lineitem").toDF(), "l_shipdate", 12,
+      val built = MicroBlockIndex.build(spark, mbPath, "lineitem").toDF()
+      val skip = graft.plans.ZoneSnapshot.topKSkippedFiles(spark,
+        Seq(new graft.plans.ZoneSnapshot(_ => built)), "l_shipdate", 12,
         ascending = false, nullsFirst = false)
       assert(skip.nonEmpty, "clustered layout must prove a cut for k=12")
       assert(scannedFiles(viaRule) == totalFiles - skip.size,

@@ -121,29 +121,10 @@ class IndexPruningSpec extends AnyFunSuite {
       assert(kept.forall(identity),
         s"NaN-valued bounds must keep conservatively for $p")
       assert(IndexPruning.skippedFiles(index, p).isEmpty)
-      // and the T-proof side stays unproven (numExact rejects NaN)
-      val t = IndexPruning.fileTriState(index, p)
-        .collect().map(r => (r.getBoolean(1), r.getBoolean(2)))
-      assert(t.forall { case (allTrue, allFalse) => !allTrue && !allFalse })
-    }
-  }
-
-  test("decideMany == per-predicate decide over random blocks and predicate batches") {
-    import spark.implicits._
-    for (_ <- 1 to 4) {
-      val blocks = (0 until 80).map(id => id -> blockEntries(id))
-      val index = spark.createDataset(blocks.flatMap(_._2)).toDF()
-      val preds = Seq.fill(6)(pred()).distinct
-      val batched = IndexPruning.decideMany(index, preds)
-        .collect().map(r => r.getInt(0) -> r.getSeq[Boolean](5)).toMap
-      preds.zipWithIndex.foreach { case (p, i) =>
-        val single = IndexPruning.decide(index, p)
-          .collect().map(r => r.getInt(0) -> r.getBoolean(5)).toMap
-        blocks.foreach { case (id, _) =>
-          assert(batched(id)(i) == single(id),
-            s"batched/single disagree on block $id for $p")
-        }
-      }
+      // and the driver tri-state stays unproven (the ±2^53 certificate
+      // rejects NaN)
+      val (allTrue, allFalse) = new ZoneSnapshot(_ => index).triState(spark, p)
+      assert(allTrue.isEmpty && allFalse.isEmpty)
     }
   }
 
@@ -284,19 +265,18 @@ class IndexPruningSpec extends AnyFunSuite {
         // `>` refutation needs recorded NaN-faithful stats (round 14)
         lit(false).as("nanRisk"))
     val pred = graft.plans.Cmp(">", "x", graft.plans.PredValue(150.0))
-    val roots = Seq("memtest-root")
+    def skip(): Set[String] = ZoneSnapshot.skippedFiles(spark,
+      ZoneMapPruneRule.zoneFor("memtest-root", spark, Map.empty).toSeq, pred)
     // index says values span [0, 100] -> everything above 150 skippable
-    val skip1 = graft.plans.ZoneMapPruneRule.skipSet(roots, Seq(syntheticIndex(100)), pred)
-    assert(skip1.size == 4, s"all 4 files refutable, got $skip1")
-    // cached: same roots+pred with a DIFFERENT index df must still hit the memo
-    val cached = graft.plans.ZoneMapPruneRule.skipSet(roots, Seq(syntheticIndex(1000)), pred)
-    assert(cached == skip1, "decision must come from the cache")
-    // registration churn clears the memo -> fresh stats take effect
-    graft.plans.ZoneMapPruneRule.register("memtest-root", syntheticIndex(1000))
+    ZoneMapPruneRule.register("memtest-root", syntheticIndex(100))
     try {
-      val skip2 = graft.plans.ZoneMapPruneRule.skipSet(roots, Seq(syntheticIndex(1000)), pred)
+      val skip1 = skip()
+      assert(skip1.size == 4, s"all 4 files refutable, got $skip1")
+      // re-registering a refreshed index -> its fresh stats take effect
+      ZoneMapPruneRule.register("memtest-root", syntheticIndex(1000))
+      val skip2 = skip()
       assert(skip2.isEmpty, s"refreshed index spans [0,1000]: nothing refutable, got $skip2")
-    } finally graft.plans.ZoneMapPruneRule.unregister("memtest-root")
+    } finally ZoneMapPruneRule.unregister("memtest-root")
   }
 
   test("IS NULL / IS NOT NULL prune from real footer null counts, end-to-end") {

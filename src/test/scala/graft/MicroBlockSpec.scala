@@ -121,12 +121,13 @@ class MicroBlockSpec extends AnyFunSuite {
   }
 
   test("pruning is conservative and effective on the cluster key") {
-    val stats = MicroBlockIndex.build(spark, mbPath, "lineitem").collect().toSeq
+    val idx = MicroBlockIndex.build(spark, mbPath, "lineitem").toDF()
     val pred = Between("l_shipdate", PredValue.ts("2000-01-01"), PredValue.ts("2000-07-01"))
-    val dec = ZoneMapPruner.decisions(stats, pred)
-    assert(dec.exists(!_._4), "range predicate on cluster key must prune some blocks")
+    val (files, kept) = new ZoneSnapshot(_ => idx).keptFiles(spark, pred)
+    assert(kept.nonEmpty && kept.size < files.size,
+      "range predicate on cluster key must prune some blocks")
     // correctness: pruned scan result == full scan + filter
-    val pruned = ZoneMapPruner.prunedRead(spark, stats, pred).count()
+    val pruned = spark.read.parquet(kept.toSeq: _*).filter(pred.toColumn).count()
     val full = spark.read.parquet(mbPath).filter(pred.toColumn).count()
     assert(pruned == full)
   }

@@ -94,14 +94,16 @@ class SidecarAnchorSpec extends AnyFunSuite {
 
   test("a file rewritten in place after the build: all refuse, the rebuild serves its new rows") {
     val path = layout("touched")
-    // the zone-map rule's discovery persists frames of both sidecars:
-    // frames of the old build must not answer reads of the rebuilt one
-    // (the rebuild's overwrite refreshes Spark's cache for its path)
+    // the rules hold a driver snapshot of the zone sidecar and a
+    // persisted frame of the dictionary sidecar, both of the old
+    // build: neither may answer reads of the rebuilt one
     val root = "file:" + new java.io.File(path).getAbsolutePath
-    val discovered = Seq(graft.plans.ZoneMapPruneRule.indexFor(root, spark),
-      graft.plans.ZoneMapPruneRule.dictIndexFor(root, spark)).flatten
-    assert(discovered.size == 2)
-    discovered.foreach(_.count())
+    val zone = graft.plans.ZoneMapPruneRule.zoneFor(root, spark, Map.empty)
+    assert(zone.isDefined)
+    zone.get.ensure(spark, Set("k", "v"))
+    val dictFrame = DictionaryIndex.sidecarFrame(spark, root,
+      SidecarManifest.anchor(root, spark, SidecarManifest.Dict).get)
+    dictFrame.count()
     // rewrite the last file under its own name with different values
     val victim = files(path).last
     val tmp = scratch("touched-tmp")
@@ -121,7 +123,7 @@ class SidecarAnchorSpec extends AnyFunSuite {
     finally {
       graft.plans.ZoneMapPruneRule.unregister(root)
       graft.plans.ZoneMapPruneRule.unregisterDict(root)
-      discovered.foreach(_.unpersist())
+      dictFrame.unpersist()
     }
   }
 

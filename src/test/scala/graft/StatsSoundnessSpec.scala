@@ -148,18 +148,15 @@ class StatsSoundnessSpec extends AnyFunSuite {
     assert(IndexPruning.skippedFiles(safe, gt) == Seq("f0"))
     // `<` refutes through min — NaN cannot hide there
     assert(IndexPruning.skippedFiles(risky, Cmp("<", "d", PredValue(0.5))) == Seq("f0"))
-    // T-proof of `<=` claims an upper bound on every row
-    def allTrue(idx: org.apache.spark.sql.DataFrame) =
-      IndexPruning.fileTriState(idx, le).collect()
-        .map(r => (r.getString(0), r.getBoolean(1))).toMap
-    assert(!allTrue(risky)("f0"))
-    assert(!allTrue(legacy)("f0"))
-    assert(allTrue(safe)("f0"))
+    // T-proof of `<=` claims an upper bound on every row (the driver
+    // tri-state the rules decide by)
+    def allTrue(idx: org.apache.spark.sql.DataFrame, p: Pred = le) =
+      new ZoneSnapshot(_ => idx).triState(spark, p)._1.contains("f0")
+    assert(!allTrue(risky))
+    assert(!allTrue(legacy))
+    assert(allTrue(safe))
     // T-proof of `>` leans on min only — sound even NaN-blind
-    def allTrueGt(idx: org.apache.spark.sql.DataFrame) =
-      IndexPruning.fileTriState(idx, Cmp(">", "d", PredValue(0.5))).collect()
-        .map(r => (r.getString(0), r.getBoolean(1))).toMap
-    assert(allTrueGt(risky)("f0"))
+    assert(allTrue(risky, Cmp(">", "d", PredValue(0.5))))
     // driver-side mirror agrees
     val st = Map("d" -> ColStats(Some(1.0), Some(2.0), None, None,
       Some(0L), Some(3L), Some(true)))
@@ -199,13 +196,13 @@ class StatsSoundnessSpec extends AnyFunSuite {
     val risky = spark.createDataset(Seq(nanBlindEntry("f0", Some(true)),
       nanBlindEntry("f1", Some(true)).copy(blockId = 1, minNum = Some(10.0),
         maxNum = Some(20.0)))).toDF()
-    assert(IndexPruning.topKSkippedFiles(risky, "d", 1,
-      ascending = false, nullsFirst = false).isEmpty)
+    def cut(idx: org.apache.spark.sql.DataFrame) = ZoneSnapshot.topKSkippedFiles(spark,
+      Seq(new ZoneSnapshot(_ => idx)), "d", 1, ascending = false, nullsFirst = false)
+    assert(cut(risky).isEmpty)
     val safe = spark.createDataset(Seq(nanBlindEntry("f0", Some(false)),
       nanBlindEntry("f1", Some(false)).copy(blockId = 1, minNum = Some(10.0),
         maxNum = Some(20.0)))).toDF()
-    assert(IndexPruning.topKSkippedFiles(safe, "d", 1,
-      ascending = false, nullsFirst = false) == Seq("f0"))
+    assert(cut(safe) == Set("f0"))
   }
 
   // ---------------------------------------------------------------

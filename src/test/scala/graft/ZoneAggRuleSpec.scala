@@ -82,10 +82,10 @@ class ZoneAggRuleSpec extends AnyFunSuite {
       graft.sources.MicroBlockIndex.sidecarPath(base))
     val pred = graft.plans.Cmp(">=", "l_shipdate",
       graft.plans.PredValue.ts("1997-06-15 00:00:00"))
-    val tri = graft.plans.IndexPruning.fileTriState(idx.toDF(), pred)
-      .collect().map(r => (r.getString(0), r.getBoolean(1), r.getBoolean(2)))
-    val undecided = tri.count(t => !t._2 && !t._3)
-    assert(tri.exists(_._2), "fixture: some file must be provably all-match")
+    val audit = new graft.plans.ZoneSnapshot(_ => idx.toDF())
+    val (allTrue, allFalse) = audit.triState(spark, pred)
+    val undecided = (audit.fileRows(spark).keySet -- allTrue -- allFalse).size
+    assert(allTrue.nonEmpty, "fixture: some file must be provably all-match")
     assert(baseFilesRead(servedDf, "zoneagg/base") == Seq(undecided),
       s"scan side must read exactly the $undecided straddlers")
     val truth = spark.read.parquet(base)
