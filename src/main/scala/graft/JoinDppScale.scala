@@ -40,8 +40,7 @@ object JoinDppScale {
     // DPP (the pre-fix r13 run did exactly that; its keptScan
     // assertion below would have caught it). Scrub any sidecar a
     // previous run left behind for the same reason.
-    graft.sources.DictionaryIndex.deleteSidecar(
-      out, spark.sparkContext.hadoopConfiguration)
+    graft.sources.SidecarManifest.delete(out, graft.sources.SidecarManifest.Dict)
     val idx = graft.sources.DictionaryIndex.build(spark, out, "li",
       Seq("l_suppkey")).toDF().persist()
     idx.count()

@@ -42,8 +42,7 @@ object JoinDppStarScale {
         out, Seq("l_suppkey", "l_partkey"), blocks)
     }
     // scrub any sidecar a previous run left (discovery poisons the A/B)
-    graft.sources.DictionaryIndex.deleteSidecar(
-      out, spark.sparkContext.hadoopConfiguration)
+    graft.sources.SidecarManifest.delete(out, graft.sources.SidecarManifest.Dict)
     val idx = graft.sources.DictionaryIndex.build(spark, out, "li",
       Seq("l_suppkey", "l_partkey")).toDF().persist()
     idx.count()

@@ -72,10 +72,10 @@ import graft.sources.{AggView, SidecarManifest}
   * only on mtime change). Anything unrecognized or doubtful leaves
   * the plan untouched.
   *
-  * Discovery: explicit [[AggViewRewriteRule.registerView]], or a
-  * `_graft_views` marker next to the data
-  * ([[graft.sources.AggView.writeMarker]]) probed once per
-  * (root, session) — fresh sessions rewrite with no register call.
+  * Discovery: explicit [[AggViewRewriteRule.registerView]], or a view
+  * marker next to the data ([[graft.sources.AggView.writeMarker]]),
+  * read once per (root, session) through the manifest — fresh
+  * sessions rewrite with no register call.
   */
 case class AggViewRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   import AggViewRewriteRule._
@@ -108,52 +108,17 @@ object AggViewRewriteRule {
   /** Opt `tablePath` into transparent rewriting onto the view at
     * `viewPath`. One table may carry several views (one per value
     * column); the rule picks by shape. */
-  def registerView(tablePath: String, viewPath: String): Unit = {
+  def registerView(tablePath: String, viewPath: String): Unit =
     registry.merge(norm(tablePath), Set(viewPath), _ ++ _)
-    markerCache.clear()
-  }
 
-  def unregisterViews(tablePath: String): Unit = {
+  def unregisterViews(tablePath: String): Unit =
     registry.remove(norm(tablePath))
-    markerCache.clear()
-  }
 
-  /** Drop memoized marker probes. Called by
-    * [[graft.sources.AggView.writeMarker]] so a marker written in THIS
-    * session becomes discoverable without a register call — the
-    * session may already have memoized a negative probe for the root
-    * (any aggregate planned over the table does one, including the
-    * view build itself). */
-  def invalidateMarkerCache(): Unit = markerCache.clear()
-
-  // (root, session-uuid) -> marker view paths (None = probed, nothing
-  // there) — the bloomMarkerCache discipline: positive AND negative
-  // memoized, one filesystem round-trip per session ever.
-  private val markerCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String), Option[Seq[String]]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), Option[Seq[String]]]): Boolean =
-        size > 256
-    })
-
-  private def viewsFor(rootPath: String, session: SparkSession): Seq[String] = {
-    val explicit = registry.getOrDefault(
-      ZoneMapPruneRule.normFile(rootPath), Set.empty[String]).toSeq
-    val key = (ZoneMapPruneRule.normFile(rootPath), SidecarManifest.sessionKey(session))
-    var marked = markerCache.get(key)
-    if (marked == null) {
-      // presence via the shared one-probe-per-table manifest; only a
-      // present marker pays its own read
-      marked =
-        if (!SidecarManifest.has(rootPath, session, "_graft_views"))
-          None
-        else
-          try AggView.markerViews(rootPath)
-          catch { case scala.util.control.NonFatal(_) => None }
-      markerCache.put(key, marked)
-    }
-    (explicit ++ marked.getOrElse(Nil)).distinct
-  }
+  /** Registered views, then the root's view marker, read once per
+    * (root, session) through the manifest. */
+  private def viewsFor(rootPath: String, session: SparkSession): Seq[String] =
+    (registry.getOrDefault(ZoneMapPruneRule.normFile(rootPath), Set.empty[String]).toSeq ++
+      AggView.markerViews(session, rootPath).getOrElse(Nil)).distinct
 
   // viewPath -> (meta file mtime, parsed meta): stat-checked per use,
   // re-read only when the meta file changed (a refresh rewrote it)
@@ -163,7 +128,7 @@ object AggViewRewriteRule {
   private def metaFor(viewPath: String): Option[AggView.ViewMeta] =
     try {
       val p = new Path(viewPath, "_graft_view")
-      val mtime = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+      val mtime = p.getFileSystem(SidecarManifest.sharedConf)
         .getFileStatus(p).getModificationTime
       val hit = metaCache.get(viewPath)
       if (hit != null && hit._1 == mtime) Some(hit._2)

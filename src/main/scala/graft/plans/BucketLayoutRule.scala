@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -15,19 +14,20 @@ import graft.sources.SidecarManifest
   * session registering a catalog table first.
   *
   * The catalog is per-JVM, but the layout (and its clustering cost)
-  * persists: the `_graft_bucket_spec.json` sidecar written at cluster
-  * time records the key and bucket count, and this rule re-attaches
-  * that spec to the relation (`HadoopFsRelation.bucketSpec`) when the
-  * claim is PROVABLY still true of the files on disk. This is the
+  * persists: the bucket-spec marker written at cluster time
+  * ([[graft.sources.SidecarManifest.BucketSpec]]) records the key and
+  * bucket count, and this rule re-attaches that spec to the relation
+  * (`HadoopFsRelation.bucketSpec`) when the claim is PROVABLY still
+  * true of the files on disk. This is the
   * q12/q20 pay-once-reuse-forever story made session-free — the same
   * sidecar-discovery contract the zone/dict/bloom/view layers follow.
   *
   * A wrong bucket claim is wrong ROWS (two rows with equal keys
   * presumed co-located aren't), so the claim gates hard:
   *
-  *   - the sidecar must exist (one shared [[graft.sources
-  *     .SidecarManifest]] probe per (root, session)) and parse; the
-  *     key must be a data column of the relation;
+  *   - the marker must exist (read once per (root, session) through
+  *     [[graft.sources.SidecarManifest.marker]]) and parse; the key
+  *     must be a data column of the relation;
   *   - EVERY live data file must carry a parseable `_NNNNN` bucket-id
   *     suffix below the bucket count — a file appended by a plain
   *     (unbucketed) write has no such suffix and refuses the claim;
@@ -66,46 +66,17 @@ case class BucketLayoutRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
 object BucketLayoutRule {
 
-  // (root, session-uuid) -> parsed spec (key, buckets, spec mtime);
-  // None = no/invalid sidecar. Freshness is NOT cached — the per-file
-  // suffix+mtime gate runs per query against the relation's live
-  // listing (already in memory via liveStatsOf: no filesystem I/O).
-  private val specCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String), Option[(String, Int, Long)]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), Option[(String, Int, Long)]])
-          : Boolean = size > 256
-    })
-
-  private[graft] def clearCache(): Unit = specCache.clear()
-
-  /** The root's parsed `_graft_bucket_spec.json`, memoized per
-    * (root, session). */
+  /** The root's parsed bucket-spec marker (key, buckets, spec mtime),
+    * read once per (root, session) through the manifest; None = no or
+    * invalid marker. Freshness is NOT memoized — the per-file
+    * suffix+mtime gate runs per query against the relation's live
+    * listing (already in memory via liveStatsOf: no filesystem I/O). */
   private[plans] def specFor(rootPath: String,
-      session: SparkSession): Option[(String, Int, Long)] = {
-    val key = (ZoneMapPruneRule.normFile(rootPath), SidecarManifest.sessionKey(session))
-    val hit = specCache.get(key)
-    if (hit != null) return hit
-    val found =
-      if (!SidecarManifest.has(rootPath, session,
-        graft.sources.Bucketing.SpecFileName)) None
-      else
-        try {
-          val p = new Path(new Path(rootPath),
-            graft.sources.Bucketing.SpecFileName)
-          val fs = p.getFileSystem(session.sessionState.newHadoopConf())
-          val st = fs.getFileStatus(p)
-          val in = fs.open(p)
-          val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          graft.sources.Bucketing.parseSpec(raw).map { case (k, n) =>
-            (k, n, st.getModificationTime)
-          }
-        } catch { case scala.util.control.NonFatal(_) => None }
-    specCache.put(key, found)
-    found
-  }
+      session: SparkSession): Option[(String, Int, Long)] =
+    SidecarManifest.marker(rootPath, session, SidecarManifest.BucketSpec)
+      .flatMap { case (mtime, raw) =>
+        graft.sources.Bucketing.parseSpec(raw).map { case (k, n) => (k, n, mtime) }
+      }
 
   private[plans] def tryClaim(spark: SparkSession, rel: LogicalRelation,
       hfs: HadoopFsRelation): Option[LogicalRelation] =

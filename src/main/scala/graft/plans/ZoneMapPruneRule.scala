@@ -376,19 +376,18 @@ object ZoneMapPruneRule {
   def registerBloom(rootPath: String, columns: Seq[String] = Nil): Unit = {
     bloomRoots.put(norm(rootPath), columns.toSet)
     bloomDecisionCache.clear()
-    bloomMarkerCache.clear()
   }
 
   def unregisterBloom(rootPath: String): Unit = {
     bloomRoots.remove(norm(rootPath))
     bloomDecisionCache.clear()
-    bloomMarkerCache.clear()
   }
 
   /** The bloom-probe column set for `rootPath` (None = do not probe).
-    * An explicit [[registerBloom]] wins; otherwise the root's
-    * `_graft_bloom` marker is probed ONCE per (root, session) — the
-    * same lazy-discovery contract as the index sidecars, minus any
+    * An explicit [[registerBloom]] wins; otherwise the root's bloom
+    * marker, read once per (root, session) through the manifest
+    * ([[graft.sources.BloomPruning.markerColumns]]) — the same
+    * lazy-discovery contract as the index sidecars, minus any
     * staleness guard (blooms live in the data files themselves; an
     * appended file without blooms keeps conservatively). */
   private[graft] def bloomColumnsFor(rootPath: String,
@@ -401,37 +400,8 @@ object ZoneMapPruneRule {
           if (cheap.startsWith("/")) None
           else Option(bloomRoots.get(norm(rootPath))))
       }
-    explicit.orElse(discoverBloomMarker(rootPath, session))
-  }
-
-  // (root, session) → marker columns (None = probed, no marker there).
-  // Memoized positive AND negative, so an unmarked table costs one
-  // filesystem round-trip per session ever — this sits on the
-  // planning hot path for every Filter over any parquet relation.
-  private val bloomMarkerCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String), Option[Set[String]]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), Option[Set[String]]]): Boolean =
-        size > 256
-    })
-
-  private def discoverBloomMarker(rootPath: String,
-      session: SparkSession): Option[Set[String]] = {
-    val key = (normFile(rootPath), SidecarManifest.sessionKey(session))
-    val hit = bloomMarkerCache.get(key)
-    if (hit != null) hit
-    else {
-      // presence from the shared one-probe-per-table manifest; only a
-      // PRESENT marker pays its own read
-      val found =
-        if (!SidecarManifest.has(rootPath, session, "_graft_bloom"))
-          None
-        else
-          try graft.sources.BloomPruning.markerColumns(rootPath).map(_.toSet)
-          catch { case scala.util.control.NonFatal(_) => None }
-      bloomMarkerCache.put(key, found)
-      found
-    }
+    explicit.orElse(
+      graft.sources.BloomPruning.markerColumns(session, rootPath).map(_.toSet))
   }
 
   private val bloomDecisionCache = java.util.Collections.synchronizedMap(
@@ -510,12 +480,8 @@ object ZoneMapPruneRule {
   private[graft] def norm(p: String): String =
     try {
       val hp = new Path(p)
-      hp.getFileSystem(qualifyConf).makeQualified(hp).toUri.getPath
+      hp.getFileSystem(SidecarManifest.sharedConf).makeQualified(hp).toUri.getPath
     } catch { case _: Exception => p }
-
-  // one shared, read-only conf: building a Configuration parses its
-  // XML resources, tens of milliseconds per call
-  private lazy val qualifyConf = new org.apache.hadoop.conf.Configuration()
 
   /** The registry key for a root: the cheap scheme-strip for absolute
     * spellings (what the planner's rootPaths give), the

@@ -50,14 +50,28 @@ final class ZoneSnapshot(load: SparkSession => DataFrame) {
   private val blockIdMaps = scala.collection.concurrent.TrieMap
     .empty[String, Map[Int, ColStats]]
 
+  /** The failure of this generation's collect, rethrown by every
+    * later [[ensure]]: an index that cannot be read at one generation
+    * stays unreadable, so later queries fall back to the plain scan
+    * without launching the failing job again. */
+  @volatile private var failed: Throwable = null
+
   /** Collect every column of `cols` not yet on the driver (and the
     * block list on first use) in one job. */
   def ensure(spark: SparkSession, cols: Set[String]): Unit =
     if (blocks == null || !cols.forall(columns.contains)) synchronized {
+      if (failed != null) throw failed
       val missing = cols.filterNot(columns.contains)
       val needBlocks = blocks == null
       if (needBlocks || missing.nonEmpty) {
-        val rows = collectRows(conform(load(spark)), missing, needBlocks)
+        val rows =
+          try collectRows(conform(load(spark)), missing, needBlocks)
+          catch {
+            // a stopped session's failure says nothing of the index
+            case scala.util.control.NonFatal(t) if !spark.sparkContext.isStopped =>
+              failed = t
+              throw t
+          }
         if (needBlocks) {
           val seen = new java.util.LinkedHashMap[(String, Int), Long]()
           rows.foreach(r => seen.putIfAbsent((r.getString(0), r.getInt(1)), r.getLong(2)))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{GraftEngine, MarkovPrefetcher, PrefetchEval}
 import graft.plans.{And, Between, Pred, PredValue}
-import graft.sources.{AggView, DictionaryIndex, MicroBlockIndex, MicroBlockWriter}
+import graft.sources.{AggView, DictionaryIndex, MicroBlockIndex, MicroBlockWriter, SidecarManifest}
 
 /** SURVEY.md §2b — the reference's own micro-block machinery exposed as
   * verifiable queries (rows-only checks: outputs are deterministic but
@@ -53,7 +53,6 @@ object MicroBlockQueries {
     * rows nothing to rebuild. */
   private[graft] def ensureSidecars(spark: SparkSession, path: String,
       table: String, sumCols: Seq[String], dictCols: Seq[String] = Nil): Unit = {
-    import graft.sources.SidecarManifest
     val zone = MicroBlockIndex.sidecarPath(path)
     def zoneSchemaOk: Boolean = {
       val idx = spark.read.parquet(zone)
@@ -166,11 +165,9 @@ object MicroBlockQueries {
     def srcNewest(table: String): Long =
       MicroBlockIndex.listParquetFilesWithStatus(s"$dir/$table.parquet")
         .map(_._2).foldLeft(0L)(math.max)
-    def fresh(table: String, src: String): Boolean = {
-      val spec = Paths.get(s"$wh/$table", "_graft_bucket_spec.json")
-      Files.exists(spec) &&
-        Files.getLastModifiedTime(spec).toMillis >= srcNewest(src)
-    }
+    def fresh(table: String, src: String): Boolean =
+      SidecarManifest.marker(s"$wh/$table", spark, SidecarManifest.BucketSpec)
+        .exists(_._1 >= srcNewest(src))
     if (!fresh(liT, "lineitem"))
       graft.sources.Bucketing.writeBucketed(
         graft.engine.Tables.load(spark, dir, "lineitem"), liT, "l_orderkey", 8,

@@ -92,7 +92,7 @@ object Advisor {
         // this may be degraded precisely because the base moved
         if (!exists) AggView.build(spark, tablePath, viewPath, Nil, column)
         else AggView.refresh(spark, tablePath, viewPath)
-        val have = AggView.markerViews(tablePath).getOrElse(Nil)
+        val have = AggView.markerViews(spark, tablePath).getOrElse(Nil)
         if (!have.exists(_.endsWith(s"_graft_aggview_$column")))
           AggView.writeMarker(tablePath, have :+ viewPath)
         true

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -99,7 +98,7 @@ object AggView {
     * append), bounding both refresh-side chain reads and meta size. */
   val MaxBatches = 32
 
-  private def fs(p: Path) = p.getFileSystem(new Configuration())
+  private def fs(p: Path) = p.getFileSystem(SidecarManifest.sharedConf)
 
   private def metaPath(viewPath: String) = new Path(viewPath, "_graft_view")
 
@@ -489,17 +488,15 @@ object AggView {
     true
   }
 
-  /** `<table>/_graft_views` DISCOVERY MARKER (the `_graft_bloom`
-    * convention): a tiny underscore file naming the table's view
-    * paths, dropped next to the data so ANY session's
+  /** The view-paths DISCOVERY MARKER ([[SidecarManifest.Views]], the
+    * bloom-marker convention): a tiny underscore file naming the
+    * table's view paths, dropped next to the data so ANY session's
     * [[graft.plans.AggViewRewriteRule]] discovers the views lazily —
     * no register call, the deployment path. The marker carries no
     * staleness risk of its own: the rule re-checks each view's exact
     * file-set guard per query, so a stale or dead view path simply
-    * never rewrites. */
-  def markerPath(tablePath: String): String =
-    new Path(tablePath, "_graft_views").toString
-
+    * never rewrites. Writing it drops the root's memos, so this
+    * session discovers it at once. */
   def writeMarker(tablePath: String, viewPaths: Seq[String]): Unit = {
     require(viewPaths.nonEmpty, "marker needs at least one view path")
     // qualify at WRITE time: a relative path would resolve against the
@@ -509,27 +506,13 @@ object AggView {
       val hp = new Path(vp)
       fs(hp).makeQualified(hp).toUri.getPath
     }
-    val p = new Path(markerPath(tablePath))
-    val out = fs(p).create(p, true)
-    try out.write(qualified.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    // this session may have memoized a negative marker probe for the
-    // root (the view build's own aggregate plans one) — drop it so the
-    // marker is discoverable immediately, not just in fresh sessions
-    graft.plans.AggViewRewriteRule.invalidateMarkerCache()
-    SidecarManifest.invalidate(tablePath)
+    SidecarManifest.writeMarker(tablePath, SidecarManifest.Views, qualified.mkString("\n"))
   }
 
-  /** The marker's view paths; None when no (non-empty) marker exists. */
-  def markerViews(tablePath: String): Option[Seq[String]] = {
-    val p = new Path(markerPath(tablePath))
-    val f = fs(p)
-    if (!f.exists(p) || f.getFileStatus(p).isDirectory) None
-    else {
-      val views = readText(p).split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      if (views.isEmpty) None else Some(views)
-    }
-  }
+  /** The marker's view paths, read once per (root, session); None when
+    * no (non-empty) marker exists. */
+  def markerViews(spark: SparkSession, tablePath: String): Option[Seq[String]] =
+    SidecarManifest.markerLines(tablePath, spark, SidecarManifest.Views)
 
   /** Grouped COUNT(DISTINCT valueCol) + COUNT(*) from the view alone:
     * distinct values per group = view rows per group (value is a key),

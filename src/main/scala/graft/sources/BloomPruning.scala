@@ -82,54 +82,32 @@ object BloomPruning {
       .filter(rowFilter)
   }
 
-  /** The DISCOVERY MARKER convention: `<table>/_graft_bloom`, one tiny
-    * underscore-prefixed text file naming the bloom'd columns, dropped
-    * next to the data at write time. Underscore ⇒ invisible to Spark's
-    * file listing, like `_graft_index`/`_graft_dict` — but unlike those
-    * this is NOT an index: blooms are stateless-in-file, so the marker
-    * only answers "is probing this table worth a metadata job, and for
-    * which columns" — the question [[graft.plans.ZoneMapPruneRule]]
-    * must never answer by probing arbitrary relations. No staleness
-    * guard needed either: files appended without blooms keep
-    * conservatively (a missing bloom never refutes), so a marker can
-    * only ever cost a fruitless probe, never rows. */
-  def markerPath(tablePath: String): String =
-    new Path(tablePath, "_graft_bloom").toString
-
-  /** Drop the discovery marker naming the bloom'd `columns`. Call after
-    * writing the table with `parquet.bloom.filter.enabled#<col>`; from
-    * then on any session's plain SQL/DataFrame equality filters over
-    * the table get the bloom cut with no register call. */
+  /** The DISCOVERY MARKER ([[SidecarManifest.Bloom]]): one tiny
+    * underscore-prefixed text file beside the data naming the bloom'd
+    * columns, dropped at write time. Underscore ⇒ invisible to Spark's
+    * file listing, like the zone and dictionary sidecars — but unlike
+    * those this is NOT an index: blooms are stateless-in-file, so the
+    * marker only answers "is probing this table worth a metadata job,
+    * and for which columns" — the question [[graft.plans
+    * .ZoneMapPruneRule]] must never answer by probing arbitrary
+    * relations. No staleness guard needed either: files appended
+    * without blooms keep conservatively (a missing bloom never
+    * refutes), so a marker can only ever cost a fruitless probe, never
+    * rows.
+    *
+    * Call after writing the table with
+    * `parquet.bloom.filter.enabled#<col>`; from then on any session's
+    * plain SQL/DataFrame equality filters over the table get the bloom
+    * cut with no register call. */
   def writeMarker(tablePath: String, columns: Seq[String]): Unit = {
     require(columns.nonEmpty, "marker needs at least one bloom'd column")
-    val p = new Path(markerPath(tablePath))
-    val fs = p.getFileSystem(new Configuration())
-    val out = fs.create(p, true)
-    try out.write(columns.mkString("\n").getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    SidecarManifest.invalidate(tablePath)
+    SidecarManifest.writeMarker(tablePath, SidecarManifest.Bloom, columns.mkString("\n"))
   }
 
-  /** The marker's column list; None when no (non-empty) marker exists. */
-  def markerColumns(tablePath: String): Option[Seq[String]] = {
-    val p = new Path(markerPath(tablePath))
-    val fs = p.getFileSystem(new Configuration())
-    if (!fs.exists(p) || fs.getFileStatus(p).isDirectory) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](4096)
-          var n = in.read(chunk)
-          while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-          new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-        } finally in.close()
-      val cols = text.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      if (cols.isEmpty) None else Some(cols)
-    }
-  }
+  /** The marker's column list, read once per (root, session); None
+    * when no (non-empty) marker exists. */
+  def markerColumns(spark: SparkSession, tablePath: String): Option[Seq[String]] =
+    SidecarManifest.markerLines(tablePath, spark, SidecarManifest.Bloom)
 
   /** Executor-side: may any row group of `file` hold any probe value? */
   private def fileMayMatch(file: String, column: String,

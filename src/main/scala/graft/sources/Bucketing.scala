@@ -66,22 +66,12 @@ object Bucketing {
     // spec (a wrong bucket count silently breaks bucket pruning and
     // exchange-free joins — wrong rows, not just slow ones). Persist the
     // written spec beside the data so reuse can validate against it.
-    val specPath = new org.apache.hadoop.fs.Path(loc, SpecFileName)
-    val out = fs.create(specPath, true)
-    try out.write(
-      s"""{"key":"$key","buckets":$buckets}""".getBytes("UTF-8"))
-    finally out.close()
-    // the spec doubles as the TRANSPARENT discovery marker
+    // The spec doubles as the TRANSPARENT discovery marker
     // ([[graft.plans.BucketLayoutRule]]): a plain parquet read of this
-    // location in any session re-attaches the bucket spec. Same-session
-    // discovery needs the manifest memo dropped.
-    SidecarManifest.invalidate(loc.toString)
-    graft.plans.BucketLayoutRule.clearCache()
+    // location in any session re-attaches the bucket spec.
+    SidecarManifest.writeMarker(loc.toString, SidecarManifest.BucketSpec,
+      s"""{"key":"$key","buckets":$buckets}""")
   }
-
-  /** The bucket-spec sidecar name — `_graft`-prefixed so the shared
-    * [[SidecarManifest]] probe sees it and data scans ignore it. */
-  private[graft] val SpecFileName = "_graft_bucket_spec.json"
 
   /** Spark's bucket-file naming contract, in ONE place: bucketed part
     * files carry `_NNNNN` before the extension chain
@@ -92,7 +82,6 @@ object Bucketing {
   private[graft] val BucketIdPattern = """_(\d{5})(?:\.|$)""".r
   private[graft] def bucketIdOf(fileName: String): Option[Int] =
     BucketIdPattern.findFirstMatchIn(fileName).map(_.group(1).toInt)
-  private val SpecFile = SpecFileName
 
   /** Parse the fixed-shape spec JSON this object writes. */
   private[graft] def parseSpec(raw: String): Option[(String, Int)] = {
@@ -114,12 +103,13 @@ object Bucketing {
     * registration — Spark trusts a registered bucket spec blindly (for
     * bucket pruning and exchange-free sort-merge joins), so registering
     * e.g. 128 buckets over files written at 32 returns wrong rows, not
-    * slow ones. Primary check: the `_graft_bucket_spec.json` sidecar
-    * written by [[writeBucketed]] (validates key AND count). Fallback
-    * for pre-sidecar layouts: the bucket ids encoded in the files'
-    * `_000NN` suffixes must span exactly 0..buckets-1 (the one-file-
-    * per-bucket write makes that the expected shape; the key is
-    * unverifiable without the sidecar — mismatches reject to a safe
+    * slow ones. Primary check: the bucket-spec marker
+    * ([[SidecarManifest.BucketSpec]]) written by [[writeBucketed]]
+    * (validates key AND count). Fallback for pre-marker layouts: the
+    * bucket ids encoded in the files' `_000NN` suffixes must span
+    * exactly 0..buckets-1 (the one-file-per-bucket write makes that
+    * the expected shape; the key is
+    * unverifiable without the marker — mismatches reject to a safe
     * re-write). Returns false when the location has no files or the
     * layout disagrees with the requested spec (caller re-writes). */
   def registerExisting(spark: SparkSession, table: String, key: String,
@@ -129,18 +119,15 @@ object Bucketing {
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(loc) || !fs.exists(new org.apache.hadoop.fs.Path(loc, "_SUCCESS")))
       return false
-    val specPath = new org.apache.hadoop.fs.Path(loc, SpecFile)
-    if (fs.exists(specPath)) {
-      val in = fs.open(specPath)
-      val spec = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
+    SidecarManifest.marker(loc.toString, spark, SidecarManifest.BucketSpec) match {
       // exact-match on the tiny fixed-shape JSON we wrote ourselves
-      if (spec != s"""{"key":"$key","buckets":$buckets}""") return false
-    } else {
-      val ids = fs.listStatus(loc).toSeq
-        .flatMap(st => bucketIdOf(st.getPath.getName))
-      if (ids.isEmpty || ids.max != buckets - 1 ||
-          ids.distinct.size != buckets) return false
+      case Some((_, spec)) =>
+        if (spec != s"""{"key":"$key","buckets":$buckets}""") return false
+      case None =>
+        val ids = fs.listStatus(loc).toSeq
+          .flatMap(st => bucketIdOf(st.getPath.getName))
+        if (ids.isEmpty || ids.max != buckets - 1 ||
+            ids.distinct.size != buckets) return false
     }
     val schema = spark.read.parquet(loc.toString).schema
     val cols = schema.fields

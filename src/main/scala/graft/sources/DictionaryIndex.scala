@@ -545,7 +545,7 @@ object DictionaryIndex {
     if (hit != null) hit
     else {
       val p = new Path(tablePath)
-      val f = p.getFileSystem(new Configuration())
+      val f = p.getFileSystem(SidecarManifest.sharedConf)
       val st = f.getFileStatus(p)
       val n =
         if (st.isFile) st.getLen
@@ -699,19 +699,6 @@ object DictionaryIndex {
   def saveSidecar(index: Dataset[FileDict], tablePath: String): Unit =
     SidecarManifest.save(index.sparkSession, tablePath,
       SidecarManifest.Dict)(save(index, _))
-
-  /** Delete the table's `_graft_dict` sidecar tree (if any) and drop
-    * the shared-manifest memo. Bench harnesses use this to guarantee
-    * an UNPOISONED scan arm: unregisterDict alone is not enough —
-    * sidecar DISCOVERY re-finds any on-disk sidecar, and the A/B
-    * silently measures DPP vs DPP (the r13 join-DPP lesson). */
-  def deleteSidecar(tablePath: String,
-      conf: org.apache.hadoop.conf.Configuration = new Configuration()): Unit = {
-    val p = new Path(sidecarPath(tablePath))
-    val fs = p.getFileSystem(conf)
-    if (fs.exists(p)) fs.delete(p, true)
-    SidecarManifest.invalidate(tablePath)
-  }
 
   /** Load a saved dictionary index with its schema PINNED to
     * [[FileDict]]'s: no schema-inference job. Columns older sidecars

@@ -567,7 +567,7 @@ object MicroBlockIndex {
     * this listing and a relation's `inputFiles` agree file-for-file. */
   def listParquetFilesWithStatus(tablePath: String): Seq[(String, Long, Long)] = {
     val p = new Path(tablePath)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(SidecarManifest.sharedConf)
     val st = fs.getFileStatus(p)
     if (st.isFile) Seq((tablePath, st.getModificationTime, st.getLen))
     else {

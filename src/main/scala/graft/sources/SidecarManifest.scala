@@ -5,24 +5,31 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** The ONE owner of the sidecar contract: where a table's `_graft*`
-  * sidecars live, how they are saved, which build anchor dates them,
-  * and when they are current.
+  * sidecars and markers live, how they are saved, swapped, deleted and
+  * read, which build anchor dates them, and when they are current. No
+  * other code names a sidecar or marker or reads a sidecar's
+  * `_SUCCESS`.
   *
   * PRESENCE: one `listStatus(root)` per (table root, session), whose
   * `_graft*`-prefixed child names are memoized — a layer first asks
   * [[has]]; only a PRESENT name pays its own reads. Before round 11
-  * each of the four layers (`_graft_index`, `_graft_dict`,
-  * `_graft_bloom`, `_graft_views`) paid its own negative probe on the
-  * planning hot path.
+  * each of the four layers (`Zone`, `Dict`, `Bloom`, `Views`) paid its
+  * own negative probe on the planning hot path.
   *
   * LOCATION and SAVE: a sidecar of kind `k` lives at `<root>/k`
-  * ([[location]]); [[save]] writes it, then invalidates every memo of
-  * the root, so same-session discovery sees the new state. Other-
-  * process writes are picked up by any new session (keys include a
-  * per-session UUID, [[sessionKey]] — the one session→UUID map of the
-  * code base). A nonexistent or unlistable root memoizes as empty (no
-  * markers) — conservative: discovery is an optimization, never
-  * correctness.
+  * ([[location]]); [[save]] writes it to a sibling and swaps it into
+  * place, so the write may read the sidecar it replaces (a refresh of
+  * a loaded index), then invalidates every memo of the root, so
+  * same-session discovery sees the new state. Other-process writes are
+  * picked up by any new session (keys include a per-session UUID,
+  * [[sessionKey]] — the one session→UUID map of the code base). A
+  * nonexistent or unlistable root memoizes as empty (no markers) —
+  * conservative: discovery is an optimization, never correctness.
+  *
+  * MARKERS: small text files beside the data naming what a table
+  * carries (bloom'd columns, view paths, the bucket spec). [[marker]]
+  * reads one at most once per (root, session), into the same memo
+  * entry as the presence listing; [[writeMarker]] is the one writer.
   *
   * ANCHOR: a saved sidecar is dated by its `_SUCCESS` mtime
   * ([[anchor]]), read behind the presence memo — one stat per call,
@@ -44,13 +51,24 @@ object SidecarManifest {
   /** Total filesystem listings performed (cache misses only). */
   val probeCount = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  // (normalized root, session-uuid) -> `_graft*` child names present
+  /** One root's listing in one session: the `_graft*` names present,
+    * and the markers read so far (None = unreadable or empty). */
+  private final class Listing(val names: Set[String]) {
+    val markers = scala.collection.concurrent.TrieMap.empty[String, Option[(Long, String)]]
+  }
+
+  // (normalized root, session-uuid) -> that root's listing
   private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, String), Set[String]](16, 0.75f, true) {
+    new java.util.LinkedHashMap[(String, String), Listing](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), Set[String]]): Boolean =
+          e: java.util.Map.Entry[(String, String), Listing]): Boolean =
         size > 512
     })
+
+  /** One shared, read-only Hadoop conf for paths outside any session:
+    * building a `Configuration` parses its XML resources, tens of
+    * milliseconds per call. */
+  private[graft] lazy val sharedConf = new Configuration()
 
   private val sessionIds = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, String]())
@@ -67,6 +85,15 @@ object SidecarManifest {
   /** The dictionary index sidecar ([[DictionaryIndex]]). */
   val Dict = "_graft_dict"
 
+  /** The bloom'd-columns marker ([[BloomPruning.writeMarker]]). */
+  val Bloom = "_graft_bloom"
+
+  /** The view-paths marker ([[AggView.writeMarker]]). */
+  val Views = "_graft_views"
+
+  /** The bucket-spec marker ([[Bucketing.writeBucketed]]). */
+  val BucketSpec = "_graft_bucket_spec.json"
+
   /** Where a sidecar of `kind` lives: `<tablePath>/<kind>`. The
     * underscore prefix hides it from Spark's file listing (the
     * `_metadata` / `_delta_log` convention), so the table's own scans
@@ -75,22 +102,93 @@ object SidecarManifest {
   def location(tablePath: String, kind: String): String =
     new Path(tablePath, kind).toString
 
-  /** Write the `kind` sidecar of `tablePath` through `write` (handed
-    * its [[location]]), then drop the root's memos. A sidecar needs a
-    * DIRECTORY table root: `<file>.parquet/<kind>` cannot exist, so a
-    * single-file table is refused before anything is written. */
+  /** Write the `kind` sidecar of `tablePath` through `write`, then drop
+    * the root's memos. `write` is handed a `<kind>__swap` sibling; the
+    * old sidecar is then deleted and the sibling renamed into place, so
+    * `write` may read the sidecar it replaces (a refresh of a loaded
+    * index). A crash between the delete and the rename leaves no
+    * sidecar, never a half-written one, and a reader mid-swap sees no
+    * `_SUCCESS` — both refuse every serve. A sidecar needs a DIRECTORY
+    * table root: `<file>.parquet/<kind>` cannot exist, so a single-file
+    * table is refused before anything is written. */
   def save(spark: SparkSession, tablePath: String, kind: String)(
       write: String => Unit): Unit = {
     val root = new Path(tablePath)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val isFile =
-      try root.getFileSystem(spark.sessionState.newHadoopConf())
-        .getFileStatus(root).isFile
+      try fs.getFileStatus(root).isFile
       catch { case _: java.io.FileNotFoundException => false }
     require(!isFile, s"cannot save a $kind sidecar for $tablePath: " +
       "the table is a single file, and sidecars live in its directory")
-    write(location(tablePath, kind))
+    val target = new Path(location(tablePath, kind))
+    val tmp = new Path(root, kind + "__swap")
+    fs.delete(tmp, true)
+    write(tmp.toString)
+    fs.delete(target, true)
+    if (!fs.rename(tmp, target))
+      throw new java.io.IOException(s"sidecar swap rename failed: $tmp -> $target")
     invalidate(tablePath)
   }
+
+  /** Delete the `kind` sidecar or marker of `tablePath`, if any, and
+    * drop the root's memos. */
+  def delete(tablePath: String, kind: String): Unit = {
+    val p = new Path(location(tablePath, kind))
+    p.getFileSystem(sharedConf).delete(p, true)
+    invalidate(tablePath)
+  }
+
+  /** Write the marker `name` of `tablePath` with `text`, replacing any
+    * earlier one, and drop the root's memos. */
+  def writeMarker(tablePath: String, name: String, text: String): Unit = {
+    val p = new Path(location(tablePath, name))
+    val out = p.getFileSystem(sharedConf).create(p, true)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    invalidate(tablePath)
+  }
+
+  /** The marker `name` of `rootPath` as (mtime, text); None when the
+    * shared listing shows none, or it is a directory or unreadable. A
+    * marker is read at most once per (root, session), into the memo
+    * entry of the presence listing, so [[invalidate]] drops both. A
+    * read failure other than a missing file is not memoized. */
+  def marker(rootPath: String, session: SparkSession,
+      name: String): Option[(Long, String)] = {
+    val listing = listed(rootPath, session)
+    if (!listing.names.contains(name)) None
+    else listing.markers.get(name) match {
+      case Some(hit) => hit
+      case None =>
+        try {
+          val p = new Path(location(rootPath, name))
+          val fs = p.getFileSystem(session.sessionState.newHadoopConf())
+          val st = fs.getFileStatus(p)
+          val read =
+            if (st.isDirectory) None
+            else {
+              val in = fs.open(p)
+              try Some((st.getModificationTime,
+                new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)))
+              finally in.close()
+            }
+          listing.markers.put(name, read)
+          read
+        } catch {
+          case _: java.io.FileNotFoundException =>
+            listing.markers.put(name, None); None
+          case scala.util.control.NonFatal(_) => None
+        }
+    }
+  }
+
+  /** A marker's text as its non-empty trimmed lines; None when absent
+    * or blank. */
+  def markerLines(rootPath: String, session: SparkSession,
+      name: String): Option[Seq[String]] =
+    marker(rootPath, session, name)
+      .map(_._2.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
+      .filter(_.nonEmpty)
 
   /** The `kind` sidecar's build anchor — its `_SUCCESS` mtime — or
     * None when the shared listing shows no such sidecar or it has no
@@ -170,7 +268,10 @@ object SidecarManifest {
     * is a stable ANSWER (FileNotFound ⇒ no markers, memoized); any
     * other failure is transient and is NOT memoized — the next query
     * re-probes instead of pinning EMPTY for the whole session. */
-  def probe(rootPath: String, session: SparkSession): Set[String] = {
+  def probe(rootPath: String, session: SparkSession): Set[String] =
+    listed(rootPath, session).names
+
+  private def listed(rootPath: String, session: SparkSession): Listing = {
     val key = (norm(rootPath), sessionKey(session))
     val hit = cache.get(key)
     if (hit != null) hit
@@ -178,16 +279,16 @@ object SidecarManifest {
       probeCount.incrementAndGet()
       try {
         val root = new Path(rootPath)
-        val names = root.getFileSystem(session.sessionState.newHadoopConf())
-          .listStatus(root)
-          .iterator.map(_.getPath.getName)
-          .filter(_.startsWith("_graft")).toSet
-        cache.put(key, names)
-        names
+        val l = new Listing(
+          try root.getFileSystem(session.sessionState.newHadoopConf())
+            .listStatus(root)
+            .iterator.map(_.getPath.getName)
+            .filter(_.startsWith("_graft")).toSet
+          catch { case _: java.io.FileNotFoundException => Set.empty[String] })
+        cache.put(key, l)
+        l
       } catch {
-        case _: java.io.FileNotFoundException =>
-          cache.put(key, Set.empty[String]); Set.empty
-        case scala.util.control.NonFatal(_) => Set.empty // not memoized
+        case scala.util.control.NonFatal(_) => new Listing(Set.empty) // not memoized
       }
     }
   }
@@ -197,9 +298,9 @@ object SidecarManifest {
   def has(rootPath: String, session: SparkSession, name: String): Boolean =
     probe(rootPath, session).contains(name)
 
-  /** Drop the memo for one root (all sessions) — called by every
-    * in-repo sidecar/marker writer so same-session discovery sees the
-    * new state. */
+  /** Drop the memo for one root (all sessions), its listing and its
+    * markers — called by every sidecar/marker write so same-session
+    * discovery sees the new state. */
   def invalidate(rootPath: String): Unit = {
     val r = norm(rootPath)
     cache.synchronized {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.sources.{BlockStat, MicroBlockIndex}
+import graft.sources.{BlockStat, DictionaryIndex, MicroBlockIndex, SidecarManifest}
 
 /** Streaming ingestion INTO the micro-block layout — the missing end of
   * the engine's lifecycle: events arrive as a stream, land as
@@ -13,7 +13,10 @@ import graft.sources.{BlockStat, MicroBlockIndex}
   * Per micro-batch: range-cluster the batch on the zone column (a
   * batch-local sort-shuffle — each appended file gets a tight min/max,
   * so pruning works on freshly-landed data immediately), append the
-  * files, refresh the index. At 100 TB/day this is the standard
+  * files, refresh the in-memory index, fold the batch into every
+  * maintained AggView, and refresh the table's zone and dictionary
+  * sidecars, if it has them, through [[SidecarManifest.save]] — the one
+  * sidecar writer. At 100 TB/day this is the standard
   * streaming-lakehouse write path (cluster-on-write + incremental
   * stats); the small-file tail the batches accumulate is exactly what
   * [[graft.sources.MicroBlockWriter.compact]] exists to fold in.
@@ -109,25 +112,22 @@ final class StreamIngest(
             s"stream-ingest view refresh deferred ($v): ${t.getMessage}")
       }
     }
-    // SIDECARS ride the commit too (round 14): a `_graft_index` /
-    // `_graft_dict` written before the stream started goes stale on
-    // the FIRST batch (their file-set/mtime gates refuse every
-    // transparent serve until someone refreshes by hand). Each commit
-    // now folds the new files in INCREMENTALLY — only the fresh
-    // footers/dictionary pages are read; the save rewrites the
-    // sidecar table, which is metadata-scale. Failures defer exactly
-    // like view folds: the batch is committed, the next batch's
-    // refresh diffs the listing and catches up. No sidecar → nothing
-    // maintained (building one is an explicit choice, not a stream
-    // side effect).
+    // SIDECARS ride the commit too (round 14): a zone or dictionary
+    // sidecar written before the stream started goes stale on the
+    // FIRST batch (its file-set/mtime gates refuse every transparent
+    // serve until someone refreshes by hand). Each commit folds the new
+    // files in INCREMENTALLY — only the fresh footers/dictionary pages
+    // are read — and saves through [[SidecarManifest.save]], whose swap
+    // lets the refreshed index read the sidecar it replaces. Failures
+    // defer exactly like view folds: the batch is committed, the next
+    // batch's refresh diffs the listing and catches up. No sidecar →
+    // nothing maintained (building one is an explicit choice, not a
+    // stream side effect).
     try {
-      val zoneSidecar = new org.apache.hadoop.fs.Path(
-        MicroBlockIndex.sidecarPath(outPath))
-      if (fs.exists(new org.apache.hadoop.fs.Path(zoneSidecar, "_SUCCESS"))) {
-        val existing = MicroBlockIndex.load(spark, zoneSidecar.toString)
+      if (SidecarManifest.anchor(outPath, spark, SidecarManifest.Zone).isDefined) {
+        val existing = MicroBlockIndex.load(spark, MicroBlockIndex.sidecarPath(outPath))
         val refreshed = MicroBlockIndex.refresh(spark, outPath, table, existing)
-        if (refreshed ne existing)
-          swapInto(fs, zoneSidecar, p => MicroBlockIndex.save(refreshed, p))
+        if (refreshed ne existing) MicroBlockIndex.saveSidecar(refreshed, outPath)
       }
     } catch {
       case scala.util.control.NonFatal(t) =>
@@ -135,41 +135,16 @@ final class StreamIngest(
           s"stream-ingest zone sidecar refresh deferred: ${t.getMessage}")
     }
     try {
-      val dictSidecar = new org.apache.hadoop.fs.Path(
-        graft.sources.DictionaryIndex.sidecarPath(outPath))
-      if (fs.exists(new org.apache.hadoop.fs.Path(dictSidecar, "_SUCCESS"))) {
-        val existing = graft.sources.DictionaryIndex.load(
-          spark, dictSidecar.toString)
-        val refreshed = graft.sources.DictionaryIndex.refresh(
-          spark, outPath, table, existing)
-        if (refreshed ne existing)
-          swapInto(fs, dictSidecar,
-            p => graft.sources.DictionaryIndex.save(refreshed, p))
+      if (SidecarManifest.anchor(outPath, spark, SidecarManifest.Dict).isDefined) {
+        val existing = DictionaryIndex.load(spark, DictionaryIndex.sidecarPath(outPath))
+        val refreshed = DictionaryIndex.refresh(spark, outPath, table, existing)
+        if (refreshed ne existing) DictionaryIndex.saveSidecar(refreshed, outPath)
       }
     } catch {
       case scala.util.control.NonFatal(t) =>
         System.err.println(
           s"stream-ingest dict sidecar refresh deferred: ${t.getMessage}")
     }
-  }
-
-  /** Refresh-and-replace a sidecar whose refreshed dataset READS the
-    * sidecar being replaced: write to a `__swap` sibling, then
-    * delete+rename. A crash between the two leaves no sidecar (every
-    * transparent serve refuses — safe), never a half-written one; a
-    * concurrent reader mid-swap sees a missing `_SUCCESS` and refuses
-    * the same way. A direct overwrite would have Spark reading the
-    * files it is deleting. */
-  private def swapInto(fs: org.apache.hadoop.fs.FileSystem,
-      target: org.apache.hadoop.fs.Path, write: String => Unit): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(
-      target.getParent, target.getName + "__swap")
-    fs.delete(tmp, true)
-    write(tmp.toString)
-    fs.delete(target, true)
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(s"sidecar swap rename failed: $tmp -> $target")
-    graft.sources.SidecarManifest.invalidate(outPath)
   }
 
   /** Attach to a streaming DataFrame and start the ingest query. */

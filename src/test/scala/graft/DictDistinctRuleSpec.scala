@@ -142,15 +142,11 @@ class DictDistinctRuleSpec extends AnyFunSuite {
     assert(rows(stale) == rows(truth), "the refused plan scans the live base")
 
     // delta refresh (new files' pages only) + save ⇒ serves again.
-    // The collect round-trip breaks the read-lineage so the overwrite
-    // of the sidecar path it was loaded from is legal (test-scale; a
-    // production refresh writes a new sidecar generation or saves
-    // from the in-memory engine index, which has no disk lineage).
+    // The refreshed index reads the sidecar it replaces; the save
+    // writes a sibling and swaps it in, so no round-trip is needed.
     val idx = DictionaryIndex.load(spark, DictionaryIndex.sidecarPath(base))
     val refreshed = DictionaryIndex.refresh(spark, base, "li", idx)
-    DictionaryIndex.saveSidecar(
-      spark.createDataset(refreshed.collect().toSeq)(
-        org.apache.spark.sql.Encoders.product[graft.sources.FileDict]), base)
+    DictionaryIndex.saveSidecar(refreshed, base)
     spark.read.parquet(base).createOrReplaceTempView("dr_stale")
     val fresh = spark.sql(q)
     assert(scansDict(fresh), "refreshed sidecar must serve again")
@@ -239,9 +235,7 @@ class DictDistinctRuleSpec extends AnyFunSuite {
     val before = idx.count()
     val refreshed = DictionaryIndex.refresh(spark, out, "ord", idx)
     assert(refreshed.count() > before, "refresh must index the nested file")
-    DictionaryIndex.saveSidecar(
-      spark.createDataset(refreshed.collect().toSeq)(
-        org.apache.spark.sql.Encoders.product[graft.sources.FileDict]), out)
+    DictionaryIndex.saveSidecar(refreshed, out)
     spark.read.parquet(out).createOrReplaceTempView("dr_part")
     val fresh = spark.sql(q)
     assert(scansDict(fresh), "refreshed sidecar must serve the partitioned layout")

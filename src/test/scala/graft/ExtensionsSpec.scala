@@ -285,7 +285,7 @@ class ExtensionsSpec extends AnyFunSuite {
       .option("parquet.bloom.filter.expected.ndv#l_orderkey", "2048")
       .parquet(out)
     BloomPruning.writeMarker(out, Seq("l_orderkey"))
-    assert(BloomPruning.markerColumns(out).contains(Seq("l_orderkey")))
+    assert(BloomPruning.markerColumns(spark, out).contains(Seq("l_orderkey")))
     // the marker (underscore file) must be invisible to the data scan
     assert(spark.read.parquet(out).columns.sorted.toSeq == li.columns.sorted.toSeq,
       "marker file leaked into the table scan")
@@ -317,6 +317,42 @@ class ExtensionsSpec extends AnyFunSuite {
     val plain = "target/scratch/test/ext-bloom-nomarker"
     li.limit(100).write.mode("overwrite").parquet(plain)
     assert(ZoneMapPruneRule.bloomColumnsFor(plain, fresh).isEmpty)
+  }
+
+  test("_graft_bloom marker written after a query takes effect in the same session") {
+    import graft.sources.BloomPruning
+    val out = "target/scratch/test/ext-bloom-late-marker"
+    val li = Tables.load(spark, dir, "lineitem")
+    li.repartition(8, col("l_orderkey"))
+      .write.mode("overwrite")
+      .option("parquet.enable.dictionary#l_orderkey", "false")
+      .option("parquet.bloom.filter.enabled#l_orderkey", "true")
+      .option("parquet.bloom.filter.expected.ndv#l_orderkey", "2048")
+      .parquet(out)
+    val totalFiles = MicroBlockIndex.listParquetFiles(out).size
+    val key = li.agg(min(col("l_orderkey"))).first.getLong(0)
+    val expected = li.filter(col("l_orderkey") === key).count()
+    def scanned(): Int = {
+      val df = spark.read.parquet(out).filter(col("l_orderkey") === key)
+      assert(df.count() == expected && expected > 0)
+      df.queryExecution.executedPlan.collectLeaves().collectFirst {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.inputFiles.length
+      }.getOrElse(-1)
+    }
+    // no marker yet: this session sees the table unmarked
+    assert(scanned() == totalFiles)
+    BloomPruning.writeMarker(out, Seq("l_orderkey"))
+    val apiKept = totalFiles - BloomPruning.skippedFilesEq(
+      spark, out, "l_orderkey", Seq(graft.plans.PredValue(key))).size
+    assert(apiKept < totalFiles, s"the blooms cut nothing: $apiKept of $totalFiles")
+    assert(scanned() == apiKept, "a marker written after a query must cut in the same session")
+    // a rewritten column list takes effect in the same session too
+    BloomPruning.writeMarker(out, Seq("l_partkey"))
+    assert(ZoneMapPruneRule.bloomColumnsFor(out, spark).contains(Set("l_partkey")))
+    assert(scanned() == totalFiles, "a column no longer marked must not be probed")
+    BloomPruning.writeMarker(out, Seq("l_partkey", "l_orderkey"))
+    assert(scanned() == apiKept)
   }
 
   test("rule keeps files where only SOME row groups match (multi-rowgroup files)") {

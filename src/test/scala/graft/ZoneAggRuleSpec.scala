@@ -592,11 +592,9 @@ class ZoneAggRuleSpec extends AnyFunSuite {
     val refreshed = graft.sources.MicroBlockIndex.refresh(spark, out, "t",
       graft.sources.MicroBlockIndex.load(
         spark, graft.sources.MicroBlockIndex.sidecarPath(out)))
-    // materialize before the overwrite (the refreshed plan reads the
-    // sidecar being replaced — the StreamIngest swap discipline)
-    val mat = refreshed.collect().toSeq
-    import spark.implicits._
-    graft.sources.MicroBlockIndex.saveSidecar(spark.createDataset(mat), out)
+    // the refreshed plan reads the sidecar it replaces: the save
+    // swaps a sibling into place, as a streaming commit does
+    graft.sources.MicroBlockIndex.saveSidecar(refreshed, out)
     spark.read.parquet(out).createOrReplaceTempView("za_rw")
     val after = spark.sql("SELECT COUNT(*) AS n, MAX(id) AS mx FROM za_rw")
     assert(after.first.toString == "[150,1049]",
