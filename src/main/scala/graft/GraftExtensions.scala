@@ -11,18 +11,32 @@ import graft.plans.ZoneMapPruneRule
   * .withExtensions(new GraftExtensions)` (or
   * `spark.sql.extensions=graft.GraftExtensions`) installs:
   *
-  *  - SQL functions `graft_rolling_hash(str)` and
-  *    `graft_simhash64(array<string>)` — the native Catalyst
-  *    fingerprint/SimHash expressions, callable from plain SQL;
-  *  - the [[graft.plans.AggViewRewriteRule]] — transparent
-  *    materialized-view serving for covered aggregate shapes;
-  *  - the [[graft.plans.DictDistinctRule]] — global COUNT(DISTINCT)
-  *    served from a current `_graft_dict` sidecar's dictionary pages;
-  *  - the [[graft.plans.ZoneAggRule]] — global COUNT(*)/COUNT/MIN/MAX,
-  *    filtered or not, answered from a current `_graft_index`
-  *    sidecar's footer stats with a straddler-only scan;
-  *  - the [[ZoneMapPruneRule]] optimizer rule — transparent index-based
-  *    file pruning for registered micro-blocked tables.
+  *  - SQL functions `graft_rolling_hash(str)`,
+  *    `graft_simhash64(array<string>)` and `graft_char_entropy(str)` —
+  *    native Catalyst expressions, callable from plain SQL;
+  *  - seven optimizer rules, in this order:
+  *    - [[graft.plans.AggViewRewriteRule]] — materialized-view serving
+  *      for covered aggregate shapes;
+  *    - [[graft.plans.DictDistinctRule]] — COUNT(DISTINCT) and
+  *      SELECT DISTINCT served from a current `_graft_dict` sidecar's
+  *      dictionary pages;
+  *    - [[graft.plans.ZoneAggRule]] — COUNT/MIN/MAX/SUM, filtered or
+  *      grouped, answered from a current `_graft_index` sidecar's
+  *      footer stats with a straddler-only scan;
+  *    - [[ZoneMapPruneRule]] — zone, dictionary, bloom, top-k and
+  *      join-key file pruning;
+  *    - [[graft.plans.BucketLayoutRule]] — a bucket-spec marker
+  *      re-attached to a plain path read;
+  *    - [[graft.plans.EagerAggregationRule]] — a grouped partial
+  *      aggregate pushed below a bucketed fact join;
+  *    - [[graft.plans.DecimalSumRule]] — decimal SUM/AVG onto the
+  *      int128 accumulator.
+  *
+  * Every rule runs in the [[graft.plans.GraftRule]] frame: a rewrite
+  * that throws leaves its node to the plain plan and is counted
+  * ([[graft.plans.GraftRule.errors]]), and the Spark queries a rule
+  * runs to decide run with every graft rule standing down
+  * ([[graft.plans.GraftRule.internally]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -24,4 +24,9 @@ object PlanBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `t` with every field nullable, at every depth — the schema a
+    * `spark.read` relation carries. */
+  def nullable(t: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = t.asNullable
 }

@@ -6,8 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, Attribu
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Complete, Count, Max, Min, Percentile, Sum}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, JoinHint, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.types.{ByteType, DecimalType, DoubleType, IntegerType, LongType, ShortType}
 
 import graft.sources.{AggView, SidecarManifest}
@@ -77,24 +76,14 @@ import graft.sources.{AggView, SidecarManifest}
   * read once per (root, session) through the manifest — fresh
   * sessions rewrite with no register call.
   */
-case class AggViewRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
-  import AggViewRewriteRule._
+case class AggViewRewriteRule(spark: SparkSession) extends GraftRule {
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (inRewrite.get()) plan
-    else plan.transform {
-      case agg: Aggregate =>
-        try tryRewrite(spark, agg).getOrElse(agg)
-        catch { case scala.util.control.NonFatal(_) => agg }
-    }
+  protected def rewrite: PartialFunction[LogicalPlan, Option[LogicalPlan]] = {
+    case agg: Aggregate => AggViewRewriteRule.tryRewrite(spark, agg)
+  }
 }
 
 object AggViewRewriteRule {
-
-  /** Re-entrancy guard: resolving the view relation runs the analyzer
-    * on this thread; the rule must not fire inside itself. */
-  private val inRewrite: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
   // norm root -> registered view paths (explicit registrations)
   private val registry =
@@ -137,7 +126,10 @@ object AggViewRewriteRule {
         metaCache.put(viewPath, (mtime, meta))
         Some(meta)
       }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    } catch {
+      // this view is skipped; another view of the table may still serve
+      case scala.util.control.NonFatal(_) => None
+    }
 
   /** One output column's rewrite recipe. */
   private sealed trait Shape
@@ -215,36 +207,20 @@ object AggViewRewriteRule {
   }
 
   private[graft] def tryRewrite(
-      spark: SparkSession, agg: Aggregate): Option[LogicalPlan] = {
-    // unwrap attr-only Projects down to the relation, COLLECTING
-    // Filter conditions on the way. A filter COMMUTES with the view
-    // when its references are covered by (group cols ∪ value col):
-    // every base row maps to a view row with the identical
-    // (group, value) tuple, so filtering base rows ≡ filtering view
-    // rows and re-weighting by freq. Any other computation on the
-    // path disqualifies.
-    def unwrap(p: LogicalPlan, conds: Seq[Expression])
-        : Option[(LogicalRelation, Seq[Expression])] = p match {
-      case pr: Project
-          if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
-        unwrap(pr.child, conds)
-      case f: Filter => unwrap(f.child, conds :+ f.condition)
-      case rel @ LogicalRelation(_: HadoopFsRelation, _, _, _, _) =>
-        Some((rel, conds))
-      case _ => None
-    }
+      spark: SparkSession, agg: Aggregate): Option[LogicalPlan] =
     for {
-      relConds <- unwrap(agg.child, Nil)
-      (rel, conds) = relConds
+      // every Filter on the way down is COLLECTED: a filter COMMUTES
+      // with the view when its references are covered by (group cols ∪
+      // value col) — every base row maps to a view row with the
+      // identical (group, value) tuple, so filtering base rows ≡
+      // filtering view rows and re-weighting by freq
+      GraftRule.Scan(conds, hfs, root) <- GraftRule.scanOf(agg.child)
       // the predicate must be a pure row-function of its columns:
       // non-determinism or a subquery would evaluate differently (or
       // at different multiplicity) over the collapsed view rows
       if conds.forall(c => c.deterministic &&
         !c.exists(_.isInstanceOf[PlanExpression[_]]))
-      hfs = rel.relation.asInstanceOf[HadoopFsRelation]
-      roots = hfs.location.rootPaths.toSeq.map(_.toString)
-      if roots.size == 1
-      views = viewsFor(roots.head, spark)
+      views = viewsFor(root, spark)
       if views.nonEmpty
       groupAttrs <- Some(agg.groupingExpressions).collect {
         case gs if gs.forall(_.isInstanceOf[AttributeReference]) =>
@@ -252,17 +228,13 @@ object AggViewRewriteRule {
       }
       if groupAttrs.map(_.name).distinct.size == groupAttrs.size
       groupIds = groupAttrs.map(_.exprId.id).toSet
-      shapes <- traverse(agg.aggregateExpressions.map {
+      shapes <- GraftRule.traverse(agg.aggregateExpressions.map {
         case a: AttributeReference => classify(a, groupIds)
         case al: Alias             => classify(al.child, groupIds)
         case _                     => None
       })
       plan <- rewriteOnto(spark, views, agg, hfs, groupAttrs, shapes, conds)
     } yield plan
-  }
-
-  private def traverse[A](xs: Seq[Option[A]]): Option[Seq[A]] =
-    if (xs.forall(_.isDefined)) Some(xs.map(_.get)) else None
 
   /** A fresh, type-agreeing view for this relation, or None. The
     * FILE-SET EQUALITY is the soundness gate: a stale view is wrong
@@ -309,11 +281,8 @@ object AggViewRewriteRule {
     val key = (viewPath, meta.gen, SidecarManifest.sessionKey(spark))
     var p = viewPlanCache.get(key)
     if (p == null) {
-      inRewrite.set(java.lang.Boolean.TRUE)
-      p =
-        try spark.read.parquet(
-          new Path(viewPath, s"g${meta.gen}").toString).queryExecution.analyzed
-        finally inRewrite.set(java.lang.Boolean.FALSE)
+      p = GraftRule.internally(spark.read.parquet(
+        new Path(viewPath, s"g${meta.gen}").toString).queryExecution.analyzed)
       viewPlanCache.put(key, p)
     }
     ViewSide(p, meta)

@@ -3,7 +3,6 @@ package graft.plans
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import graft.sources.SidecarManifest
 
@@ -48,19 +47,14 @@ import graft.sources.SidecarManifest
   * and is left alone. Fires wherever the relation appears (under
   * joins, aggregates, windows), not just under Filters.
   */
-case class BucketLayoutRule(spark: SparkSession) extends Rule[LogicalPlan] {
+case class BucketLayoutRule(spark: SparkSession) extends GraftRule {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled =
-      try spark.conf.get("spark.graft.bucketDiscovery.enabled", "true").toBoolean
-      catch { case scala.util.control.NonFatal(_) => true }
-    if (!enabled || ZoneMapPruneRule.inRule.get()) plan
-    else plan.transform {
-      case rel @ LogicalRelation(hfs: HadoopFsRelation, _, _, _, _)
-          if hfs.bucketSpec.isEmpty && hfs.partitionSchema.isEmpty =>
-        try BucketLayoutRule.tryClaim(spark, rel, hfs).getOrElse(rel)
-        catch { case scala.util.control.NonFatal(_) => rel }
-    }
+  override protected def switch: Option[String] = Some("spark.graft.bucketDiscovery.enabled")
+
+  protected def rewrite: PartialFunction[LogicalPlan, Option[LogicalPlan]] = {
+    case rel @ LogicalRelation(hfs: HadoopFsRelation, _, _, _, _)
+        if hfs.bucketSpec.isEmpty && hfs.partitionSchema.isEmpty =>
+      BucketLayoutRule.tryClaim(spark, rel, hfs)
   }
 }
 
@@ -81,10 +75,7 @@ object BucketLayoutRule {
   private[plans] def tryClaim(spark: SparkSession, rel: LogicalRelation,
       hfs: HadoopFsRelation): Option[LogicalRelation] =
     for {
-      root <- {
-        val roots = hfs.location.rootPaths
-        if (roots.size == 1) Some(roots.head.toString) else None
-      }
+      GraftRule.Scan(_, _, root) <- GraftRule.scanOf(rel)
       (key, buckets, specM) <- specFor(root, spark)
       if hfs.dataSchema.fieldNames.contains(key)
       liveStats = ZoneMapPruneRule.liveStatsOf(hfs)

@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{
   AggregateExpression, Average, Complete, Count, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{
   Aggregate, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.DecimalType
 
 /** Rewrite `SUM(e: DECIMAL(p ≤ 18, s))` — and `AVG(e)` over the same
@@ -66,21 +65,15 @@ import org.apache.spark.sql.types.DecimalType
   * changes the function node, so it goes last (EagerAggregationRule
   * additionally accepts an already-rewritten SumUnscaled128 partial,
   * in case the fixpoint revisits). */
-case class DecimalSumRule(spark: SparkSession) extends Rule[LogicalPlan] {
+case class DecimalSumRule(spark: SparkSession) extends GraftRule {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled =
-      try spark.conf.get("spark.graft.decimalSum128.enabled", "true").toBoolean
-      catch { case scala.util.control.NonFatal(_) => true }
-    if (!enabled || ZoneMapPruneRule.inRule.get()) plan
-    else plan.transform {
-      case agg: Aggregate =>
-        try rewrite(agg)
-        catch { case scala.util.control.NonFatal(_) => agg }
-    }
+  override protected def switch: Option[String] = Some("spark.graft.decimalSum128.enabled")
+
+  protected def rewrite: PartialFunction[LogicalPlan, Option[LogicalPlan]] = {
+    case agg: Aggregate => Some(sums128(agg))
   }
 
-  private def rewrite(agg: Aggregate): Aggregate = {
+  private def sums128(agg: Aggregate): Aggregate = {
     // the unscaled values are PROJECTED below the aggregate: the
     // aggregate's update expressions reference each input ~5 times
     // (low add, carry terms, sign word, null flag), and conditional

@@ -5,8 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeRef
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, JoinHint, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.types.LongType
 import graft.sources.SidecarManifest
 
@@ -53,22 +52,18 @@ import graft.sources.SidecarManifest
   * BEFORE [[ZoneMapPruneRule]] (no interaction: this rule fires only
   * on filter-less plans, where the pruner has nothing to cut).
   */
-case class DictDistinctRule(spark: SparkSession) extends Rule[LogicalPlan] {
-  import DictDistinctRule._
+case class DictDistinctRule(spark: SparkSession) extends GraftRule {
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (inRewrite.get()) plan
-    else plan.transform {
-      case agg: Aggregate =>
-        try tryRewrite(spark, agg).getOrElse(agg)
-        catch { case scala.util.control.NonFatal(_) => agg }
-    }
+  protected def rewrite: PartialFunction[LogicalPlan, Option[LogicalPlan]] = {
+    case agg: Aggregate => DictDistinctRule.tryRewrite(spark, agg)
+  }
 }
 
 object DictDistinctRule {
 
-  private val inRewrite: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
+  /** The widest scan side, as a share of the live files, at which a
+    * filtered serve still beats the plain scan. */
+  private val MaxScanFraction = 0.5
 
   /** Coverage snapshot of one sidecar generation: per column, the
     * covered file set; the sidecar's total file set (the equality
@@ -113,15 +108,14 @@ object DictDistinctRule {
       .getOrElse(true)
 
   private def coverageFor(spark: SparkSession, rootPath: String,
-      mtime: Long): Option[Coverage] = {
+      mtime: Long): Coverage = {
     val key = (norm(rootPath), mtime)
     val hit = coverageCache.get(key)
-    if (hit != null) Some(hit)
+    if (hit != null) hit
     else {
       val decT0 = System.nanoTime()
-      inRewrite.set(java.lang.Boolean.TRUE)
       val built =
-        try {
+        try GraftRule.internally {
           import org.apache.spark.sql.functions.{col, size => asize}
           val df = graft.sources.DictionaryIndex.sidecarFrame(spark, rootPath, mtime)
           val collected = df.select(col("file"), col("column"), col("covered"),
@@ -143,7 +137,7 @@ object DictDistinctRule {
             c -> ((rs.exists(_._7 > 0),
               rs.exists(_._7 < 0) || rs.map(_._1).toSet != allFiles))
           }
-          Some(Coverage(
+          Coverage(
             allFiles,
             raw,
             rows.groupBy(_._2).map { case (c, rs) =>
@@ -152,14 +146,13 @@ object DictDistinctRule {
             nulls,
             rows.map(r => (r._2, r._1) -> r._7).toMap,
             rows.collect { case r if r._8 >= 0 => r._1 -> ((r._8, r._9)) }
-              .toMap))
-        } catch { case scala.util.control.NonFatal(_) => None }
-        finally inRewrite.set(java.lang.Boolean.FALSE)
-      // feed the shared per-root cost model: the coverage job is this
-      // serve's decision cost
-      graft.sources.CostRouter.observeDecision(
-        rootPath, (System.nanoTime() - decT0) / 1e9)
-      built.foreach(coverageCache.put(key, _))
+              .toMap)
+        }
+        // feed the shared per-root cost model: the coverage job is this
+        // serve's decision cost
+        finally graft.sources.CostRouter.observeDecision(
+          rootPath, (System.nanoTime() - decT0) / 1e9)
+      coverageCache.put(key, built)
       built
     }
   }
@@ -172,10 +165,10 @@ object DictDistinctRule {
         size > 128
     })
 
-  /** One per-column serve plan, built under the re-entrancy guard and
-    * memoized per (root, dictionary anchor, `inputs`, session): `inputs`
-    * must hold everything else the plan is a function of, so a repeated
-    * query shape plans nothing. The OPTIMIZED subtree is spliced: this
+  /** One per-column serve plan, built with the graft rules standing
+    * down ([[GraftRule.internally]]) and memoized per (root, dictionary
+    * anchor, `inputs`, session): `inputs` must hold everything else the
+    * plan is a function of, so a repeated query shape plans nothing. The OPTIMIZED subtree is spliced: this
     * rule runs in the user-provided batch after Spark's main
     * optimization, so an analyzed splice would carry nodes
     * (Deduplicate from .distinct()) no later rule lowers. */
@@ -183,23 +176,10 @@ object DictDistinctRule {
       inputs: Any)(build: => Option[org.apache.spark.sql.DataFrame]): Option[LogicalPlan] = {
     val key = (norm(rootPath), mtime, inputs, SidecarManifest.sessionKey(spark))
     Option(servePlanCache.get(key)).orElse {
-      inRewrite.set(java.lang.Boolean.TRUE)
-      val built =
-        try build.map(_.queryExecution.optimizedPlan)
-        catch { case scala.util.control.NonFatal(_) => None }
-        finally inRewrite.set(java.lang.Boolean.FALSE)
+      val built = GraftRule.internally(build.map(_.queryExecution.optimizedPlan))
       built.foreach(servePlanCache.put(key, _))
       built
     }
-  }
-
-  // attr-only Projects down to the bare relation; ANY Filter refuses
-  private def unwrap(p: LogicalPlan): Option[LogicalRelation] = p match {
-    case pr: Project
-        if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
-      unwrap(pr.child)
-    case rel @ LogicalRelation(_: HadoopFsRelation, _, _, _, _) => Some(rel)
-    case _ => None
   }
 
   /** The serve-grade currency test ([[graft.sources.SidecarManifest
@@ -254,13 +234,10 @@ object DictDistinctRule {
   private def tryDistinctValues(spark: SparkSession, agg: Aggregate,
       out: AttributeReference, child: LogicalPlan): Option[LogicalPlan] =
     for {
-      rel <- unwrap(child)
-      hfs = rel.relation.asInstanceOf[HadoopFsRelation]
-      roots = hfs.location.rootPaths.toSeq.map(_.toString)
-      if roots.size == 1
-      if costOk(hfs, roots.head)
-      mtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Dict)
-      cov <- coverageFor(spark, roots.head, mtime)
+      GraftRule.Scan(Nil, hfs, root) <- GraftRule.scanOf(child)
+      if costOk(hfs, root)
+      mtime <- SidecarManifest.anchor(root, spark, SidecarManifest.Dict)
+      cov = coverageFor(spark, root, mtime)
       // the soundness gate: the serve-grade currency test, AND each
       // recorded (mtime, size) matches its live file
       if servable(mtime, cov, hfs)
@@ -268,7 +245,7 @@ object DictDistinctRule {
         !cov.mixedTypeColumns.contains(out.name)
       (anyNull, unknown) = cov.nullsByColumn.getOrElse(out.name, (false, true))
       if !(unknown && out.nullable)
-      plan <- distinctPlan(spark, roots.head, mtime, out,
+      plan <- distinctPlan(spark, root, mtime, out,
         needNull = anyNull && out.nullable)
     } yield Project(Seq(
       Alias(plan.output.head, out.name)(exprId = out.exprId)), plan)
@@ -276,11 +253,8 @@ object DictDistinctRule {
   private def tryCountDistinct(
       spark: SparkSession, agg: Aggregate): Option[LogicalPlan] = {
     for {
-      rel <- unwrap(agg.child)
-      hfs = rel.relation.asInstanceOf[HadoopFsRelation]
-      roots = hfs.location.rootPaths.toSeq.map(_.toString)
-      if roots.size == 1
-      if costOk(hfs, roots.head)
+      GraftRule.Scan(Nil, hfs, root) <- GraftRule.scanOf(agg.child)
+      if costOk(hfs, root)
       // every output must be Alias(COUNT(DISTINCT attr)) over a
       // FAITHFUL type — the same gate the SELECT DISTINCT arm and the
       // engine's dictServe apply. Without it a partially-covered
@@ -289,7 +263,7 @@ object DictDistinctRule {
       // double-count shared values and collapse sub-second-distinct
       // timestamps. Any other shape refuses the whole query (no
       // partial serves).
-      pairs <- traverse(agg.aggregateExpressions.map {
+      pairs <- GraftRule.traverse(agg.aggregateExpressions.map {
         case al @ Alias(AggregateExpression(
             Count(Seq(a: AttributeReference)), Complete, true, None, _), _)
             if faithful(a.dataType) =>
@@ -297,8 +271,8 @@ object DictDistinctRule {
         case _ => None
       })
       if pairs.nonEmpty
-      mtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Dict)
-      cov <- coverageFor(spark, roots.head, mtime)
+      mtime <- SidecarManifest.anchor(root, spark, SidecarManifest.Dict)
+      cov = coverageFor(spark, root, mtime)
       // the soundness gate: the serve-grade currency test, AND each
       // recorded (mtime, size) matches its live file
       if servable(mtime, cov, hfs)
@@ -308,26 +282,11 @@ object DictDistinctRule {
       // column's union semantics live in DictionaryIndex — refuse here)
       if cols.forall(c => cov.coveredByColumn.contains(c) &&
         !cov.mixedTypeColumns.contains(c))
-      plan <- rewriteOnto(spark, roots.head, mtime, cov, agg, pairs)
+      plan <- rewriteOnto(spark, root, mtime, cov, agg, pairs)
     } yield plan
   }
 
-  private def traverse[A](xs: Seq[Option[A]]): Option[Seq[A]] =
-    if (xs.forall(_.isDefined)) Some(xs.map(_.get)) else None
-
   // ---------- the FILTERED serve (round 13, verdict ask #7) ----------
-
-  /** attr-only Projects down to exactly ONE Filter over [attr-only
-    * Projects over] the bare relation. */
-  private def unwrapFiltered(p: LogicalPlan)
-      : Option[(Expression, LogicalRelation)] = p match {
-    case pr: Project
-        if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
-      unwrapFiltered(pr.child)
-    case org.apache.spark.sql.catalyst.plans.logical.Filter(cond, child) =>
-      unwrap(child).map(r => (cond, r))
-    case _ => None
-  }
 
   // Tri-state decisions are SHARED with the zone-stats serve
   // ([[ZoneAggRule.triStateFor]]): decided over the `_graft_index`
@@ -350,18 +309,15 @@ object DictDistinctRule {
     * ([[PredicateExtractor.convertComplete]] — an all-rows proof over
     * a weakened predicate would claim rows a dropped conjunct
     * rejects) and refuses when the scan side exceeds
-    * `spark.graft.dictServe.maxScanFraction` (default 0.5) of the
-    * live files — past that the serve is just a worse scan. */
+    * [[MaxScanFraction]] of the live files — past that the serve is
+    * just a worse scan. */
   private def tryCountDistinctFiltered(
       spark: SparkSession, agg: Aggregate): Option[LogicalPlan] =
     for {
-      (cond, rel) <- unwrapFiltered(agg.child)
+      GraftRule.Scan(Seq(cond), hfs, root) <- GraftRule.scanOf(agg.child)
       if cond.deterministic
-      hfs = rel.relation.asInstanceOf[HadoopFsRelation]
-      roots = hfs.location.rootPaths.toSeq.map(_.toString)
-      if roots.size == 1
-      if costOk(hfs, roots.head)
-      pairs <- traverse(agg.aggregateExpressions.map {
+      if costOk(hfs, root)
+      pairs <- GraftRule.traverse(agg.aggregateExpressions.map {
         case al @ Alias(AggregateExpression(
             Count(Seq(a: AttributeReference)), Complete, true, None, _), _)
             if faithful(a.dataType) =>
@@ -370,33 +326,30 @@ object DictDistinctRule {
       })
       if pairs.nonEmpty
       pred <- PredicateExtractor.convertComplete(cond)
-      mtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Dict)
-      cov <- coverageFor(spark, roots.head, mtime)
+      mtime <- SidecarManifest.anchor(root, spark, SidecarManifest.Dict)
+      cov = coverageFor(spark, root, mtime)
       liveRaw = hfs.location.inputFiles.toSeq
       liveFiles = liveRaw.map(norm).toSet
       if servable(mtime, cov, hfs)
       cols = pairs.map(_._2).map(a => a.name).distinct
       if cols.forall(c => cov.coveredByColumn.contains(c) &&
         !cov.mixedTypeColumns.contains(c))
-      zoneMtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Zone)
+      zoneMtime <- SidecarManifest.anchor(root, spark, SidecarManifest.Zone)
       // no live file newer than the zone index: its all-true proofs
       // are build-time claims (the dict gates only protect the DICT
       // sidecar's freshness)
       if SidecarManifest.prunable(zoneMtime,
         ZoneMapPruneRule.liveStatsOf(hfs).valuesIterator.map(_._1))
-      (allTrueRaw, allFalseRaw) <- ZoneAggRule.triStateFor(
-        spark, roots.head, zoneMtime, pred)
+      (allTrueRaw, allFalseRaw) = ZoneAggRule.triStateFor(
+        spark, root, zoneMtime, pred)
       allTrue = allTrueRaw & liveFiles
       allFalse = allFalseRaw & liveFiles
       undecided = liveFiles -- allTrue -- allFalse
       // the widest per-column scan side decides the fire gate
       maxScan = cols.map(c => (undecided ++
         (allTrue -- cov.coveredByColumn(c))).size).max
-      maxFrac = try spark.conf.get(
-        "spark.graft.dictServe.maxScanFraction", "0.5").toDouble
-        catch { case scala.util.control.NonFatal(_) => 0.5 }
-      if liveFiles.nonEmpty && maxScan <= liveFiles.size * maxFrac
-      plan <- filteredRewrite(spark, roots.head, hfs.dataSchema, mtime, cov,
+      if liveFiles.nonEmpty && maxScan <= liveFiles.size * MaxScanFraction
+      plan <- filteredRewrite(spark, root, hfs.dataSchema, mtime, cov,
         agg, pairs, cond, allTrue, undecided, liveRaw)
     } yield plan
 
@@ -500,29 +453,26 @@ object DictDistinctRule {
     * their nulls natively) instead of refusing the serve, and any
     * dict-side positive count adds the one NULL row plain SQL would
     * return. Exact by construction; same COMPLETE-conversion and
-    * maxScanFraction gates. */
+    * [[MaxScanFraction]] gates. */
   private def tryDistinctValuesFiltered(spark: SparkSession,
       out: AttributeReference, child: LogicalPlan): Option[LogicalPlan] =
     for {
-      (cond, rel) <- unwrapFiltered(child)
+      GraftRule.Scan(Seq(cond), hfs, root) <- GraftRule.scanOf(child)
       if cond.deterministic
-      hfs = rel.relation.asInstanceOf[HadoopFsRelation]
-      roots = hfs.location.rootPaths.toSeq.map(_.toString)
-      if roots.size == 1
-      if costOk(hfs, roots.head)
+      if costOk(hfs, root)
       pred <- PredicateExtractor.convertComplete(cond)
-      mtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Dict)
-      cov <- coverageFor(spark, roots.head, mtime)
+      mtime <- SidecarManifest.anchor(root, spark, SidecarManifest.Dict)
+      cov = coverageFor(spark, root, mtime)
       liveRaw = hfs.location.inputFiles.toSeq
       liveFiles = liveRaw.map(norm).toSet
       if servable(mtime, cov, hfs)
       if cov.coveredByColumn.contains(out.name) &&
         !cov.mixedTypeColumns.contains(out.name)
-      zoneMtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Zone)
+      zoneMtime <- SidecarManifest.anchor(root, spark, SidecarManifest.Zone)
       if SidecarManifest.prunable(zoneMtime,
         ZoneMapPruneRule.liveStatsOf(hfs).valuesIterator.map(_._1))
-      (allTrueRaw, allFalseRaw) <- ZoneAggRule.triStateFor(
-        spark, roots.head, zoneMtime, pred)
+      (allTrueRaw, allFalseRaw) = ZoneAggRule.triStateFor(
+        spark, root, zoneMtime, pred)
       allTrue = allTrueRaw & liveFiles
       allFalse = allFalseRaw & liveFiles
       undecided = liveFiles -- allTrue -- allFalse
@@ -530,13 +480,10 @@ object DictDistinctRule {
       dictFiles = (allTrue & covered).filter(f => !out.nullable ||
         cov.nullCountByFile.get((out.name, f)).exists(_ >= 0))
       scanFiles = undecided ++ (allTrue -- dictFiles)
-      maxFrac = try spark.conf.get(
-        "spark.graft.dictServe.maxScanFraction", "0.5").toDouble
-        catch { case scala.util.control.NonFatal(_) => 0.5 }
-      if liveFiles.nonEmpty && scanFiles.size <= liveFiles.size * maxFrac
+      if liveFiles.nonEmpty && scanFiles.size <= liveFiles.size * MaxScanFraction
       needNull = out.nullable && dictFiles.exists(f =>
         cov.nullCountByFile.getOrElse((out.name, f), 0L) > 0)
-      plan <- filteredDistinctPlan(spark, roots.head, hfs.dataSchema, mtime,
+      plan <- filteredDistinctPlan(spark, root, hfs.dataSchema, mtime,
         cov, out, cond, dictFiles, scanFiles, liveRaw, needNull)
     } yield Project(Seq(
       Alias(plan.output.head, out.name)(exprId = out.exprId)), plan)

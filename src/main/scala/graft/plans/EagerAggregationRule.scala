@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{
   Aggregate, Filter, Join, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{
   ByteType, DecimalType, DoubleType, IntegerType, LongType, ShortType}
@@ -117,18 +116,12 @@ import org.apache.spark.sql.types.{
   * shape, so intermediate pruning Projects are simply dropped here
   * and re-grown by the optimizer.
   */
-case class EagerAggregationRule(spark: SparkSession) extends Rule[LogicalPlan] {
+case class EagerAggregationRule(spark: SparkSession) extends GraftRule {
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    val enabled =
-      try spark.conf.get("spark.graft.eagerAgg.enabled", "true").toBoolean
-      catch { case scala.util.control.NonFatal(_) => true }
-    if (!enabled || ZoneMapPruneRule.inRule.get()) plan
-    else plan.transform {
-      case agg: Aggregate =>
-        try EagerAggregationRule.tryRewrite(spark, agg).getOrElse(agg)
-        catch { case scala.util.control.NonFatal(_) => agg }
-    }
+  override protected def switch: Option[String] = Some("spark.graft.eagerAgg.enabled")
+
+  protected def rewrite: PartialFunction[LogicalPlan, Option[LogicalPlan]] = {
+    case agg: Aggregate => EagerAggregationRule.tryRewrite(spark, agg)
   }
 }
 
@@ -252,13 +245,6 @@ object EagerAggregationRule {
     sites.view.flatMap(site => tryPushTo(spark, agg, site)).headOption
   }
 
-  // reentrancy guard for the cost gate's sidecar stats job: the nested
-  // metadata query re-enters the optimizer, and while its plan has no
-  // bucketed fact joins to push, probing stats from inside the probe
-  // would still double-pay the job
-  private val inGate: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
-
   /** GROUP-CARDINALITY COST GATE (round 16): the push is near
     * break-even when the pre-aggregate barely shrinks the fact —
     * q12's 600M-row / 150M-group fact spends ~10 s building a
@@ -281,11 +267,8 @@ object EagerAggregationRule {
       k: AttributeReference): Boolean = {
     if (!integralType(k.dataType) || site.rootPath.isEmpty) return true
     val minReduction =
-      try spark.conf
-        .get("spark.graft.eagerAgg.minGroupReduction", "8.0").toDouble
-      catch { case scala.util.control.NonFatal(_) => 8.0 }
-    if (minReduction <= 0 || inGate.get()) return true
-    inGate.set(java.lang.Boolean.TRUE)
+      GraftRule.conf(spark, "spark.graft.eagerAgg.minGroupReduction", 8.0)
+    if (minReduction <= 0) return true
     try {
       ZoneAggRule.keyRangeStats(spark, site.rootPath.get, k.name) match {
         case Some((rows, mn, mx)) if rows > 0 =>
@@ -296,8 +279,10 @@ object EagerAggregationRule {
           reductionLB >= minReduction
         case _ => true
       }
-    } catch { case scala.util.control.NonFatal(_) => true }
-    finally inGate.set(java.lang.Boolean.FALSE)
+    } catch {
+      // a failing stats probe assumes the push pays: both shapes are exact
+      case scala.util.control.NonFatal(_) => true
+    }
   }
 
   private def tryPushTo(spark: SparkSession, agg: Aggregate,

@@ -48,10 +48,9 @@ import org.apache.spark.sql.execution.datasources.{
   * REFUSAL GATES (plan-time work must be bounded):
   *   - dim side must carry a Filter/Aggregate or be a LocalRelation —
   *     an unfiltered dim is unselective, its key set refutes nothing;
-  *   - every dim-side file relation must total ≤
-  *     `spark.graft.joinPrune.maxDimBytes` (default 256 MB — the
-  *     broadcastable class; bigger dims make the plan-time job a
-  *     second fact scan);
+  *   - every dim-side file relation must total ≤ [[MaxDimBytes]]
+  *     (256 MB — the broadcastable class; bigger dims make the
+  *     plan-time job a second fact scan);
   *   - the dim's distinct key count must be ≤
   *     `spark.graft.joinPrune.maxKeys` (default 10000) — checked with
   *     a LIMIT n+1 collect, so an oversized key set costs one bounded
@@ -66,7 +65,9 @@ import org.apache.spark.sql.execution.datasources.{
 object JoinFilePruning {
 
   private val MaxKeysDefault = 10000
-  private val MaxDimBytesDefault = 256L * 1024 * 1024
+  private val MaxDimBytes = 256L * 1024 * 1024
+  /** The wall-clock budget of one prune's new decision work. */
+  private val MaxDecisionNanos = 10L * 1000 * 1000 * 1000
 
   // (fact root, column, CANONICALIZED dim plan, dim key name) ->
   // (raw dict cut with each file's RECORDED (mtime, size), the numeric
@@ -170,7 +171,7 @@ object JoinFilePruning {
     case other => other
   }
 
-  private def dimEligible(dim: LogicalPlan, maxBytes: Long): Boolean = {
+  private def dimEligible(dim: LogicalPlan): Boolean = {
     var selective = false
     var bytes = 0L
     var eligible = true
@@ -196,7 +197,7 @@ object JoinFilePruning {
     }
     if (dim.exists(_.expressions.exists(e => !e.deterministic)))
       eligible = false
-    eligible && selective && bytes <= maxBytes
+    eligible && selective && bytes <= MaxDimBytes
   }
 
   /** The physical dictionary domain for a join-key type: the cast that
@@ -221,9 +222,7 @@ object JoinFilePruning {
   private def pruneSubtree(spark: SparkSession, fact: LogicalPlan,
       dim: LogicalPlan, eqs: Seq[(AttributeReference, AttributeReference)])
       : Option[LogicalPlan] = {
-    val maxDimBytes = conf(spark, "spark.graft.joinPrune.maxDimBytes",
-      MaxDimBytesDefault)
-    if (!dimEligible(dim, maxDimBytes)) return None
+    if (!dimEligible(dim)) return None
     // orient each equality so the probe attr lives on the fact side
     val oriented = eqs.flatMap { case (a, b) =>
       if (fact.outputSet.exists(_.exprId == a.exprId) &&
@@ -251,10 +250,9 @@ object JoinFilePruning {
     //   - stop cutting a relation after two consecutive cuts added
     //     NOTHING new (the kept set stopped shrinking);
     //   - a hard wall-clock budget on this prune's NEW decision work
-    //     (`spark.graft.joinPrune.maxDecisionMillis`, default 10 s;
-    //     memoized cuts don't count — they're free).
-    val deadline = System.nanoTime() +
-      conf(spark, "spark.graft.joinPrune.maxDecisionMillis", 10000L) * 1000000L
+    //     ([[MaxDecisionNanos]], 10 s; memoized cuts don't count —
+    //     they're free).
+    val deadline = System.nanoTime() + MaxDecisionNanos
     val grouped = scala.collection.mutable.ArrayBuffer
       .empty[(LogicalRelation, Set[String])]
     // relation identity -> consecutive cuts that added NOTHING —
@@ -363,10 +361,6 @@ object JoinFilePruning {
       if skip.nonEmpty
     } yield (rel, skip)
 
-  private def conf(spark: SparkSession, key: String, dflt: Long): Long =
-    try spark.conf.get(key, dflt.toString).toLong
-    catch { case scala.util.control.NonFatal(_) => dflt }
-
   /** (raw dictionary cut with recorded per-file stats, numeric key
     * range) for one (fact root, key, dim) — memoized; the CALLER
     * verifies freshness against the live listing per query and takes
@@ -381,12 +375,10 @@ object JoinFilePruning {
     if (hit != null) return hit
     decisionJobs.incrementAndGet()
     val decT0 = System.nanoTime()
-    ZoneMapPruneRule.inRule.set(java.lang.Boolean.TRUE)
     val computed: Option[(Map[String, (Long, Long)], Option[(Double, Double)])] =
-      try {
+      try GraftRule.internally {
         import org.apache.spark.sql.functions.col
-        val maxKeys = conf(spark, "spark.graft.joinPrune.maxKeys",
-          MaxKeysDefault).toInt
+        val maxKeys = GraftRule.conf(spark, "spark.graft.joinPrune.maxKeys", MaxKeysDefault)
         // the dim side, evaluated: distinct surviving join keys,
         // LIMIT-bounded so an unselective dim costs one bounded job
         // select by the ATTRIBUTE, not its name — dim outputs may
@@ -438,8 +430,10 @@ object JoinFilePruning {
             }
           Some((dictCut, range))
         }
-      } catch { case scala.util.control.NonFatal(_) => None }
-      finally ZoneMapPruneRule.inRule.set(java.lang.Boolean.FALSE)
+      } catch {
+        // memoized below like any refusal: a failing dim job is not re-run
+        case scala.util.control.NonFatal(_) => None
+      }
     // feed the shared per-root cost model: this decision's wall time
     // is exactly what the benefit gate prices on the next query
     graft.sources.CostRouter.observeDecision(

@@ -4,8 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, LongType, ShortType, TimestampNTZType, TimestampType}
 import graft.sources.SidecarManifest
 
@@ -71,22 +70,14 @@ import graft.sources.SidecarManifest
   * (which may further block-prune the straddler scan this rule
   * emits).
   */
-case class ZoneAggRule(spark: SparkSession) extends Rule[LogicalPlan] {
-  import ZoneAggRule._
+case class ZoneAggRule(spark: SparkSession) extends GraftRule {
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (inRewrite.get()) plan
-    else plan.transform {
-      case agg: Aggregate =>
-        try tryRewrite(spark, agg).getOrElse(agg)
-        catch { case scala.util.control.NonFatal(_) => agg }
-    }
+  protected def rewrite: PartialFunction[LogicalPlan, Option[LogicalPlan]] = {
+    case agg: Aggregate => ZoneAggRule.tryRewrite(spark, agg)
+  }
 }
 
 object ZoneAggRule {
-
-  private val inRewrite: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
   private def norm(p: String): String = ZoneMapPruneRule.normFile(p)
 
@@ -162,26 +153,6 @@ object ZoneAggRule {
     if (out.forall(_.isDefined) && out.nonEmpty) Some(out.map(_.get)) else None
   }
 
-  /** attr-only Projects down to [one optional Filter over] the bare
-    * relation. */
-  private def unwrap(p: LogicalPlan)
-      : Option[(Option[Expression], LogicalRelation)] = p match {
-    case pr: Project
-        if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
-      unwrap(pr.child)
-    case org.apache.spark.sql.catalyst.plans.logical.Filter(cond, child) =>
-      unwrapBare(child).map(r => (Some(cond), r))
-    case other => unwrapBare(other).map(r => (None, r))
-  }
-
-  private def unwrapBare(p: LogicalPlan): Option[LogicalRelation] = p match {
-    case pr: Project
-        if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
-      unwrapBare(pr.child)
-    case rel @ LogicalRelation(_: HadoopFsRelation, _, _, _, _) => Some(rel)
-    case _ => None
-  }
-
   /** The metadata a serve reads off the sidecar's [[ZoneSnapshot]]:
     * file row counts plus, per requested column and file, the folded
     * entries ([[FileAgg]]). */
@@ -194,18 +165,15 @@ object ZoneAggRule {
     * sidecar generation, none otherwise. The time spent is the serve's
     * decision cost, fed to the shared per-root cost model. */
   private def snapshotFor(spark: SparkSession, rootPath: String,
-      mtime: Long, cols: Seq[String], pred: Option[Pred]): Option[Snap] = {
+      mtime: Long, cols: Seq[String], pred: Option[Pred]): Snap = {
     val decT0 = System.nanoTime()
-    val built =
-      try {
-        val z = ZoneSnapshot.ofSidecar(rootPath, mtime)
-        z.ensure(spark, cols.toSet ++ pred.toSeq.flatMap(IndexPruning.refColumns))
-        Some(Snap(z.fileRows(spark), cols.flatMap(c =>
-          z.fileAgg(spark, c).map { case (f, a) => (c, f) -> a }).toMap))
-      } catch { case scala.util.control.NonFatal(_) => None }
-    graft.sources.CostRouter.observeDecision(
+    try {
+      val z = ZoneSnapshot.ofSidecar(rootPath, mtime)
+      z.ensure(spark, cols.toSet ++ pred.toSeq.flatMap(IndexPruning.refColumns))
+      Snap(z.fileRows(spark), cols.flatMap(c =>
+        z.fileAgg(spark, c).map { case (f, a) => (c, f) -> a }).toMap)
+    } finally graft.sources.CostRouter.observeDecision(
       rootPath, (System.nanoTime() - decT0) / 1e9)
-    built
   }
 
   /** COST-ESTIMATE view for [[EagerAggregationRule]]'s group-
@@ -222,7 +190,7 @@ object ZoneAggRule {
       column: String): Option[(Long, Long, Long)] =
     for {
       mtime <- SidecarManifest.anchor(rootPath, spark, SidecarManifest.Zone)
-      snap <- snapshotFor(spark, rootPath, mtime, Seq(column), None)
+      snap = snapshotFor(spark, rootPath, mtime, Seq(column), None)
       bounds <- {
         val perFile = snap.fileRows.keys.map(f => snap.perCol.get((column, f)))
         if (perFile.isEmpty || perFile.exists(e =>
@@ -240,9 +208,8 @@ object ZoneAggRule {
     * [[ZoneSnapshot]]; callers intersect with the live listing. Shared
     * with the filtered dictionary serve ([[DictDistinctRule]]). */
   private[plans] def triStateFor(spark: SparkSession, rootPath: String,
-      mtime: Long, pred: Pred): Option[(Set[String], Set[String])] =
-    try Some(ZoneSnapshot.ofSidecar(rootPath, mtime).triState(spark, pred))
-    catch { case scala.util.control.NonFatal(_) => None }
+      mtime: Long, pred: Pred): (Set[String], Set[String]) =
+    ZoneSnapshot.ofSidecar(rootPath, mtime).triState(spark, pred)
 
   /** Can file `f` be PROVEN to hold exactly ONE group value for data
     * column `c` (round 14 — grouped serving beyond partition columns)?
@@ -306,11 +273,10 @@ object ZoneAggRule {
     if (agg.groupingExpressions.nonEmpty) return tryGrouped(spark, agg)
     for {
       pairs <- recognize(agg)
-      (condOpt, rel) <- unwrap(agg.child)
+      GraftRule.Scan(conds, hfs, root) <- GraftRule.scanOf(agg.child)
+      if conds.size <= 1
+      condOpt = conds.headOption
       if condOpt.forall(_.deterministic)
-      hfs = rel.relation.asInstanceOf[HadoopFsRelation]
-      roots = hfs.location.rootPaths.toSeq.map(_.toString)
-      if roots.size == 1
       // every referenced column must be a DATA column (partition
       // columns have no footer stats)
       cols = pairs.map(_._2).collect {
@@ -330,15 +296,15 @@ object ZoneAggRule {
       // repays them, after enough repeats otherwise; refuse while
       // renting the scan is cheaper (the BENCH_ZONEFRAC_r14
       // admission). Uncalibrated roots keep r14 always-serve behavior.
-      if graft.sources.CostRouter.shouldInvest(roots.head,
+      if graft.sources.CostRouter.shouldInvest(root,
         "za:" + cols.mkString(",") + "|" +
           predOpt.map(_.toString).getOrElse(""),
         hfs.location.sizeInBytes).getOrElse(true)
-      mtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Zone)
+      mtime <- SidecarManifest.anchor(root, spark, SidecarManifest.Zone)
       liveRaw = hfs.location.inputFiles.toSeq
       liveFiles = liveRaw.map(norm).toSet
       if liveFiles.nonEmpty
-      snap <- snapshotFor(spark, roots.head, mtime, cols, predOpt)
+      snap = snapshotFor(spark, root, mtime, cols, predOpt)
       // the answer gates: index file set == live listing EXACTLY, and
       // no live file newer than the index — a file rewritten in place
       // AFTER the sidecar save carries dead stats (the anchor ordering
@@ -347,20 +313,16 @@ object ZoneAggRule {
       // (round 15)
       if SidecarManifest.servable(
         mtime, snap.fileRows.keySet, ZoneMapPruneRule.liveStatsOf(hfs))
-      (allTrueRaw, allFalseRaw) <- predOpt match {
-        case None    => Some((liveFiles, Set.empty[String]))
-        case Some(p) => triStateFor(spark, roots.head, mtime, p)
-      }
+      (allTrueRaw, allFalseRaw) = predOpt.fold((liveFiles, Set.empty[String]))(
+        triStateFor(spark, root, mtime, _))
       allTrue = allTrueRaw & liveFiles
       allFalse = allFalseRaw & liveFiles
       undecided = liveFiles -- allTrue -- allFalse
       served = allTrue.filter(f => pairs.forall(p => trusted(snap, f, p._2)))
       scanFiles = undecided ++ (allTrue -- served)
-      maxFrac = try spark.conf.get(
-        "spark.graft.statsServe.maxScanFraction", "0.5").toDouble
-        catch { case scala.util.control.NonFatal(_) => 0.5 }
-      if scanFiles.size <= liveFiles.size * maxFrac
-      plan <- buildPlan(spark, roots.head, hfs, pairs, condOpt, snap, served,
+      if scanFiles.size <= liveFiles.size *
+        GraftRule.conf(spark, "spark.graft.statsServe.maxScanFraction", 0.5)
+      plan <- buildPlan(spark, root, hfs, pairs, condOpt, snap, served,
         scanFiles, liveRaw)
     } yield {
       val out = pairs.zip(plan.output).map { case ((orig, _), a) =>
@@ -432,13 +394,12 @@ object ZoneAggRule {
     val kinds = entries.collect { case g: GAgg => g }.sortBy(_.idx)
     if (kinds.isEmpty) return None
     for {
-      (condOpt, rel) <- unwrap(agg.child)
+      GraftRule.Scan(conds, hfs, root) <- GraftRule.scanOf(agg.child)
+      if conds.size <= 1
+      condOpt = conds.headOption
       if condOpt.forall(_.deterministic)
-      hfs = rel.relation.asInstanceOf[HadoopFsRelation]
-      roots = hfs.location.rootPaths.toSeq.map(_.toString)
-      if roots.size == 1
       // measured benefit gate (ski-rental) — see the global arm
-      if graft.sources.CostRouter.shouldInvest(roots.head,
+      if graft.sources.CostRouter.shouldInvest(root,
         "zag:" + groupAttrs.map(_.name).mkString(","),
         hfs.location.sizeInBytes).getOrElse(true)
       // group columns: PARTITION columns serve from the FileIndex's
@@ -467,17 +428,15 @@ object ZoneAggRule {
         case None => Some(None)
         case Some(c) => PredicateExtractor.convertComplete(c).map(Some(_))
       }
-      mtime <- SidecarManifest.anchor(roots.head, spark, SidecarManifest.Zone)
+      mtime <- SidecarManifest.anchor(root, spark, SidecarManifest.Zone)
       liveRaw = hfs.location.inputFiles.toSeq
       liveFiles = liveRaw.map(norm).toSet
       if liveFiles.nonEmpty
-      snap <- snapshotFor(spark, roots.head, mtime, cols, predOpt)
+      snap = snapshotFor(spark, root, mtime, cols, predOpt)
       if SidecarManifest.servable(
         mtime, snap.fileRows.keySet, ZoneMapPruneRule.liveStatsOf(hfs))
-      (allTrueRaw, allFalseRaw) <- predOpt match {
-        case None    => Some((liveFiles, Set.empty[String]))
-        case Some(p) => triStateFor(spark, roots.head, mtime, p)
-      }
+      (allTrueRaw, allFalseRaw) = predOpt.fold((liveFiles, Set.empty[String]))(
+        triStateFor(spark, root, mtime, _))
       allTrue = allTrueRaw & liveFiles
       allFalse = allFalseRaw & liveFiles
       undecided = liveFiles -- allTrue -- allFalse
@@ -486,11 +445,9 @@ object ZoneAggRule {
           dataGroupCols.forall(a =>
             singleGroupValue(snap, f, a.name, a.dataType).isDefined))
       scanFiles = undecided ++ (allTrue -- served)
-      maxFrac = try spark.conf.get(
-        "spark.graft.statsServe.maxScanFraction", "0.5").toDouble
-        catch { case scala.util.control.NonFatal(_) => 0.5 }
-      if scanFiles.size <= liveFiles.size * maxFrac
-      plan <- buildGroupedPlan(spark, roots.head, hfs, groupAttrs,
+      if scanFiles.size <= liveFiles.size *
+        GraftRule.conf(spark, "spark.graft.statsServe.maxScanFraction", 0.5)
+      plan <- buildGroupedPlan(spark, root, hfs, groupAttrs,
         kinds, condOpt, snap, served, scanFiles, liveRaw)
     } yield {
       // plan output = group columns (in groupAttrs order) ++ partials
@@ -521,147 +478,143 @@ object ZoneAggRule {
       kinds: Seq[GAgg], condOpt: Option[Expression], snap: Snap,
       served: Set[String], scanFiles: Set[String],
       liveRaw: Seq[String]): Option[LogicalPlan] = {
-    inRewrite.set(java.lang.Boolean.TRUE)
-    try {
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.catalyst.InternalRow
-      val partSchema = hfs.partitionSchema
-      // file -> its partition values row (for partition group columns)
-      val partValues: Map[String, org.apache.spark.sql.catalyst.InternalRow] =
-        hfs.location.listFiles(Nil, Nil).flatMap { pd =>
-          pd.files.map(f => norm(f.getPath.toString) -> pd.values)
-        }.toMap
-      // file -> this file's group key (internal values, in group
-      // order): partition columns read the FileIndex's exact map; data
-      // columns read the PROVEN single-group value from the stats
-      // (None components never occur for served files — the serve
-      // filter required the proof)
-      def keyFor(f: String): Option[Seq[Any]] = {
-        val parts = groupAttrs.map { a =>
-          if (partSchema.fieldNames.contains(a.name))
-            partValues.get(f).map(r =>
-              r.get(partSchema.fieldIndex(a.name), a.dataType))
-          else singleGroupValue(snap, f, a.name, a.dataType).map {
-            case Some(v: Long) => internalOf(v, a.dataType)
-            case Some(s: String) =>
-              org.apache.spark.unsafe.types.UTF8String.fromString(s)
-            case _ => null
-          }
-        }
-        if (parts.forall(_.isDefined)) Some(parts.map(_.get)) else None
-      }
-      val fileKey: Map[String, Seq[Any]] =
-        served.toSeq.flatMap(f => keyFor(f).map(f -> _)).toMap
-      if (!served.forall(fileKey.contains)) return None
-      // fold served files per group: Array(count partials per kind)
-      val partials = scala.collection.mutable.LinkedHashMap
-        .empty[Seq[Any], Array[Any]]
-      served.toSeq.sortBy(identity).foreach { f =>
-        val acc = partials.getOrElseUpdate(fileKey(f),
-          Array.fill[Any](kinds.size)(null))
-        kinds.zipWithIndex.foreach { case (g, i) =>
-          g.kind match {
-            case CountStar =>
-              acc(i) = (if (acc(i) == null) 0L
-                else acc(i).asInstanceOf[Long]) + snap.fileRows(f)
-            case CountCol(c) =>
-              val e = snap.perCol((c, f))
-              acc(i) = (if (acc(i) == null) 0L
-                else acc(i).asInstanceOf[Long]) + (e.rows - e.nulls)
-            case MinCol(c, t) =>
-              snap.perCol((c, f)).minLong.foreach { v =>
-                val nv = if (acc(i) == null) v
-                  else math.min(acc(i).asInstanceOf[Long], v)
-                acc(i) = nv
-              }
-            case MaxCol(c, t) =>
-              snap.perCol((c, f)).maxLong.foreach { v =>
-                val nv = if (acc(i) == null) v
-                  else math.max(acc(i).asInstanceOf[Long], v)
-                acc(i) = nv
-              }
-            case SumCol(c) =>
-              snap.perCol((c, f)).sumLong.foreach { v =>
-                // addExact: a per-group overflow aborts the whole
-                // rewrite (caught below) rather than wrapping silently
-                val nv = if (acc(i) == null) v
-                  else Math.addExact(acc(i).asInstanceOf[Long], v)
-                acc(i) = nv
-              }
-          }
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.InternalRow
+    val partSchema = hfs.partitionSchema
+    // file -> its partition values row (for partition group columns)
+    val partValues: Map[String, org.apache.spark.sql.catalyst.InternalRow] =
+      hfs.location.listFiles(Nil, Nil).flatMap { pd =>
+        pd.files.map(f => norm(f.getPath.toString) -> pd.values)
+      }.toMap
+    // file -> this file's group key (internal values, in group
+    // order): partition columns read the FileIndex's exact map; data
+    // columns read the PROVEN single-group value from the stats
+    // (None components never occur for served files — the serve
+    // filter required the proof)
+    def keyFor(f: String): Option[Seq[Any]] = {
+      val parts = groupAttrs.map { a =>
+        if (partSchema.fieldNames.contains(a.name))
+          partValues.get(f).map(r =>
+            r.get(partSchema.fieldIndex(a.name), a.dataType))
+        else singleGroupValue(snap, f, a.name, a.dataType).map {
+          case Some(v: Long) => internalOf(v, a.dataType)
+          case Some(s: String) =>
+            org.apache.spark.unsafe.types.UTF8String.fromString(s)
+          case _ => null
         }
       }
-      // typed internal value for a partial
-      def internal(k: Kind, v: Any): Any = (k, v) match {
-        case (_, null) => null
-        case (CountStar | CountCol(_) | SumCol(_), l) => l
-        case (MinCol(_, t), l: Long) => internalOf(l, t)
-        case (MaxCol(_, t), l: Long) => internalOf(l, t)
-        case _ => null
-      }
-      val groupOut = groupAttrs.map(a =>
-        org.apache.spark.sql.catalyst.expressions.AttributeReference(
-          a.name, a.dataType, nullable = true)())
-      val partialOut = kinds.map { g =>
-        val t = g.kind match {
-          case MinCol(_, t) => t
-          case MaxCol(_, t) => t
-          case _            => LongType
-        }
-        org.apache.spark.sql.catalyst.expressions.AttributeReference(
-          s"gp${g.idx}", t, nullable = true)()
-      }
-      val metaRows = partials.map { case (key, acc) =>
-        InternalRow.fromSeq(key ++
-          kinds.zipWithIndex.map { case (g, i) => internal(g.kind, acc(i)) })
-      }.toSeq
-      val metaDf = org.apache.spark.sql.graftbridge.PlanBridge.ofRows(spark,
-        org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-          groupOut ++ partialOut, metaRows))
-      val scanRaw = liveRaw.filter(f => scanFiles.contains(norm(f)))
-      val df =
-        if (scanRaw.isEmpty) metaDf // already one row per group
-        else {
-          var scan = graft.sources.MicroBlockIndex
-            .readFilesAsTable(spark, rootPath, scanRaw, Some(hfs.dataSchema))
-          condOpt.foreach { cond =>
-            val unresolved = cond.transform {
-              case a: AttributeReference =>
-                org.apache.spark.sql.catalyst.analysis
-                  .UnresolvedAttribute.quoted(a.name)
+      if (parts.forall(_.isDefined)) Some(parts.map(_.get)) else None
+    }
+    val fileKey: Map[String, Seq[Any]] =
+      served.toSeq.flatMap(f => keyFor(f).map(f -> _)).toMap
+    if (!served.forall(fileKey.contains)) return None
+    // fold served files per group: Array(count partials per kind)
+    val partials = scala.collection.mutable.LinkedHashMap
+      .empty[Seq[Any], Array[Any]]
+    served.toSeq.sortBy(identity).foreach { f =>
+      val acc = partials.getOrElseUpdate(fileKey(f),
+        Array.fill[Any](kinds.size)(null))
+      kinds.zipWithIndex.foreach { case (g, i) =>
+        g.kind match {
+          case CountStar =>
+            acc(i) = (if (acc(i) == null) 0L
+              else acc(i).asInstanceOf[Long]) + snap.fileRows(f)
+          case CountCol(c) =>
+            val e = snap.perCol((c, f))
+            acc(i) = (if (acc(i) == null) 0L
+              else acc(i).asInstanceOf[Long]) + (e.rows - e.nulls)
+          case MinCol(c, t) =>
+            snap.perCol((c, f)).minLong.foreach { v =>
+              val nv = if (acc(i) == null) v
+                else math.min(acc(i).asInstanceOf[Long], v)
+              acc(i) = nv
             }
-            scan = scan.filter(org.apache.spark.sql.graftbridge.ColumnBridge
-              .column(unresolved))
-          }
-          val scanAggs = kinds.map { g =>
-            (g.kind match {
-              case CountStar    => count(lit(1))
-              case CountCol(c)  => count(col(c))
-              case MinCol(c, _) => min(col(c))
-              case MaxCol(c, _) => max(col(c))
-              case SumCol(c)    => sum(col(c))
-            }).as(s"gp${g.idx}")
-          }
-          val scanAgg = scan.groupBy(groupAttrs.map(a => col(a.name)): _*)
-            .agg(scanAggs.head, scanAggs.tail: _*)
-          val combAggs = kinds.map { g =>
-            (g.kind match {
-              // SUM partials combine like counts: add, null-skipping
-              case CountStar | CountCol(_) | SumCol(_) =>
-                sum(col(s"gp${g.idx}"))
-              case MinCol(_, _)            => min(col(s"gp${g.idx}"))
-              case MaxCol(_, _)            => max(col(s"gp${g.idx}"))
-            }).as(s"gf${g.idx}")
-          }
-          // .agg output = group cols ++ gf$i, already in final order
-          metaDf.unionByName(scanAgg)
-            .groupBy(groupAttrs.map(a => col(a.name)): _*)
-            .agg(combAggs.head, combAggs.tail: _*)
+          case MaxCol(c, t) =>
+            snap.perCol((c, f)).maxLong.foreach { v =>
+              val nv = if (acc(i) == null) v
+                else math.max(acc(i).asInstanceOf[Long], v)
+              acc(i) = nv
+            }
+          case SumCol(c) =>
+            snap.perCol((c, f)).sumLong.foreach { v =>
+              // addExact: a per-group overflow aborts the whole
+              // rewrite (the frame keeps the node) rather than wrapping
+              val nv = if (acc(i) == null) v
+                else Math.addExact(acc(i).asInstanceOf[Long], v)
+              acc(i) = nv
+            }
         }
-      val p = df.queryExecution.optimizedPlan
-      if (p.output.size == groupAttrs.size + kinds.size) Some(p) else None
-    } catch { case scala.util.control.NonFatal(_) => None }
-    finally inRewrite.set(java.lang.Boolean.FALSE)
+      }
+    }
+    // typed internal value for a partial
+    def internal(k: Kind, v: Any): Any = (k, v) match {
+      case (_, null) => null
+      case (CountStar | CountCol(_) | SumCol(_), l) => l
+      case (MinCol(_, t), l: Long) => internalOf(l, t)
+      case (MaxCol(_, t), l: Long) => internalOf(l, t)
+      case _ => null
+    }
+    val groupOut = groupAttrs.map(a =>
+      org.apache.spark.sql.catalyst.expressions.AttributeReference(
+        a.name, a.dataType, nullable = true)())
+    val partialOut = kinds.map { g =>
+      val t = g.kind match {
+        case MinCol(_, t) => t
+        case MaxCol(_, t) => t
+        case _            => LongType
+      }
+      org.apache.spark.sql.catalyst.expressions.AttributeReference(
+        s"gp${g.idx}", t, nullable = true)()
+    }
+    val metaRows = partials.map { case (key, acc) =>
+      InternalRow.fromSeq(key ++
+        kinds.zipWithIndex.map { case (g, i) => internal(g.kind, acc(i)) })
+    }.toSeq
+    val metaDf = org.apache.spark.sql.graftbridge.PlanBridge.ofRows(spark,
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        groupOut ++ partialOut, metaRows))
+    val scanRaw = liveRaw.filter(f => scanFiles.contains(norm(f)))
+    val df =
+      if (scanRaw.isEmpty) metaDf // already one row per group
+      else {
+        var scan = graft.sources.MicroBlockIndex
+          .readFilesAsTable(spark, rootPath, scanRaw, Some(hfs.dataSchema))
+        condOpt.foreach { cond =>
+          val unresolved = cond.transform {
+            case a: AttributeReference =>
+              org.apache.spark.sql.catalyst.analysis
+                .UnresolvedAttribute.quoted(a.name)
+          }
+          scan = scan.filter(org.apache.spark.sql.graftbridge.ColumnBridge
+            .column(unresolved))
+        }
+        val scanAggs = kinds.map { g =>
+          (g.kind match {
+            case CountStar    => count(lit(1))
+            case CountCol(c)  => count(col(c))
+            case MinCol(c, _) => min(col(c))
+            case MaxCol(c, _) => max(col(c))
+            case SumCol(c)    => sum(col(c))
+          }).as(s"gp${g.idx}")
+        }
+        val scanAgg = scan.groupBy(groupAttrs.map(a => col(a.name)): _*)
+          .agg(scanAggs.head, scanAggs.tail: _*)
+        val combAggs = kinds.map { g =>
+          (g.kind match {
+            // SUM partials combine like counts: add, null-skipping
+            case CountStar | CountCol(_) | SumCol(_) =>
+              sum(col(s"gp${g.idx}"))
+            case MinCol(_, _)            => min(col(s"gp${g.idx}"))
+            case MaxCol(_, _)            => max(col(s"gp${g.idx}"))
+          }).as(s"gf${g.idx}")
+        }
+        // .agg output = group cols ++ gf$i, already in final order
+        metaDf.unionByName(scanAgg)
+          .groupBy(groupAttrs.map(a => col(a.name)): _*)
+          .agg(combAggs.head, combAggs.tail: _*)
+      }
+    val p = GraftRule.internally(df.queryExecution.optimizedPlan)
+    if (p.output.size == groupAttrs.size + kinds.size) Some(p) else None
   }
 
   /** Internal (Catalyst) value of the exact integral view for `t`. */
@@ -680,93 +633,89 @@ object ZoneAggRule {
       hfs: HadoopFsRelation, pairs: Seq[(Alias, Kind)], condOpt: Option[Expression], snap: Snap,
       served: Set[String], scanFiles: Set[String],
       liveRaw: Seq[String]): Option[LogicalPlan] = {
-    inRewrite.set(java.lang.Boolean.TRUE)
-    try {
-      import org.apache.spark.sql.functions._
-      // a typed Catalyst literal from the exact integral view —
-      // internal representations: ints as their width, DateType as
-      // int32 days, timestamps as int64 micros
-      def typedLit(v: Option[Long], t: DataType)
-          : org.apache.spark.sql.Column = {
-        val l = v match {
-          case None => Literal(null, t)
-          case Some(d) => t match {
-            case ByteType    => Literal(d.toByte, t)
-            case ShortType   => Literal(d.toShort, t)
-            case IntegerType => Literal(d.toInt, t)
-            case DateType    => Literal(d.toInt, t)
-            case _           => Literal(d, t) // long / timestamp micros
-          }
+    import org.apache.spark.sql.functions._
+    // a typed Catalyst literal from the exact integral view —
+    // internal representations: ints as their width, DateType as
+    // int32 days, timestamps as int64 micros
+    def typedLit(v: Option[Long], t: DataType)
+        : org.apache.spark.sql.Column = {
+      val l = v match {
+        case None => Literal(null, t)
+        case Some(d) => t match {
+          case ByteType    => Literal(d.toByte, t)
+          case ShortType   => Literal(d.toShort, t)
+          case IntegerType => Literal(d.toInt, t)
+          case DateType    => Literal(d.toInt, t)
+          case _           => Literal(d, t) // long / timestamp micros
         }
-        org.apache.spark.sql.graftbridge.ColumnBridge.column(l)
       }
-      val metaCols: Seq[org.apache.spark.sql.Column] = pairs.map {
-        case (_, CountStar) =>
-          lit(served.iterator.map(snap.fileRows).sum)
-        case (_, CountCol(c)) =>
-          lit(served.iterator.map(f => snap.perCol((c, f)))
-            .map(e => e.rows - e.nulls).sum)
-        case (_, MinCol(c, t)) =>
-          val mns = served.toSeq.flatMap(f => snap.perCol((c, f)).minLong)
-          typedLit(mns.minOption, t)
-        case (_, MaxCol(c, t)) =>
-          val mxs = served.toSeq.flatMap(f => snap.perCol((c, f)).maxLong)
-          typedLit(mxs.maxOption, t)
-        case (_, SumCol(c)) =>
-          // exact BigInt fold; a combined total past long range throws
-          // -> the surrounding try refuses the whole serve (Spark's
-          // own scan would throw/wrap per its overflow semantics — a
-          // silently-wrapped metadata answer must never replace that)
-          val sums = served.toSeq.flatMap(f => snap.perCol((c, f)).sumLong)
-          if (sums.isEmpty)
-            org.apache.spark.sql.graftbridge.ColumnBridge.column(
-              Literal(null, org.apache.spark.sql.types.LongType))
-          else {
-            val total = sums.foldLeft(BigInt(0))(_ + _)
-            require(total.isValidLong, "served SUM exceeds long range")
-            lit(total.toLong)
-          }
-      }
-      val scanRaw = liveRaw.filter(f => scanFiles.contains(norm(f)))
-      val df =
-        if (scanRaw.isEmpty)
-          spark.range(1).select(
-            metaCols.zipWithIndex.map { case (c, i) => c.as(s"a$i") }: _*)
+      org.apache.spark.sql.graftbridge.ColumnBridge.column(l)
+    }
+    val metaCols: Seq[org.apache.spark.sql.Column] = pairs.map {
+      case (_, CountStar) =>
+        lit(served.iterator.map(snap.fileRows).sum)
+      case (_, CountCol(c)) =>
+        lit(served.iterator.map(f => snap.perCol((c, f)))
+          .map(e => e.rows - e.nulls).sum)
+      case (_, MinCol(c, t)) =>
+        val mns = served.toSeq.flatMap(f => snap.perCol((c, f)).minLong)
+        typedLit(mns.minOption, t)
+      case (_, MaxCol(c, t)) =>
+        val mxs = served.toSeq.flatMap(f => snap.perCol((c, f)).maxLong)
+        typedLit(mxs.maxOption, t)
+      case (_, SumCol(c)) =>
+        // exact BigInt fold; a combined total past long range throws
+        // -> the frame refuses the whole serve (Spark's
+        // own scan would throw/wrap per its overflow semantics — a
+        // silently-wrapped metadata answer must never replace that)
+        val sums = served.toSeq.flatMap(f => snap.perCol((c, f)).sumLong)
+        if (sums.isEmpty)
+          org.apache.spark.sql.graftbridge.ColumnBridge.column(
+            Literal(null, org.apache.spark.sql.types.LongType))
         else {
-          var scan = graft.sources.MicroBlockIndex
-            .readFilesAsTable(spark, rootPath, scanRaw, Some(hfs.dataSchema))
-          condOpt.foreach { cond =>
-            val unresolved = cond.transform {
-              case a: AttributeReference =>
-                org.apache.spark.sql.catalyst.analysis
-                  .UnresolvedAttribute.quoted(a.name)
-            }
-            scan = scan.filter(org.apache.spark.sql.graftbridge.ColumnBridge
-              .column(unresolved))
-          }
-          val scanAggs = pairs.zipWithIndex.map {
-            case ((_, CountStar), i)    => count(lit(1)).as(s"s$i")
-            case ((_, CountCol(c)), i)  => count(col(c)).as(s"s$i")
-            case ((_, MinCol(c, _)), i) => min(col(c)).as(s"s$i")
-            case ((_, MaxCol(c, _)), i) => max(col(c)).as(s"s$i")
-            case ((_, SumCol(c)), i)    => sum(col(c)).as(s"s$i")
-          }
-          scan.agg(scanAggs.head, scanAggs.tail: _*).select(
-            pairs.zip(metaCols).zipWithIndex.map {
-              case (((_, CountStar), m), i)     => (m + col(s"s$i")).as(s"a$i")
-              case (((_, CountCol(_)), m), i)   => (m + col(s"s$i")).as(s"a$i")
-              case (((_, MinCol(_, _)), m), i)  => least(m, col(s"s$i")).as(s"a$i")
-              case (((_, MaxCol(_, _)), m), i)  => greatest(m, col(s"s$i")).as(s"a$i")
-              // SUM's null algebra: NULL only when BOTH sides have no
-              // non-null input (m + s is null-poisoned, so coalesce
-              // through the three live cases)
-              case (((_, SumCol(_)), m), i) =>
-                coalesce(m + col(s"s$i"), m, col(s"s$i")).as(s"a$i")
-            }: _*)
+          val total = sums.foldLeft(BigInt(0))(_ + _)
+          require(total.isValidLong, "served SUM exceeds long range")
+          lit(total.toLong)
         }
-      val p = df.queryExecution.optimizedPlan
-      if (p.output.size == pairs.size) Some(p) else None
-    } catch { case scala.util.control.NonFatal(_) => None }
-    finally inRewrite.set(java.lang.Boolean.FALSE)
+    }
+    val scanRaw = liveRaw.filter(f => scanFiles.contains(norm(f)))
+    val df =
+      if (scanRaw.isEmpty)
+        spark.range(1).select(
+          metaCols.zipWithIndex.map { case (c, i) => c.as(s"a$i") }: _*)
+      else {
+        var scan = graft.sources.MicroBlockIndex
+          .readFilesAsTable(spark, rootPath, scanRaw, Some(hfs.dataSchema))
+        condOpt.foreach { cond =>
+          val unresolved = cond.transform {
+            case a: AttributeReference =>
+              org.apache.spark.sql.catalyst.analysis
+                .UnresolvedAttribute.quoted(a.name)
+          }
+          scan = scan.filter(org.apache.spark.sql.graftbridge.ColumnBridge
+            .column(unresolved))
+        }
+        val scanAggs = pairs.zipWithIndex.map {
+          case ((_, CountStar), i)    => count(lit(1)).as(s"s$i")
+          case ((_, CountCol(c)), i)  => count(col(c)).as(s"s$i")
+          case ((_, MinCol(c, _)), i) => min(col(c)).as(s"s$i")
+          case ((_, MaxCol(c, _)), i) => max(col(c)).as(s"s$i")
+          case ((_, SumCol(c)), i)    => sum(col(c)).as(s"s$i")
+        }
+        scan.agg(scanAggs.head, scanAggs.tail: _*).select(
+          pairs.zip(metaCols).zipWithIndex.map {
+            case (((_, CountStar), m), i)     => (m + col(s"s$i")).as(s"a$i")
+            case (((_, CountCol(_)), m), i)   => (m + col(s"s$i")).as(s"a$i")
+            case (((_, MinCol(_, _)), m), i)  => least(m, col(s"s$i")).as(s"a$i")
+            case (((_, MaxCol(_, _)), m), i)  => greatest(m, col(s"s$i")).as(s"a$i")
+            // SUM's null algebra: NULL only when BOTH sides have no
+            // non-null input (m + s is null-poisoned, so coalesce
+            // through the three live cases)
+            case (((_, SumCol(_)), m), i) =>
+              coalesce(m + col(s"s$i"), m, col(s"s$i")).as(s"a$i")
+          }: _*)
+      }
+    val p = GraftRule.internally(df.queryExecution.optimizedPlan)
+    if (p.output.size == pairs.size) Some(p) else None
   }
 }

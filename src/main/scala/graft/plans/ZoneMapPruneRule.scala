@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{
   Ascending, AttributeReference, Expression, IntegerLiteral, NullsFirst}
 import org.apache.spark.sql.catalyst.plans.logical.{
   Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{
   HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import graft.sources.{BlockStat, SidecarManifest}
@@ -34,43 +33,34 @@ import graft.sources.{BlockStat, SidecarManifest}
   * preserved because the Filter stays in place and pruning is
   * conservative (may-match).
   */
-case class ZoneMapPruneRule(spark: SparkSession) extends Rule[LogicalPlan] {
+case class ZoneMapPruneRule(spark: SparkSession) extends GraftRule {
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (ZoneMapPruneRule.inRule.get()) plan
-    else plan.transform {
-      // A failing cut (an unreadable sidecar, a malformed frame) leaves
-      // the node as it was: the plain scan answers.
-      case f @ Filter(cond, rel @ LogicalRelation(hfs: HadoopFsRelation, _, _, _, _)) =>
-        try ZoneMapPruneRule.filterCut(spark, cond, rel, hfs).getOrElse(f)
-        catch { case scala.util.control.NonFatal(_) => f }
+  protected def rewrite: PartialFunction[LogicalPlan, Option[LogicalPlan]] = {
+    case Filter(cond, rel @ LogicalRelation(hfs: HadoopFsRelation, _, _, _, _)) =>
+      ZoneMapPruneRule.filterCut(spark, cond, rel, hfs)
 
-      // The q9 shape: ORDER BY col [ASC|DESC] LIMIT k over a bare
-      // registered table — the zone-map TOP-K cut (the engine's
-      // topKBlockIds contract, ZoneSnapshot.topKSkippedFiles) applied
-      // transparently, so the plain SQL surface gets the O(k)-blocks
-      // serve the engine path already measured (BENCH_TOPK_SF100:
-      // 1 file vs 256). The Sort+Limit stay in place over the shrunk
-      // file list, so a conservative cut only costs extra scan, never
-      // rows. Only attribute-preserving Projects may sit on the path
-      // (a Filter below the Sort would change WHICH rows compete for
-      // the top k, so any other node disqualifies the rewrite).
-      case gl @ GlobalLimit(IntegerLiteral(k), ll @ LocalLimit(_, inner))
-          if k >= 1 =>
-        try ZoneMapPruneRule.topKRewrite(spark, k, inner)
-          .map(pruned => gl.copy(child = ll.copy(child = pruned)))
-          .getOrElse(gl)
-        catch { case scala.util.control.NonFatal(_) => gl }
+    // The q9 shape: ORDER BY col [ASC|DESC] LIMIT k over a bare
+    // registered table — the zone-map TOP-K cut (the engine's
+    // topKBlockIds contract, ZoneSnapshot.topKSkippedFiles) applied
+    // transparently, so the plain SQL surface gets the O(k)-blocks
+    // serve the engine path already measured (BENCH_TOPK_SF100:
+    // 1 file vs 256). The Sort+Limit stay in place over the shrunk
+    // file list, so a conservative cut only costs extra scan, never
+    // rows. Only attribute-preserving Projects may sit on the path
+    // (a Filter below the Sort would change WHICH rows compete for
+    // the top k, so any other node disqualifies the rewrite).
+    case gl @ GlobalLimit(IntegerLiteral(k), ll @ LocalLimit(_, inner)) if k >= 1 =>
+      ZoneMapPruneRule.topKRewrite(spark, k, inner)
+        .map(pruned => gl.copy(child = ll.copy(child = pruned)))
 
-      // JOIN-DRIVEN file pruning (file-level DPP): a selective dim's
-      // surviving join keys refute dictionary-indexed fact files —
-      // the q11/q12 shape where single-table pruning sees nothing.
-      // Recognition, soundness and refusal gates live in
-      // [[JoinFilePruning]]; any failure leaves the join untouched.
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
-        try JoinFilePruning.tryPrune(spark, j).getOrElse(j)
-        catch { case scala.util.control.NonFatal(_) => j }
-    }
+    // JOIN-DRIVEN file pruning (file-level DPP): a selective dim's
+    // surviving join keys refute dictionary-indexed fact files —
+    // the q11/q12 shape where single-table pruning sees nothing.
+    // Recognition, soundness and refusal gates live in
+    // [[JoinFilePruning]].
+    case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
+      JoinFilePruning.tryPrune(spark, j)
+  }
 }
 
 object ZoneMapPruneRule {
@@ -184,14 +174,6 @@ object ZoneMapPruneRule {
   // rows: per-(file, column) exact value sets) — the equality/IN cut
   private val dictRegistry =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Re-entrancy guard: the dictionary, bloom and join-key cuts are
-    * Spark queries that pass through this optimizer rule on the same
-    * thread; they must plan as-is (their Filters are over the index,
-    * whose root is not meaningfully prunable) rather than trigger
-    * nested decision jobs. */
-  private[plans] val inRule: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
   /** Rewrite `inner` (the plan under LocalLimit) when it is
     * [attr-only Projects]* → Sort(global) → [attr-only Projects]* →
@@ -326,25 +308,23 @@ object ZoneMapPruneRule {
     val raw =
       if (hit != null) hit
       else {
-        inRule.set(java.lang.Boolean.TRUE)
-        val cut =
-          try {
-            val index = dicts.reduce(_ unionAll _)
-            val cutFiles = leaves.flatMap { case (column, values) =>
-              graft.sources.DictionaryIndex.skippedFilesEq(index, column, values)
-            }.toSet
-            if (cutFiles.isEmpty) Map.empty[String, (Long, Long)]
-            else if (!index.columns.contains("fileMtime"))
-              cutFiles.map(f => normFile(f) -> ((-1L, -1L))).toMap
-            else {
-              import org.apache.spark.sql.functions.col
-              index.filter(col("file").isin(cutFiles.toSeq: _*))
-                .select(col("file"), col("fileMtime"), col("fileSize"))
-                .collect()
-                .map(r => normFile(r.getString(0)) ->
-                  ((r.getLong(1), r.getLong(2)))).toMap
-            }
-          } finally inRule.set(java.lang.Boolean.FALSE)
+        val cut = GraftRule.internally {
+          val index = dicts.reduce(_ unionAll _)
+          val cutFiles = leaves.flatMap { case (column, values) =>
+            graft.sources.DictionaryIndex.skippedFilesEq(index, column, values)
+          }.toSet
+          if (cutFiles.isEmpty) Map.empty[String, (Long, Long)]
+          else if (!index.columns.contains("fileMtime"))
+            cutFiles.map(f => normFile(f) -> ((-1L, -1L))).toMap
+          else {
+            import org.apache.spark.sql.functions.col
+            index.filter(col("file").isin(cutFiles.toSeq: _*))
+              .select(col("file"), col("fileMtime"), col("fileSize"))
+              .collect()
+              .map(r => normFile(r.getString(0)) ->
+                ((r.getLong(1), r.getLong(2)))).toMap
+          }
+        }
         dictDecisionCache.put(key, cut)
         cut
       }
@@ -420,16 +400,15 @@ object ZoneMapPruneRule {
     val hit = bloomDecisionCache.get(key)
     if (hit != null) hit
     else {
-      inRule.set(java.lang.Boolean.TRUE)
-      val skip =
-        try roots.flatMap { case (root, cols) =>
+      val skip = GraftRule.internally {
+        roots.flatMap { case (root, cols) =>
           leaves
             .filter { case (column, _) => cols.isEmpty || cols.contains(column) }
             .flatMap { case (column, values) =>
               graft.sources.BloomPruning.skippedFilesEq(spark, root, column, values)
             }
         }.map(normFile).toSet
-        finally inRule.set(java.lang.Boolean.FALSE)
+      }
       bloomDecisionCache.put(key, skip)
       skip
     }

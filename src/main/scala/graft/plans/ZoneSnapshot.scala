@@ -65,7 +65,7 @@ final class ZoneSnapshot(load: SparkSession => DataFrame) {
       val needBlocks = blocks == null
       if (needBlocks || missing.nonEmpty) {
         val rows =
-          try collectRows(conform(load(spark)), missing, needBlocks)
+          try GraftRule.internally(collectRows(conform(load(spark)), missing, needBlocks))
           catch {
             // a stopped session's failure says nothing of the index
             case scala.util.control.NonFatal(t) if !spark.sparkContext.isStopped =>

@@ -713,7 +713,7 @@ object DictionaryIndex {
     * of milliseconds of reflection on the planning hot path. */
   def loadFrame(spark: SparkSession, path: String): DataFrame = {
     val legacy = Set("nullCount", "fileMtime", "fileSize")
-    spark.read.schema(schema).parquet(path)
+    SidecarManifest.read(spark, path, Some(schema))
       .select(schema.fieldNames.toSeq.map(c =>
         if (legacy(c)) coalesce(col(c), lit(-1L)).as(c) else col(c)): _*)
   }

@@ -544,7 +544,7 @@ object MicroBlockIndex {
   /** [[load]] as a DataFrame: no encoder is derived, which costs tens
     * of milliseconds of reflection on the planning hot path. */
   def loadFrame(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(schema).parquet(path)
+    SidecarManifest.read(spark, path, Some(schema))
 
   private lazy val schema = org.apache.spark.sql.Encoders.product[BlockStat].schema
 

@@ -2,7 +2,10 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** The ONE owner of the sidecar contract: where a table's `_graft*`
   * sidecars and markers live, how they are saved, swapped, deleted and
@@ -101,6 +104,29 @@ object SidecarManifest {
     * path alone. */
   def location(tablePath: String, kind: String): String =
     new Path(tablePath, kind).toString
+
+  /** The parquet directory at `path` — a saved sidecar or index — as a
+    * DataFrame, with `schema` pinned (no inference job) or else the
+    * files' own. The rows and the plan are `spark.read.parquet(path)`'s,
+    * but the relation is built over the directory's own file index:
+    * `spark.read` checks the root's NAME and warns "All paths were
+    * ignored" for every `_`-prefixed directory, which is every
+    * sidecar. A missing directory throws, as `spark.read` does. */
+  def read(spark: SparkSession, path: String,
+      schema: Option[StructType] = None): DataFrame = {
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    val dir = fs.makeQualified(new Path(path))
+    if (!fs.exists(dir)) throw new java.io.FileNotFoundException(s"no sidecar at $path")
+    val index = new InMemoryFileIndex(spark, Seq(dir), Map.empty, schema)
+    val format = new ParquetFileFormat()
+    val dataSchema = schema
+      .orElse(format.inferSchema(spark, Map.empty, index.allFiles()))
+      .getOrElse(throw new IllegalStateException(s"no parquet schema at $path"))
+    org.apache.spark.sql.graftbridge.PlanBridge.ofRows(spark, LogicalRelation(
+      HadoopFsRelation(index, index.partitionSchema,
+        org.apache.spark.sql.graftbridge.PlanBridge.nullable(dataSchema), None,
+        format, Map.empty)(spark)))
+  }
 
   /** Write the `kind` sidecar of `tablePath` through `write`, then drop
     * the root's memos. `write` is handed a `<kind>__swap` sibling; the
@@ -240,7 +266,8 @@ object SidecarManifest {
   def current(spark: SparkSession, tablePath: String, kind: String): Boolean = {
     import graft.plans.ZoneMapPruneRule.normFile
     try anchor(tablePath, spark, kind).exists(a => servable(a,
-      spark.read.parquet(location(tablePath, kind)).select("file").distinct()
+      read(spark, location(tablePath, kind),
+        Some(StructType(Seq(StructField("file", StringType))))).distinct()
         .collect().map(r => normFile(r.getString(0))).toSet,
       MicroBlockIndex.listParquetFilesWithStatus(tablePath)
         .map { case (f, m, n) => normFile(f) -> ((m, n)) }.toMap))

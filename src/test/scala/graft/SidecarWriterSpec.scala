@@ -17,6 +17,9 @@ import scala.jdk.CollectionConverters._
   *   - Under the engine's packages, only `SidecarManifest.scala` spells
   *     a sidecar or marker name in code, and no file in `plans/` or
   *     `streaming/` names `_SUCCESS`.
+  *   - Reading a sidecar — loads, currency tests, layout checks and the
+  *     rules' snapshots — logs no "All paths were ignored" warning
+  *     (Spark's check on `_`-prefixed directory names).
   */
 class SidecarWriterSpec extends AnyFunSuite {
   private lazy val spark: SparkSession = GraftSession.local(
@@ -61,6 +64,52 @@ class SidecarWriterSpec extends AnyFunSuite {
     assert(SidecarManifest.readIn(dict.queryExecution.optimizedPlan, SidecarManifest.Dict),
       "the refreshed dictionary sidecar must serve")
     assert(dict.collect().map(_.toString).toSeq == Seq(s"[${kv.map(_._2).distinct.length}]"))
+  }
+
+  /** WARN-or-worse messages logged anywhere while `body` runs. */
+  private def warningsDuring(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-sidecar-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try body
+    finally {
+      root.removeAppender(appender)
+      appender.stop()
+    }
+    seen.asScala.toSeq
+  }
+
+  test("sidecar reads log no 'All paths were ignored' warning") {
+    val out = scratch("quiet")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    graft.sources.MicroBlockWriter.write(data(0L, 4000L), out, "k", 4)
+    MicroBlockIndex.saveSidecar(MicroBlockIndex.build(spark, out, "t"), out)
+    DictionaryIndex.saveSidecar(DictionaryIndex.build(spark, out, "t", Seq("v")), out)
+    spark.read.parquet(out).createOrReplaceTempView("sw_quiet")
+    val warned = warningsDuring {
+      assert(MicroBlockIndex.load(spark, MicroBlockIndex.sidecarPath(out)).count() > 0)
+      assert(DictionaryIndex.load(spark, DictionaryIndex.sidecarPath(out)).count() > 0)
+      assert(SidecarManifest.current(spark, out, SidecarManifest.Zone))
+      assert(SidecarManifest.current(spark, out, SidecarManifest.Dict))
+      graft.queries.MicroBlockQueries.ensureSidecars(spark, out, "t", Nil)
+      assert(spark.sql("SELECT COUNT(*) FROM sw_quiet WHERE k >= 1000")
+        .collect().head.getLong(0) == 3000L)
+      assert(spark.sql("SELECT COUNT(DISTINCT v) FROM sw_quiet")
+        .collect().head.getLong(0) == 37L)
+    }
+    val ignored = warned.filter(_.contains("All paths were ignored"))
+    assert(ignored.isEmpty, s"sidecar reads warned: $ignored")
   }
 
   /** `path`'s text with block and line comments removed. A `//` only

@@ -20,7 +20,8 @@ import graft.streaming.StreamIngest
   *   - A `_graft_index` part file that cannot be read leaves the Filter
   *     and top-k arms as they were: the plain scan answers. The failure
   *     is kept for that sidecar build, so only the first query pays
-  *     the failing collect.
+  *     the failing collect, and each fallback is counted in
+  *     `GraftRule.errors`.
   */
 class ZoneSidecarSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.local(cores = 4, appName = "graft-zone-sidecar-test")
@@ -102,22 +103,29 @@ class ZoneSidecarSpec extends AnyFunSuite {
     new java.io.File(part.getParentFile, s".${part.getName}.crc").delete()
     spark.read.parquet(out).createOrReplaceTempView("zs_t")
     val rows = spark.read.parquet(out).collect().map(r => (r.getLong(0), r.getLong(1)))
+    def caught = graft.plans.GraftRule.errors.getOrElse("ZoneMapPruneRule", 0L)
+    val caught0 = caught
     val filtered = spark.sql("SELECT k, v FROM zs_t WHERE k >= 3990")
     val firstJobs = snapshotJobsDuring {
       assert(filesRead(filtered, out) == ((4, 4)), "no cut from an unreadable sidecar")
     }
     assert(filtered.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ==
       rows.filter(_._1 >= 3990).sorted.toSeq)
+    val caught1 = caught
     val top = spark.sql("SELECT k, v FROM zs_t ORDER BY k DESC LIMIT 5")
     val secondJobs = snapshotJobsDuring {
       assert(filesRead(top, out) == ((4, 4)))
     }
+    val caught2 = caught
     assert(top.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       rows.sortBy(-_._1).take(5).toSeq)
     // the failure is kept for this sidecar build: the first query paid
     // the failing collect, the second launches no job over the sidecar
     assert(firstJobs >= 1, s"the first query ran $firstJobs zone-snapshot jobs")
     assert(secondJobs == 0, s"the second query re-ran $secondJobs failing zone-snapshot jobs")
+    // each fallback is counted, not hidden
+    assert(caught1 > caught0, "the Filter arm's fallback must be counted")
+    assert(caught2 > caught1, "the top-k arm's fallback must be counted")
   }
 
   /** Jobs launched from [[graft.plans.ZoneSnapshot]] (its collect over
