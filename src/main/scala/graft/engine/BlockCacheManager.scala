@@ -1,26 +1,29 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
 import org.apache.spark.storage.StorageLevel
 
-/** LRU cache of materialized block scans.
+/** LRU cache of resident blocks.
   *
   * The reference keeps an LRU dict of Arrow tables keyed by row-group
-  * id on one node (reference: block_cache.py:1-63). On a cluster the
-  * cache *is* Spark's block manager — executor memory/disk, spilled and
-  * replicated by Spark — so graft's cache manager decides *which* block
-  * DataFrames stay `persist()`ed and evicts least-recently-used entries
-  * via `unpersist()`. Capacity is entry-count-based like the reference;
-  * the entries themselves are distributed.
+  * id on one node (reference: block_cache.py:1-63). Here a resident
+  * block is an RDD its owner hands in — for [[GraftEngine]], one file's
+  * slice of the table scan as compressed columnar batches. `put`
+  * `persist()`s it into Spark's block manager (executor memory,
+  * spilling to disk) and eviction `unpersist()`s it. No query plan keys
+  * an entry, so two caches over the same files never share one, and
+  * one cache's eviction never drops another's block. Capacity is
+  * entry-count-based like the reference; the entries themselves are
+  * distributed.
   */
-final class BlockCacheManager(capacity: Int,
+final class BlockCacheManager[T](capacity: Int,
     level: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
 
-  private val lru = new java.util.LinkedHashMap[String, DataFrame](16, 0.75f, true)
+  private val lru = new java.util.LinkedHashMap[String, RDD[T]](16, 0.75f, true)
   private var hitCount = 0L
   private var missCount = 0L
 
-  def get(key: String): Option[DataFrame] = synchronized {
+  def get(key: String): Option[RDD[T]] = synchronized {
     val v = Option(lru.get(key))
     if (v.isDefined) hitCount += 1 else missCount += 1
     v
@@ -34,28 +37,23 @@ final class BlockCacheManager(capacity: Int,
     * hit-rate exactly where it matters. */
   def peek(key: String): Boolean = synchronized(lru.containsKey(key))
 
-  /** Cache a block scan; evicts LRU entries beyond capacity. Returns
-    * the persisted DataFrame (materialization is caller-triggered). */
-  def put(key: String, df: DataFrame): DataFrame = synchronized {
+  /** Cache a block; evicts LRU entries beyond capacity. Returns the
+    * persisted RDD (materialization is caller-triggered). */
+  def put(key: String, rdd: RDD[T]): RDD[T] = synchronized {
     if (!lru.containsKey(key)) {
-      val persisted = df.persist(level)
-      lru.put(key, persisted)
+      lru.put(key, rdd.persist(level))
       while (lru.size() > capacity) {
         val eldest = lru.entrySet().iterator().next()
         eldest.getValue.unpersist(blocking = false)
         lru.remove(eldest.getKey)
       }
-      persisted
+      rdd
     } else lru.get(key)
   }
 
   def hits: Long = synchronized(hitCount)
   def misses: Long = synchronized(missCount)
   def size: Int = synchronized(lru.size())
-  def keys: Seq[String] = synchronized {
-    import scala.jdk.CollectionConverters._
-    lru.keySet().asScala.toSeq
-  }
 
   def clear(): Unit = synchronized {
     lru.values().forEach(_.unpersist(blocking = false))

@@ -1,7 +1,17 @@
 package graft.engine
 
+import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import graft.plans.{ColStats, IndexPruning, Pred, ZoneMapPruner}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.physical.{SinglePartition, UnknownPartitioning}
+import org.apache.spark.sql.columnar.CachedBatch
+import org.apache.spark.sql.execution.{FileSourceScanExec, LogicalRDD}
+import org.apache.spark.sql.execution.columnar.DefaultCachedBatchSerializer
+import org.apache.spark.sql.execution.datasources.{FileScanRDD, LogicalRelation}
+import org.apache.spark.sql.graftbridge.PlanBridge
+import graft.plans.{ColStats, GraftRule, IndexPruning, Pred, ZoneMapPruner}
 import graft.sources.{BlockMeta, BlockStat, MicroBlockIndex}
 
 /** The cache-aware micro-block engine — graft's counterpart of the
@@ -14,12 +24,12 @@ import graft.sources.{BlockMeta, BlockStat, MicroBlockIndex}
   *   4. execution — here Catalyst/Tungsten instead of DuckDB
   *
   * Two serve paths:
-  *   - `query` — reference-parity: per-block cached DataFrames unioned.
-  *     Right when a hot working set should stay pinned in executor
-  *     memory across queries (the reference's whole point).
+  *   - `query` — reference-parity: the candidate blocks, resident or
+  *     read on a miss, served as one plan leaf ([[serve]]). Right when
+  *     a hot working set should stay pinned in executor memory across
+  *     queries (the reference's whole point).
   *   - `queryDirect` — one pruned multi-file scan, no cache. Right for
-  *     cold one-offs and very large candidate sets (a union of
-  *     thousands of cached scans would bloat the plan).
+  *     cold one-offs: parquet pushdown skips inside the files.
   */
 final class GraftEngine(
     val spark: SparkSession,
@@ -28,8 +38,7 @@ final class GraftEngine(
     cacheCapacity: Int = 64,
     markovOrder: Int = 1,
     logPath: Option[String] = None,
-    missUnionMax: Int = 64,
-    planUnionMax: Int = 128) {
+    missUnionMax: Int = 64) {
 
   /** The zone-map index, DISTRIBUTED: one row per (block × column),
     * persisted so pruning queries don't re-read footers. Only the
@@ -96,7 +105,7 @@ final class GraftEngine(
   private val fileOf: Map[Int, String] =
     blocks.map(b => b.blockId -> b.file).toMap
 
-  val cache = new BlockCacheManager(cacheCapacity)
+  val cache = new BlockCacheManager[CachedBatch](cacheCapacity)
   val accessLog = new AccessLog(logPath)
   /** The serving model — swappable at runtime (shell `\model`, or a
     * [[PrefetchModels.load]] at startup); the service re-reads it
@@ -108,7 +117,8 @@ final class GraftEngine(
     * multi-row-group files all of a file's blocks share one entry —
     * per-block keys would read and cache a multi-row-group file once
     * PER block id (duplicate rows in the union, duplicate storage). */
-  private[engine] def keyOf(id: Int): String = s"file-${fileOf(id)}"
+  private[engine] def keyOf(id: Int): String = fileKey(fileOf(id))
+  private def fileKey(file: String): String = s"file-$file"
 
   // confidence gate + scheduled retrain from session conf (reference
   // parity: prefetch_scheduler.py's prefetch_threshold=0.6 and
@@ -116,18 +126,15 @@ final class GraftEngine(
   // ungated/on-demand behavior.
   val service = new PrefetchService(accessLog, () => prefetcher, cache,
     loadBlock _, keyOf _,
-    threshold = confDouble("spark.graft.prefetch.threshold", 0.0),
+    threshold = GraftRule.conf(spark, "spark.graft.prefetch.threshold", 0.0),
     retrainEveryTicks =
-      confDouble("spark.graft.prefetch.retrainTicks", 0.0).toInt,
+      GraftRule.conf(spark, "spark.graft.prefetch.retrainTicks", 0.0).toInt,
     retrain = () => retrain())
-
-  private def confDouble(key: String, dflt: Double): Double =
-    try spark.conf.get(key, dflt.toString).toDouble
-    catch { case scala.util.control.NonFatal(_) => dflt }
 
   def blockIds: Seq[Int] = blocks.map(_.blockId)
 
-  def loadBlock(id: Int): DataFrame = read(Seq(fileOf(id)))
+  /** Block `id`'s file as a block RDD, not yet persisted. */
+  def loadBlock(id: Int): RDD[CachedBatch] = slice(fileOf(id))
 
   /** Lazily-built DICTIONARY indices for the [[sql]] surface's
     * COUNT(DISTINCT)/DISTINCT serve, memoized per column for the
@@ -189,83 +196,109 @@ final class GraftEngine(
   }
 
   /** One resolved scan of the full table (file listing + schema paid
-    * once at construction, not per sql() call). */
+    * once per engine, not per read). */
   private lazy val rawTable: DataFrame = spark.read.parquet(tablePath)
 
-  /** Every block/file read of the engine, pinned to the table's schema:
-    * no schema-inference job per read, and every frame a serve unions
-    * has the same columns even when later files add one. */
+  /** The engine's direct file reads, pinned to the table's schema: no
+    * schema-inference job per read. */
   private def read(files: Seq[String]): DataFrame =
     spark.read.schema(rawTable.schema).parquet(files: _*)
 
-  /** `tablePath` in the fully-qualified form file-source relations
-    * report their root paths in, so plan nodes can be matched back to
-    * THIS engine's table inside multi-table queries. */
-  private lazy val qualifiedTablePath: String = {
-    val p = new org.apache.hadoop.fs.Path(tablePath)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(p).toString
-  }
+  /** The relation [[rawTable]] reads. [[sql]] binds it as `table`, so
+    * a node reading THIS relation, and only its columns (no metadata
+    * column the serve leaf lacks), is this engine's table; any other
+    * relation, even over the same files, is left alone. */
+  private lazy val rawRelation = rawTable.queryExecution.analyzed
+    .collectFirst { case l: LogicalRelation => l.relation }.get
+  private def isOurRelation(l: LogicalRelation): Boolean =
+    (l.relation eq rawRelation) && l.output.size == rawRelation.schema.size
 
-  /** Does this relation scan (only) files under this engine's table? */
-  private def isOurRelation(
-      l: org.apache.spark.sql.execution.datasources.LogicalRelation): Boolean =
-    l.relation match {
-      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-        val roots = h.location.rootPaths
-        roots.nonEmpty && roots.forall { rp =>
-          val s = rp.toString
-          s == qualifiedTablePath || s.startsWith(qualifiedTablePath + "/")
-        }
-      case _ => false
+  private def session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+  private val batches = new DefaultCachedBatchSerializer
+  /** A file's path, the form the index and Spark's scan agree on. */
+  private def pathOf(file: String): String = new org.apache.hadoop.fs.Path(file).toUri.getPath
+  private val rowsOfFile: Map[String, Long] = blocks.groupMapReduce(_.file)(_.rows)(_ + _)
+
+  /** The engine's block storage, planned ONCE: the rows of one scan of
+    * the whole table pinned to [[rawTable]]'s schema, its output, and
+    * each file's (partitions, bytes) in it. The scan is planned in a
+    * child session whose file-open cost is the split size, so no
+    * partition packs two files; a file Spark splits keeps all of its
+    * pieces. A block is its file's slice of these rows ([[slice]]), so
+    * warming or serving a block plans no query. */
+  private lazy val blockScan
+      : (RDD[InternalRow], Seq[Attribute], Map[String, (Set[Int], Long)]) =
+    GraftRule.internally {
+      val child = spark.newSession()
+      spark.conf.getAll.foreach { case (k, v) =>
+        if (spark.conf.isModifiable(k)) child.conf.set(k, v) }
+      child.conf.set("spark.sql.files.openCostInBytes",
+        session.sessionState.conf.filesMaxPartitionBytes.toString)
+      val qe = child.read.schema(rawTable.schema).parquet(tablePath).queryExecution
+      val parts = qe.executedPlan.collectFirst { case s: FileSourceScanExec => s.inputRDD }
+        .get.asInstanceOf[FileScanRDD].filePartitions
+      require(parts.forall(_.files.map(_.filePath).distinct.length == 1),
+        s"a partition of the block scan of $tablePath reads more than one file")
+      val byFile = parts.groupBy(_.files.head.toPath.toUri.getPath).map { case (f, ps) =>
+        f -> (ps.map(_.index).toSet, ps.flatMap(_.files).map(_.length).sum) }
+      (qe.toRdd, qe.analyzed.output, byFile)
     }
 
-  /** Empty frame with the table's schema (all-pruned / empty table). */
-  private def emptyFrame: DataFrame = rawTable.limit(0)
-
-  /** Serving frame for a candidate block set. Cache hits union their
-    * per-block persisted scans (that is the cache paying off). Misses:
-    * up to `missUnionMax` load + cache individually (reference
-    * behavior — materialized by this query's action); beyond that,
-    * ONE multi-file scan serves them all and the per-block entries
-    * enter the LRU lazily for later queries. A union of thousands of
-    * cold single-file relations is O(blocks) PLAN size — at real block
-    * counts analysis time dwarfs the scan, which is why the mass-cold
-    * path must collapse to a single relation. */
-  private def serve(ids: Seq[Int]): DataFrame = {
-    val files = ids.map(fileOf).distinct // file-granular: see keyOf
-    // Plan-size ceiling: a union of N per-file relations costs O(N)
-    // ANALYSIS work per query. Beyond `planUnionMax` candidate files,
-    // one multi-file scan wins even if every block were cached —
-    // Catalyst would spend longer on the plan than the executors on
-    // the scan — so mega-candidate queries bypass the per-block cache
-    // entirely (entries stay warm for the selective queries the cache
-    // exists for).
-    if (files.size > planUnionMax) return read(files)
-    val fetched = files.map(f => f -> cache.get(s"file-$f"))
-    val hitDfs = fetched.collect { case (_, Some(df)) => df }
-    val missFiles = fetched.collect { case (f, None) => f }
-    val missDfs =
-      if (missFiles.isEmpty) Nil
-      else if (missFiles.size <= missUnionMax)
-        missFiles.map(f => cache.put(s"file-$f", read(Seq(f))))
-      else {
-        // warm only the LRU's FREE space — filling to capacity would
-        // evict the hot working set, including this query's own hit
-        // frames, in favor of entries nothing has materialized yet
-        missFiles.takeRight(math.max(0, cacheCapacity - cache.size))
-          .foreach(f => cache.put(s"file-$f", read(Seq(f))))
-        Seq(read(missFiles))
-      }
-    (hitDfs ++ missDfs).reduceOption(_ unionAll _).getOrElse(emptyFrame)
+  /** `file`'s slice of [[blockScan]] as cached batches — the compressed
+    * columnar format of Spark's own cache, so a resident block costs
+    * what a `Dataset.persist` of it would. Not persisted; runs nothing. */
+  private def slice(file: String): RDD[CachedBatch] = {
+    val (rows, output, files) = blockScan
+    val parts = files.getOrElse(pathOf(file), throw new IllegalStateException(
+      s"block file $file is not in the table scan of $tablePath"))._1
+    batches.convertInternalRowToCachedBatch(PartitionPruningRDD.create(rows, parts),
+      output, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, session.sessionState.conf)
   }
+
+  /** The serve leaf for a candidate block set: given the output a plan
+    * expects, ONE leaf over the served files' rows, however many files.
+    * Hits read their resident block. Misses read their unpersisted
+    * slice and enter the LRU: all of them when at most `missUnionMax`
+    * (reference behavior — materialized by this query's action), else
+    * only the LRU's free space, since filling it to capacity would
+    * evict the hot working set, this query's own hits included, for
+    * entries nothing has read yet. Served bytes that fit one task
+    * (`spark.sql.files.maxPartitionBytes`) run as one partition
+    * reported as `SinglePartition`, so an aggregate over them needs no
+    * exchange. The leaf's statistics are the served bytes and rows. */
+  private def serve(ids: Seq[Int]): Seq[Attribute] => LogicalPlan = {
+    val files = ids.map(fileOf).distinct // file-granular: see keyOf
+    if (files.isEmpty) return out => LocalRelation(out)
+    val (_, output, scanned) = blockScan
+    val fetched = files.map(f => f -> cache.get(fileKey(f)))
+    val misses = fetched.collect { case (f, None) => f }
+    val admitted = (if (misses.size <= missUnionMax) misses
+      else misses.takeRight(math.max(0, cacheCapacity - cache.size))).toSet
+    val served = fetched.map {
+      case (_, Some(hit)) => hit
+      case (f, None) if admitted(f) => cache.put(fileKey(f), slice(f))
+      case (f, None) => slice(f)
+    }
+    val conf = session.sessionState.conf
+    val bytes = files.map(f => scanned(pathOf(f))._2).sum
+    val one = bytes <= conf.filesMaxPartitionBytes
+    val rows = batches.convertCachedBatchToInternalRow(
+      spark.sparkContext.union(served), output, output, conf)
+    val stats = Statistics(sizeInBytes = bytes, rowCount = Some(files.map(rowsOfFile).sum))
+    out => LogicalRDD(out, if (one) rows.coalesce(1) else rows,
+      if (one) SinglePartition else UnknownPartitioning(0))(session, Some(stats))
+  }
+
+  /** [[serve]] as a frame over the table's columns. */
+  private def served(ids: Seq[Int]): DataFrame =
+    PlanBridge.ofRows(spark, serve(ids)(blockScan._2.map(_.newInstance())))
 
   /** Reference-parity query path (prune → log → cache → execute). */
   def query(pred: Pred): DataFrame = {
     val ids = candidates(pred)
     accessLog.log(table, ids,
       graft.plans.IndexPruning.refColumns(pred).toSeq.sorted)
-    serve(ids).filter(pred.toColumn)
+    served(ids).filter(pred.toColumn)
   }
 
   /** Reference `microblock_reader.scan_range`: block-aligned scan of
@@ -280,7 +313,7 @@ final class GraftEngine(
       .filter(b => b.rowStart <= rowEnd && rowStart <= b.rowEnd)
       .map(_.blockId)
     accessLog.log(table, ids)
-    serve(ids)
+    served(ids)
   }
 
   /** The block set provably containing the k extreme non-null values
@@ -316,13 +349,18 @@ final class GraftEngine(
     * top-k). `tieBreak` columns make the returned k rows deterministic.
     * See [[topKBlockIds]] for the scan-set contract. */
   def topK(colName: String, k: Int, tieBreak: Seq[String] = Nil,
-      ascending: Boolean = false): DataFrame = {
+      ascending: Boolean = false): DataFrame =
+    topKOver(colName, k, tieBreak, ascending)(served)
+
+  /** The top-k block set, logged, read by `frame` and cut to k rows. */
+  private def topKOver(colName: String, k: Int, tieBreak: Seq[String],
+      ascending: Boolean)(frame: Seq[Int] => DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     require(k >= 1, "k must be >= 1")
     val ids = topKBlockIds(colName, k, ascending, includeNullBlocks = false)
     accessLog.log(table, ids, Seq(colName))
     val primary = if (ascending) col(colName).asc else col(colName).desc
-    serve(ids)
+    frame(ids)
       .filter(col(colName).isNotNull)
       .orderBy(primary +: tieBreak.map(col(_).asc): _*)
       .limit(k)
@@ -333,18 +371,11 @@ final class GraftEngine(
     * counterpart): materializing row-cache entries costs ~2x the scan
     * itself, which only pays off when the working set is re-read. */
   def topKDirect(colName: String, k: Int, tieBreak: Seq[String] = Nil,
-      ascending: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(k >= 1, "k must be >= 1")
-    val ids = topKBlockIds(colName, k, ascending, includeNullBlocks = false)
-    accessLog.log(table, ids, Seq(colName))
-    val files = ids.map(fileOf).distinct
-    val primary = if (ascending) col(colName).asc else col(colName).desc
-    (if (files.isEmpty) emptyFrame else read(files))
-      .filter(col(colName).isNotNull)
-      .orderBy(primary +: tieBreak.map(col(_).asc): _*)
-      .limit(k)
-  }
+      ascending: Boolean = false): DataFrame =
+    topKOver(colName, k, tieBreak, ascending) { ids =>
+      val files = ids.map(fileOf).distinct
+      if (files.isEmpty) rawTable.limit(0) else read(files)
+    }
 
   /** Per-column per-file histograms ([[graft.sources.BlockHistograms]]),
     * built lazily on first estimate request and memoized — ONE data
@@ -467,27 +498,20 @@ final class GraftEngine(
   /** Reference-parity SQL entry point (query_enginev5.py:236-304):
     * the user submits SQL against `table`; the engine extracts the
     * WHERE predicates from the analyzed plan, prunes + logs + caches
-    * candidate blocks, then executes the SQL over the merged cached
-    * blocks by re-binding the temp view. Falls back to a plain pruned
-    * view when no predicate is extractable (scan-all, like the
-    * reference's unparseable-SQL path).
-    *
-    * Thread safety: the method re-binds the session-global temp view
-    * `table` to the pruned frame for the duration of the (eager)
-    * analysis, so two concurrent sql() calls could otherwise race the
-    * binding. Serialized through a JVM-global lock keyed by the
-    * session-qualified view name, so even two ENGINES sharing one
-    * SparkSession and table name coordinate.
+    * candidate blocks, then executes the SQL over the served blocks.
+    * The SQL is analyzed ONCE, against the full table bound as the temp
+    * view `table` (which stays bound afterwards); the result is that
+    * analyzed plan with each of this engine's relations replaced by the
+    * serve leaf, keeping the relation's own output. Subqueries keep
+    * reading the full table. Serves all blocks when no predicate is
+    * extractable (scan-all, like the reference's unparseable-SQL path).
     */
-  def sql(query: String): DataFrame = sqlLock.synchronized {
+  def sql(query: String): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Expression}
     import org.apache.spark.sql.catalyst.plans.{
       Cross, Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
     import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.execution.datasources.LogicalRelation
-    // bind the raw table so analysis can resolve columns
-    val raw = rawTable
-    raw.createOrReplaceTempView(table)
+    rawTable.createOrReplaceTempView(table)
     val analyzedPlan = spark.sql(query).queryExecution.analyzed
     def isDirectScan(p: LogicalPlan): Boolean = p match {
       case SubqueryAlias(_, c) => isDirectScan(c)
@@ -676,20 +700,12 @@ final class GraftEngine(
         // Serve the candidate superset WITHOUT re-applying the extracted
         // predicate — the SQL's own WHERE does the row-level filtering, so
         // a lossy extraction can never change results, only pruning.
-        serve(ids).createOrReplaceTempView(table)
-        // spark.sql analyzes eagerly, so `out`'s plan is pinned to the
-        // pruned binding; restore the full-table binding for later plain
-        // spark.sql over `table` outside this engine call.
-        val out = spark.sql(query)
-        raw.createOrReplaceTempView(table)
-        out
+        val leaf = serve(ids)
+        PlanBridge.ofRows(spark, analyzedPlan.transform {
+          case l: LogicalRelation if isOurRelation(l) => leaf(l.output)
+        })
     }
   }
-
-  private val sqlLock: Object =
-    GraftEngine.viewLocks.computeIfAbsent(
-      graft.sources.SidecarManifest.sessionKey(spark) + " " + table,
-      _ => new Object)
 
   /** Re-fit the CURRENT prefetch model class from everything logged so
     * far — model-agnostic (each class refits from the same access
@@ -698,15 +714,4 @@ final class GraftEngine(
     val flat = accessLog.all.flatMap(_.blocks)
     if (flat.nonEmpty) prefetcher.fitSeq(spark, flat)
   }
-}
-
-object GraftEngine {
-  /** One lock per (SparkSession, view name): see [[GraftEngine.sql]].
-    * Keyed by the per-session UUID ([[graft.sources.SidecarManifest
-    * .sessionKey]]: identity hashes can collide across sessions and
-    * would over-serialize unrelated engines). viewLocks grows by one
-    * bare Object per live session×table — fine for this harness, a
-    * long-lived multi-tenant service would want weak values here. */
-  private val viewLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 }

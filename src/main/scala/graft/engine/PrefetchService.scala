@@ -1,7 +1,7 @@
 package graft.engine
 
 import java.util.concurrent.{Executors, ScheduledExecutorService, TimeUnit}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
 
 /** Background prefetching: periodically asks the predictor for the
   * blocks likely to be touched next and warms the cache with them.
@@ -9,14 +9,14 @@ import org.apache.spark.sql.DataFrame
   * Same loop as the reference's `PrefetchService`
   * (prefetch_service.py:1-95): wake → read recent history → model
   * top-K → load missing blocks into the cache. Loading here means
-  * persisting + materializing the block's DataFrame through Spark, so
-  * "warm" = resident in executor storage memory cluster-wide.
+  * persisting + materializing the block's RDD in Spark's block
+  * manager, so "warm" = resident in executor storage cluster-wide.
   */
-final class PrefetchService(
+final class PrefetchService[T](
     log: AccessLog,
     prefetcher: () => Prefetcher,
-    cache: BlockCacheManager,
-    loadBlock: Int => DataFrame,
+    cache: BlockCacheManager[T],
+    loadBlock: Int => RDD[T],
     keyFor: Int => String = b => s"block-$b",
     topK: Int = 3,
     historyLen: Int = 8,
@@ -75,12 +75,9 @@ final class PrefetchService(
     // must not count toward the cache's hit/miss serving metrics
     val warmed = predicted.filter(b => !cache.peek(keyFor(b)))
     warmed.foreach { b =>
-      // persist + materialize: one no-op pass over the persisted scan's
-      // internal rows (a single job, no row decoding) builds the block's
-      // cached partitions in executor storage, so the next query is a
-      // cache hit. `loadBlock` returns a fresh, never-executed frame,
-      // whose plan resolves against the cache entry registered here.
-      cache.put(keyFor(b), loadBlock(b)).queryExecution.toRdd.foreachPartition(_ => ())
+      // persist + materialize: one no-op pass (a job that plans no query)
+      // builds the block's cached partitions, so the next query hits
+      cache.put(keyFor(b), loadBlock(b)).foreachPartition(_ => ())
       prefetchedCount += 1
     }
     val ms = (System.nanoTime() - t0) / 1000000L

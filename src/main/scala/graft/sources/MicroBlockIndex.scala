@@ -115,9 +115,7 @@ object MicroBlockIndex {
     // pins the footer-sweep task count — MetaPlaneScale's serial-vs-
     // parallel arm measures that build time scales with files/cores,
     // not files
-    val confParts =
-      try spark.conf.get("spark.graft.index.buildPartitions", "0").toInt
-      catch { case scala.util.control.NonFatal(_) => 0 }
+    val confParts = graft.plans.GraftRule.conf(spark, "spark.graft.index.buildPartitions", 0)
     val numParts =
       if (confParts > 0) math.max(1, math.min(confParts, fileWithOrd.size))
       else math.max(1, math.min(fileWithOrd.size,

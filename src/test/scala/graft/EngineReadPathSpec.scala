@@ -3,7 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import graft.engine.{GraftEngine, GraftSession, Prefetcher, Tables}
 import graft.plans._
 import graft.sources.{BlockStat, MicroBlockIndex, MicroBlockWriter}
@@ -12,7 +18,9 @@ import graft.sources.{BlockStat, MicroBlockIndex, MicroBlockWriter}
   * needs: pruning decisions run on the driver over memoized column
   * stats and must agree with the distributed [[IndexPruning.decide]];
   * block reads are pinned to the table's schema; a prefetch warm is one
-  * job; and an analyzed BETWEEN prunes like its `>=`/`<=` twin. */
+  * job and no SQL execution; a one-block aggregate hit is one job with
+  * no exchange; each engine owns its resident blocks; and an analyzed
+  * BETWEEN prunes like its `>=`/`<=` twin. */
 class EngineReadPathSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.local(cores = 4, appName = "graft-readpath-test")
   private val dir = "/root/testdata/sf0.001"
@@ -22,20 +30,62 @@ class EngineReadPathSpec extends AnyFunSuite {
     out
   }
 
-  /** Jobs started while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
+  /** Jobs and SQL executions started while `body` runs. */
+  private def launchedDuring[T](body: => T): (T, Int, Int) = {
     val sc = spark.sparkContext
     org.apache.spark.GraftTestBus.drain(sc)
-    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val executions = new java.util.concurrent.atomic.AtomicInteger()
     val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => executions.incrementAndGet()
+        case _ =>
+      }
     }
     sc.addSparkListener(l)
     try {
       val out = body
       org.apache.spark.GraftTestBus.drain(sc)
-      (out, n.get())
+      (out, jobs.get(), executions.get())
     } finally sc.removeSparkListener(l)
+  }
+
+  /** Jobs started while `body` runs. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val (out, jobs, _) = launchedDuring(body)
+    (out, jobs)
+  }
+
+  /** Every node of an executed plan, through adaptive query stages. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case s: QueryStageExec => s +: nodes(s.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  /** WARN-or-worse log messages emitted while `body` runs. */
+  private def warningsDuring(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("graft-readpath-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try body
+    finally {
+      root.removeAppender(appender)
+      appender.stop()
+    }
+    seen.asScala.toSeq
   }
 
   /** (block id -> keep) from the distributed decision over `index`. */
@@ -201,13 +251,74 @@ class EngineReadPathSpec extends AnyFunSuite {
     e.sql("SELECT COUNT(*) FROM li_warm WHERE l_shipdate < TIMESTAMP '1995-03-01 00:00:00'").collect()
     val target = e.blockIds.last
     e.prefetcher = fixed(Seq(target))
-    val (warmed, jobs) = jobsDuring(e.service.tick())
+    val (warmed, jobs, executions) = launchedDuring(e.service.tick())
     assert(warmed == Seq(target))
     assert(jobs == 1, s"warming one block launched $jobs jobs")
+    assert(executions == 0, s"warming one block ran $executions SQL executions")
     val entry = e.cache.get(s"file-${e.blocks.find(_.blockId == target).get.file}").get
-    val cached = spark.sharedState.cacheManager
-      .lookupCachedData(entry.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
-    assert(cached.exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded))
+    assert(fullyCached(entry), "the warmed block's RDD must have all partitions cached")
+  }
+
+  private def fullyCached(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
+    spark.sparkContext.getRDDStorageInfo.exists(i =>
+      i.id == rdd.id && i.numPartitions > 0 && i.numCachedPartitions == i.numPartitions)
+
+  test("a GROUP BY read that hits one resident block is one job with no exchange") {
+    val e = new GraftEngine(spark, mbPath, "li_onehit")
+    val blk = e.blocks(e.blocks.size / 2)
+    val (lo, hi) = spark.read.parquet(blk.file)
+      .agg(min("l_shipdate").cast("string"), max("l_shipdate").cast("string"))
+      .collect().map(r => (r.getString(0), r.getString(1))).head
+    val q = s"""SELECT l_returnflag, COUNT(*) AS n, SUM(l_quantity) AS q FROM li_onehit
+               |WHERE l_shipdate > TIMESTAMP '$lo' AND l_shipdate < TIMESTAMP '$hi'
+               |GROUP BY l_returnflag""".stripMargin
+    val plain = spark.read.parquet(mbPath)
+    plain.createOrReplaceTempView("li_onehit_plain")
+    val want = rows(spark.sql(q.replace("FROM li_onehit", "FROM li_onehit_plain")))
+    assert(rows(e.sql(q)) == want) // the miss makes the block resident
+    assert(e.accessLog.all.last.blocks == Seq(blk.blockId), "fixture: one candidate block")
+    val hit = e.sql(q)
+    val (got, jobs) = jobsDuring(rows(hit))
+    assert(got == want)
+    assert(e.cache.hits == 1)
+    assert(jobs == 1, s"a one-block hit launched $jobs jobs")
+    val executed = nodes(hit.queryExecution.executedPlan)
+    assert(!executed.exists(_.isInstanceOf[Exchange]), s"exchange in\n${hit.queryExecution.executedPlan}")
+    assert(!executed.exists(_.isInstanceOf[FileSourceScanExec]))
+  }
+
+  test("two engines over the same files own their blocks: one's eviction leaves the other's hits off parquet") {
+    val path = "target/scratch/test/readpath-two-engines"
+    MicroBlockWriter.write(Tables.load(spark, dir, "lineitem"), path, "l_shipdate", 4)
+    val a = new GraftEngine(spark, path, "li_two_a", cacheCapacity = 1)
+    val b = new GraftEngine(spark, path, "li_two_b")
+    val (blk, other) = (a.blocks.head, a.blocks.last)
+    def read(e: GraftEngine, m: graft.sources.BlockMeta) = e.scanRange(m.rowStart, m.rowEnd)
+    val moved = Paths.get(path + "-moved.parquet")
+    val warned = warningsDuring {
+      // both engines read the block, then warm another one, which A's
+      // one-entry LRU makes room for by evicting the block
+      val want = rows(read(b, blk))
+      assert(rows(read(a, blk)) == want)
+      Seq(a, b).foreach { e =>
+        e.prefetcher = fixed(Seq(other.blockId))
+        assert(e.service.tick() == Seq(other.blockId))
+      }
+      assert(rows(b.sql("SELECT COUNT(*) FROM li_two_b")) == Seq("[6000]"))
+      val key = s"file-${blk.file}"
+      assert(!a.cache.peek(key) && b.cache.peek(key))
+      // with the block's file gone, only a resident block can serve it
+      Files.move(Paths.get(new java.net.URI(blk.file)), moved)
+      try {
+        val (h, m) = (b.cache.hits, b.cache.misses)
+        val hit = read(b, blk)
+        assert(rows(hit) == want)
+        assert(b.cache.hits == h + 1 && b.cache.misses == m)
+        assert(!nodes(hit.queryExecution.executedPlan).exists(_.isInstanceOf[FileSourceScanExec]))
+      } finally Files.move(moved, Paths.get(new java.net.URI(blk.file)))
+    }
+    val doubled = warned.filter(_.contains("Asked to cache already cached data"))
+    assert(doubled.isEmpty, s"the engines shared a cache entry: $doubled")
   }
 
   /** A prefetcher that always suggests `ids`. */

@@ -153,8 +153,8 @@ class MicroBlockSpec extends AnyFunSuite {
   }
 
   test("block cache LRU semantics + hit/miss accounting") {
-    val cache = new BlockCacheManager(2)
-    val df = spark.range(10).toDF("id")
+    val cache = new BlockCacheManager[Long](2)
+    val df = spark.sparkContext.range(0, 10)
     cache.put("a", df); cache.put("b", df)
     assert(cache.get("a").isDefined)      // a now most-recent
     cache.put("c", df)                    // evicts b
@@ -247,9 +247,9 @@ class MicroBlockSpec extends AnyFunSuite {
 
   test("prefetch service warms predicted blocks into the cache") {
     val log = new AccessLog()
-    val cache = new BlockCacheManager(8)
+    val cache = new BlockCacheManager[Long](8)
     val m = new MarkovPrefetcher(1).fitSeq(spark, Seq.fill(5)(Seq(0, 1, 2)).flatten)
-    val svc = new PrefetchService(log, () => m, cache, id => spark.range(id * 10L, id * 10L + 10).toDF("id"))
+    val svc = new PrefetchService(log, () => m, cache, id => spark.sparkContext.range(id * 10L, id * 10L + 10))
     log.log("t", Seq(0, 1))
     val warmed = svc.tick()
     assert(warmed.contains(2), s"expected block 2 prefetched, got $warmed")

@@ -35,9 +35,9 @@ class PrefetchServeSpec extends AnyFunSuite {
     pattern.foreach(b => log.log("t", Seq(b)))
     val gru = new GruPrefetcher(hidden = 8, window = 6, epochs = 60, lr = 0.6)
       .fit(spark, pattern)
-    val cache = new BlockCacheManager(8)
+    val cache = new BlockCacheManager[Long](8)
     val svc = new PrefetchService(log, () => gru, cache,
-      id => spark.range(id * 10L, id * 10L + 10).toDF("id"), topK = 1)
+      id => spark.sparkContext.range(id * 10L, id * 10L + 10), topK = 1)
     val warmed = svc.tick()
     // history ends ...2,3 in a 0,1,2,3 cycle: the next block is 0
     assert(warmed == Seq(0), s"expected the cycle's next block, got $warmed")
@@ -54,17 +54,17 @@ class PrefetchServeSpec extends AnyFunSuite {
     pattern.foreach(b => log.log("t", Seq(b)))
     val gru = new GruPrefetcher(hidden = 8, window = 6, epochs = 60, lr = 0.6)
       .fit(spark, pattern)
-    val cache = new BlockCacheManager(8)
+    val cache = new BlockCacheManager[Long](8)
     // budget of 0 ms is "unset": nothing ever counts over-budget
     val unmetered = new PrefetchService(log, () => gru, cache,
-      id => spark.range(id * 10L, id * 10L + 10).toDF("id"), topK = 1)
+      id => spark.sparkContext.range(id * 10L, id * 10L + 10), topK = 1)
     assert(unmetered.tick().nonEmpty)
     assert(unmetered.tickCount == 1 && unmetered.overBudgetFraction == 0.0)
     // a 1 ms budget: the warm-included tick (a Spark job) must exceed
     // it — and the warm still completed (budget meters, never truncates)
-    val cache2 = new BlockCacheManager(8)
+    val cache2 = new BlockCacheManager[Long](8)
     val metered = new PrefetchService(log, () => gru, cache2,
-      id => spark.range(id * 10L, id * 10L + 10).toDF("id"), topK = 1,
+      id => spark.sparkContext.range(id * 10L, id * 10L + 10), topK = 1,
       tickBudgetMillis = 1L)
     val warmed = metered.tick()
     assert(warmed.nonEmpty && cache2.get(s"block-${warmed.head}").nonEmpty,
@@ -76,9 +76,9 @@ class PrefetchServeSpec extends AnyFunSuite {
     val log = new AccessLog()
     pattern.foreach(b => log.log("t", Seq(b)))
     @volatile var model: Prefetcher = new MarkovPrefetcher(1) // unfitted
-    val cache = new BlockCacheManager(8)
+    val cache = new BlockCacheManager[Long](8)
     val svc = new PrefetchService(log, () => model, cache,
-      id => spark.range(id * 10L, id * 10L + 10).toDF("id"), topK = 1)
+      id => spark.sparkContext.range(id * 10L, id * 10L + 10), topK = 1)
     assert(svc.tick().isEmpty) // unfitted model: no predictions
     model = new GruPrefetcher(hidden = 8, window = 6, epochs = 60, lr = 0.6)
       .fit(spark, pattern)
@@ -97,25 +97,25 @@ class PrefetchServeSpec extends AnyFunSuite {
       def fitSeq(s: org.apache.spark.sql.SparkSession, b: Seq[Int]) = this
       def save(s: org.apache.spark.sql.SparkSession, d: String): Unit = ()
     }
-    val cache = new BlockCacheManager(8)
+    val cache = new BlockCacheManager[Long](8)
     val gated = new PrefetchService(log, () => weak, cache,
-      id => spark.range(id * 10L, id * 10L + 10).toDF("id"), topK = 1,
+      id => spark.sparkContext.range(id * 10L, id * 10L + 10), topK = 1,
       threshold = 0.6)
     assert(gated.tick().isEmpty && gated.prefetched == 0,
       "sub-threshold guesses must never load")
     // ungated service with the same weak model pollutes (the behavior
     // the gate exists to stop)
     val ungated = new PrefetchService(log, () => weak, cache,
-      id => spark.range(id * 10L, id * 10L + 10).toDF("id"), topK = 1)
+      id => spark.sparkContext.range(id * 10L, id * 10L + 10), topK = 1)
     assert(ungated.tick() == Seq(7))
     // a well-trained model on a deterministic cycle clears the gate
     val gru = new GruPrefetcher(hidden = 8, window = 6, epochs = 60, lr = 0.6)
       .fit(spark, pattern)
     assert(gru.suggestScored(log.recent(8), 1).head._2 >= 0.6,
       "fixture: the trained model must actually be confident")
-    val cache2 = new BlockCacheManager(8)
+    val cache2 = new BlockCacheManager[Long](8)
     val confident = new PrefetchService(log, () => gru, cache2,
-      id => spark.range(id * 10L, id * 10L + 10).toDF("id"), topK = 1,
+      id => spark.sparkContext.range(id * 10L, id * 10L + 10), topK = 1,
       threshold = 0.6)
     assert(confident.tick() == Seq(0))
   }
@@ -125,9 +125,9 @@ class PrefetchServeSpec extends AnyFunSuite {
     pattern.foreach(b => log.log("t", Seq(b)))
     @volatile var model: Prefetcher = new MarkovPrefetcher(1) // unfitted
     var retrained = 0
-    val cache = new BlockCacheManager(8)
+    val cache = new BlockCacheManager[Long](8)
     val svc = new PrefetchService(log, () => model, cache,
-      id => spark.range(id * 10L, id * 10L + 10).toDF("id"), topK = 1,
+      id => spark.sparkContext.range(id * 10L, id * 10L + 10), topK = 1,
       retrainEveryTicks = 2,
       retrain = () => {
         retrained += 1

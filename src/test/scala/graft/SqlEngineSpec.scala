@@ -467,17 +467,43 @@ class SqlEngineSpec extends AnyFunSuite {
       spark.sql(sqlF.replace("FROM lineitem", "FROM li_check")).collect().map(_.toString).toSeq)
   }
 
-  test("candidate sets beyond planUnionMax serve as ONE scan, bypassing the cache") {
-    val e = new GraftEngine(spark, mbPath, "lineitem", planUnionMax = 4)
-    val n = e.sql("SELECT COUNT(*) AS n FROM lineitem").collect().head.getLong(0)
-    assert(n == 6000L)
-    // 8 candidate blocks > 4: single multi-file relation, no per-block
-    // cache population (plan stays O(1) leaves however many blocks match)
-    assert(e.cache.size == 0, s"cache must be bypassed, holds ${e.cache.keys}")
-    // selective queries below the ceiling still warm the cache
-    val pred = Between("l_shipdate", PredValue.ts("2000-01-01"), PredValue.ts("2000-07-01"))
-    e.query(pred).count()
-    assert(e.cache.size > 0)
+  test("an all-block serve is one plan leaf returning the plain rows") {
+    val e = new GraftEngine(spark, mbPath, "lineitem")
+    val sql = """SELECT l_returnflag, COUNT(*) AS n, SUM(l_quantity) AS q FROM lineitem
+                |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
+    val served = e.sql(sql)
+    assert(e.accessLog.all.last.blocks.size == e.blockIds.size)
+    // one leaf however many blocks are served: the plan stays O(1)
+    val leaves = served.queryExecution.analyzed.collectLeaves()
+    assert(leaves.size == 1 && leaves.head.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      s"expected one serve leaf, got ${leaves.map(_.nodeName)}")
+    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("li_check")
+    assert(served.collect().map(_.toString).toSeq ==
+      spark.sql(sql.replace("FROM lineitem", "FROM li_check")).collect().map(_.toString).toSeq)
+    assert(e.cache.size == e.blockIds.size)
+  }
+
+  test("engine.sql equals plain spark.sql for subqueries and a self-join over the same table") {
+    val e = new GraftEngine(spark, mbPath, "lineitem")
+    Tables.load(spark, dir, "lineitem").createOrReplaceTempView("li_check")
+    val range = "l_shipdate >= TIMESTAMP '2000-01-01 00:00:00'"
+    val queries = Seq(
+      s"""SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
+         |WHERE $range AND l_extendedprice >= (SELECT MAX(l_extendedprice) FROM lineitem)""",
+      s"""SELECT COUNT(*) AS n, SUM(l_quantity) AS q FROM lineitem
+         |WHERE $range AND l_orderkey IN (SELECT l_orderkey FROM lineitem
+         |  WHERE l_shipdate >= TIMESTAMP '2000-06-01 00:00:00' AND l_quantity > 45)""",
+      """SELECT a.l_returnflag, COUNT(*) AS n, SUM(b.l_quantity) AS q
+        |FROM lineitem a JOIN lineitem b
+        |  ON a.l_orderkey = b.l_orderkey AND a.l_linenumber = b.l_linenumber + 1
+        |WHERE a.l_shipdate >= TIMESTAMP '2000-01-01 00:00:00'
+        |GROUP BY a.l_returnflag""")
+    for (q <- queries.map(_.stripMargin)) {
+      val want = spark.sql(q.replace("FROM lineitem", "FROM li_check")
+        .replace("JOIN lineitem", "JOIN li_check")).collect().map(_.toString).toSeq.sorted
+      assert(want.nonEmpty && !want.contains("[0,null]"), s"fixture: empty result for $q")
+      assert(e.sql(q).collect().map(_.toString).toSeq.sorted == want, q)
+    }
   }
 
   test("mass-cold serve collapses misses into one scan, then runs warm per-block") {
