@@ -110,19 +110,6 @@ object Bench {
           s"topk_ab failed: ${t.getClass.getName}: ${t.getMessage}")
         "null"
     }
-    // histogram-driven serve-path choice vs both fixed paths (round 9)
-    val serveAb = try {
-      spark.catalog.clearCache()
-      val e = graft.queries.MicroBlockQueries.engineFor(spark, sfDir)
-      graft.engine.PruningBench.runServeChoice(
-        spark, e, graft.queries.MicroBlockQueries.benchPred,
-        graft.queries.MicroBlockQueries.sparsePred, reps = 3)
-    } catch {
-      case t: Throwable =>
-        System.err.println(
-          s"serve_auto_ab failed: ${t.getClass.getName}: ${t.getMessage}")
-        "null"
-    }
     // round 10: the dictionary point-lookup A/B — full scan vs the
     // exact value-set file cut on the hash-bucketed layout (the shape
     // min/max can't prune); BENCH_DICT.json carries the sf10/sf100
@@ -181,15 +168,24 @@ object Bench {
         .join(dim, col("l_suppkey") === col("s_suppkey"))
       // compare the (count, checksum) PAIR, not the count alone — a
       // pruning bug that drops rows while another file compensates the
-      // count would otherwise certify a wrong-results configuration
+      // count would otherwise certify a wrong-results configuration.
+      // `ran` is the last frame executed: its optimized plan is the one
+      // that ran, so the fact files it kept are the route the rule took
+      var ran: org.apache.spark.sql.DataFrame = null
       def fp(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)), sum(col("l_linenumber"))).first
+        ran = df.agg(count(lit(1)), sum(col("l_linenumber")))
+        val r = ran.collect().head
         (r.getLong(0), r.getLong(1))
       }
+      val rootAbs = new java.io.File(path).getAbsolutePath
+      def factFiles(df: org.apache.spark.sql.DataFrame): Int =
+        BenchWindow.fileRelations(df).map(_.location.inputFiles)
+          .filter(_.exists(_.contains(rootAbs))).head.length
       def med[T](run: => T): (Double, T) =
         BenchWindow.medianOf(spark, 3, clearCache = false)(run)
       graft.plans.ZoneMapPruneRule.unregisterDict(path)
       val (scanSec, scanV) = med(fp(joined))
+      val allFiles = factFiles(ran)
       graft.plans.ZoneMapPruneRule.registerDict(path, dIdx.toDF())
       val (dppSec, dppV) = med(fp(joined))
       require(scanV == dppV, s"join_dpp_ab rows diverged: $scanV vs $dppV")
@@ -199,7 +195,6 @@ object Bench {
       // at sf100; auto must track the winner at every scale). One
       // calibration + one observed decision seed the constants, then
       // the measured reps run whatever the gate picks.
-      val rootAbs = new java.io.File(path).getAbsolutePath
       graft.sources.CostRouter.reset()
       graft.sources.CostRouter.calibrateIfNeeded(spark, rootAbs)
       graft.plans.JoinFilePruning.clearCache()
@@ -207,12 +202,11 @@ object Bench {
       graft.plans.JoinFilePruning.clearCache()
       val (autoSec, autoV) = med(fp(joined))
       require(autoV == scanV, s"join_dpp_ab auto rows diverged: $autoV")
-      val worth = graft.sources.CostRouter.decisionWorthIt(rootAbs,
-        graft.sources.DictionaryIndex.tableBytes(path)).getOrElse(true)
+      val autoRoute = if (factFiles(ran) < allFiles) "dpp" else "scan"
       graft.plans.ZoneMapPruneRule.unregisterDict(path)
       graft.sources.CostRouter.reset()
       s"""{"join_scan":{"sec":$scanSec},"join_dpp":{"sec":$dppSec},""" +
-        s""""join_auto":{"sec":$autoSec,"route":"${if (worth) "dpp" else "scan"}"}}"""
+        s""""join_auto":{"sec":$autoSec,"route":"$autoRoute"}}"""
     } catch {
       case t: Throwable =>
         System.err.println(
@@ -220,7 +214,7 @@ object Bench {
         "null"
     }
     BenchWindow.emit(
-      s"""{"metric":"total","value":$total,"unit":"sec","reps":$Reps,"stat":"median","failed":$failedCount,"probe_start_sec":$probeStart,"probe_end_sec":$probeEnd,"sat_probe_start_sec":${w.satStart},"sat_probe_mid_sec":${w.satMid},"sat_probe_end_sec":${w.satEnd},"sat_calm_ref_sec":${w.calmRef},"window_noisy":${w.noisy},"window_attempts":${w.attempts},"loadavg_start":${w.loadStart},"loadavg_end":${w.loadEnd},"queries":$qs,"pruning_ab":$ab,"topk_ab":$topkAb,"serve_auto_ab":$serveAb,"dict_ab":$dictAb,"join_dpp_ab":$joinAb,"sf":"$sfDir"}""",
+      s"""{"metric":"total","value":$total,"unit":"sec","reps":$Reps,"stat":"median","failed":$failedCount,"probe_start_sec":$probeStart,"probe_end_sec":$probeEnd,"sat_probe_start_sec":${w.satStart},"sat_probe_mid_sec":${w.satMid},"sat_probe_end_sec":${w.satEnd},"sat_calm_ref_sec":${w.calmRef},"window_noisy":${w.noisy},"window_attempts":${w.attempts},"loadavg_start":${w.loadStart},"loadavg_end":${w.loadEnd},"queries":$qs,"pruning_ab":$ab,"topk_ab":$topkAb,"dict_ab":$dictAb,"join_dpp_ab":$joinAb,"sf":"$sfDir"}""",
       "target/bench.json")
     spark.stop()
   }

@@ -51,8 +51,12 @@ object JoinDppScale {
     val dimKeys = dim.select("s_suppkey").collect().map(_.getLong(0)).sorted
     def joined = spark.read.parquet(out)
       .join(dim, col("l_suppkey") === col("s_suppkey"))
+    // the last frame fp() ran: its optimized plan is the one executed,
+    // so the files it kept are the route the rule took
+    var ran: org.apache.spark.sql.DataFrame = null
     def fp(): (Long, Long) = {
-      val r = joined.agg(count(lit(1)), sum(col("l_orderkey"))).first
+      ran = joined.agg(count(lit(1)), sum(col("l_orderkey")))
+      val r = ran.collect().head
       (r.getLong(0), r.getLong(1))
     }
     // SPARK_GRAFT_DROP_CACHES=1 drops the OS page cache before every
@@ -72,8 +76,9 @@ object JoinDppScale {
     def med(run: => (Long, Long)): (Double, (Long, Long)) =
       BenchWindow.medianOf(spark, reps,
         prep = () => if (dropCaches) dropOsCaches())(run)
-    def keptFiles(): Int = BenchWindow.fileRelations(joined)
-      .map(_.location.inputFiles).filter(_.exists(_.contains("joindpp"))).head.length
+    def keptFiles(df: org.apache.spark.sql.DataFrame = joined): Int =
+      BenchWindow.fileRelations(df).map(_.location.inputFiles)
+        .filter(_.exists(_.contains("joindpp"))).head.length
 
     val ((scanSec, dppSec, autoSec, autoRoute, scanV, kept), w) =
         BenchWindow.calmGated(spark, "joindpp") { _ =>
@@ -96,10 +101,7 @@ object JoinDppScale {
       fp() // seeding run: pays + observes the decision jobs
       graft.plans.JoinFilePruning.clearCache()
       val (autoSec, autoV) = med(fp())
-      val autoRoute =
-        if (graft.sources.CostRouter.decisionWorthIt(rootAbs,
-          graft.sources.DictionaryIndex.tableBytes(out)).getOrElse(true))
-          "dpp" else "scan"
+      val autoRoute = if (keptFiles(ran) < buckets) "dpp" else "scan"
       graft.plans.ZoneMapPruneRule.unregisterDict(out)
       graft.sources.CostRouter.reset()
       require(scanV == autoV, s"auto rows diverged: $scanV vs $autoV")

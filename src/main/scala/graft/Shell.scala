@@ -36,7 +36,7 @@ object Shell {
     val preloaded =
       graft.engine.ModelIO.exists(spark, modelDir) &&
         (try {
-          // load WHATEVER class was trained (markov/logistic/gru) —
+          // load WHATEVER class was trained (markov/gru) —
           // the reference's run_with_prefetch_loop reload contract
           engine.prefetcher = graft.engine.PrefetchModels.load(spark, modelDir)
           true
@@ -60,13 +60,10 @@ object Shell {
             case Array("markov") =>
               engine.prefetcher = new graft.engine.MarkovPrefetcher(2)
               engine.retrain(); println("serving model: markov (retrained)")
-            case Array("logistic") =>
-              engine.prefetcher = new graft.engine.LogisticPrefetcher(order = 2, epochs = 25)
-              engine.retrain(); println("serving model: logistic (retrained)")
             case Array("gru") =>
               engine.prefetcher = new graft.engine.GruPrefetcher(hidden = 24, epochs = 120, lr = 0.8)
               engine.retrain(); println("serving model: gru (retrained)")
-            case _ => println("usage: \\model markov|logistic|gru")
+            case _ => println("usage: \\model markov|gru")
           }
         case "\\save" =>
           if (engine.prefetcher.fitted) {

@@ -9,13 +9,17 @@ import org.apache.spark.sql.functions._
   *
   * Layout per fraction f: F files of equal row count, (1−f)·F
   * id-clustered (a cut predicate decides them) and f·F with
-  * full-range shuffled ids (they straddle every cut). The same
+  * full-range shuffled ids (they straddle every cut). The cut is a
+  * clustered file's first id, so every clustered file is decided and
+  * at least one is all-true: a serve with no all-true file folds no
+  * metadata and is refused. The same
   * `COUNT(*)/SUM WHERE id >= cut` runs as a plain scan (no sidecar)
   * and as the serve (sidecar present, gate forced open with
   * maxScanFraction=1.0), so the artifact shows serve_sec/scan_sec per
   * fraction — the crossover is where the ratio hits 1.
   *
   * Usage: runMain graft.ZoneAggFractionScale <sfDir> [files] [reps]
+  * (files >= 8, so every fraction keeps two clustered files).
   * Writes target/zoneagg_fraction.json.
   */
 object ZoneAggFractionScale {
@@ -24,6 +28,7 @@ object ZoneAggFractionScale {
     val sfDir = args(0)
     val nFiles = if (args.length > 1) args(1).toInt else 32
     val reps = if (args.length > 2) args(2).toInt else 3
+    require(nFiles >= 8, s"files must be >= 8, got $nFiles")
     val spark = BenchWindow.session(BenchWindow.UTC)
     BenchWindow.warm(spark)
 
@@ -61,9 +66,17 @@ object ZoneAggFractionScale {
       fs.delete(sidecar, true)
       graft.sources.SidecarManifest.invalidateAll()
       spark.read.parquet(out).createOrReplaceTempView(s"zf_$straddlers")
-      // the mid-range cut decides every clustered file (bar one
-      // boundary file) and no straddler
-      val cut = total / 2
+      // the cut is the first id of the clustered file nearest the
+      // middle (never the lowest clustered file, whose first id a
+      // straddler may share): it decides every clustered file and no
+      // straddler. A straddler spans both outer quarters of the ids;
+      // with two or more clustered files, no clustered file does.
+      val index = graft.sources.MicroBlockIndex.build(spark, out, s"zf$straddlers")
+      val ranges = index.filter(col("column") === "id")
+        .groupBy("file").agg(min("minLong"), max("maxLong")).collect()
+        .map(r => (r.getLong(1), r.getLong(2)))
+      val cut = ranges.filterNot { case (lo, hi) => lo < total / 4 && hi > total * 3 / 4 }
+        .map(_._1).sorted.drop(1).minBy(lo => math.abs(lo - total / 2))
       val q = s"""SELECT COUNT(*) AS n, COUNT(l_suppkey) AS ns
         |FROM zf_$straddlers WHERE id >= $cut""".stripMargin
       def served(df: org.apache.spark.sql.DataFrame): Boolean =
@@ -72,8 +85,7 @@ object ZoneAggFractionScale {
         BenchWindow.medianOf(spark, reps)(spark.sql(q).collect().mkString)
       require(!served(spark.sql(q)), "scan arm must not see a sidecar")
       val (scanSec, vScan) = med()
-      graft.sources.MicroBlockIndex.saveSidecar(
-        graft.sources.MicroBlockIndex.build(spark, out, s"zf$straddlers"), out)
+      graft.sources.MicroBlockIndex.saveSidecar(index, out)
       require(served(spark.sql(q)),
         s"serve must fire at straddler fraction $f (gate forced open)")
       val (serveSec, vServe) = med()

@@ -120,16 +120,12 @@ final class GraftEngine(
   private[engine] def keyOf(id: Int): String = fileKey(fileOf(id))
   private def fileKey(file: String): String = s"file-$file"
 
-  // confidence gate + scheduled retrain from session conf (reference
-  // parity: prefetch_scheduler.py's prefetch_threshold=0.6 and
-  // retrain_model.py's periodic refit). Defaults preserve the
-  // ungated/on-demand behavior.
+  // the service's defaults: ungated (threshold 0.0) and retrained on
+  // demand only (no tick cadence); a harness that measures the
+  // reference's prefetch_threshold=0.6 gate builds its own service
+  // (PrefetchLoopBench's markov_t60 arm)
   val service = new PrefetchService(accessLog, () => prefetcher, cache,
-    loadBlock _, keyOf _,
-    threshold = GraftRule.conf(spark, "spark.graft.prefetch.threshold", 0.0),
-    retrainEveryTicks =
-      GraftRule.conf(spark, "spark.graft.prefetch.retrainTicks", 0.0).toInt,
-    retrain = () => retrain())
+    loadBlock _, keyOf _, retrain = () => retrain())
 
   def blockIds: Seq[Int] = blocks.map(_.blockId)
 
@@ -375,114 +371,6 @@ final class GraftEngine(
     topKOver(colName, k, tieBreak, ascending) { ids =>
       val files = ids.map(fileOf).distinct
       if (files.isEmpty) rawTable.limit(0) else read(files)
-    }
-
-  /** Per-column per-file histograms ([[graft.sources.BlockHistograms]]),
-    * built lazily on first estimate request and memoized — ONE data
-    * scan per column ever, the same pay-once contract as the zone-map
-    * index. None when the column has no numeric zone-map bounds. */
-  private val histMemo = scala.collection.concurrent.TrieMap
-    .empty[String, Option[Map[String, graft.sources.FileHistogram]]]
-
-  private def histogramsFor(colName: String)
-      : Option[Map[String, graft.sources.FileHistogram]] =
-    histMemo.getOrElseUpdate(colName,
-      try Some(graft.sources.BlockHistograms
-        .buildFromIndex(spark, tablePath, table, colName, index)
-        .collect()
-        .map(h => graft.plans.ZoneMapPruneRule.normFile(h.file) -> h).toMap)
-      catch {
-        // ANY failure of the lazy histogram build (non-numeric column,
-        // Spark job failure, IO/schema error) degrades serving to the
-        // reference-parity cache path instead of failing the query;
-        // memoized so the broken build is attempted once, not per call
-        case scala.util.control.NonFatal(e) =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"histogram build for '$colName' failed; serve-path " +
-              s"estimation disabled for this column: $e")
-          None
-      })
-
-  /** Histogram row estimate for `pred` over `files` (normalized paths).
-    * Range predicates estimate by equi-width interpolation; AND takes
-    * the min of its sides (a safe upper bound — never the independence
-    * product, which can undershoot and flip a serve decision on
-    * correlated columns), OR the capped sum. None = not estimable
-    * (non-range shape, or no histogram for the column). */
-  private def estimateRows(pred: Pred, files: Seq[String]): Option[Double] = {
-    def forRange(c: String, lo: Double, hi: Double): Option[Double] =
-      histogramsFor(c).map(m =>
-        files.flatMap(m.get).map(
-          graft.sources.BlockHistograms.estimateRange(_, lo, hi)).sum)
-    pred match {
-      case graft.plans.Between(c, lo, hi) =>
-        for { l <- lo.num; h <- hi.num; e <- forRange(c, l, h) } yield e
-      case graft.plans.Cmp(op, c, v) =>
-        v.num.flatMap { x =>
-          op match {
-            case ">" | ">=" => forRange(c, x, Double.MaxValue)
-            case "<" | "<=" => forRange(c, -Double.MaxValue, x)
-            // "=" through a zero-width range would always read 0;
-            // estimatePoint reads the containing bucket's density
-            case "=" => histogramsFor(c).map(m =>
-              files.flatMap(m.get).map(
-                graft.sources.BlockHistograms.estimatePoint(_, x)).sum)
-            case _ => None // != : min/max histograms can't bound it
-          }
-        }
-      case graft.plans.And(l, r) =>
-        (estimateRows(l, files), estimateRows(r, files)) match {
-          case (Some(a), Some(b)) => Some(math.min(a, b))
-          case (a, b) => a.orElse(b)
-        }
-      case graft.plans.Or(l, r) =>
-        for { a <- estimateRows(l, files); b <- estimateRows(r, files) }
-          yield a + b
-      case _ => None
-    }
-  }
-
-  /** Estimated fraction of the CANDIDATE blocks' rows `pred` keeps —
-    * the number the serve-path choice runs on. None when the
-    * histograms can't estimate this shape. */
-  def estimateSelectivity(pred: Pred): Option[Double] = {
-    val kept = decisions(pred).filter(_._4)
-    val candRows = kept.map(_._3).sum
-    if (candRows == 0L) return None
-    estimateRows(pred, kept.map(t =>
-        graft.plans.ZoneMapPruneRule.normFile(t._2)).distinct)
-      .map(est => math.min(1.0, est / candRows))
-  }
-
-  /** Histogram-driven serve-path choice — the consumer the selectivity
-    * estimator exists for. Zone maps decide WHICH blocks can match;
-    * the histogram decides HOW to serve them: a DENSE read (the query
-    * consumes most of the rows caching would pin) takes the LRU
-    * [[query]] path — materializing the blocks pays off because the
-    * working set is what gets re-read; a SPARSE read (few matching
-    * rows inside candidate blocks — e.g. a narrow range on an
-    * UNCLUSTERED column, where every zone straddles and pruning keeps
-    * everything) serves as ONE direct pruned scan ([[queryDirect]]):
-    * parquet row-group pushdown skips inside the files, and nothing
-    * data-sized is persisted to serve a trickle of rows. Falls back to
-    * the reference-parity cache path when the shape isn't estimable —
-    * including every predicate over a STRING (or otherwise
-    * non-numeric) column: histograms cover numeric/timestamp/date
-    * columns only, so `estimateSelectivity` is None there and the
-    * route is always the cache path (pinned in SelectivitySpec). */
-  def queryAuto(pred: Pred, denseThreshold: Double = 0.25): DataFrame =
-    servePath(pred, denseThreshold) match {
-      case "direct" => queryDirect(pred)
-      case _ => query(pred)
-    }
-
-  /** The route [[queryAuto]] takes for `pred` — exposed so harnesses
-    * and logs report the decision the serve actually made, never a
-    * re-derived copy of the threshold logic. */
-  def servePath(pred: Pred, denseThreshold: Double = 0.25): String =
-    estimateSelectivity(pred) match {
-      case Some(sel) if sel < denseThreshold => "direct"
-      case _ => "cache"
     }
 
   /** Single pruned scan (no per-block caching) — see class doc. */

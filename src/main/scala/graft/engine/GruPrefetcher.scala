@@ -190,14 +190,13 @@ private[graft] object GruMath {
   * accumulates its local gradient into one flat array, and partial
   * gradients reduce as 2⁻²⁴-scaled LONGS — exact integer addition,
   * deterministic under any partitioning or combine order (the same
-  * discipline as [[LogisticPrefetcher]] and the IVF k-means means).
+  * discipline as the IVF k-means means).
   * Initial weights come from a fixed splitmix64 stream, so fit() is
   * bit-reproducible.
   *
-  * Unlike the Markov table (exact context match) and the log-linear
-  * model (additive position marginals), the GRU carries STATE across
-  * the whole recent window — the reference's architectural reason for
-  * an RNN: periodic multi-block scan cycles longer than any fixed
+  * Unlike the Markov table (exact context match), the GRU carries
+  * STATE across the whole recent window — the reference's
+  * architectural reason for an RNN: periodic multi-block scan cycles longer than any fixed
   * context order are representable in H hidden units.
   *
   * Scale shape: weights are (4B·H + 3H² + 3H + B) doubles — LINEAR in

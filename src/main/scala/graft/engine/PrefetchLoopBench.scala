@@ -59,20 +59,18 @@ object PrefetchLoopBench {
   private def medianIdx[A](xs: Seq[A])(key: A => Double): Int =
     xs.zipWithIndex.sortBy(t => key(t._1)).apply(xs.size / 2)._2
 
-  /** Fit the three model classes on `trainBlocks` (the flattened block
+  /** Fit the two model classes on `trainBlocks` (the flattened block
     * sequence of the training replay). Hyperparameters are the
     * mb_prefetch_eval-probed ones. */
   def fitModels(spark: SparkSession, trainBlocks: Seq[Int])
       : Seq[(String, Prefetcher)] = Seq(
     "markov" -> new MarkovPrefetcher(1).fitSeq(spark, trainBlocks),
-    "logistic" -> new LogisticPrefetcher(order = 2, epochs = 25)
-      .fit(spark, trainBlocks),
     "gru" -> new GruPrefetcher(hidden = 24, window = 8, epochs = 120, lr = 0.8)
       .fit(spark, trainBlocks))
 
   /** Training replay + model fit: run `trainPasses` passes of the
     * cycle to populate the access log (the reference's "run the
-    * workload, then retrain" loop), then fit the three model classes
+    * workload, then retrain" loop), then fit the two model classes
     * on the blocks logged by those passes. Also pre-computes the
     * pruning decisions every replay arm will reuse. */
   def train(spark: SparkSession, engine: GraftEngine, cycle: Seq[Pred],

@@ -38,14 +38,15 @@ final class PrefetchService[T](
     * TICK BUDGET (round 11, the PREFETCH_AB overlapped lesson): under
     * concurrent serving a tick races the query stream — a model whose
     * predict+warm cycle outruns the deployment's think-time degrades
-    * end-to-end even when its SYNC hit-rate is best (measured: the GRU
-    * holds 0.84 sync but 0.53 overlapped at 100 ms think, while the
-    * logistic model's cheaper tick posts the better overlapped wall).
-    * `tickBudgetMillis > 0` declares that think-time; the service
-    * tracks how often ticks exceed it ([[overBudgetFraction]]) so the
-    * operator-facing rule is measurable in production, not just in the
-    * A/B: a sustained over-budget fraction says "swap to the cheaper
-    * model class" (`\model` in the shell, [[GraftEngine.prefetcher]]).
+    * end-to-end even when its SYNC hit-rate is best (round 11 measured
+    * the GRU at 0.84 sync but 0.53 overlapped hit-rate at 100 ms think;
+    * since a warm is one job, the GRU posts the best overlapped wall
+    * too, PREFETCH_AB.json). `tickBudgetMillis > 0` declares that
+    * think-time; the service tracks how often ticks exceed it
+    * ([[overBudgetFraction]]) so the operator-facing rule is measurable
+    * in production, not just in the A/B: a sustained over-budget
+    * fraction says "swap to the cheaper model class", the Markov table
+    * (`\model` in the shell, [[GraftEngine.prefetcher]]).
     * The budget never truncates a warm mid-flight — a half-warmed
     * cache entry would be a wasted load; it only meters. */
   def tick(): Seq[Int] = {

@@ -93,37 +93,6 @@ object PruningBench {
       AbRow("engine_topk_warm", tWarm, topkFiles, nWarm))
   }
 
-  /** The histogram-driven serve-path choice ([[GraftEngine.queryAuto]])
-    * against both fixed paths, on a FOUR-READ workload (the regime the
-    * choice arbitrates: the LRU path's materialization costs ~2 scans
-    * up front and pays back ~half a scan per re-read, so it needs a
-    * few re-reads to clear — the steady state the cache exists for,
-    * per the reference's prefetch-loop design). `dense` should keep most rows of
-    * its candidate blocks (the cache path's home turf), `sparse` few
-    * (e.g. a narrow range on an unclustered column — zone maps keep
-    * everything, the histogram sees the trickle). The artifact shows
-    * auto tracking the better fixed path on BOTH shapes; `sel` and
-    * `path` record what the estimator said and which path it picked. */
-  def runServeChoice(spark: SparkSession, engine: GraftEngine,
-      dense: Pred, sparse: Pred, reps: Int = 3): String = {
-    def timedWorkload(body: => Long): (Double, Long) =
-      graft.BenchWindow.medianOf(spark, reps, clearCache = false,
-        prep = () => engine.cache.clear())(body + body + body + body)
-    val parts = for ((pname, pred) <- Seq("dense" -> dense, "sparse" -> sparse)) yield {
-      val sel = engine.estimateSelectivity(pred)
-      val path = engine.servePath(pred) // the route queryAuto takes
-      val (tCache, nCache) = timedWorkload(engine.query(pred).count())
-      val (tDirect, nDirect) = timedWorkload(engine.queryDirect(pred).count())
-      val (tAuto, nAuto) = timedWorkload(engine.queryAuto(pred).count())
-      require(nCache == nDirect && nDirect == nAuto,
-        s"serve paths disagree on rows for $pname: $nCache/$nDirect/$nAuto")
-      s""""$pname":{"sel":${sel.getOrElse(-1.0)},"path":"$path"""" +
-        s""","cache_sec":$tCache,"direct_sec":$tDirect,"auto_sec":$tAuto""" +
-        s""","rows":$nAuto}"""
-    }
-    parts.mkString("{", ",", "}")
-  }
-
   /** One JSON object for embedding in the bench line. */
   def toJson(rows: Seq[AbRow]): String =
     rows.map(r =>

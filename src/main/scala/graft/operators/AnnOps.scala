@@ -459,6 +459,9 @@ object AnnOps {
       .filter(col("rank") <= k)
   }
 
+  /** The largest approx side [[recallAtK]] broadcasts: 4 Mi rows. */
+  private val RecallBroadcastMaxRows: Long = 4L << 20
+
   /** recall@K of an approximate method against the exact baseline:
     * per-query rows plus a macro-average row (query_id = -1).
     *
@@ -467,9 +470,10 @@ object AnnOps {
     * caller has both numbers statically; this method does not). The
     * explicit broadcast below bypasses Spark's 10 MB estimate check,
     * so it is cost-gated on the hint (same pattern as the
-    * driverEdgeMax collect gate): within the bound → broadcast; above
-    * it or unknown (< 0) → plain join, which degrades to a shuffle
-    * join instead of an unbounded driver collect (ADVICE r16). */
+    * driverEdgeMax collect gate): within [[RecallBroadcastMaxRows]] →
+    * broadcast; above it or unknown (< 0) → plain join, which degrades
+    * to a shuffle join instead of an unbounded driver collect
+    * (ADVICE r16). */
   def recallAtK(method: String, exact: DataFrame, approx: DataFrame, k: Int,
       approxRowsHint: Long = -1L): DataFrame = {
     // The approx side is ≤ numQueries·k rows BY CONSTRUCTION (it is a
@@ -480,12 +484,11 @@ object AnnOps {
     // where AQE cannot convert it at runtime (guide §3.1: broadcast
     // the side you KNOW is small). One explicit broadcast removes both
     // exchanges; the exact side then streams with no shuffle at all.
-    val maxRows = exact.sparkSession.conf
-      .get("spark.graft.recall.broadcastMaxRows", (4L << 20).toString).toLong
     val approxSlim =
       approx.select(col("query_id").as("a_query"), col("neighbor_id").as("a_neighbor"))
     val buildSide =
-      if (approxRowsHint >= 0 && approxRowsHint <= maxRows) broadcast(approxSlim)
+      if (approxRowsHint >= 0 && approxRowsHint <= RecallBroadcastMaxRows)
+        broadcast(approxSlim)
       else approxSlim
     val hits = exact.join(
         buildSide,

@@ -106,6 +106,14 @@ object ZoneAggRule {
     }
   }
 
+  /** A serve must fold SOME metadata: with no served file and files
+    * left to scan, the "serve" is the straddler scan alone — the pruned
+    * scan the plain plan already runs, in a new relation whose plan
+    * carries no serve signature. With nothing to scan either, every
+    * file is all-false and the metadata answer needs no scan. */
+  private def servesAny(served: Set[String], scanFiles: Set[String]): Boolean =
+    served.nonEmpty || scanFiles.isEmpty
+
   private sealed trait Kind
   private case object CountStar extends Kind
   private final case class CountCol(c: String) extends Kind
@@ -320,6 +328,7 @@ object ZoneAggRule {
       undecided = liveFiles -- allTrue -- allFalse
       served = allTrue.filter(f => pairs.forall(p => trusted(snap, f, p._2)))
       scanFiles = undecided ++ (allTrue -- served)
+      if servesAny(served, scanFiles)
       if scanFiles.size <= liveFiles.size *
         GraftRule.conf(spark, "spark.graft.statsServe.maxScanFraction", 0.5)
       plan <- buildPlan(spark, root, hfs, pairs, condOpt, snap, served,
@@ -445,6 +454,7 @@ object ZoneAggRule {
           dataGroupCols.forall(a =>
             singleGroupValue(snap, f, a.name, a.dataType).isDefined))
       scanFiles = undecided ++ (allTrue -- served)
+      if servesAny(served, scanFiles)
       if scanFiles.size <= liveFiles.size *
         GraftRule.conf(spark, "spark.graft.statsServe.maxScanFraction", 0.5)
       plan <- buildGroupedPlan(spark, root, hfs, groupAttrs,

@@ -109,22 +109,4 @@ object BlockHistograms {
     }
     math.min(est, h.rows.toDouble)
   }
-
-  /** Estimated rows EQUAL to `x`: the containing bucket's count scaled
-    * by 1/width under a unit-granularity assumption (integer/epoch-day/
-    * epoch-micro domains — the zone-map numeric view). A zero-width
-    * range through [[estimateRange]] would always read 0, which is
-    * wrong for equality on dense clustered columns; this form reads
-    * "rows per distinct unit value in the bucket", capped at the
-    * bucket count. Continuous domains overestimate — the conservative
-    * direction for a serve-path choice (falls back to the cache path). */
-  def estimatePoint(h: FileHistogram, x: Double): Double = {
-    if (h.rows == 0) return 0.0
-    if (h.hi == h.lo)
-      return if (x == h.lo) h.rows.toDouble else 0.0
-    if (x < h.lo || x > h.hi) return 0.0
-    val w = (h.hi - h.lo) / h.counts.length
-    val i = math.min(h.counts.length - 1, ((x - h.lo) / w).toInt)
-    h.counts(i) / math.max(1.0, w)
-  }
 }

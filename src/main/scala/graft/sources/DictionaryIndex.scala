@@ -576,9 +576,8 @@ object DictionaryIndex {
 
   /** The route [[prunedReadEqAuto]] takes: "scan" below the byte
     * threshold (the decision job would cost more than it saves),
-    * "dict" above — the [[graft.engine.GraftEngine.servePath]]
-    * discipline applied to the dictionary cut, exposed so harnesses
-    * report the decision actually made. */
+    * "dict" above — exposed so harnesses report the decision actually
+    * made, never a re-derived copy of the threshold. */
   def pointLookupRoute(tablePath: String,
       minBytes: Long = DefaultPointMinBytes): String =
     if (tableBytes(tablePath) < minBytes) "scan" else "dict"

@@ -13,12 +13,12 @@ import graft.sources.{BlockStat, DictionaryIndex, MicroBlockIndex, SidecarManife
   * Per micro-batch: range-cluster the batch on the zone column (a
   * batch-local sort-shuffle — each appended file gets a tight min/max,
   * so pruning works on freshly-landed data immediately), append the
-  * files, refresh the in-memory index, fold the batch into every
-  * maintained AggView, and refresh the table's zone and dictionary
-  * sidecars, if it has them, through [[SidecarManifest.save]] — the one
-  * sidecar writer. At 100 TB/day this is the standard
-  * streaming-lakehouse write path (cluster-on-write + incremental
-  * stats); the small-file tail the batches accumulate is exactly what
+  * files, fold the batch into every maintained AggView, and refresh
+  * the table's zone and dictionary sidecars, if it has them, through
+  * [[SidecarManifest.save]] — the one sidecar writer. At 100 TB/day
+  * this is the standard streaming-lakehouse write path
+  * (cluster-on-write + incremental stats); the small-file tail the
+  * batches accumulate is exactly what
   * [[graft.sources.MicroBlockWriter.compact]] exists to fold in.
   */
 final class StreamIngest(
@@ -39,12 +39,13 @@ final class StreamIngest(
   private def markerName(batchId: Long): String =
     if (streamId.isEmpty) batchId.toString else s"$streamId-$batchId"
 
-  @volatile private var idx: Option[Dataset[BlockStat]] = None
-
-  /** The current zone-map index over everything ingested so far. */
-  def index: Dataset[BlockStat] = synchronized {
-    idx.getOrElse(MicroBlockIndex.build(spark, outPath, table))
-  }
+  /** The current zone-map index over everything ingested so far: the
+    * `_graft_index` sidecar every commit refreshes, when the root has
+    * one; otherwise built from the directory. */
+  def index: Dataset[BlockStat] =
+    if (SidecarManifest.anchor(outPath, spark, SidecarManifest.Zone).isDefined)
+      MicroBlockIndex.load(spark, MicroBlockIndex.sidecarPath(outPath))
+    else MicroBlockIndex.build(spark, outPath, table)
 
   /** Land one micro-batch EXACTLY ONCE. foreachBatch is at-least-once:
     * a batch that fails mid-append (or whose marker write is lost)
@@ -61,8 +62,7 @@ final class StreamIngest(
     *  4. create the marker — the atomic commit point — THEN refresh.
     * The index only ever sees fully-committed files: a crash before
     * the marker leaves remnants that step 2 removes before anything
-    * re-indexes, and the in-memory index is rebuilt from the
-    * directory on restart. */
+    * re-indexes. */
   private[graft] def ingestBatch(batch: DataFrame, batchId: Long): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val out = new org.apache.hadoop.fs.Path(outPath)
@@ -88,13 +88,6 @@ final class StreamIngest(
     fs.delete(staging, true)
     fs.mkdirs(marker.getParent)
     fs.create(marker, true).close()
-    synchronized {
-      idx = Some(idx match {
-        case None => MicroBlockIndex.build(spark, outPath, table)
-        case Some(existing) =>
-          MicroBlockIndex.refresh(spark, outPath, table, existing)
-      })
-    }
     // Maintained MATERIALIZED VIEWS ride the same commit: each batch's
     // delta folds into every attached AggView (O(delta + merged) — the
     // append path reads only the new files), so the transparent

@@ -183,43 +183,13 @@ class MicroBlockSpec extends AnyFunSuite {
     assert(m.suggest(Seq(9, 2), 1) == Seq(3))
   }
 
-  test("logistic prefetcher learns a cyclic access pattern") {
-    val pattern = Seq.fill(12)(Seq(1, 2, 3, 4)).flatten
-    val m = new graft.engine.LogisticPrefetcher(order = 2).fit(spark, pattern)
-    assert(m.suggest(Seq(4, 1), 1) == Seq(2))
-    assert(m.suggest(Seq(1, 2), 1) == Seq(3))
-    assert(m.suggest(Seq(3, 4), 1) == Seq(1))
-    // unseen context combination: positional marginals still predict
-    assert(m.suggest(Seq(9, 2), 1) == Seq(3))
-  }
-
-  test("logistic prefetcher: feature hashing bounds the weight vector and still learns") {
-    // 8 distinct blocks forced into a 3-bucket context-feature space:
-    // collisions are guaranteed (pigeonhole), the weight count must
-    // obey the (order*F + 1)*B bound, and the deterministic cycle must
-    // stay learnable despite shared context rows.
-    val pattern = Seq.fill(14)(Seq(0, 1, 2, 5, 6, 7, 3, 4)).flatten
-    val (train, test) = pattern.splitAt(pattern.size * 2 / 3)
-    val m = new graft.engine.LogisticPrefetcher(
-      order = 2, epochs = 80, featureSpace = 3).fit(spark, train)
-    val b = 8
-    assert(m.weightCount == (2 * 3 + 1) * b,
-      s"hashed weight vector not bounded: ${m.weightCount}")
-    val evals = graft.engine.PrefetchEval.replay(m, test, k = 3)
-    val hit = evals.count(_.hit).toDouble / evals.size
-    assert(hit > 0.7, s"collided model should still learn the cycle, hit-rate $hit")
-    // below the bound the mapping is the identity: exact-model weights
-    val exact = new graft.engine.LogisticPrefetcher(
-      order = 2, epochs = 10, featureSpace = 1 << 12).fit(spark, train)
-    assert(exact.weightCount == (2 * b + 1) * b)
-  }
-
   test("learned model >= markov hit-rate on the same split (LSTM-parity contract)") {
     // a workload with deterministic structure: rising runs per 'query'
     val pattern = Seq.fill(6)(Seq(0, 1, 2, 5, 6, 7, 3, 4)).flatten
     val (train, test) = pattern.splitAt(pattern.size * 2 / 3)
     val markov = new MarkovPrefetcher(1).fitSeq(spark, train)
-    val learned = new graft.engine.LogisticPrefetcher(order = 2).fit(spark, train)
+    val learned = new graft.engine.GruPrefetcher(
+      hidden = 24, window = 8, epochs = 120, lr = 0.8).fit(spark, train)
     def hitRate(m: graft.engine.Prefetcher): Double = {
       val evals = graft.engine.PrefetchEval.replay(m, test, k = 3)
       evals.count(_.hit).toDouble / evals.size

@@ -41,7 +41,7 @@ class PrefetchLoopSpec extends AnyFunSuite {
     // state — the regime where the prefetch loop matters
     assert(off.misses > 0, "off arm never missed: cache not capacity-limited")
 
-    for (arm <- Seq("logistic", "gru")) {
+    for (arm <- Seq("gru")) {
       val on = ab(("periodic", arm))
       assert(on.prefetched > 0, s"$arm never warmed anything")
       assert(on.hitRate > off.hitRate,
@@ -52,7 +52,7 @@ class PrefetchLoopSpec extends AnyFunSuite {
     // (the PruningBenchSpec rule), so an arm passes if it beats off in
     // EITHER window — only arms that failed the first window re-judge
     // against the retry (an arm that already won must not re-roll)
-    val slower = Seq("logistic", "gru").filter(a =>
+    val slower = Seq("gru").filter(a =>
       ab(("periodic", a)).serveSec >= off.serveSec)
     if (slower.nonEmpty) {
       val retry = measure()
@@ -74,7 +74,7 @@ class PrefetchLoopSpec extends AnyFunSuite {
     // matched the periodic one, the "random" workload would not
     // actually be breaking the signal the loop claims to exploit.
     val offR = ab(("random", "off"))
-    for (arm <- Seq("markov", "logistic", "gru")) {
+    for (arm <- Seq("markov", "gru")) {
       val upPeriodic = ab(("periodic", arm)).hitRate - off.hitRate
       val upRandom = ab(("random", arm)).hitRate - offR.hitRate
       assert(upRandom < upPeriodic,

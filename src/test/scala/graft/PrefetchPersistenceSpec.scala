@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.{GraftSession, LogisticPrefetcher, MarkovPrefetcher}
+import graft.engine.{GraftSession, MarkovPrefetcher}
 
 /** Trained-prefetcher persistence — the reference reloads its fitted
   * model from disk at service start (run_with_prefetch_loop.py:17-22:
@@ -41,32 +41,5 @@ class PrefetchPersistenceSpec extends AnyFunSuite {
       new MarkovPrefetcher(1).fitSeq(spark, pattern).suggest(Seq(0), 2))
     val wrongOrder = new MarkovPrefetcher(2)
     assertThrows[IllegalArgumentException](wrongOrder.restore(spark, dir))
-  }
-
-  test("logistic (exact regime): save -> load predicts identically") {
-    val dir = "target/scratch/models/logistic"
-    val fitted = new LogisticPrefetcher(order = 2, epochs = 20).fit(spark, pattern)
-    fitted.save(spark, dir)
-    val loaded = LogisticPrefetcher.load(spark, dir)
-    assert(loaded.weightCount == fitted.weightCount)
-    for (ctx <- contexts; k <- Seq(1, 3, 8))
-      assert(loaded.suggest(ctx, k) == fitted.suggest(ctx, k),
-        s"ctx=$ctx k=$k diverged after reload")
-  }
-
-  test("logistic (hashed regime): round-trips through the feature-hash recomputation") {
-    val dir = "target/scratch/models/logistic-hashed"
-    // featureSpace below the block count forces the hashing-trick path,
-    // so restore() must recompute the same bucket assignments
-    val fitted = new LogisticPrefetcher(order = 2, epochs = 20, featureSpace = 4)
-      .fit(spark, pattern)
-    fitted.save(spark, dir)
-    val loaded = LogisticPrefetcher.load(spark, dir)
-    assert(loaded.weightCount == fitted.weightCount)
-    for (ctx <- contexts)
-      assert(loaded.suggest(ctx, 5) == fitted.suggest(ctx, 5))
-    // hyperparameter mismatch refuses rather than mis-hashing
-    assertThrows[IllegalArgumentException](
-      new LogisticPrefetcher(order = 2, featureSpace = 8).restore(spark, dir))
   }
 }

@@ -16,13 +16,11 @@ class PrefetchServeSpec extends AnyFunSuite {
   test("PrefetchModels.load dispatches on the sidecar's model kind") {
     val base = "target/scratch/models/dispatch"
     new MarkovPrefetcher(1).fitSeq(spark, pattern).save(spark, s"$base/m")
-    new LogisticPrefetcher(order = 1, epochs = 10).fit(spark, pattern).save(spark, s"$base/l")
     new GruPrefetcher(hidden = 8, window = 4, epochs = 15).fit(spark, pattern).save(spark, s"$base/g")
     assert(PrefetchModels.load(spark, s"$base/m").isInstanceOf[MarkovPrefetcher])
-    assert(PrefetchModels.load(spark, s"$base/l").isInstanceOf[LogisticPrefetcher])
     assert(PrefetchModels.load(spark, s"$base/g").isInstanceOf[GruPrefetcher])
     // every loaded class predicts (trait surface only)
-    for (sub <- Seq("m", "l", "g")) {
+    for (sub <- Seq("m", "g")) {
       val p = PrefetchModels.load(spark, s"$base/$sub")
       assert(p.fitted && p.suggest(Seq(0, 1), 2).nonEmpty, s"model $sub must serve")
     }

@@ -70,80 +70,6 @@ class SelectivitySpec extends AnyFunSuite {
     assert(math.abs(est - 100.0) / 100.0 < 0.02, s"est $est vs 100")
   }
 
-  test("serve-path choice: the estimator routes dense reads to the LRU, sparse to direct") {
-    import graft.plans.{Between, PredValue}
-    val dir = "/root/testdata/sf0.001"
-    // a FRESH engine: the choice is observed through cache population,
-    // so the shared memoized engine's warm LRU would mask it
-    val engine = new graft.engine.GraftEngine(
-      spark, graft.queries.MicroBlockQueries.microPath(spark, dir), "lineitem")
-    val raw = spark.read.parquet(graft.queries.MicroBlockQueries.microPath(spark, dir))
-
-    // sparse: narrow range on the UNCLUSTERED price column — zone maps
-    // keep every file (all zones straddle), but the rows are a trickle
-    val sparse = graft.queries.MicroBlockQueries.sparsePred
-    val selSparse = engine.estimateSelectivity(sparse)
-    assert(selSparse.exists(_ < 0.25),
-      s"sparse predicate must estimate sparse, got $selSparse")
-    val nSparse = engine.queryAuto(sparse).count()
-    assert(nSparse == raw.filter(sparse.toColumn).count())
-    assert(nSparse > 0, "sparse predicate must still match SOME rows")
-    assert(engine.cache.size == 0,
-      "sparse serve must be the direct path: nothing admitted to the LRU")
-
-    // dense: the cluster-key range — candidate blocks are mostly
-    // matching rows, the working set the cache exists to pin
-    val dense = graft.queries.MicroBlockQueries.benchPred
-    val selDense = engine.estimateSelectivity(dense)
-    assert(selDense.exists(_ >= 0.25),
-      s"dense predicate must estimate dense, got $selDense")
-    val nDense = engine.queryAuto(dense).count()
-    assert(nDense == raw.filter(dense.toColumn).count())
-    assert(engine.cache.size > 0,
-      "dense serve must be the cache path: candidate blocks admitted to the LRU")
-
-    // unestimable shapes fall back to the reference-parity cache path
-    assert(engine.estimateSelectivity(
-      graft.plans.Cmp("!=", "l_quantity", PredValue(1L))).isEmpty)
-
-    // equality IS estimable (bucket density, not a zero-width range —
-    // which would constant-fold every '=' to sel 0): one of 50
-    // quantity values is a sparse read and routes direct
-    val eqSel = engine.estimateSelectivity(
-      graft.plans.Cmp("=", "l_quantity", PredValue(12L)))
-    assert(eqSel.exists(s => s > 0.0 && s < 0.25), s"eq sel: $eqSel")
-    assert(engine.servePath(
-      graft.plans.Cmp("=", "l_quantity", PredValue(12L))) == "direct")
-
-    // the estimator itself: a full-range predicate on the cluster key
-    // estimates ~everything
-    val all = Between("l_shipdate",
-      PredValue.ts("1990-01-01"), PredValue.ts("2010-01-01"))
-    assert(engine.estimateSelectivity(all).exists(_ > 0.9))
-
-    // STRING columns: histograms cover numeric/timestamp/date columns
-    // only, so any predicate over a string column is unestimable and
-    // queryAuto always takes the reference-parity cache path (the
-    // documented conservative fallback — never a wrong-route, never an
-    // error surfaced to the query)
-    val strPred = graft.plans.Cmp("=", "l_returnflag", PredValue("A"))
-    assert(engine.estimateSelectivity(strPred).isEmpty,
-      "string column must be unestimable")
-    assert(engine.servePath(strPred) == "cache",
-      "string-column predicate must route to the cache path")
-    val preCache = engine.cache.size
-    val nStr = engine.queryAuto(strPred).count()
-    assert(nStr == raw.filter(strPred.toColumn).count() && nStr > 0)
-    assert(engine.cache.size >= preCache,
-      "cache-path serve must admit candidate blocks, not bypass the LRU")
-    // even a numeric-shaped range over the string column degrades the
-    // same way: the histogram build fails, is memoized None once
-    // (histogramsFor's NonFatal catch), and the route stays "cache"
-    val oddPred = Between("l_returnflag", PredValue(0L), PredValue(1L))
-    assert(engine.estimateSelectivity(oddPred).isEmpty)
-    assert(engine.servePath(oddPred) == "cache")
-  }
-
   test("mb_selectivity on the real layout: totals match and the estimate is accurate") {
     val rows = SparkEntry.queries("mb_selectivity")(spark, "/root/testdata/sf0.001").collect()
     val total = rows.find(_.getString(0) == "TOTAL").get

@@ -294,6 +294,37 @@ class ZoneAggRuleSpec extends AnyFunSuite {
       .filter(col("l_quantity") > 25).agg(count(lit(1)).as("n"))))
   }
 
+  test("no all-true file: the rule leaves the query to the pruned scan") {
+    val base = fixture
+    // the interior of one file's shipdate range: that file straddles,
+    // every other file is all-false, and nothing folds from metadata
+    val r = spark.read.parquet(base).groupBy(input_file_name())
+      .agg(min("l_shipdate"), max("l_shipdate"))
+      .orderBy(min("l_shipdate")).collect()(3)
+    val (lo, hi) = (r.get(1), r.get(2))
+    def q(df: DataFrame) = df
+      .filter(col("l_shipdate") > lit(lo) && col("l_shipdate") < lit(hi))
+      .agg(count(lit(1)).as("n"), count(col("l_returnflag")).as("nf"))
+    val df = q(spark.read.parquet(base))
+    // the serve's straddler scan is a new relation read with a
+    // basePath (MicroBlockIndex.readFilesAsTable); the table's own
+    // relation, pruned by ZoneMapPruneRule, has none
+    val rewritten = df.queryExecution.optimizedPlan.exists {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation match {
+          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            h.options.keys.exists(_.equalsIgnoreCase("basePath"))
+          case _ => false
+        }
+      case _ => false
+    }
+    assert(!rewritten && !served(df), "a serve with no served file must refuse")
+    assert(baseFilesRead(df, "zoneagg/base") == Seq(1),
+      "the pruned scan reads the one straddling file")
+    val truth = graft.plans.GraftRule.internally(rows(q(spark.read.parquet(base))))
+    assert(rows(df) == truth)
+  }
+
   test("GROUP BY a partition column serves per-group metadata; straddlers scan grouped") {
     import spark.implicits._
     val out = scratch("grouped")
